@@ -178,12 +178,7 @@ def _tensor_stage_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mindocr_spark.registry import build_pipeline
 
     _, media = derive_corpus(spark, sf_dir)
-    crops_in = media.select(
-        F.col("media_ref").alias("doc_id"),
-        F.lit(0).alias("offset"),
-        "media_ref",
-        "image",
-    )
+    crops_in = media.select("media_ref", "image")
     pipe = build_pipeline(
         [
             {"name": "det_crops"},

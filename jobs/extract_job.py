@@ -28,15 +28,12 @@ def main() -> None:
     ap.add_argument("--salt-buckets", type=int, default=0)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.builder.appName("mindocr_spark_extract").getOrCreate()
-    # session tuning when we own the session (spark-submit may pre-set)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-
     from mindocr_spark.plans.extract import load_corpus
     from mindocr_spark.plans.lineage import run_extract_job
+    from mindocr_spark.session import get_spark
+
+    # the engine's session settings; the master is spark-submit's --master
+    spark = get_spark(app_name="mindocr_spark_extract")
 
     spans, media = load_corpus(spark, args.corpus_dir)
     stats = run_extract_job(

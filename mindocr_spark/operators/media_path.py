@@ -33,20 +33,20 @@ from ..kernels.system import (
     ocr_image,
 )
 
-# schemas for mapInPandas stages. ``profile`` is per-item pipeline metadata
-# from the media table (None/'default' = CTC+quad; 'attn' = attention-head
-# rec decode; 'poly' = box_type='poly' detection) — the per-source analogue
-# of the reference's yaml config axes, carried through the exploded plan so
-# the rec stage decodes each crop under its source's contract.
-FUSED_SCHEMA = "doc_id string, offset int, media_ref string, text string"
+# schemas for mapInPandas stages. OCR is a function of the media payload
+# alone, so every stage is keyed by ``media_ref`` and reads only
+# ``media_ref``/``image``/``profile`` (extra input columns are ignored).
+# ``profile`` is per-item pipeline metadata from the media table
+# (None/'default' = CTC+quad; 'attn' = attention-head rec decode; 'poly' =
+# box_type='poly' detection) — the per-source analogue of the reference's
+# yaml config axes, carried through the exploded plan so the rec stage
+# decodes each crop under its source's contract.
+FUSED_SCHEMA = "media_ref string, text string"
 DET_CROPS_SCHEMA = (
-    "doc_id string, offset int, media_ref string, box_idx int, "
-    "crop binary, crop_h int, crop_w int, profile string"
+    "media_ref string, box_idx int, crop binary, crop_h int, crop_w int, "
+    "profile string"
 )
-REC_SCHEMA = (
-    "doc_id string, offset int, media_ref string, box_idx int, "
-    "text string, conf double"
-)
+REC_SCHEMA = "media_ref string, box_idx int, text string, conf double"
 
 
 def _profiles_col(pdf: pd.DataFrame) -> "pd.Series | list[None]":
@@ -76,93 +76,69 @@ def _safe_decode(png: bytes | None) -> np.ndarray | None:
 def ocr_fused_iter(
     batches: Iterator[pd.DataFrame], use_cls: bool = True
 ) -> Iterator[pd.DataFrame]:
-    """(doc_id, offset, media_ref, image) -> (doc_id, offset, media_ref, text)."""
+    """(media_ref, image, profile) -> (media_ref, text)."""
     for pdf in batches:
-        texts = []
-        for blob, prof in zip(pdf["image"], _profiles_col(pdf)):
-            texts.append(media_payload_text(blob, use_cls=use_cls, profile=prof))
-        yield pd.DataFrame(
-            {
-                "doc_id": pdf["doc_id"],
-                "offset": pdf["offset"],
-                "media_ref": pdf["media_ref"],
-                "text": texts,
-            }
-        )
+        texts = [
+            media_payload_text(blob, use_cls=use_cls, profile=prof)
+            for blob, prof in zip(pdf["image"], _profiles_col(pdf))
+        ]
+        yield pd.DataFrame({"media_ref": pdf["media_ref"], "text": texts})
 
 
 def det_crops_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(doc_id, offset, media_ref, image) -> one row per crop + one sentinel
-    row (box_idx = -1, empty crop) per media span.
+    """(media_ref, image, profile) -> one row per crop + one sentinel row
+    (box_idx = -1, empty crop) per input row, i.e. per media ref.
 
     ``box_idx`` is the reading-order index (``sorted_boxes`` applied inside
-    ``detect_boxes``). The sentinel guarantees every media span — including
-    unreadable/missing media and spans whose every crop falls to the
-    drop-score filter — survives the downstream groupBy without a restore
-    join (it contributes an empty text the final assembly drops).
+    ``detect_boxes``). The sentinel gives every ref — including unreadable
+    or missing media and refs whose every crop falls to the drop-score
+    filter — exactly one group in the downstream per-ref groupBy (it
+    contributes an empty text the final assembly drops).
     """
     from ..kernels.system import detect_quads
+    from ..kernels.table import detect_grid
 
     for pdf in batches:
-        out: dict[str, list] = {
-            "doc_id": [], "offset": [], "media_ref": [],
-            "box_idx": [], "crop": [], "crop_h": [], "crop_w": [], "profile": [],
-        }
+        out: dict[str, list] = {k: [] for k in (
+            "media_ref", "box_idx", "crop", "crop_h", "crop_w", "profile"
+        )}
 
-        def emit(doc_id, offset, media_ref, idx, blob, ch, cw, prof):
-            out["doc_id"].append(doc_id)
-            out["offset"].append(offset)
-            out["media_ref"].append(media_ref)
-            out["box_idx"].append(idx)
-            out["crop"].append(blob)
-            out["crop_h"].append(ch)
-            out["crop_w"].append(cw)
-            out["profile"].append(prof)
+        def emit(media_ref, idx, blob, ch, cw, prof):
+            for k, v in zip(out, (media_ref, idx, blob, ch, cw, prof)):
+                out[k].append(v)
 
-        for doc_id, offset, media_ref, png, prof in zip(
-            pdf["doc_id"], pdf["offset"], pdf["media_ref"], pdf["image"],
-            _profiles_col(pdf),
+        for media_ref, png, prof in zip(
+            pdf["media_ref"], pdf["image"], _profiles_col(pdf)
         ):
-            emit(doc_id, offset, media_ref, -1, b"", 0, 0, prof)  # sentinel
+            emit(media_ref, -1, b"", 0, 0, prof)  # sentinel
             if png is not None and bytes(png).startswith(b"%PDF"):
                 # PDF media: text layer extracted here; carried verbatim to
                 # the rec stage as a box_idx=-2 row (no crops to explode)
                 text = media_payload_text(png)
-                emit(
-                    doc_id, offset, media_ref, -2,
-                    text.encode("utf-8"), len(text), 0, prof,
-                )
+                emit(media_ref, -2, text.encode("utf-8"), len(text), 0, prof)
                 continue
             img = _safe_decode(png)
             if img is None:
                 continue
-            from ..kernels.table import detect_grid
-
             h_lines, v_lines = detect_grid(img)
             if len(h_lines) >= 2 and len(v_lines) >= 2:
                 # ruled table: structured path, verbatim text row (same
                 # routing as media_payload_text, keeps modes identical)
                 text = media_payload_text(png)
-                emit(
-                    doc_id, offset, media_ref, -2,
-                    text.encode("utf-8"), len(text), 0, prof,
-                )
+                emit(media_ref, -2, text.encode("utf-8"), len(text), 0, prof)
                 continue
             box_mode = "poly" if prof == "poly" else "quad"
             for idx, poly in enumerate(detect_quads(img, box_mode=box_mode)):
                 crop = crop_box(img, poly)  # uint8
-                emit(
-                    doc_id, offset, media_ref, idx,
-                    crop.tobytes(), crop.shape[0], crop.shape[1], prof,
-                )
+                emit(media_ref, idx, crop.tobytes(), crop.shape[0], crop.shape[1], prof)
         yield pd.DataFrame(out)
 
 
 def recognize_iter(
     batches: Iterator[pd.DataFrame], use_cls: bool = True, decoder: str = "ctc"
 ) -> Iterator[pd.DataFrame]:
-    """Crop rows -> (…, text, conf): cls-rotate then recognition.
-    ``decoder`` picks the head contract ('ctc' | 'attn')."""
+    """Crop rows -> (media_ref, box_idx, text, conf): cls-rotate then
+    recognition. ``decoder`` picks the head contract ('ctc' | 'attn')."""
     for pdf in batches:
         texts: list[str] = []
         confs: list[float] = []
@@ -188,8 +164,6 @@ def recognize_iter(
             confs.append(conf)
         yield pd.DataFrame(
             {
-                "doc_id": pdf["doc_id"],
-                "offset": pdf["offset"],
                 "media_ref": pdf["media_ref"],
                 "box_idx": pdf["box_idx"],
                 "text": texts,

@@ -23,16 +23,13 @@ import numpy as np
 import pandas as pd
 
 CROP_TENSOR_SCHEMA = (
-    "doc_id string, offset int, media_ref string, box_idx int, "
-    "tensor binary, dims array<int>"
+    "media_ref string, box_idx int, tensor binary, dims array<int>"
 )
 
 
 def _rows(pdf: pd.DataFrame, tensors: list[bytes], dims: list[list[int]]) -> pd.DataFrame:
     return pd.DataFrame(
         {
-            "doc_id": pdf["doc_id"],
-            "offset": pdf["offset"],
             "media_ref": pdf["media_ref"],
             "box_idx": pdf["box_idx"],
             "tensor": tensors,

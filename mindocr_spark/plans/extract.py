@@ -6,20 +6,32 @@ One logical DataFrame plan:
 
     read spans -> explode -> route by kind
       text path : boilerplate-strip pandas UDF
-      media path: join media table -> [fused OCR | det->crops explode->rec]
-                  -> drop-score filter -> per-span reading-order reassembly
+      media path: distinct referenced refs -> join media table
+                  -> [fused OCR | det->crops explode->rec->drop-score
+                      filter->per-ref reading-order reassembly]
+                  -> (media_ref, text) joined back onto the media spans
     -> union -> per-doc reassembly ordered by offset -> out_spans
 
+OCR is a function of the media payload alone, so each distinct ref is
+OCR'd once however many spans reference it.
+
 Shuffle inventory (at 10^12-doc scale):
-  1. spans⋈media equi-join on media_ref (bucket both tables by media_ref in
-     storage to make it shuffle-free / storage-partitioned).
-  2. per-span groupBy (doc_id, offset) — only in exploded mode.
-  3. per-doc groupBy doc_id — bucket the spans table by doc_id to bound it.
+  1. the referenced refs, hash-partitioned by media_ref (narrow: one
+     string per media span) — it spreads the OCR stage over the cluster
+     and feeds the distinct with no exchange of its own.
+  2. refs⋈media equi-join on media_ref (broadcast media at local scale;
+     bucket the media table by media_ref in storage to make it
+     shuffle-free at scale).
+  3. per-crop repartition (media_ref, box_idx) and per-ref groupBy
+     media_ref — only in exploded mode.
+  4. spans⋈(media_ref, text) join-back on media_ref: broadcast while the
+     text table is small, else a sort-merge join (Spark's choice).
+  5. per-doc groupBy doc_id — bucket the spans table by doc_id to bound it.
 AQE skew handling is on (media-heavy docs); in exploded mode recognition
 work is already crop-granular so no salting is needed for the rec stage
 itself — the unit of work is one crop.
 
-Ordering is always explicit: ``box_idx`` within a span, ``offset`` within a
+Ordering is always explicit: ``box_idx`` within a ref, ``offset`` within a
 doc; never implicit row order (SURVEY.md §7.3 risk 1).
 """
 
@@ -224,39 +236,26 @@ def _media_side(media: DataFrame) -> DataFrame:
     )
 
 
-def _join_media_spread(media_spans: DataFrame, media: DataFrame) -> DataFrame:
-    """LEFT-join media payloads onto spans with the CPU-spread partitioning
-    established on the NARROW side (round 7, guide §2.3/§8: project before
-    the exchange — the old join→repartition order shuffled every image blob
-    to spread the python stage; repartitioning the 3-column span keys first
-    moves ~100 KB instead, and the join attaches the payloads in place).
-
-    The join output keeps the stream side's hash(media_ref, 2×slots)
-    partitioning under the local broadcast plan, and under a sort-merge
-    plan (media side too big to broadcast at scale) both sides align on
-    media_ref with ≥ the spans side's partition count — either way the
-    downstream mapInPandas sees ≥ 2×slots media_ref-keyed partitions (the
-    CLAUDE.md CPU-spread invariant; plan-gated in test_plan_quality).
-
-    LEFT join: a span whose media_ref is absent from the media table must
-    still produce an (empty-text) output span, like an unreadable image
-    (decode_node.py:30-42 skip semantics)."""
-    spread = media_spans.repartition(_cpu_partitions(media_spans), "media_ref")
-    return spread.join(_media_side(media), "media_ref", "left")
+def _ocr_input(media_spans: DataFrame, media: DataFrame) -> DataFrame:
+    """One ``(media_ref, image, profile)`` row per distinct non-null ref the
+    spans reference. The refs are spread over ``_cpu_partitions`` by
+    ``media_ref`` before the distinct, so the distinct adds no exchange and
+    AQE cannot coalesce the OCR stage onto one core; only the narrow keys
+    move and the payloads attach in place (guide §2.3/§8). LEFT join: only
+    the media side may be broadcast, which keeps that spread; a ref absent
+    from the media table gets a NULL image, which the OCR stages read as ''
+    (``decode_node.py:30-42`` skip semantics)."""
+    refs = (
+        media_spans.select("media_ref")
+        .where(F.col("media_ref").isNotNull())
+        .repartition(_cpu_partitions(media_spans), "media_ref")
+        .distinct()
+    )
+    return refs.join(_media_side(media), "media_ref", "left")
 
 
-def _media_texts_fused(media_spans: DataFrame, media: DataFrame) -> DataFrame:
-    joined = _join_media_spread(media_spans, media)
-    return joined.select(
-        "doc_id", "offset", "media_ref", "image", "profile"
-    ).mapInPandas(ocr_fused_iter, FUSED_SCHEMA)
-
-
-def _media_texts_exploded(media_spans: DataFrame, media: DataFrame) -> DataFrame:
-    joined = _join_media_spread(media_spans, media)
-    crops = joined.select(
-        "doc_id", "offset", "media_ref", "image", "profile"
-    ).mapInPandas(det_crops_iter, DET_CROPS_SCHEMA)
+def _media_texts_exploded(payloads: DataFrame) -> DataFrame:
+    crops = payloads.mapInPandas(det_crops_iter, DET_CROPS_SCHEMA)
     # crop-level redistribution: the unit of rec work is one crop, so a
     # 1000-box image cannot pin one task (the skew answer; SURVEY.md §4.1).
     # sortWithinPartitions by aspect ratio mirrors the reference's
@@ -266,14 +265,14 @@ def _media_texts_exploded(media_spans: DataFrame, media: DataFrame) -> DataFrame
         (F.col("crop_w") / F.greatest(F.col("crop_h"), F.lit(1))).asc()
     )
     rec = crops.mapInPandas(recognize_iter, REC_SCHEMA)
-    # keep scored crops passing drop-score AND the per-span sentinel rows
-    # (box_idx < 0), so every media span survives the groupBy — no restore
-    # join needed (sentinel text '' is filtered out of the final join below)
+    # keep scored crops passing drop-score AND the per-ref sentinel rows
+    # (box_idx < 0), so every OCR'd ref yields one text row (the
+    # sentinel's '' text is dropped by the filter inside the array_join)
     kept = rec.filter(
         ((F.col("conf") >= F.lit(DROP_SCORE)) & (F.col("text") != ""))
         | (F.col("box_idx") < 0)
     )
-    return kept.groupBy("doc_id", "offset", "media_ref").agg(
+    return kept.groupBy("media_ref").agg(
         F.array_join(
             F.filter(
                 F.transform(
@@ -296,11 +295,18 @@ def extract(
 ) -> DataFrame:
     """Run the full interleaved extraction. Returns (doc_id, out_spans).
 
+    Each distinct non-null ``media_ref`` the spans reference is OCR'd once
+    and its text joined back onto every span carrying it; a NULL ref, or
+    one absent from the media table, reads ''.
+
     Precondition: ``media.media_ref`` is unique (it is the media table's
-    key). Duplicate keys would fan out the media join and duplicate output
-    spans — dedupe upstream (e.g. ``groupBy(media_ref).agg(max(image))``)
-    if the source cannot guarantee it; the plan does not pay that shuffle
-    by default.
+    key). The plan does not pay the shuffle of image payloads it would
+    take to enforce it. With duplicate rows for one ref, every duplicate
+    is OCR'd: fused mode then emits one output span per duplicate for
+    each span with that ref, and exploded mode merges the duplicates'
+    crops into one text per span (words ordered by box_idx across the
+    images). Dedupe upstream (e.g. ``groupBy(media_ref).agg(max(image))``)
+    if the source cannot guarantee uniqueness.
 
     ``salt_buckets > 0`` enables explicit two-phase salting of the final
     per-document reassembly (SURVEY.md §4 item 1b): spans first aggregate on
@@ -332,14 +338,21 @@ def extract(
         F.lit(None).cast("string").alias("text"),
         F.lit(None).cast("string").alias("kind"),
     )
+    payloads = _ocr_input(media_spans, media)
     if mode == "fused":
-        media_texts = _media_texts_fused(media_spans, media)
+        media_texts = payloads.mapInPandas(ocr_fused_iter, FUSED_SCHEMA)
     elif mode == "exploded":
-        media_texts = _media_texts_exploded(media_spans, media)
+        media_texts = _media_texts_exploded(payloads)
     else:
         raise ValueError(f"unknown mode {mode!r}")
-    media_out = media_texts.select(
-        "doc_id", "offset", "media_ref", "text", F.lit("media").alias("kind")
+    # one (media_ref, text) row per OCR'd ref, joined back onto every span
+    # that references it; a NULL ref matches nothing and reads ''
+    media_out = media_spans.join(media_texts, "media_ref", "left").select(
+        "doc_id",
+        "offset",
+        "media_ref",
+        F.coalesce("text", F.lit("")).alias("text"),
+        F.lit("media").alias("kind"),
     )
     all_spans = text_spans.unionByName(media_out).unionByName(empty_docs)
     # the span struct is NULL (skipped by collect_list) exactly for the

@@ -45,6 +45,15 @@ def _export_pkg_pythonpath() -> None:
         )
 
 
+def _local_master(cores: int | None = None) -> str | None:
+    """``local[n]`` for a caller-sized local session (``cores``, else the
+    ``SPARK_GRAFT_CPUS`` environment variable); None leaves the master to
+    the launcher: spark-submit's ``--master``, or its ``local[*]`` default."""
+    if cores is None:
+        cores = os.environ.get("SPARK_GRAFT_CPUS") or None
+    return None if cores is None else f"local[{cores}]"
+
+
 def get_spark(
     app_name: str = "mindocr_spark",
     cores: int | None = None,
@@ -52,11 +61,6 @@ def get_spark(
 ) -> SparkSession:
     _pin_blas_threads()
     _export_pkg_pythonpath()
-    master = None
-    if cores is not None:
-        master = f"local[{cores}]"
-    elif os.environ.get("SPARK_GRAFT_CPUS"):
-        master = f"local[{os.environ['SPARK_GRAFT_CPUS']}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -71,13 +75,13 @@ def get_spark(
         )
         .config("spark.sql.files.maxPartitionBytes", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        # Round 7: wide-aggregate codegen — the 129-column minhash
+        # wide-aggregate codegen: the 129-column minhash
         # aggregates exceed the default 100-field whole-stage-codegen
         # ceiling and fell back to interpreted evaluation; 1024 keeps them
         # compiled (paired in-session A/B: md5 minhash agg ~12% faster
         # steady-state; one-time Janino compile absorbed by warmup).
         .config("spark.sql.codegen.maxFields", "1024")
-        # Round 7: python workers boot through our daemon shim, which
+        # python workers boot through our daemon shim, which
         # backports CPython 3.12's zipimport.invalidate_caches mtime check
         # (gh-87382). Without it, EVERY task's setup_spark_files re-parses
         # the pyspark.zip central directory — measured 160 ms of worker CPU
@@ -90,7 +94,7 @@ def get_spark(
         )
     )
     if os.name == "posix":
-        # Round 7: JVM<->python-worker channel over a unix domain socket
+        # JVM<->python-worker channel over a unix domain socket
         # (Spark 4.1 feature) — skips the localhost TCP stack + per-connect
         # auth on every worker channel; measured ~5-10% off python-stage
         # task latency (ABAB microbench, OPTIMIZATION_r07.md).
@@ -105,8 +109,7 @@ def get_spark(
         if "=" in kv:
             k, v = kv.split("=", 1)
             builder = builder.config(k.strip(), v.strip())
+    master = _local_master(cores)
     if master:
         builder = builder.master(master)
-    else:
-        builder = builder.master("local[*]")
     return builder.getOrCreate()

@@ -125,3 +125,134 @@ def test_partitioning_invariance(spark, small_corpus):
     assert [_spans_tuples(r["out_spans"]) for r in a] == [
         _spans_tuples(r["out_spans"]) for r in b
     ]
+
+
+_SPAN_SCHEMA = (
+    "doc_id string, spans array<struct<kind:string,text:string,"
+    "media_ref:string,offset:int>>"
+)
+
+
+@pytest.mark.parametrize(
+    ("mode", "salt"), [("fused", 0), ("exploded", 0), ("fused", 4)]
+)
+def test_media_join_back_edge_cases(spark, mode, salt):
+    """Each media span gets its ref's text from the per-ref OCR table:
+    a NULL ref and a ref absent from the media table read '', and a ref
+    shared by two spans of one document and by another document fills
+    every span — exactly one output span per input span, in offset order."""
+    from mindocr_spark.functions.glyphs import render_page
+    from mindocr_spark.functions.png_codec import encode_png
+
+    def page(word):
+        return encode_png(render_page([(word, 30, 30)], 96, 224)[0])
+
+    spans = spark.createDataFrame(
+        [
+            ("doc_a", [
+                ("media", None, "shared", 4),
+                ("text", "<p>hello there</p>", None, 1),
+                ("media", None, "shared", 0),
+                ("media", None, None, 7),
+                ("media", None, "absent", 5),
+            ]),
+            ("doc_b", [("media", None, "shared", 3), ("media", None, "own", 9)]),
+        ],
+        _SPAN_SCHEMA,
+    )
+    media = spark.createDataFrame(
+        [("shared", page("alpha")), ("own", page("beta")), ("unused", page("gamma"))],
+        "media_ref string, image binary",
+    )
+    rows = {
+        r["doc_id"]: _spans_tuples(r["out_spans"])
+        for r in extract(spark, spans, media, mode=mode, salt_buckets=salt).collect()
+    }
+    assert rows == {
+        "doc_a": [
+            ("media", "alpha", "shared", 0),
+            ("text", "hello there", None, 1),
+            ("media", "alpha", "shared", 2),
+            ("media", "", "absent", 3),
+            ("media", "", None, 4),
+        ],
+        "doc_b": [("media", "alpha", "shared", 0), ("media", "beta", "own", 1)],
+    }
+
+
+def _node_rows_of_last_execution(spark, desc_part: str) -> list[int]:
+    """``number of output rows`` of every plan node of the last finished SQL
+    execution whose description contains ``desc_part``."""
+    import time
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    last = execs.apply(execs.size() - 1)
+    ex_id = last.executionId()
+    deadline = time.monotonic() + 30
+    # the listener bus aggregates an execution's metrics after it ends
+    while store.execution(ex_id).get().completionTime().isEmpty():
+        assert time.monotonic() < deadline, "SQL execution did not finish"
+        time.sleep(0.1)
+    it = store.executionMetrics(ex_id).iterator()
+    values = {}
+    while it.hasNext():
+        kv = it.next()
+        values[int(kv._1())] = kv._2()
+    nodes = store.planGraph(ex_id).allNodes()
+    out = []
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        if desc_part not in node.desc():
+            continue
+        metrics = node.metrics()
+        for j in range(metrics.size()):
+            m = metrics.apply(j)
+            if m.name() == "number of output rows":
+                out.append(int(values[int(m.accumulatorId())].replace(",", "")))
+    return out
+
+
+def _shared_ref_corpus(spark, corpus_dir):
+    """The small corpus plus a copy of every document under a new doc_id:
+    each ref is then referenced by at least two spans. Returns (spans,
+    media, distinct non-null referenced refs, media spans with a ref)."""
+    from pyspark.sql import functions as F
+
+    spans, media = load_corpus(spark, corpus_dir)
+    spans = spans.unionByName(spans.withColumn("doc_id", F.concat("doc_id", F.lit("_b"))))
+    refs = (
+        spans.select(F.explode("spans").alias("s"))
+        .filter((F.col("s.kind") == "media") & F.col("s.media_ref").isNotNull())
+        .select("s.media_ref")
+    )
+    return spans, media, refs.distinct().count(), refs.count()
+
+
+def test_fused_ocr_runs_once_per_distinct_ref(spark, small_corpus, tmp_path):
+    """The fused OCR UDF's output row count (a SQL metric of the written
+    query) is the number of distinct referenced refs, not of media spans."""
+    spans, media, n_refs, n_spans = _shared_ref_corpus(spark, small_corpus[0])
+    assert 0 < n_refs < n_spans
+    extract(spark, spans, media, mode="fused").write.parquet(str(tmp_path / "out"))
+    assert _node_rows_of_last_execution(spark, "ocr_fused_iter") == [n_refs]
+
+
+def test_exploded_det_stage_emits_one_sentinel_per_ref(spark, small_corpus, tmp_path):
+    """The exploded plan's det stage sees each distinct ref once: its
+    sentinel rows (box_idx = -1) are exactly the distinct referenced refs,
+    and in the written query it emits just those crop rows."""
+    from pyspark.sql import functions as F
+
+    from mindocr_spark.operators.media_path import DET_CROPS_SCHEMA, det_crops_iter
+    from mindocr_spark.plans.extract import _exploded_spans, _ocr_input
+
+    spans, media, n_refs, n_spans = _shared_ref_corpus(spark, small_corpus[0])
+    assert 0 < n_refs < n_spans
+    media_spans = _exploded_spans(spans).filter(F.col("kind") == "media")
+    crops = _ocr_input(media_spans, media).mapInPandas(det_crops_iter, DET_CROPS_SCHEMA)
+    rows = crops.select("media_ref", "box_idx").collect()
+    sentinels = [r["media_ref"] for r in rows if r["box_idx"] == -1]
+    assert len(sentinels) == len(set(sentinels)) == n_refs
+    extract(spark, spans, media, mode="exploded").write.parquet(str(tmp_path / "out"))
+    assert _node_rows_of_last_execution(spark, "det_crops_iter") == [len(rows)]

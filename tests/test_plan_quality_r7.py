@@ -141,3 +141,21 @@ def test_decontamination_single_pass(spark):
     assert plan.count("BroadcastHashJoin") == 1
     # train-side explode once + eval-side explode once = 2 Generates max
     assert plan.count("Generate") <= 2
+
+
+def test_ocr_stages_read_payload_columns_only(spark):
+    """OCR is a function of the media payload alone: no MapInPandas stage
+    of either flagship mode reads or writes the span keys doc_id/offset."""
+    import re
+
+    from mindocr_spark.data.derive_corpus import derive_corpus
+    from mindocr_spark.plans.extract import extract_serialized
+
+    spans, media = derive_corpus(spark, SF)
+    for mode in ("fused", "exploded"):
+        nodes = re.findall(r"MapInPandas [^\n]*", _plan(
+            extract_serialized(spark, spans, media, mode=mode)
+        ))
+        assert nodes, mode
+        for node in nodes:
+            assert "doc_id" not in node and "offset" not in node, node

@@ -1,0 +1,45 @@
+"""Session master choice: a caller-sized local session, or the master the
+launcher configured (spark-submit's ``--master``, default ``local[*]``)."""
+
+from __future__ import annotations
+
+import os
+import shutil
+import subprocess
+import sys
+
+from mindocr_spark.session import _local_master
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_local_master_choice(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    assert _local_master(3) == "local[3]"  # the caller's size wins
+    assert _local_master() == "local[5]"
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    assert _local_master() is None  # left to the launcher
+
+
+def test_spark_submit_master_and_engine_conf_apply(tmp_path):
+    """Under spark-submit, ``get_spark`` keeps ``--master`` and still sets
+    the engine's own session conf (daemon shim, UDS worker sockets)."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from mindocr_spark.session import get_spark\n"
+        "s = get_spark(app_name='probe')\n"
+        "c = s.sparkContext.getConf()\n"
+        "print('PROBE', s.sparkContext.master,"
+        " c.get('spark.python.daemon.module'),"
+        " c.get('spark.python.unix.domain.socket.enabled'))\n"
+        "s.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    env["PYTHONPATH"] = ROOT
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    out = subprocess.run(
+        [shutil.which("spark-submit"), "--master", "local[2]", "--driver-memory", "512m", str(probe)],
+        env=env, capture_output=True, text=True, timeout=300, check=True,
+    ).stdout
+    line = next(ln for ln in out.splitlines() if ln.startswith("PROBE"))
+    assert line.split()[1:] == ["local[2]", "mindocr_spark.spark_daemon", "true"]
