@@ -7,7 +7,7 @@ Usage:
                                          # methodology: noop sink, best-of-2,
                                          # clearCache between reps)
   python bench_extra.py --all            # the full HEADLINE list
-  python bench_extra.py --explain q ...  # also write plans/r07/<q>_<tag>.txt
+  python bench_extra.py --explain q ...  # also write plan_dumps/<q>_<tag>.txt
   python bench_extra.py --tag before ... # tag for the explain files
   python bench_extra.py --stages q       # per-stage wall/metrics via the
                                          # UI REST API (single query)
@@ -69,7 +69,6 @@ def main() -> None:
     _w_spans, _w_media = derive_from_docs(docs.limit(64))
     _materialize(_extract(spark, _w_spans, _w_media, mode="fused"))
 
-    os.makedirs("plans/r07", exist_ok=True)
     times: dict[str, list[float]] = {}
     for name in names:
         fn = qs[name]
@@ -81,7 +80,8 @@ def main() -> None:
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")
-            with open(f"plans/r07/{name}_{tag}.txt", "w") as f:
+            os.makedirs("plan_dumps", exist_ok=True)
+            with open(f"plan_dumps/{name}_{tag}.txt", "w") as f:
                 f.write(buf.getvalue())
             spark.catalog.clearCache()
         samples = []

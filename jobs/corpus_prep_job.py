@@ -47,11 +47,9 @@ def main() -> None:
     ap.add_argument("--run-id", default="run")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from mindocr_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("mindocr_spark_corpus_prep").getOrCreate()
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    spark = get_spark(app_name="mindocr_spark_corpus_prep")
 
     stats = run_corpus_prep(
         spark, args.sf_dir, args.out_dir, args.n_buckets, run_id=args.run_id

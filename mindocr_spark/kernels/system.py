@@ -199,54 +199,76 @@ def ocr_image(
     return records
 
 
-def media_payload_text(
-    payload: bytes | None, use_cls: bool = True, profile: str | None = None
-) -> str:
-    """Route a media payload by magic bytes: PDFs go through the text-layer
-    parser (north rule: 'PDF/layout parse'), images through decode+OCR;
-    junk/missing yields '' (decode-skip semantics).
-
-    ``profile`` is per-item pipeline metadata (the media table's ``profile``
-    column — the per-source analogue of the reference's yaml config choice):
-    ``'attn'`` decodes recognition with the attention head contract,
-    ``'poly'`` detects with ``box_type='poly'``; None/'default' is the
-    CTC+quad system."""
-    decoder = "attn" if profile == "attn" else "ctc"
-    box_mode = "poly" if profile == "poly" else "quad"
+def decode_gray(payload: bytes | None) -> np.ndarray | None:
+    """Decode a PNG payload to a gray uint8 image; None when it is missing
+    or undecodable (``decode_node.py:30-42`` skip semantics). RGB pages
+    become integer luminance (deterministic, no float rounding)."""
     if payload is None:
-        return ""
-    payload = bytes(payload)
-    if payload.startswith(b"%PDF"):
-        from ..functions.pdf_text import extract_pdf_text
-
-        try:
-            return extract_pdf_text(payload)
-        except Exception:  # noqa: BLE001
-            return ""
+        return None
     from ..functions.png_codec import decode_png
 
     try:
-        img = decode_png(payload)
-    except Exception:  # noqa: BLE001
-        return ""
+        img = decode_png(bytes(payload))
+    except Exception:  # noqa: BLE001 - any junk input -> skip, not fail job
+        return None
     if img.ndim == 3:
         img = (
             (299 * img[:, :, 0].astype(np.uint32)
              + 587 * img[:, :, 1].astype(np.uint32)
              + 114 * img[:, :, 2].astype(np.uint32)) // 1000
         ).astype(np.uint8)
-    # ruled-table images take the table-structure path (grid lines would
-    # otherwise be mis-read as glyph blobs); cells joined row-major,
-    # matching the reference's table e2e text assembly
-    from .table import detect_grid, extract_table
+    return img
 
-    h_lines, v_lines = detect_grid(img)
-    if len(h_lines) >= 2 and len(v_lines) >= 2:
-        table = extract_table(img)
-        return " ".join(
-            t for row in table["cells"] for t in row if t
-        )
-    return media_span_text(img, use_cls=use_cls, decoder=decoder, box_mode=box_mode)
+
+def route_payload(payload: bytes | None) -> tuple[str | None, np.ndarray | None]:
+    """The one routing decision for a media payload, shared by every OCR
+    mode and the oracle. Returns ``(text, None)`` when the payload's text
+    is settled without OCR — a PDF's text layer (north rule: 'PDF/layout
+    parse'; '' on a parse error), '' for missing or junk media, or a ruled
+    table's non-empty cells joined row-major (grid lines would otherwise be
+    mis-read as glyph blobs; the reference's table e2e text assembly) —
+    else ``(None, gray_img)``: a page for the OCR system."""
+    if payload is None:
+        return "", None
+    payload = bytes(payload)
+    if payload.startswith(b"%PDF"):
+        from ..functions.pdf_text import extract_pdf_text
+
+        try:
+            return extract_pdf_text(payload), None
+        except Exception:  # noqa: BLE001
+            return "", None
+    img = decode_gray(payload)
+    if img is None:
+        return "", None
+    from .table import extract_table
+
+    table = extract_table(img)
+    if table["n_rows"] > 0:
+        return " ".join(t for row in table["cells"] for t in row if t), None
+    return None, img
+
+
+def media_payload_text(
+    payload: bytes | None, use_cls: bool = True, profile: str | None = None
+) -> str:
+    """The extracted text of one media payload: :func:`route_payload`, then
+    OCR of a page.
+
+    ``profile`` is per-item pipeline metadata (the media table's ``profile``
+    column — the per-source analogue of the reference's yaml config choice):
+    ``'attn'`` decodes recognition with the attention head contract,
+    ``'poly'`` detects with ``box_type='poly'``; None/'default' is the
+    CTC+quad system."""
+    text, img = route_payload(payload)
+    if img is None:
+        return text
+    return media_span_text(
+        img,
+        use_cls=use_cls,
+        decoder="attn" if profile == "attn" else "ctc",
+        box_mode="poly" if profile == "poly" else "quad",
+    )
 
 
 def media_span_text(

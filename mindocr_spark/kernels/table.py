@@ -127,7 +127,7 @@ def extract_table_html(img: np.ndarray, header_rows: int = 1) -> str:
     insertion, <thead> bolding, ``<html><body><table>`` wrap.
 
     Returns '' when no ruled grid is found (callers fall back to the
-    plain span path, like the routing in kernels/system.py)."""
+    plain span path, like ``kernels.system.route_payload``)."""
     from ..functions.table_master import (
         grid_structure_tokens,
         table_master_html,

@@ -20,18 +20,23 @@ Both share every kernel bit-for-bit with the oracle.
 from __future__ import annotations
 
 from collections.abc import Iterator
+from typing import TYPE_CHECKING
 
 import numpy as np
 import pandas as pd
 
-from ..functions.png_codec import decode_png
+from ..config import DROP_SCORE
 from ..kernels.system import (
     classify_and_recognize,
     crop_box,
-    detect_boxes,
+    decode_gray,
     media_payload_text,
     ocr_image,
+    route_payload,
 )
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 # schemas for mapInPandas stages. OCR is a function of the media payload
 # alone, so every stage is keyed by ``media_ref`` and reads only
@@ -40,7 +45,9 @@ from ..kernels.system import (
 # (None/'default' = CTC+quad; 'attn' = attention-head rec decode; 'poly' =
 # box_type='poly' detection) — the per-source analogue of the reference's
 # yaml config axes, carried through the exploded plan so the rec stage
-# decodes each crop under its source's contract.
+# decodes each crop under its source's contract. In DET_CROPS/REC rows,
+# ``box_idx = -1`` is the ref's own row (its routed text, one per ref) and
+# ``box_idx >= 0`` a page crop in reading order.
 FUSED_SCHEMA = "media_ref string, text string"
 DET_CROPS_SCHEMA = (
     "media_ref string, box_idx int, crop binary, crop_h int, crop_w int, "
@@ -56,23 +63,6 @@ def _profiles_col(pdf: pd.DataFrame) -> "pd.Series | list[None]":
     return [None] * len(pdf)
 
 
-def _safe_decode(png: bytes | None) -> np.ndarray | None:
-    """Decode-failure skip semantics (``decode_node.py:30-42``)."""
-    if png is None:
-        return None
-    try:
-        img = decode_png(bytes(png))
-    except Exception:  # noqa: BLE001 - any junk input -> skip, not fail job
-        return None
-    if img.ndim == 3:  # RGB -> gray (luminance, deterministic integer math)
-        img = (
-            (299 * img[:, :, 0].astype(np.uint32)
-             + 587 * img[:, :, 1].astype(np.uint32)
-             + 114 * img[:, :, 2].astype(np.uint32)) // 1000
-        ).astype(np.uint8)
-    return img
-
-
 def ocr_fused_iter(
     batches: Iterator[pd.DataFrame], use_cls: bool = True
 ) -> Iterator[pd.DataFrame]:
@@ -86,17 +76,16 @@ def ocr_fused_iter(
 
 
 def det_crops_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """(media_ref, image, profile) -> one row per crop + one sentinel row
-    (box_idx = -1, empty crop) per input row, i.e. per media ref.
+    """(media_ref, image, profile) -> one ref row per input row, i.e. per
+    media ref, plus one row per crop of a page.
 
-    ``box_idx`` is the reading-order index (``sorted_boxes`` applied inside
-    ``detect_boxes``). The sentinel gives every ref — including unreadable
-    or missing media and refs whose every crop falls to the drop-score
-    filter — exactly one group in the downstream per-ref groupBy (it
-    contributes an empty text the final assembly drops).
+    The ref row (``box_idx = -1``, ``crop_h = crop_w = 0``) carries the text
+    :func:`route_payload` settled as UTF-8 in ``crop``: a PDF's text layer
+    or a ruled table's cells, '' for a page or for missing or junk media.
+    A page's crops follow with ``box_idx`` = the reading-order index
+    (``sorted_boxes`` applied inside ``detect_quads``).
     """
     from ..kernels.system import detect_quads
-    from ..kernels.table import detect_grid
 
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in (
@@ -110,22 +99,9 @@ def det_crops_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for media_ref, png, prof in zip(
             pdf["media_ref"], pdf["image"], _profiles_col(pdf)
         ):
-            emit(media_ref, -1, b"", 0, 0, prof)  # sentinel
-            if png is not None and bytes(png).startswith(b"%PDF"):
-                # PDF media: text layer extracted here; carried verbatim to
-                # the rec stage as a box_idx=-2 row (no crops to explode)
-                text = media_payload_text(png)
-                emit(media_ref, -2, text.encode("utf-8"), len(text), 0, prof)
-                continue
-            img = _safe_decode(png)
+            text, img = route_payload(png)
+            emit(media_ref, -1, (text or "").encode("utf-8"), 0, 0, prof)
             if img is None:
-                continue
-            h_lines, v_lines = detect_grid(img)
-            if len(h_lines) >= 2 and len(v_lines) >= 2:
-                # ruled table: structured path, verbatim text row (same
-                # routing as media_payload_text, keeps modes identical)
-                text = media_payload_text(png)
-                emit(media_ref, -2, text.encode("utf-8"), len(text), 0, prof)
                 continue
             box_mode = "poly" if prof == "poly" else "quad"
             for idx, poly in enumerate(detect_quads(img, box_mode=box_mode)):
@@ -138,7 +114,9 @@ def recognize_iter(
     batches: Iterator[pd.DataFrame], use_cls: bool = True, decoder: str = "ctc"
 ) -> Iterator[pd.DataFrame]:
     """Crop rows -> (media_ref, box_idx, text, conf): cls-rotate then
-    recognition. ``decoder`` picks the head contract ('ctc' | 'attn')."""
+    recognition. ``decoder`` picks the head contract ('ctc' | 'attn').
+    A ref row (``box_idx < 0``) passes its routed text through with
+    conf 1.0."""
     for pdf in batches:
         texts: list[str] = []
         confs: list[float] = []
@@ -146,13 +124,9 @@ def recognize_iter(
             pdf["crop"], pdf["crop_h"], pdf["crop_w"], pdf["box_idx"],
             _profiles_col(pdf),
         ):
-            if int(bidx) == -2:  # verbatim payload text (PDF text layer)
+            if int(bidx) < 0:
                 texts.append(bytes(blob).decode("utf-8"))
                 confs.append(1.0)
-                continue
-            if int(bidx) < 0:  # sentinel: no OCR, empty text
-                texts.append("")
-                confs.append(0.0)
                 continue
             crop = np.frombuffer(blob, dtype=np.uint8).reshape(int(h), int(w))
             text, conf = classify_and_recognize(
@@ -172,6 +146,14 @@ def recognize_iter(
         )
 
 
+def kept_crops(df: DataFrame, threshold: float = DROP_SCORE) -> DataFrame:
+    """The drop-score filter over recognized rows (``predict_system.py:
+    327-336``): keep non-empty text scored at or above ``threshold``."""
+    from pyspark.sql import functions as F
+
+    return df.filter((F.col("conf") >= F.lit(threshold)) & (F.col("text") != ""))
+
+
 def ocr_records_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """(media_ref, image) -> per-image OCR record rows (transcription, score,
     points json) — the det/system golden-file shape (FIXTURES.md F3)."""
@@ -180,7 +162,7 @@ def ocr_records_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out: dict[str, list] = {"media_ref": [], "transcription": [], "score": [], "points": []}
         for media_ref, png in zip(pdf["media_ref"], pdf["image"]):
-            img = _safe_decode(png)
+            img = decode_gray(png)
             if img is None:
                 continue
             for rec in ocr_image(img):
@@ -211,7 +193,7 @@ def det_polys_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             "media_ref": [], "poly_idx": [], "points": [], "score": [],
         }
         for media_ref, png in zip(pdf["media_ref"], pdf["image"]):
-            img = _safe_decode(png)
+            img = decode_gray(png)
             if img is None:
                 continue
             polys, scores = detect_polys(img)

@@ -386,7 +386,8 @@ def _gopher_repetition(docs: DataFrame) -> DataFrame:
     # (doc)) satisfies their ClusteredDistributions, so all three
     # aggregations run exchange-free — one shuffle of the compact docs
     # table replaces two shuffles of the ~3x-exploded gram table (the
-    # trade a 100 TB corpus wants; verified in PLANS.md).
+    # trade a 100 TB corpus wants; checked by tests/test_plan_quality.py::
+    # test_gopher_repetition_single_preexplode_exchange).
     slots = docs.sparkSession.sparkContext.defaultParallelism
     g = (
         docs.repartition(2 * slots, "doc_id")

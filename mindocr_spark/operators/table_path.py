@@ -7,8 +7,8 @@ from collections.abc import Iterator
 
 import pandas as pd
 
+from ..kernels.system import decode_gray
 from ..kernels.table import extract_table
-from .media_path import _safe_decode
 
 TABLE_CELLS_SCHEMA = "media_ref string, row int, col int, text string"
 
@@ -18,7 +18,7 @@ def table_cells_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out = {"media_ref": [], "row": [], "col": [], "text": []}
         for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-            img = _safe_decode(blob)
+            img = decode_gray(blob)
             if img is None:
                 continue
             table = extract_table(img)
@@ -36,7 +36,7 @@ TABLE_HTML_SCHEMA = "media_ref string, html string, n_cells int"
 
 def table_html_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """(media_ref, image) -> one row per ruled-table image with the
-    TableMaster pred_html (round 5; kernels/table.extract_table_html —
+    TableMaster pred_html (kernels/table.extract_table_html —
     the predict_table_recognition.py output shape). Non-table or
     undecodable payloads are skipped, like the decode-skip node."""
     from ..kernels.table import extract_table_html
@@ -44,7 +44,7 @@ def table_html_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         out = {"media_ref": [], "html": [], "n_cells": []}
         for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-            img = _safe_decode(blob)
+            img = decode_gray(blob)
             if img is None:
                 continue
             html = extract_table_html(img)

@@ -40,12 +40,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import DROP_SCORE
 from ..operators.media_path import (
     DET_CROPS_SCHEMA,
     FUSED_SCHEMA,
     REC_SCHEMA,
     det_crops_iter,
+    kept_crops,
     ocr_fused_iter,
     recognize_iter,
 )
@@ -265,21 +265,14 @@ def _media_texts_exploded(payloads: DataFrame) -> DataFrame:
         (F.col("crop_w") / F.greatest(F.col("crop_h"), F.lit(1))).asc()
     )
     rec = crops.mapInPandas(recognize_iter, REC_SCHEMA)
-    # keep scored crops passing drop-score AND the per-ref sentinel rows
-    # (box_idx < 0), so every OCR'd ref yields one text row (the
-    # sentinel's '' text is dropped by the filter inside the array_join)
-    kept = rec.filter(
-        ((F.col("conf") >= F.lit(DROP_SCORE)) & (F.col("text") != ""))
-        | (F.col("box_idx") < 0)
-    )
-    return kept.groupBy("media_ref").agg(
+    # one row per kept word or routed text; a ref with none (a page with
+    # no kept word, missing or junk media) gets no group here and reads ''
+    # from the join-back's coalesce in extract()
+    return kept_crops(rec).groupBy("media_ref").agg(
         F.array_join(
-            F.filter(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("box_idx", "text"))),
-                    lambda x: x["text"],
-                ),
-                lambda t: t != "",
+            F.transform(
+                F.sort_array(F.collect_list(F.struct("box_idx", "text"))),
+                lambda x: x["text"],
             ),
             " ",
         ).alias("text")

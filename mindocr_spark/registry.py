@@ -180,14 +180,10 @@ def _rotate_crops(angle: float = 180.0):
 
 @register_stage("drop_score")
 def _drop_score(threshold: float | None = None):
-    from pyspark.sql import functions as F
-
-    from .config import DROP_SCORE
-
-    thr = DROP_SCORE if threshold is None else threshold
+    from .operators.media_path import kept_crops
 
     def stage(df: DataFrame) -> DataFrame:
-        return df.filter((F.col("conf") >= F.lit(thr)) & (F.col("text") != ""))
+        return kept_crops(df) if threshold is None else kept_crops(df, threshold)
 
     return stage
 

@@ -49,7 +49,8 @@ def test_output_schema(spark, small_corpus):
     )
 
 
-def test_unreadable_media_yields_empty_text(spark, small_corpus):
+@pytest.mark.parametrize("mode", ["fused", "exploded"])
+def test_unreadable_media_yields_empty_text(spark, small_corpus, mode):
     """Decode-failure skip semantics (decode_node.py:30-42)."""
     import pandas as pd
 
@@ -64,7 +65,8 @@ def test_unreadable_media_yields_empty_text(spark, small_corpus):
             }
         )
     )
-    rows = extract(spark, spans, bad_media, mode="fused").collect()
+    rows = extract(spark, spans, bad_media, mode=mode).collect()
+    assert len(rows) == len(spans_pdf)
     for row in rows:
         for s in row["out_spans"]:
             if s["media_ref"] is not None:
@@ -138,14 +140,25 @@ _SPAN_SCHEMA = (
 )
 def test_media_join_back_edge_cases(spark, mode, salt):
     """Each media span gets its ref's text from the per-ref OCR table:
-    a NULL ref and a ref absent from the media table read '', and a ref
-    shared by two spans of one document and by another document fills
-    every span — exactly one output span per input span, in offset order."""
-    from mindocr_spark.functions.glyphs import render_page
+    a NULL ref, a ref absent from the media table and a junk payload read
+    '', a ref shared by two spans of one document and by another document
+    fills every span, and a PDF, a ruled table and an RGB page each take
+    their route — exactly one output span per input span, in offset order."""
+    import numpy as np
+
+    from mindocr_spark.functions.glyphs import render_page, render_table
+    from mindocr_spark.functions.pdf_text import make_simple_pdf
     from mindocr_spark.functions.png_codec import encode_png
 
+    def gray(word):
+        return render_page([(word, 30, 30)], 96, 224)[0]
+
     def page(word):
-        return encode_png(render_page([(word, 30, 30)], 96, 224)[0])
+        return encode_png(gray(word))
+
+    g = gray("delta")
+    rgb_page = encode_png(np.stack([g, g, np.maximum(g, 60)], axis=-1))
+    table = encode_png(render_table([["alpha", "beta"], ["one42", ""]])[0])
 
     spans = spark.createDataFrame(
         [
@@ -157,11 +170,25 @@ def test_media_join_back_edge_cases(spark, mode, salt):
                 ("media", None, "absent", 5),
             ]),
             ("doc_b", [("media", None, "shared", 3), ("media", None, "own", 9)]),
+            ("doc_c", [
+                ("media", None, "junk", 8),
+                ("media", None, "table", 2),
+                ("media", None, "pdf", 0),
+                ("media", None, "rgb", 5),
+            ]),
         ],
         _SPAN_SCHEMA,
     )
     media = spark.createDataFrame(
-        [("shared", page("alpha")), ("own", page("beta")), ("unused", page("gamma"))],
+        [
+            ("shared", page("alpha")),
+            ("own", page("beta")),
+            ("unused", page("gamma")),
+            ("pdf", make_simple_pdf(["routed text"])),
+            ("table", table),
+            ("rgb", rgb_page),
+            ("junk", b"not a png"),
+        ],
         "media_ref string, image binary",
     )
     rows = {
@@ -177,6 +204,12 @@ def test_media_join_back_edge_cases(spark, mode, salt):
             ("media", "", None, 4),
         ],
         "doc_b": [("media", "alpha", "shared", 0), ("media", "beta", "own", 1)],
+        "doc_c": [
+            ("media", "routed text", "pdf", 0),
+            ("media", "alpha beta one42", "table", 1),
+            ("media", "delta", "rgb", 2),
+            ("media", "", "junk", 3),
+        ],
     }
 
 
@@ -240,7 +273,7 @@ def test_fused_ocr_runs_once_per_distinct_ref(spark, small_corpus, tmp_path):
 
 def test_exploded_det_stage_emits_one_sentinel_per_ref(spark, small_corpus, tmp_path):
     """The exploded plan's det stage sees each distinct ref once: its
-    sentinel rows (box_idx = -1) are exactly the distinct referenced refs,
+    ref rows (box_idx = -1) are exactly the distinct referenced refs,
     and in the written query it emits just those crop rows."""
     from pyspark.sql import functions as F
 

@@ -2,10 +2,13 @@
 
 import zlib
 
+import numpy as np
 import pytest
 
+from mindocr_spark.functions.glyphs import render_page, render_table
 from mindocr_spark.functions.pdf_text import extract_pdf_text, make_simple_pdf
-from mindocr_spark.kernels.system import media_payload_text
+from mindocr_spark.functions.png_codec import encode_png
+from mindocr_spark.kernels.system import decode_gray, media_payload_text, route_payload
 
 
 def test_roundtrip_compressed():
@@ -41,13 +44,44 @@ def test_not_a_pdf_raises():
         extract_pdf_text(b"plain bytes")
 
 
-def test_payload_router():
-    pdf = make_simple_pdf(["routed text"])
-    assert media_payload_text(pdf) == "routed text"
-    assert media_payload_text(b"junk") == ""
-    assert media_payload_text(None) == ""
-    # corrupt PDF body -> empty, not crash
-    assert media_payload_text(b"%PDF-1.4 garbage") == ""
+def _luminance(rgb):
+    r, g, b = (rgb[:, :, i].astype(np.uint32) for i in range(3))
+    return ((299 * r + 587 * g + 114 * b) // 1000).astype(np.uint8)
+
+
+_PAGE = render_page([("routed", 30, 30)], 96, 224)[0]
+# blue-tinted ink: the channels differ, so the gray conversion is not a no-op
+_RGB_PAGE = np.stack([_PAGE, _PAGE, np.maximum(_PAGE, 60)], axis=-1)
+
+# payload -> the text route_payload settles, or the gray image it hands to OCR
+_ROUTES = {
+    "none": (None, ""),
+    "empty": (b"", ""),
+    "junk": (b"junk", ""),
+    "truncated_png": (encode_png(_PAGE)[:60], ""),
+    "corrupt_pdf": (b"%PDF-1.4 garbage", ""),
+    "pdf": (make_simple_pdf(["routed text"]), "routed text"),
+    "ruled_table": (
+        encode_png(render_table([["alpha", "beta"], ["one42", ""]])[0]),
+        "alpha beta one42",
+    ),
+    "gray_page": (encode_png(_PAGE), _PAGE),
+    "rgb_page": (encode_png(_RGB_PAGE), _luminance(_RGB_PAGE)),
+}
+
+
+@pytest.mark.parametrize("route", list(_ROUTES))
+def test_payload_router(route):
+    payload, expected = _ROUTES[route]
+    text, img = route_payload(payload)
+    if isinstance(expected, str):  # settled without OCR
+        assert text == expected and img is None
+        assert media_payload_text(payload) == expected
+    else:  # a page: decoded to gray, OCR'd by media_payload_text
+        assert text is None
+        np.testing.assert_array_equal(img, expected)
+        np.testing.assert_array_equal(decode_gray(payload), expected)
+        assert media_payload_text(payload) == "routed"
 
 
 def test_corpus_contains_pdfs_and_matches_expected():

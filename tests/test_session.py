@@ -43,3 +43,19 @@ def test_spark_submit_master_and_engine_conf_apply(tmp_path):
     ).stdout
     line = next(ln for ln in out.splitlines() if ln.startswith("PROBE"))
     assert line.split()[1:] == ["local[2]", "mindocr_spark.spark_daemon", "true"]
+
+
+def test_one_session_builder():
+    """``session.get_spark`` is the only session builder: every other tracked
+    module (the benchmark's own runner aside) takes its session from it."""
+    tracked = subprocess.run(
+        ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True, text=True, check=True
+    ).stdout.split()
+    offenders = [
+        path
+        for path in tracked
+        if path not in ("mindocr_spark/session.py", "tests/test_session.py")
+        and not path.startswith("perfbench/")
+        and "SparkSession.builder" in open(os.path.join(ROOT, path), encoding="utf-8").read()
+    ]
+    assert offenders == []

@@ -1,8 +1,11 @@
-"""Dump formatted physical plans of the flagship queries to PLANS.md —
-plan-quality evidence (pushdown, pruning, broadcast, codegen spans)."""
+"""Dump formatted physical plans of the flagship queries to
+``plan_dumps/PLANS.md`` (gitignored, regenerated on demand) — plan-quality
+evidence (pushdown, pruning, broadcast, codegen spans). The durable plan
+checks are ``tests/test_plan_quality*.py``."""
 
 from __future__ import annotations
 
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -144,9 +147,10 @@ def main() -> None:
         plan = df._jdf.queryExecution().explainString(mode)
         out.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
     spark.stop()
-    with open("PLANS.md", "w") as f:
+    os.makedirs("plan_dumps", exist_ok=True)
+    with open("plan_dumps/PLANS.md", "w") as f:
         f.write("\n".join(out))
-    print("wrote PLANS.md")
+    print("wrote plan_dumps/PLANS.md")
 
 
 if __name__ == "__main__":
