@@ -45,6 +45,14 @@ CLS_THRESH = 0.9  # rotate only when confident (reference predict_system.py:300-
 DROP_SCORE = 0.5
 SORTED_BOXES_YTOL = 10  # same-line tolerance (reference utils.py:95-103)
 
+# --- media decode ------------------------------------------------------
+# PNG pixel budget (width x height), checked on the IHDR before any IDAT is
+# inflated, so a small decompression bomb cannot exhaust a Python worker.
+# The largest page the corpus generators emit is a 160 x 480 ruled table
+# (76,800 px); 2^24 px (4096 x 4096) also covers a 300-dpi A4 scan
+# (2480 x 3508).
+MAX_PNG_PIXELS = 1 << 24
+
 # --- spark tuning ------------------------------------------------------
 # Arrow batch sizing: measured 64 -> 512 gives ~16% on the OCR stage (fewer
 # per-batch pandas assemblies); 256 balances that against per-task memory

@@ -15,6 +15,8 @@ import zlib
 
 import numpy as np
 
+from ..config import MAX_PNG_PIXELS
+
 _SIG = b"\x89PNG\r\n\x1a\n"
 
 
@@ -104,6 +106,8 @@ def decode_png(data: bytes) -> np.ndarray:
             )
             if depth != 8 or color_type not in (0, 2) or interlace != 0:
                 raise ValueError("unsupported PNG variant")
+            if w * h > MAX_PNG_PIXELS:
+                raise ValueError(f"PNG of {w}x{h} exceeds the pixel budget")
         elif tag == b"IDAT":
             idat.extend(payload)
         elif tag == b"IEND":
@@ -112,8 +116,14 @@ def decode_png(data: bytes) -> np.ndarray:
         raise ValueError("missing IHDR/IDAT chunk")
     channels = 1 if color_type == 0 else 3
     stride = w * channels
-    raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
-    if raw.size != h * (1 + stride):
+    size = h * (1 + stride)
+    # inflate at most one byte past the IHDR size: excess output is an
+    # error, never an allocation
+    inflated = zlib.decompressobj().decompress(bytes(idat), size + 1)
+    if len(inflated) > size:
+        raise ValueError("PNG payload exceeds its IHDR size")
+    if len(inflated) != size:
         raise ValueError("bad PNG payload size")
+    raw = np.frombuffer(inflated, dtype=np.uint8)
     img = _unfilter(raw, h, stride, channels)
     return img.reshape(h, w) if channels == 1 else img.reshape(h, w, 3)

@@ -70,40 +70,25 @@ def _band_cols(b: int) -> list[str]:
 
 def _verify_candidates(sh: DataFrame, cand: DataFrame) -> DataFrame:
     """Exact-jaccard verification of LSH candidate pairs — the second half
-    of the MMDS recipe (round 4): candidates whose true shingle jaccard
-    clears JACCARD_THRESHOLD survive; banding false positives (probability
-    mass below the S-curve knee) are removed, so the operator's output is
+    of the MMDS recipe: candidates whose true shingle jaccard clears
+    JACCARD_THRESHOLD survive; banding false positives (probability mass
+    below the S-curve knee) are removed, so the operator's output is
     hash-family-independent up to recall. Work is bounded by candidate
     volume x shingles-per-doc (each candidate joins only its own two
     shingle sets), never by corpus size.
 
-    Round 5: when ``cand`` already carries ``na``/``nb`` (per-doc shingle
-    counts piggybacked on the minhash groupBy — zero extra shuffles), the
-    corpus-wide sizes aggregate and both doc-keyed size joins are skipped
-    entirely; at 10^12 docs those were two corpus-scale shuffles."""
+    ``cand`` carries ``na``/``nb``, the per-doc shingle counts that ride
+    the minhash aggregate (:func:`_minhash_bands`), so no corpus-wide
+    sizes aggregate or doc-keyed size join is needed — at 10^12 docs
+    those would be two corpus-scale shuffles."""
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
+    return (
         cand.join(a, "doc_a")
         .join(b, ["doc_b", "shingle"])
-        .groupBy(
-            "doc_a",
-            "doc_b",
-            *(["na", "nb"] if "na" in cand.columns else []),
-        )
+        .groupBy("doc_a", "doc_b", "na", "nb")
         .agg(F.count("*").alias("inter"))
-    )
-    if "na" not in cand.columns:
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-        inter = inter.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
-            "doc_a",
-        ).join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")),
-            "doc_b",
-        )
-    return (
-        inter.filter(
+        .filter(
             F.lit(JACCARD_T_DEN) * F.col("inter")
             >= F.lit(JACCARD_T_NUM)
             * (F.col("na") + F.col("nb") - F.col("inter"))
@@ -177,7 +162,6 @@ def exact_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("long").alias("n_docs"),
             F.min("doc_id").alias("keeper"),
         )
-        .filter(F.col("n_docs") >= 1)
     )
 
 
@@ -206,16 +190,14 @@ GROUP BY 1 HAVING count(*) > 1
 """
 
 
-# Kirsch-Mitzenmacher double hashing (round 5, verdict #3): ONE md5 per
-# shingle, split into two independent 60-bit halves (15 hex chars each —
-# the engine-verified '0x'-cast / conv parity window), and permutation s
-# is h1 + s*h2 mod 2^60.  This replaces 128 per-row md5 invocations with
-# one md5 + 128 integer multiply-adds — the round-4 recall contract
-# (threshold-derived 64x2 banding + exact verification) is unchanged, the
+# Kirsch-Mitzenmacher double hashing: ONE md5 per shingle, split into two
+# independent 60-bit halves (15 hex chars each — the engine-verified
+# '0x'-cast / conv parity window), and permutation s is h1 + s*h2 mod 2^60:
+# one md5 + 128 integer multiply-adds per shingle instead of 128 md5s. The
 # hash family is a standard published minhash construction (Kirsch &
-# Mitzenmacher 2006), and the arithmetic is written with a 30-bit split
-# so no intermediate exceeds 2^62: safe under Spark ANSI overflow checks
-# AND bit-identical in DuckDB BIGINT (no HUGEINT needed).
+# Mitzenmacher 2006), and the arithmetic is written with a 30-bit split so
+# no intermediate exceeds 2^62: safe under Spark ANSI overflow checks AND
+# bit-identical in DuckDB BIGINT (no HUGEINT needed).
 _KM_M30 = (1 << 30) - 1
 _KM_M60 = (1 << 60) - 1
 
@@ -237,6 +219,94 @@ _KM_HALVES_SQL = (
 )
 
 
+# A minhash family maps the (doc_id, shingle) table to per-shingle base
+# hashes and names permutation s over them; :func:`_minhash_bands` is the
+# one pipeline both families run.
+
+
+def _md5_family(sh: DataFrame):
+    """The md5 Kirsch-Mitzenmacher family: the two 60-bit halves (h1, h2)
+    of one md5 per shingle, permutation s = :func:`_km_expr`. The md5 is
+    projected on its own first, so it runs once per shingle, not once per
+    half."""
+    m = sh.select("doc_id", F.md5("shingle").alias("m"))
+    halves = m.select(
+        "doc_id",
+        F.expr("cast(conv(substr(m,1,15),16,10) as bigint)").alias("h1"),
+        F.expr("cast(conv(substr(m,17,15),16,10) as bigint)").alias("h2"),
+    )
+    return halves, lambda s: F.expr(_km_expr(s))
+
+
+def _xxhash64_family(sh: DataFrame):
+    """The xxhash64 family: permutation s is xxhash64(s, xxhash64(shingle))
+    — the variable-length string is hashed ONCE into a 64-bit base
+    fingerprint and each permutation rehashes only that fixed 8-byte long
+    (a seed-chained long hash is a handful of multiplies). Rehashing a
+    fingerprint is the standard minhash construction; base-fingerprint
+    collisions (2^-64) are absorbed by the exact-jaccard verification."""
+    based = sh.select("doc_id", F.xxhash64("shingle").alias("bh"))
+    return based, lambda s: F.xxhash64(F.lit(s), F.col("bh"))
+
+
+def _minhash_bands(sh: DataFrame, family) -> DataFrame:
+    """(doc_id, n, band_no, band_key) from a (doc_id, shingle) table: the
+    N_MINHASH minimum permutations of each doc's shingles under
+    ``family`` (:func:`_md5_family` / :func:`_xxhash64_family`), cut into
+    N_BANDS bands of BAND_ROWS, each keyed by the xxhash64 long of its
+    minhash values. Persisted: it feeds both candidate-join sides.
+
+    Band keys only ever ADD candidates (equal band values always collide;
+    2^-64 key collisions add spurious ones), and the exact-jaccard
+    verification removes them, so the verified output equals a string-keyed
+    banding's. The per-doc shingle count ``n`` rides the SAME aggregate
+    (zero extra shuffles), so the verify stage needs no sizes join."""
+    base, perm = family(sh)
+    mh = base.groupBy("doc_id").agg(
+        *[F.min(perm(s)).alias(f"mh{s}") for s in range(N_MINHASH)],
+        F.count("*").alias("n"),
+    )
+    keys = [
+        F.xxhash64(*[F.col(c) for c in _band_cols(b)]) for b in range(N_BANDS)
+    ]
+    return persist_intermediate(
+        mh.select(
+            "doc_id",
+            "n",
+            F.posexplode(F.array(*keys)).alias("band_no", "band_key"),
+        )
+    )
+
+
+def _lsh_candidates(probe: DataFrame, corpus: DataFrame) -> DataFrame:
+    """Distinct (doc_a < doc_b, na, nb) candidate pairs: a ``probe`` band
+    row and a ``corpus`` band row sharing (band_no, band_key). The full
+    operators pass one band table as both sides; an incremental probe
+    passes its arriving rows, so a new-new pair counts once and old-old
+    pairs never form."""
+    a, b = F.col("a.doc_id"), F.col("b.doc_id")
+    # a self-join meets every pair in both orders, so it keeps a < b; a
+    # probe against another table keeps both and swaps the sides of a > b
+    # (the constant swap folds away, leaving the self-join a plain select)
+    pair, swap = (a < b, F.lit(False)) if probe is corpus else (a != b, a > b)
+
+    def side(x, y):
+        return F.when(swap, y).otherwise(x)
+
+    return (
+        probe.alias("a")
+        .join(corpus.alias("b"), ["band_no", "band_key"])
+        .filter(pair)
+        .select(
+            side(a, b).alias("doc_a"),
+            side(b, a).alias("doc_b"),
+            side(F.col("a.n"), F.col("b.n")).alias("na"),
+            side(F.col("b.n"), F.col("a.n")).alias("nb"),
+        )
+        .distinct()
+    )
+
+
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash (md5-based permutations) + LSH banding + exact
     verification — near-dup pairs whose true shingle jaccard clears the
@@ -250,127 +320,26 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer multiply-add each; see :func:`_km_expr`) -> elementwise min
     agg -> band -> bucket-join -> exact verify."""
     sh = persist_intermediate(_shingles(_docs(spark, sf_dir)))
-    halves = sh.select("doc_id", F.md5("shingle").alias("m")).select(
-        "doc_id",
-        F.expr("cast(conv(substr(m,1,15),16,10) as bigint)").alias("h1"),
-        F.expr("cast(conv(substr(m,17,15),16,10) as bigint)").alias("h2"),
-    )
-    mh = halves.groupBy("doc_id").agg(
-        *[
-            F.min(F.expr(_km_expr(s))).alias(f"mh{s}")
-            for s in range(N_MINHASH)
-        ],
-        F.count("*").alias("n"),
-    )
-    # Round 7: band identity as xxhash64(band_no, rows...) LONG keys
-    # instead of the old "b3:v|v" string concatenations — ~70-char string
-    # materialization and shuffle per band row gone. Candidate-set
-    # semantics are unchanged up to 2^-64 hash collisions, which only ADD
-    # candidates (equal band values always collide); the exact-jaccard
-    # verification stage removes any such false positive, so the VERIFIED
-    # output — the only output — is identical (same argument as the
-    # base-fingerprint collision note in _xxhash_bands).
-    bands = mh.select(
-        "doc_id",
-        "n",
-        F.explode(
-            F.array(
-                *[
-                    F.xxhash64(F.lit(b), *[F.col(c) for c in _band_cols(b)])
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    )
-    bands = persist_intermediate(bands)  # both join sides; unpersisted, the minhash agg runs twice
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(b, "band")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .distinct()
-    )
-    return _verify_candidates(sh, cand)
+    bands = _minhash_bands(sh, _md5_family)
+    return _verify_candidates(sh, _lsh_candidates(bands, bands))
 
 
 def minhash_lsh_pairs_fast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """xxhash64 production variant of :func:`minhash_lsh_pairs` (r3,
-    CLAUDE.md candidate): same MinHash+LSH algorithm, but the hash family
-    is Spark's JVM-intrinsic xxhash64 chained over a per-shingle 64-bit
-    base fingerprint (see :func:`_xxhash_bands`) instead of md5 hex
-    strings — no 32-char string materialization, 8-byte long band keys
-    instead of ~70-char concatenations, so both the minhash aggregation
-    CPU and the band-join shuffle bytes drop. Hash-oracled since round 4
-    via generated inline XXH64 DuckDB SQL (functions/xxh64_sql.py); this
-    variant is what a 100 TB job runs. Different hash family =>
-    different (valid) minhash permutations, so CANDIDATES can differ from
-    the md5 form on boundary cases — but both run the same exact-jaccard
-    verification, so the verified outputs agree up to S-curve recall
-    (pytest equivalence, tests/test_dedup_banded.py)."""
+    """xxhash64 production variant of :func:`minhash_lsh_pairs`: same
+    MinHash+LSH algorithm, but the hash family is Spark's JVM-intrinsic
+    xxhash64 chained over a per-shingle 64-bit base fingerprint
+    (:func:`_xxhash64_family`) instead of md5 hex strings — no 32-char
+    string materialization, so the minhash aggregation CPU drops.
+    Hash-oracled via generated inline XXH64 DuckDB SQL
+    (functions/xxh64_sql.py); this variant is what a 100 TB job runs.
+    Different hash family => different (valid) minhash permutations, so
+    CANDIDATES can differ from the md5 form on boundary cases — but both
+    run the same exact-jaccard verification, so the verified outputs
+    agree up to S-curve recall (pytest equivalence,
+    tests/test_dedup_banded.py)."""
     sh = persist_intermediate(_shingles(_docs(spark, sf_dir)))
-    bands = _xxhash_bands(sh)
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(b, ["band_no", "band_key"])
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.n").alias("na"),
-            F.col("b.n").alias("nb"),
-        )
-        .distinct()
-    )
-    return _verify_candidates(sh, cand)
-
-
-def _xxhash_bands(sh: DataFrame) -> DataFrame:
-    """(doc_id, band_no, band_key) for the xxhash64 minhash family —
-    8-byte long band keys, persisted (it feeds both self-join sides).
-
-    Round 5 (verdict #3): permutation s is xxhash64(s, xxhash64(shingle))
-    — the variable-length string is hashed ONCE into a 64-bit base
-    fingerprint and each of the 128 permutations rehashes only that fixed
-    8-byte long (a seed-chained long hash is a handful of multiplies), so
-    per-row hash work drops from 128 full string folds to 1 string fold +
-    128 long folds.  Rehashing a fingerprint is the standard minhash
-    construction; base-fingerprint collisions (2^-64) are absorbed by the
-    exact-jaccard verification stage."""
-    based = sh.select("doc_id", F.xxhash64("shingle").alias("bh"))
-    mh = based.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(s), F.col("bh"))).alias(f"mh{s}")
-            for s in range(N_MINHASH)
-        ],
-        # per-doc shingle count rides the SAME aggregate (zero extra
-        # shuffles) so the verify stage needs no sizes join (round 5)
-        F.count("*").alias("n"),
-    )
-    bands = mh.select(
-        "doc_id",
-        "n",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_no"),
-                        F.xxhash64(
-                            *[F.col(c) for c in _band_cols(b)]
-                        ).alias("band_key"),
-                    )
-                    for b in range(N_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "n", "band.band_no", "band.band_key")
-    return persist_intermediate(bands)
+    bands = _minhash_bands(sh, _xxhash64_family)
+    return _verify_candidates(sh, _lsh_candidates(bands, bands))
 
 
 INCREMENT_MOD = 10  # doc_id % 10 == 0 plays the arriving daily batch
@@ -386,27 +355,13 @@ def minhash_lsh_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     STORED band table maintained across increments (append the new rows
     after each batch; this query recomputes it from documents because the
     driver contract is stateless), and the probe side is broadcast-sized.
-    Pairs are normalized (least, greatest) so a new-new pair counts once;
-    old-old pairs are excluded by construction. Same exact-jaccard
-    verification as the full operator, so output = the full operator's
-    pairs restricted to those touching the increment (pytest-asserted)."""
+    Same exact-jaccard verification as the full operator, so output = the
+    full operator's pairs restricted to those touching the increment
+    (pytest-asserted)."""
     sh = persist_intermediate(_shingles(_docs(spark, sf_dir)))
-    bands = _xxhash_bands(sh)
+    bands = _minhash_bands(sh, _xxhash64_family)
     arriving = bands.filter(F.col("doc_id") % INCREMENT_MOD == 0)
-    swap = F.col("a.doc_id") > F.col("b.doc_id")
-    cand = (
-        arriving.alias("a")
-        .join(bands.alias("b"), ["band_no", "band_key"])
-        .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-            F.when(swap, F.col("b.n")).otherwise(F.col("a.n")).alias("na"),
-            F.when(swap, F.col("a.n")).otherwise(F.col("b.n")).alias("nb"),
-        )
-        .distinct()
-    )
-    return _verify_candidates(sh, cand)
+    return _verify_candidates(sh, _lsh_candidates(arriving, bands))
 
 
 MINHASH_LSH_SQL = f"""
@@ -432,38 +387,49 @@ SELECT doc_a, doc_b FROM verified
 """
 
 
-def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """60-bit SimHash per document from md5-hashed tokens.
+def _simhash(docs: DataFrame, token_hash, bits: int) -> DataFrame:
+    """(doc_id, simhash): the ``bits``-bit SimHash of each document's
+    space-split tokens, ``token_hash`` being a long Column over ``tok``.
 
-    Folded JVM-side: one groupBy(doc_id) with 60 bit-count aggregates plus a
-    token count, instead of exploding every token into 60 bit rows (a 60x
-    row blow-up whose second shuffle dominated the r01 profile). Identical
-    integer math: the per-bit vote s = sum(2*bit - 1) = 2*cnt_b - n, bit set
-    iff s >= 0 — all map-side combinable."""
-    docs = _docs(spark, sf_dir)
-    slots = spark.sparkContext.defaultParallelism
+    Folded JVM-side: one groupBy(doc_id) with ``bits`` bit-count
+    aggregates plus a token count, instead of exploding every token into
+    one row per bit (a ``bits``-x row blow-up, shuffled a second time).
+    Identical integer math: the per-bit vote
+    s = sum(2*bit - 1) = 2*cnt_b - n, bit set iff s >= 0 — all map-side
+    combinable. At 64 bits, bit 63's addend is Long.MIN_VALUE; partial sums
+    of the lower 63 bits stay < 2^63 so the fold never overflows
+    (ANSI-safe)."""
+    slots = docs.sparkSession.sparkContext.defaultParallelism
     toks = (
-        # compact-table repartition: the 60-bit-vote aggregation below
+        # compact-table repartition: the bit-vote aggregation below
         # groups by doc_id, so exploded token rows never shuffle
         docs.repartition(2 * slots, "doc_id")
         .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .withColumn(
-            "h", F.expr("cast(conv(substr(md5(tok),1,15),16,10) as bigint)")
-        )
+        .withColumn("h", token_hash)
     )
     aggs = [
         F.sum(F.expr(f"cast(shiftright(h, {b}) & 1 as bigint)")).alias(f"c{b}")
-        for b in range(SIMHASH_BITS)
+        for b in range(bits)
     ]
     per_doc = toks.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n"), *aggs
     )
     sig_expr = " + ".join(
         f"(case when 2 * c{b} - n >= 0 then shiftleft(1L, {b}) else 0L end)"
-        for b in range(SIMHASH_BITS)
+        for b in range(bits)
     )
     return per_doc.select(
         "doc_id", F.expr(sig_expr).cast("bigint").alias("simhash")
+    )
+
+
+def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """60-bit SimHash per document from md5-hashed tokens (the first 15
+    hex chars of each token's md5)."""
+    return _simhash(
+        _docs(spark, sf_dir),
+        F.expr("cast(conv(substr(md5(tok),1,15),16,10) as bigint)"),
+        SIMHASH_BITS,
     )
 
 
@@ -542,22 +508,29 @@ WHERE {JACCARD_T_DEN} * i.inter >= {JACCARD_T_NUM} * (na.n + nb.n - i.inter)
 SIMHASH_HAMMING_MAX = 20
 
 
-def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEST ORACLE ONLY (not registered as a production query since round 2):
-    exact all-pairs SimHash hamming <= 20 via crossJoin — O(N^2), cannot
-    survive scale. The production operator is
-    :func:`simhash_near_dup_banded`; this quadratic form remains as the
-    ground truth the banded operator is verified against in tests/."""
-    sig = simhash_signatures(spark, sf_dir)
+def hamming_pairs_quadratic(sig: DataFrame, hmax: int) -> DataFrame:
+    """TEST ORACLE ONLY: every (doc_a < doc_b) pair of a (doc_id, simhash)
+    table at ``bit_count(xor) <= hmax``, via crossJoin — O(N^2), cannot
+    survive scale; the in-Spark ground truth the production near-dup
+    forms are verified against in tests/."""
     a = sig.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"))
     b = sig.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("hb"))
-    pairs = a.crossJoin(b).filter(F.col("doc_a") < F.col("doc_b"))
     return (
-        pairs.withColumn(
-            "hamming", F.expr("cast(bit_count(ha ^ hb) as int)")
-        )
-        .filter(F.col("hamming") <= SIMHASH_HAMMING_MAX)
+        a.crossJoin(b)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .withColumn("hamming", F.expr("cast(bit_count(ha ^ hb) as int)"))
+        .filter(F.col("hamming") <= hmax)
         .select("doc_a", "doc_b", "hamming")
+    )
+
+
+def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """TEST ORACLE ONLY (not a registered production query): exact
+    all-pairs 60-bit SimHash hamming <= 20. The production operator is
+    :func:`simhash_near_dup_banded`; this quadratic form remains as the
+    ground truth it is verified against."""
+    return hamming_pairs_quadratic(
+        simhash_signatures(spark, sf_dir), SIMHASH_HAMMING_MAX
     )
 
 
@@ -584,27 +557,59 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_HAMMING_MAX}
 
 
 SIMHASH_BANDED_HAMMING_MAX = 3
-N_SIMHASH_BANDS = 4  # 4 bands x 15 bits; pigeonhole: hamming<=3 => shared band
+
+# Block specs for exact hamming <= 3: (block sizes from the low bit up,
+# blocks per key). <= 3 bit errors corrupt <= 3 blocks, so with
+# len(sizes) - pick >= 3 clean blocks every qualifying pair agrees exactly
+# on some pick-block combination key (pigeonhole: zero false negatives).
+SIMHASH_BANDS = ((15,) * 4, 1)  # 60 bits: 4 bands, 15-bit keys
+MANKU60_BLOCKS = ((10,) * 6, 3)  # 60 bits: C(6,3) = 20 tables, 30-bit keys
+MANKU64_BLOCKS = ((10,) + (9,) * 6, 4)  # 64 bits: C(7,4) = 35, >= 36-bit keys
+
+
+def block_keys(sig: DataFrame, sig_col: str, blocks: tuple) -> DataFrame:
+    """``sig``'s rows, each repeated once per block combination of
+    ``blocks`` = (sizes, pick), with ``combo_id`` (the combination's index
+    in ``itertools.combinations`` order) and ``combo_key`` (its blocks of
+    ``sig_col`` packed low to high) — the join keys of every exact-hamming
+    near-dup form and of the stored image-dedup state."""
+    from itertools import combinations
+
+    sizes, pick = blocks
+    starts = [sum(sizes[:i]) for i in range(len(sizes))]
+    keys = []
+    for combo in combinations(range(len(sizes)), pick):
+        parts, shift = [], 0
+        for b in combo:
+            mask = (1 << sizes[b]) - 1
+            parts.append(
+                f"shiftleft(({sig_col} >> {starts[b]}) & {mask}, {shift})"
+            )
+            shift += sizes[b]
+        keys.append(F.expr(" + ".join(parts)))
+    return sig.select(
+        *sig.columns, F.posexplode(F.array(*keys)).alias("combo_id", "combo_key")
+    )
 
 
 def exact_hamming_pairs(
     sig: DataFrame,
-    make_tables,
+    blocks: tuple,
     hmax: int,
     id_col: str = "doc_id",
     sig_col: str = "simhash",
     a_name: str = "doc_a",
     b_name: str = "doc_b",
 ) -> DataFrame:
-    """All (a < b) id pairs at ``bit_count(sig_a ^ sig_b) <= hmax``, given a
-    pigeonhole-complete key-table builder (bands or Manku combos over the
-    signature column) — the round-7 shared skeleton of every exact-hamming
-    near-dup operator (simhash 60/64-bit + image dHash).
+    """All (a < b) id pairs at ``bit_count(sig_a ^ sig_b) <= hmax``, with
+    candidates from the pigeonhole-complete block spec ``blocks`` (see
+    :func:`block_keys`) — the duplicate-cluster-safe exact-hamming join
+    that simhash manku, simhash64 and image dHash near-dup all run.
 
     Why this shape (identical output to the naive signature-level
     self-join): mass-duplicated content collapses to ONE signature value,
     and the naive join paid each identical-signature cluster's quadratic
-    once PER key table (x4 bands / x35 combos) before a distinct. Here
+    once PER key table (x20 / x35 combos) before a distinct. Here
 
     1. the key tables enumerate DISTINCT signature values only, so the
        bucket join emits unique (h1, h2) SIGNATURE pairs at hamming
@@ -615,14 +620,12 @@ def exact_hamming_pairs(
        output-proportional work, the only place cluster sizes multiply
        (as they must: the pairs ARE the output).
 
-    ``make_tables`` maps a 1-column distinct-signature frame to
-    (sig_col, combo_id, combo_key) rows; both it and the expansion sides
-    are persisted by the caller's policy (persist_intermediate) because
-    they feed two join sides each.
+    ``sig``, its distinct signatures and their key tables are persisted
+    (persist_intermediate) because each feeds two join sides.
     """
     sig = persist_intermediate(sig)
     distinct_sig = persist_intermediate(sig.select(sig_col).distinct())
-    combos = persist_intermediate(make_tables(distinct_sig))
+    combos = persist_intermediate(block_keys(distinct_sig, sig_col, blocks))
     near = (
         combos.alias("a")
         .join(combos.alias("b"), ["combo_id", "combo_key"])
@@ -672,15 +675,16 @@ def simhash_near_dup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production SimHash near-dup: banded bucket-join candidate generation,
     then the exact hamming check.
 
-    The 60-bit signature splits into 4 disjoint 15-bit bands. Two signatures
-    at hamming distance <= 3 differ in at most 3 bands (pigeonhole), so they
-    MUST agree on at least one band — the band-equality equi-join generates
-    every qualifying pair with zero false negatives, and the exact
-    ``bit_count(xor)`` filter removes false positives. Result is therefore
-    IDENTICAL to the quadratic all-pairs form at threshold 3 (the oracle SQL
-    is exactly that form), but the plan is a shuffle-on-band-key equi-join:
-    no crossJoin, candidate volume ~ sum of per-bucket squares (bounded by
-    near-dup cluster sizes, not corpus size).
+    The 60-bit signature splits into 4 disjoint 15-bit bands
+    (``SIMHASH_BANDS``). Two signatures at hamming distance <= 3 differ in
+    at most 3 bands (pigeonhole), so they MUST agree on at least one band —
+    the band-equality equi-join generates every qualifying pair with zero
+    false negatives, and the exact ``bit_count(xor)`` filter removes false
+    positives. Result is therefore IDENTICAL to the quadratic all-pairs
+    form at threshold 3 (the oracle SQL is exactly that form), but the plan
+    is a shuffle-on-band-key equi-join: no crossJoin, candidate volume ~
+    sum of per-bucket squares (bounded by near-dup cluster sizes, not
+    corpus size).
 
     At 100 TB: band keys are 4 rows/doc, high-cardinality (2^15 values x 4
     band ids, widen bands to taste); a pathological bucket (mass-duplicated
@@ -689,37 +693,17 @@ def simhash_near_dup_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-duplicate detection per Charikar SimHash, the operator the
     reference's corpus tooling lacks but a training-data pipeline needs.
     """
-    # round 7: this operator is the documented SMALL-CORPUS form (see the
-    # docstring's last paragraph — past the 2^15 keyspace ceiling the
-    # Manku/64-bit twins take over), so it keeps the cheaper direct
-    # signature-level join; the three scale forms (simhash_near_dup_manku,
-    # simhash64_near_dup, image_near_dup) run the duplicate-cluster-safe
-    # exact_hamming_pairs skeleton instead.
+    # the documented SMALL-CORPUS form (past the 2^15 keyspace ceiling the
+    # Manku twins take over) keeps the direct signature-level join: through
+    # exact_hamming_pairs it returns the same 496 pairs at sf0.1 but took
+    # 1.89 s median against 1.16 s (local[4] on a 4-vCPU VM, noop sink)
     sig = simhash_signatures(spark, sf_dir)
-    bands = sig.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_no"),
-                        F.expr(f"(simhash >> {15 * b}) & 32767").alias(
-                            "band_key"
-                        ),
-                    )
-                    for b in range(N_SIMHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "simhash", "band.band_no", "band.band_key")
     # both join sides reuse the band table; without a cache Catalyst
     # recomputes the full signature aggregation twice
-    bands = persist_intermediate(bands)
-    a = bands.alias("a")
-    b = bands.alias("b")
+    bands = persist_intermediate(block_keys(sig, "simhash", SIMHASH_BANDS))
     cand = (
-        a.join(b, ["band_no", "band_key"])
+        bands.alias("a")
+        .join(bands.alias("b"), ["combo_id", "combo_key"])
         .filter(F.col("a.doc_id") < F.col("b.doc_id"))
         .select(
             F.col("a.doc_id").alias("doc_a"),
@@ -761,10 +745,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_BANDED_HAMMING_MAX}
 """
 
 
-N_MANKU_BLOCKS = 6  # 6 x 10-bit blocks over the 60-bit signature
-_MANKU_PICK = 3  # hamming <= 3 errors touch <= 3 blocks => >= 3 clean blocks
-
-
 def simhash_near_dup_manku(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup via Manku-style block-combination tables — the
     construction that survives past the banded form's keyspace ceiling.
@@ -773,44 +753,27 @@ def simhash_near_dup_manku(spark: SparkSession, sf_dir: str) -> DataFrame:
     15-bit keys by the pigeonhole at hamming <= 3, so expected candidate
     volume is Theta(N^2 / 2^15) even on random signatures — a cliff around
     N ~ 10^7-10^8. This operator splits the 60-bit signature into 6 blocks
-    of 10 bits: <= 3 bit errors corrupt <= 3 blocks, so every qualifying
-    pair agrees EXACTLY on some 3-block combination — enumerating all
-    C(6,3) = 20 combinations as join tables gives zero false negatives with
-    30-bit keys, i.e. candidate volume Theta(20 * N^2 / 2^30): ~10^4x fewer
-    spurious candidates per table pair, at 5x the explode width. This is
-    the table construction of Manku/Jain/Sarma (WWW'07, "Detecting
-    Near-Duplicates for Web Crawling"), expressed as a Spark equi-join
-    instead of their sorted-list probes (same candidate set; a shuffle join
-    IS the distributed sorted-neighborhood). The exact bit_count(xor)
-    filter then removes false positives, so the result is IDENTICAL to the
-    quadratic all-pairs form at threshold 3 — the oracle SQL is exactly
-    that form, shared with the banded operator.
+    of 10 bits (``MANKU60_BLOCKS``): <= 3 bit errors corrupt <= 3 blocks,
+    so every qualifying pair agrees EXACTLY on some 3-block combination —
+    enumerating all C(6,3) = 20 combinations as join tables gives zero
+    false negatives with 30-bit keys, i.e. candidate volume
+    Theta(20 * N^2 / 2^30): ~10^4x fewer spurious candidates per table
+    pair, at 5x the explode width. This is the table construction of
+    Manku/Jain/Sarma (WWW'07, "Detecting Near-Duplicates for Web
+    Crawling"), expressed as a Spark equi-join instead of their
+    sorted-list probes (same candidate set; a shuffle join IS the
+    distributed sorted-neighborhood). The exact bit_count(xor) filter then
+    removes false positives, so the result is IDENTICAL to the quadratic
+    all-pairs form at threshold 3 — the oracle SQL is exactly that form,
+    shared with the banded operator.
 
     Keep :func:`simhash_near_dup_banded` for small corpora (4 rows/doc vs
     20); switch to this one when N approaches the 2^15 ceiling.
     """
-    from itertools import combinations
-
-    combos = list(combinations(range(N_MANKU_BLOCKS), _MANKU_PICK))
-    structs = []
-    for cid, combo in enumerate(combos):
-        key = " + ".join(
-            f"shiftleft((simhash >> {10 * b}) & 1023, {10 * pos})"
-            for pos, b in enumerate(combo)
-        )
-        structs.append(
-            F.struct(
-                F.lit(cid).alias("combo_id"), F.expr(key).alias("combo_key")
-            )
-        )
-
-    def tables_of(distinct_sig: DataFrame) -> DataFrame:
-        return distinct_sig.select(
-            "simhash", F.explode(F.array(*structs)).alias("c")
-        ).select("simhash", "c.combo_id", "c.combo_key")
-
     return exact_hamming_pairs(
-        simhash_signatures(spark, sf_dir), tables_of, SIMHASH_BANDED_HAMMING_MAX
+        simhash_signatures(spark, sf_dir),
+        MANKU60_BLOCKS,
+        SIMHASH_BANDED_HAMMING_MAX,
     )
 
 
@@ -819,132 +782,55 @@ def simhash_near_dup_manku(spark: SparkSession, sf_dir: str) -> DataFrame:
 SIMHASH_NEAR_DUP_MANKU_SQL = SIMHASH_NEAR_DUP_BANDED_SQL
 
 
-# --- 64-bit xxhash64 production twin (round 4) -------------------------------
+# --- 64-bit xxhash64 production twin ---------------------------------------
 # The 60-bit/md5 family above is the DuckDB-int64-parity ORACLE choice; its
 # Manku keyspace tops out at 2^30 (heavy past N ~ 10^9-10^10). This twin is
 # what a 10^12-doc job runs: JVM-intrinsic xxhash64 token hashes, the full
 # 64 signature bits, and 7 Manku blocks (sizes 10+9*6) picked 4 at a time —
 # C(7,4) = 35 tables on >= 2^36 combination keys, candidate volume
-# Theta(35 * N^2 / 2^36): workable to N ~ 10^11-10^12. Hash-oracled since
-# round 4: SIMHASH64_NEAR_DUP_SQL inlines a generated pure-SQL XXH64
+# Theta(35 * N^2 / 2^36): workable to N ~ 10^11-10^12. Hash-oracled:
+# SIMHASH64_NEAR_DUP_SQL inlines a generated pure-SQL XXH64
 # (functions/xxh64_sql.py) so DuckDB reproduces Spark's xxhash64 bit-for-bit;
 # pytest additionally proves (a) pigeonhole exactness against the in-Spark
 # 64-bit quadratic form and (b) pair-set equivalence with the 60-bit oracled
 # operator on the corpus.
 SIMHASH64_BITS = 64
-N_MANKU64_BLOCKS = 7
-_MANKU64_PICK = 4  # = blocks - hamming_max: <=3 errors leave >=4 clean blocks
-_MANKU64_SIZES = [10, 9, 9, 9, 9, 9, 9]
-_MANKU64_STARTS = [sum(_MANKU64_SIZES[:i]) for i in range(N_MANKU64_BLOCKS)]
 
 
 def simhash64_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash from xxhash64 token hashes — same folded JVM-side
-    aggregation shape as :func:`simhash_signatures` (64 bit-count
-    aggregates + token count, map-side combinable), no md5 hex-string
-    materialization. Bit 63's addend is Long.MIN_VALUE; partial sums of the
-    lower 63 bits stay < 2^63 so the fold never overflows (ANSI-safe)."""
-    docs = _docs(spark, sf_dir)
-    slots = spark.sparkContext.defaultParallelism
-    toks = (
-        docs.repartition(2 * slots, "doc_id")
-        .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .withColumn("h", F.xxhash64(F.col("tok")))
-    )
-    aggs = [
-        F.sum(F.expr(f"cast(shiftright(h, {b}) & 1 as bigint)")).alias(f"c{b}")
-        for b in range(SIMHASH64_BITS)
-    ]
-    per_doc = toks.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n"), *aggs
-    )
-    sig_expr = " + ".join(
-        f"(case when 2 * c{b} - n >= 0 then shiftleft(1L, {b}) else 0L end)"
-        for b in range(SIMHASH64_BITS)
-    )
-    return per_doc.select(
-        "doc_id", F.expr(sig_expr).cast("bigint").alias("simhash")
-    )
-
-
-def manku64_combo_structs(sig_col: str) -> list:
-    """The C(7,4) = 35 Manku table keys over a 64-bit signature column as
-    (combo_id, combo_key) struct expressions — each key packs 4 of the 7
-    blocks (>= 36 bits of keyspace per table), so the pigeonhole holds
-    for ANY 64-bit perceptual/sim hash: <= 3 bit errors corrupt <= 3
-    blocks, leaving some 4-block combination exactly equal. Shared by
-    :func:`simhash64_near_dup` and the image dHash family
-    (operators/multimodal.py, streaming/incremental.py)."""
-    from itertools import combinations
-
-    structs = []
-    for cid, combo in enumerate(
-        combinations(range(N_MANKU64_BLOCKS), _MANKU64_PICK)
-    ):
-        shift = 0
-        parts = []
-        for b in combo:
-            mask = (1 << _MANKU64_SIZES[b]) - 1
-            parts.append(
-                f"shiftleft(({sig_col} >> {_MANKU64_STARTS[b]}) & {mask}, {shift})"
-            )
-            shift += _MANKU64_SIZES[b]
-        structs.append(
-            F.struct(
-                F.lit(cid).alias("combo_id"),
-                F.expr(" + ".join(parts)).alias("combo_key"),
-            )
-        )
-    return structs
+    """64-bit SimHash from xxhash64 token hashes (:func:`_simhash`) — no
+    md5 hex-string materialization."""
+    return _simhash(_docs(spark, sf_dir), F.xxhash64("tok"), SIMHASH64_BITS)
 
 
 def simhash64_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit Manku block-combination near-dup (production twin of
     :func:`simhash_near_dup_manku`; module comment above). Exact at
     hamming <= SIMHASH_BANDED_HAMMING_MAX by the same pigeonhole: <= 3 bit
-    errors corrupt <= 3 of the 7 blocks, so every qualifying pair agrees
-    exactly on some 4-block combination key."""
-    # Round 7: routed through exact_hamming_pairs (identical pair set;
-    # the hash oracle is the quadratic form, unchanged) — identical-
-    # signature clusters no longer multiply through the 35 combo tables.
-    structs = manku64_combo_structs("simhash")
-
-    def tables_of(distinct_sig: DataFrame) -> DataFrame:
-        return distinct_sig.select(
-            "simhash", F.explode(F.array(*structs)).alias("c")
-        ).select("simhash", "c.combo_id", "c.combo_key")
-
+    errors corrupt <= 3 of the 7 blocks (``MANKU64_BLOCKS``), so every
+    qualifying pair agrees exactly on some 4-block combination key."""
     return exact_hamming_pairs(
         simhash64_signatures(spark, sf_dir),
-        tables_of,
+        MANKU64_BLOCKS,
         SIMHASH_BANDED_HAMMING_MAX,
     )
 
 
 def simhash64_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEST ORACLE ONLY: 64-bit quadratic all-pairs form (crossJoin) — the
-    in-Spark exactness ground truth for :func:`simhash64_near_dup`."""
-    sig = simhash64_signatures(spark, sf_dir)
-    a = sig.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("ha"))
-    b = sig.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("hb"))
-    return (
-        a.crossJoin(b)
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .withColumn("hamming", F.expr("cast(bit_count(ha ^ hb) as int)"))
-        .filter(F.col("hamming") <= SIMHASH_BANDED_HAMMING_MAX)
-        .select("doc_a", "doc_b", "hamming")
+    """TEST ORACLE ONLY: 64-bit quadratic all-pairs form — the in-Spark
+    exactness ground truth for :func:`simhash64_near_dup`."""
+    return hamming_pairs_quadratic(
+        simhash64_signatures(spark, sf_dir), SIMHASH_BANDED_HAMMING_MAX
     )
 
 
-# --- DuckDB oracles for the xxhash64 family (round 4) ------------------------
-# Round 3 registered minhash_lsh_pairs_fast and (this round) simhash64 as
-# rows-only because DuckDB has no xxhash64.  But Spark's xxhash64 is plain
-# XXH64 with seed chaining — pure 64-bit integer arithmetic — so
-# functions/xxh64_sql.py GENERATES it as inline HUGEINT SQL (layered
-# nested projections; see that module's docstring for the
-# lateral-alias-substitution trap).  These mirrors make both operators
-# fully hash-oracled: the driver executes the generated SQL as one
-# statement and compares value hashes.
+# --- DuckDB oracles for the xxhash64 family ----------------------------------
+# DuckDB has no xxhash64, but Spark's xxhash64 is plain XXH64 with seed
+# chaining — pure 64-bit integer arithmetic — so functions/xxh64_sql.py
+# GENERATES it as inline HUGEINT SQL (layered nested projections; see that
+# module's docstring for the lateral-alias-substitution trap). These
+# mirrors make both xxhash64 operators fully hash-oracled: the oracle gate
+# executes the generated SQL as one statement and compares value hashes.
 
 def _minhash_fast_sql(
     cand_sql: str | None = None,

@@ -168,7 +168,7 @@ def video_frame_sample(df: DataFrame, every_n: int = 10, strict: bool = False) -
     )
 
 
-# --- Perceptual image near-dup (round 5; round 6 Manku rewrite) --------------
+# --- Perceptual image near-dup ------------------------------------------------
 
 PHASH_HAMMING_MAX = 3
 
@@ -213,54 +213,21 @@ def image_dhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def image_combo_table(sig: DataFrame) -> DataFrame:
-    """Explode a (media_ref, dhash) signature table into the C(7,4) = 35
-    Manku combination-key tables shared with ``simhash64_near_dup``
-    (operators/dedup.py:manku64_combo_structs).  Round-6 rewrite of the
-    r5 4 x 16-bit banding, whose 65,536-key-per-band ceiling made the
-    in-bucket join quadratic past ~10^7 images (r5 verdict wrong #2):
-    each combo key here spans >= 36 bits, so the expected bucket is
-    N/2^36 rows and candidate volume stays Theta(35 * N^2 / 2^36) —
-    workable to N ~ 10^11 images.  Same pigeonhole exactness at
-    hamming <= 3 (<= 3 bit errors corrupt <= 3 of 7 blocks)."""
-    from pyspark.sql import functions as F
-
-    from .dedup import manku64_combo_structs
-
-    structs = manku64_combo_structs("dhash")
-    return sig.select(
-        "media_ref", "dhash", F.explode(F.array(*structs)).alias("c")
-    ).select("media_ref", "dhash", "c.combo_id", "c.combo_key")
-
-
 def image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-duplicate image pairs: dHash signatures -> Manku C(7,4)
     combination tables (>= 2^36 keys per table) -> combo equi-join ->
     exact ``bit_count(xor) <= 3`` filter — the ``simhash64_near_dup``
-    recipe applied to the media column.  At 10^12 images the combo table
-    is the stored state and arriving images probe it
+    recipe applied to the media column.  Rendered pages repeat across
+    documents, so identical dHashes form large clusters: the case
+    ``dedup.exact_hamming_pairs`` keeps from multiplying through the 35
+    tables.  At 10^12 images the combo table is the stored state and
+    arriving images probe it
     (:func:`mindocr_spark.streaming.incremental.stream_image_dedup_flags`)."""
-    from pyspark.sql import functions as F
-
-    from .dedup import exact_hamming_pairs, manku64_combo_structs
-
-    # Round 7: routed through dedup.exact_hamming_pairs (identical output
-    # set — see its docstring): rendered pages repeat across documents, so
-    # identical dHashes form large clusters, and the old signature-level
-    # combo self-join paid each cluster's quadratic 35x (once per Manku
-    # table) before the distinct; now identical-signature pairs come from
-    # one plain equi-join and the combo tables enumerate distinct
-    # signatures only.
-    structs = manku64_combo_structs("dhash")
-
-    def tables_of(distinct_sig):
-        return distinct_sig.select(
-            "dhash", F.explode(F.array(*structs)).alias("c")
-        ).select("dhash", "c.combo_id", "c.combo_key")
+    from .dedup import MANKU64_BLOCKS, exact_hamming_pairs
 
     return exact_hamming_pairs(
         image_dhash_signatures(spark, sf_dir),
-        tables_of,
+        MANKU64_BLOCKS,
         PHASH_HAMMING_MAX,
         id_col="media_ref",
         sig_col="dhash",

@@ -194,7 +194,7 @@ def stream_windowed_counts_batch(
     return spark.read.parquet(os.path.join(tmp, "out"))
 
 
-# --- Streaming near-dup probe against a stored dedup state (round 5) ---------
+# --- Streaming near-dup probe against a stored dedup state ------------------
 
 
 def build_dedup_state(spark: SparkSession, sf_dir: str, state_dir: str) -> None:
@@ -206,12 +206,19 @@ def build_dedup_state(spark: SparkSession, sf_dir: str, state_dir: str) -> None:
     (appended after each accepted batch); this helper seeds them from a
     batch corpus once.
     """
-    from ..operators.dedup import _docs, _shingles, _xxhash_bands
+    from ..operators.dedup import (
+        _docs,
+        _minhash_bands,
+        _shingles,
+        _xxhash64_family,
+    )
 
     sh = _shingles(_docs(spark, sf_dir))
     sh.write.mode("overwrite").parquet(f"{state_dir}/shingles")
     sh_stored = spark.read.parquet(f"{state_dir}/shingles")
-    _xxhash_bands(sh_stored).write.mode("overwrite").parquet(f"{state_dir}/bands")
+    _minhash_bands(sh_stored, _xxhash64_family).write.mode("overwrite").parquet(
+        f"{state_dir}/bands"
+    )
 
 
 def stream_dedup_flags(
@@ -238,7 +245,13 @@ def stream_dedup_flags(
     """
     from pyspark.sql import functions as F
 
-    from ..operators.dedup import _shingles, _verify_candidates, _xxhash_bands
+    from ..operators.dedup import (
+        _lsh_candidates,
+        _minhash_bands,
+        _shingles,
+        _verify_candidates,
+        _xxhash64_family,
+    )
 
     corpus_bands = spark.read.parquet(f"{state_dir}/bands")
     corpus_sh = spark.read.parquet(f"{state_dir}/shingles")
@@ -247,21 +260,10 @@ def stream_dedup_flags(
         if batch_df.isEmpty():
             return
         sh = _shingles(batch_df.select("doc_id", "text"))
-        ab = _xxhash_bands(sh)
-        swap = F.col("a.doc_id") > F.col("b.doc_id")
-        cand = (
-            ab.alias("a")
-            .join(corpus_bands.alias("b"), ["band_no", "band_key"])
-            .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-            .select(
-                F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-                F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-                F.when(swap, F.col("b.n")).otherwise(F.col("a.n")).alias("na"),
-                F.when(swap, F.col("a.n")).otherwise(F.col("b.n")).alias("nb"),
-            )
-            .distinct()
+        ab = _minhash_bands(sh, _xxhash64_family)
+        verified = _verify_candidates(
+            corpus_sh.unionByName(sh), _lsh_candidates(ab, corpus_bands)
         )
-        verified = _verify_candidates(corpus_sh.unionByName(sh), cand)
         flags = (
             batch_df.select("doc_id")
             .join(
@@ -390,7 +392,7 @@ LEFT JOIN (
 STREAM_DEDUP_SQL = _stream_dedup_sql()
 
 
-# --- Streaming image-dedup probe (round 5): the phash twin -------------------
+# --- Streaming image-dedup probe: the phash twin -----------------------------
 
 
 def build_image_dedup_state(
@@ -398,14 +400,14 @@ def build_image_dedup_state(
 ) -> None:
     """Materialize the perceptual-hash state a streaming image ingest
     probes: the Manku C(7,4) combo table of the corpus media's dHashes
-    (the image twin of :func:`build_dedup_state`'s band/shingle tables;
-    round-6 layout — probe-ready combo keys stored, not recomputed per
-    micro-batch)."""
-    from ..operators.multimodal import image_combo_table, image_dhash_signatures
+    (the image twin of :func:`build_dedup_state`'s band/shingle tables —
+    probe-ready combo keys stored, not recomputed per micro-batch)."""
+    from ..operators.dedup import MANKU64_BLOCKS, block_keys
+    from ..operators.multimodal import image_dhash_signatures
 
-    image_combo_table(image_dhash_signatures(spark, sf_dir)).write.mode(
-        "overwrite"
-    ).parquet(f"{state_dir}/image_combos")
+    block_keys(
+        image_dhash_signatures(spark, sf_dir), "dhash", MANKU64_BLOCKS
+    ).write.mode("overwrite").parquet(f"{state_dir}/image_combos")
 
 
 def stream_image_dedup_flags(
@@ -419,10 +421,9 @@ def stream_image_dedup_flags(
     """Streaming image near-dup: arriving (media_ref, image) rows are a
     file stream; each micro-batch dHashes its images with the shared
     pure-numpy kernel, probes the STORED Manku combo table (C(7,4)
-    tables on >= 2^36-key prefixes — the ``simhash64_near_dup`` layout,
-    round-6 rewrite of the bounded 4x16-bit bands), exact-filters on
-    ``bit_count(xor) <= 3`` and appends per-arrival flags partitioned by
-    batch_id (idempotent overwrite). Undecodable payloads flag
+    tables on >= 2^36-key prefixes — the ``simhash64_near_dup`` layout),
+    exact-filters on ``bit_count(xor) <= 3`` and appends per-arrival flags
+    partitioned by batch_id (idempotent overwrite). Undecodable payloads flag
     ``n_dups = -1`` (the decode node's skip-and-count contract) rather
     than vanishing."""
     import pandas as pd
@@ -430,7 +431,8 @@ def stream_image_dedup_flags(
 
     from ..functions.phash import dhash64
     from ..functions.png_codec import decode_png
-    from ..operators.multimodal import PHASH_HAMMING_MAX, image_combo_table
+    from ..operators.dedup import MANKU64_BLOCKS, block_keys
+    from ..operators.multimodal import PHASH_HAMMING_MAX
 
     stored_combos = spark.read.parquet(f"{state_dir}/image_combos").select(
         F.col("media_ref").alias("ref_b"),
@@ -468,8 +470,8 @@ def stream_image_dedup_flags(
                 it, "media_ref string, dhash long, ok boolean"
             )
         )
-        arr_combos = image_combo_table(
-            sig.filter("ok").select("media_ref", "dhash")
+        arr_combos = block_keys(
+            sig.filter("ok").select("media_ref", "dhash"), "dhash", MANKU64_BLOCKS
         ).select(
             F.col("media_ref").alias("ref_a"),
             F.col("dhash").alias("dh_a"),

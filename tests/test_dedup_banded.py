@@ -247,9 +247,10 @@ def test_simhash64_manku_exact_and_equivalent(spark):
     overlap = len(pairs64 & pairs60) / len(pairs64 | pairs60)
     assert overlap >= 0.6, overlap  # measured 0.667 on this corpus
     # combination keyspace >= 2^36 (the scale claim): 4 blocks, min widths
-    widths = sorted(dedup._MANKU64_SIZES)[: dedup._MANKU64_PICK]
+    sizes, pick = dedup.MANKU64_BLOCKS
+    widths = sorted(sizes)[:pick]
     assert sum(widths) >= 36
-    assert sum(dedup._MANKU64_SIZES) == 64
+    assert sum(sizes) == 64
 
 
 def test_cc_star_converges_in_log_rounds_on_chain(spark):

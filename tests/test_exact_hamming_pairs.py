@@ -1,4 +1,4 @@
-"""Round-7 exact_hamming_pairs skeleton: the duplicate-cluster-safe form
+"""The exact_hamming_pairs skeleton: the duplicate-cluster-safe form
 of the exact-hamming near-dup join (dedup.py).
 
 The covering contract: for ANY signature table the output equals the
@@ -12,12 +12,13 @@ from __future__ import annotations
 from itertools import combinations
 
 import pytest
-from pyspark.sql import functions as F
 
 from mindocr_spark.operators.dedup import (
+    MANKU60_BLOCKS,
+    MANKU64_BLOCKS,
     SIMHASH_BANDED_HAMMING_MAX,
+    SIMHASH_BANDS,
     exact_hamming_pairs,
-    manku64_combo_structs,
 )
 
 
@@ -30,14 +31,12 @@ def spark():
     yield s
 
 
-def _manku64_tables(distinct_sig):
-    structs = manku64_combo_structs("simhash")
-    return distinct_sig.select(
-        "simhash", F.explode(F.array(*structs)).alias("c")
-    ).select("simhash", "c.combo_id", "c.combo_key")
-
-
-def test_matches_quadratic_with_mass_duplicates(spark):
+@pytest.mark.parametrize(
+    "blocks",
+    [SIMHASH_BANDS, MANKU60_BLOCKS, MANKU64_BLOCKS],
+    ids=["banded", "manku60", "manku64"],
+)
+def test_matches_quadratic_with_mass_duplicates(spark, blocks):
     # a corpus with heavy identical-signature clusters (the case the
     # skeleton exists for), near-pairs at every hamming 1..3, and
     # far-apart signatures that must NOT pair
@@ -51,11 +50,14 @@ def test_matches_quadratic_with_mass_duplicates(spark):
         + [(20, -42), (21, -42)]                           # negative cluster
         + [(30, 0x7FFF_FFFF_FFFF_FFFF)]                    # isolated
     )
+    bits = sum(blocks[0])
+    if bits < 64:  # the 60-bit specs see 60-bit signatures
+        sigs = [(i, h & ((1 << bits) - 1)) for i, h in sigs]
     df = spark.createDataFrame(sigs, "doc_id long, simhash long")
     got = {
         (r.doc_a, r.doc_b, r.hamming)
         for r in exact_hamming_pairs(
-            df, _manku64_tables, SIMHASH_BANDED_HAMMING_MAX
+            df, blocks, SIMHASH_BANDED_HAMMING_MAX
         ).collect()
     }
     want = set()

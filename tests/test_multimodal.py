@@ -218,12 +218,10 @@ def test_image_candidate_volume_keyspace():
 
     import numpy as np
 
-    from mindocr_spark.operators.dedup import (
-        _MANKU64_PICK,
-        _MANKU64_SIZES,
-        _MANKU64_STARTS,
-        N_MANKU64_BLOCKS,
-    )
+    from mindocr_spark.operators.dedup import MANKU64_BLOCKS
+
+    sizes, pick = MANKU64_BLOCKS
+    starts = [sum(sizes[:i]) for i in range(len(sizes))]
 
     rng = np.random.default_rng(20260817)
     n = 60_000
@@ -234,15 +232,15 @@ def test_image_candidate_volume_keyspace():
         return int((counts.astype(np.int64) * (counts - 1) // 2).sum())
 
     manku_work = 0
-    for combo in combinations(range(N_MANKU64_BLOCKS), _MANKU64_PICK):
+    for combo in combinations(range(len(sizes)), pick):
         shift = 0
         key = np.zeros(n, dtype=np.uint64)
         for b in combo:
-            mask = np.uint64((1 << _MANKU64_SIZES[b]) - 1)
-            key |= ((h >> np.uint64(_MANKU64_STARTS[b])) & mask) << np.uint64(
+            mask = np.uint64((1 << sizes[b]) - 1)
+            key |= ((h >> np.uint64(starts[b])) & mask) << np.uint64(
                 shift
             )
-            shift += _MANKU64_SIZES[b]
+            shift += sizes[b]
         manku_work += bucket_pairs(key)
 
     band_work = sum(

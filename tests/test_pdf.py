@@ -1,5 +1,7 @@
 """PDF text-layer parse (north rule: 'PDF/layout parse')."""
 
+import struct
+import tracemalloc
 import zlib
 
 import numpy as np
@@ -53,6 +55,25 @@ _PAGE = render_page([("routed", 30, 30)], 96, 224)[0]
 # blue-tinted ink: the channels differ, so the gray conversion is not a no-op
 _RGB_PAGE = np.stack([_PAGE, _PAGE, np.maximum(_PAGE, 60)], axis=-1)
 
+
+
+def _gray_png(w, h, idat):
+    """A gray PNG whose IHDR claims w x h, carrying ``idat`` as-is."""
+
+    def chunk(tag, payload):
+        crc = zlib.crc32(tag + payload) & 0xFFFFFFFF
+        return struct.pack(">I", len(payload)) + tag + payload + struct.pack(">I", crc)
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 0, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr) + chunk(b"IDAT", idat)
+        + chunk(b"IEND", b"")
+    )
+
+
+# ~64 KB of IDAT that inflates to 64 MB of zeros
+_BOMB = zlib.compress(bytes(64 << 20), 9)
+
 # payload -> the text route_payload settles, or the gray image it hands to OCR
 _ROUTES = {
     "none": (None, ""),
@@ -65,6 +86,8 @@ _ROUTES = {
         encode_png(render_table([["alpha", "beta"], ["one42", ""]])[0]),
         "alpha beta one42",
     ),
+    "png_bomb": (_gray_png(8, 8, _BOMB), ""),
+    "oversized_ihdr": (_gray_png(1 << 16, 1 << 16, _BOMB), ""),
     "gray_page": (encode_png(_PAGE), _PAGE),
     "rgb_page": (encode_png(_RGB_PAGE), _luminance(_RGB_PAGE)),
 }
@@ -73,7 +96,14 @@ _ROUTES = {
 @pytest.mark.parametrize("route", list(_ROUTES))
 def test_payload_router(route):
     payload, expected = _ROUTES[route]
-    text, img = route_payload(payload)
+    tracemalloc.start()
+    try:
+        text, img = route_payload(payload)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    # no payload inflates past its (budgeted) IHDR size
+    assert peak < 8 << 20
     if isinstance(expected, str):  # settled without OCR
         assert text == expected and img is None
         assert media_payload_text(payload) == expected

@@ -244,14 +244,15 @@ def test_stream_dedup_flags_probe_stored_state(spark, tmp_path):
 
     # batch equivalence: the same probe as one non-streaming pass
     from mindocr_spark.operators.dedup import (
+        _minhash_bands,
         _shingles,
         _verify_candidates,
-        _xxhash_bands,
+        _xxhash64_family,
     )
 
     adf = spark.createDataFrame(arriving)
     sh = _shingles(adf)
-    ab = _xxhash_bands(sh)
+    ab = _minhash_bands(sh, _xxhash64_family)
     corpus_bands = spark.read.parquet(f"{state}/bands")
     corpus_sh = spark.read.parquet(f"{state}/shingles")
     swap = F.col("a.doc_id") > F.col("b.doc_id")

@@ -79,11 +79,14 @@ ivf_pq_topk cell assignment) and semdedup's three argmins are
 min(struct)/min_by HashAggregates instead of rank windows — partial
 aggregation collapses the candidate fan-out before the exchange; only
 query-side probe rankings (<= N_QUERIES rows) remain windows.
-minhash_lsh_pairs' band keys are xxhash64 longs (the _xxhash_bands
-construction) instead of string concatenations. The exact-hamming family
-(simhash banded/manku/64, image dHash) shares the exact_hamming_pairs
-skeleton: key tables over DISTINCT signatures, (h,h,0) self-rows, member
-expansion — identical output, duplicate-cluster-safe candidate volume.
+Both minhash twins band through one function (dedup._minhash_bands):
+(band_no, band_key) rows keyed by xxhash64 longs, not string
+concatenations. Every exact-hamming form takes its join keys from
+dedup.block_keys. simhash manku/64 and image dHash run the
+exact_hamming_pairs skeleton: key tables over DISTINCT signatures, (h,h,0)
+self-rows, member expansion — identical output, duplicate-cluster-safe
+candidate volume. simhash_near_dup_banded, the small-corpus form, keeps
+the direct signature-level band join.
 ser_seqeval_metric is one side-exploded window chain + one conditional
 aggregate (was four window chains across three aggregate branches);
 decontamination_flags is one left-probe of the broadcast eval set + one
