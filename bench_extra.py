@@ -12,6 +12,10 @@ Usage:
   python bench_extra.py --stages q       # per-stage wall/metrics via the
                                          # UI REST API (single query)
   python bench_extra.py --reps N         # override rep count (default 2)
+  python bench_extra.py --workers q ...  # after the timed queries, one JSON
+                                         # line: PSS and Private_Dirty (MB,
+                                         # smaps_rollup) of the Python daemon
+                                         # and of each worker it forked
 
 Same env contract as bench.py: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS.
 Run EXCLUSIVELY (no concurrent pytest) or numbers are garbage.
@@ -33,6 +37,43 @@ def _materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
+def _proc_memory_mb(pid: int) -> dict:
+    out = {"pid": pid}
+    with open(f"/proc/{pid}/smaps_rollup") as f:
+        for line in f:
+            key, _, rest = line.partition(":")
+            if key in ("Pss", "Private_Dirty"):
+                out[f"{key.lower()}_mb"] = round(int(rest.split()[0]) / 1024, 1)
+    return out
+
+
+def _worker_memory() -> dict:
+    """PSS and Private_Dirty of each Python daemon under this process's JVM
+    (a non-JVM process running a ``*daemon`` module; the JVM's own command
+    line names the daemon conf) and of every worker it forked (same command
+    line, the daemon as parent)."""
+    from perfbench.proctree import descendants
+
+    parent = {}
+    for pid in descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                cmdline = f.read()
+            with open(f"/proc/{pid}/stat", "rb") as f:
+                stat = f.read()
+        except OSError:
+            continue
+        comm = stat[stat.index(b"(") + 1 : stat.rindex(b")")]
+        if b"daemon" in cmdline and comm != b"java":
+            parent[pid] = int(stat[stat.rindex(b")") + 2 :].split()[1])
+    daemons = sorted(p for p, pp in parent.items() if pp not in parent)
+    workers = sorted(p for p, pp in parent.items() if pp in parent)
+    return {
+        "python_daemons": [_proc_memory_mb(p) for p in daemons],
+        "python_workers": [_proc_memory_mb(p) for p in workers],
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
@@ -40,6 +81,7 @@ def main() -> None:
     args = sys.argv[1:]
     do_explain = "--explain" in args
     do_stages = "--stages" in args
+    do_workers = "--workers" in args
     tag = "before"
     if "--tag" in args:
         tag = args[args.index("--tag") + 1]
@@ -94,6 +136,9 @@ def main() -> None:
             spark.sparkContext.setJobDescription(None)
         times[name] = samples
         print(f"{name}: best={min(samples)} samples={samples}", flush=True)
+
+    if do_workers:
+        print(json.dumps({"worker_memory": _worker_memory()}), flush=True)
 
     if do_stages and len(names) == 1:
         # stage-level attribution from the local UI REST API

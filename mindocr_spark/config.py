@@ -52,6 +52,14 @@ SORTED_BOXES_YTOL = 10  # same-line tolerance (reference utils.py:95-103)
 # (76,800 px); 2^24 px (4096 x 4096) also covers a 300-dpi A4 scan
 # (2480 x 3508).
 MAX_PNG_PIXELS = 1 << 24
+# Inflated-size budget of one PDF FlateDecode stream; a larger stream is
+# skipped, as a corrupt one is. The corpus generators' PDFs are all
+# FlateDecode and at most ~700 bytes each (derived corpus at sf0.1: 629
+# bytes, its content streams inflate to at most 60 bytes; 4000 gen_corpus
+# docs: 703 bytes, 181 inflated). 1 MiB also holds the content stream of
+# a text-heavy real page (tens of KB); inflating up to the budget briefly
+# holds about twice it.
+MAX_PDF_STREAM_BYTES = 1 << 20
 
 # --- spark tuning ------------------------------------------------------
 # Arrow batch sizing: measured 64 -> 512 gives ~16% on the OCR stage (fewer

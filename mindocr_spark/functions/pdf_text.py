@@ -17,6 +17,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from ..config import MAX_PDF_STREAM_BYTES
+
 _STREAM_ANCHOR_RE = re.compile(rb">>\s*stream(?:\r\n|\n)")
 _ENDSTREAM_RE = re.compile(rb"\s*endstream")
 _LENGTH_RE = re.compile(rb"/Length\s+(\d+)\b")
@@ -128,9 +130,14 @@ def extract_pdf_text(data: bytes) -> str:
         # INSIDE an uncompressed body can't spawn phantom streams
         pos = raw_end
         if b"FlateDecode" in meta:
+            # inflate at most one byte past the budget; an over-budget
+            # stream is skipped like a corrupt or truncated one
+            inflater = zlib.decompressobj()
             try:
-                body = zlib.decompress(body)
+                body = inflater.decompress(body, MAX_PDF_STREAM_BYTES + 1)
             except zlib.error:
+                continue
+            if len(body) > MAX_PDF_STREAM_BYTES or not inflater.eof:
                 continue
         for block in _TEXT_BLOCK_RE.finditer(body):
             for show in _TJ_RE.finditer(block.group(0)):

@@ -34,7 +34,7 @@ def _pin_blas_threads() -> None:
 def _export_pkg_pythonpath() -> None:
     """Make the package root importable in python WORKERS regardless of the
     driver's cwd: the JVM passes the driver process's PYTHONPATH env through
-    to every worker, and the round-7 daemon shim
+    to every worker, and the daemon shim
     (``spark.python.daemon.module=mindocr_spark.spark_daemon``) must be
     importable there before any task runs."""
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -87,6 +87,11 @@ def get_spark(
         # the pyspark.zip central directory — measured 160 ms of worker CPU
         # per task, the largest single per-task cost in every Python stage
         # (see mindocr_spark/spark_daemon.py and OPTIMIZATION_r07.md).
+        # Before forking, the daemon imports numpy, pandas, pyarrow and
+        # pyspark's worker + Arrow serializers and gc.freeze()s them, so
+        # every worker shares those pages copy-on-write instead of holding
+        # a private copy. Engine modules are left out: workers load them
+        # from the task's sys.path, so --py-files/addPyFile updates apply.
         # Overridable for stock behavior via MINDOCR_PYTHON_DAEMON=pyspark.daemon.
         .config(
             "spark.python.daemon.module",

@@ -1,5 +1,5 @@
-"""Python-worker daemon entry with the CPython 3.12 zipimport fix
-backported (round 7 optimization).
+"""Python-worker daemon entry: the CPython 3.12 zipimport fix backported,
+and a warm, frozen runtime that every worker forks from.
 
 Every PySpark task calls ``importlib.invalidate_caches()`` in the worker
 (``pyspark/worker_util.py:setup_spark_files``).  On Python < 3.12,
@@ -8,9 +8,8 @@ central directory unconditionally (``zipimport.py`` 3.11: ``self._files =
 _read_directory(self.archive)``), and the worker's ``sys.path`` carries
 ``pyspark.zip`` (~30 MB, thousands of entries) plus the py4j zip — so
 every task burned ~160 ms of pure worker CPU re-parsing zip directories
-that never change (measured on this box: median 159.5 ms/task, the
-single largest per-task cost in every mapInPandas stage; see
-OPTIMIZATION_r07.md).
+that never change (median 159.5 ms/task, the single largest per-task cost
+in every mapInPandas stage; see OPTIMIZATION_r07.md).
 
 CPython 3.12 fixed exactly this (gh-87382: "zipimport.invalidate_caches
 only invalidates when the archive mtime changes").  This module backports
@@ -22,12 +21,24 @@ updated zip — is preserved).  Scoped via ``spark.python.daemon.module``
 (`session.get_spark`), so only this engine's workers see it; the patch is
 process-local and forks down to every reused worker.
 
-The daemon then delegates to the stock ``pyspark.daemon.manager`` — no
-other behavior changes.
+Before the daemon forks any worker, ``_warm_runtime`` imports the generic
+pandas-UDF runtime (numpy, pandas, pyarrow, ``pyspark.worker`` and the
+Arrow serializers) and then runs ``gc.collect()`` + ``gc.freeze()``.
+Every worker starts with those modules in pages it shares copy-on-write
+with the daemon instead of importing them into private pages of its own,
+and the frozen objects sit outside every later collection, so a worker's
+full ``gc.collect()`` never writes to (and un-shares) them.  The engine's
+own modules (``mindocr_spark.*`` beyond this one) are deliberately NOT
+pre-imported: a worker loads them from its task's ``sys.path``, so
+``--py-files`` and ``addPyFile`` updates still take effect.
+
+The daemon then delegates to the stock ``pyspark.daemon.manager``, with a
+quiet EPIPE teardown and a bounded per-task GC.
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import zipimport
 
@@ -62,6 +73,20 @@ def _prime() -> None:
     for path, finder in list(sys.path_importer_cache.items()):
         if isinstance(finder, zipimport.zipimporter):
             _invalidate_if_changed(finder)
+
+
+def _warm_runtime() -> None:
+    """Import the generic pandas-UDF runtime, then freeze everything the
+    daemon holds so forked workers share it copy-on-write (module
+    docstring). No engine module is imported here."""
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    import pyspark.sql.pandas.serializers  # noqa: F401
+    import pyspark.worker  # noqa: F401
+
+    gc.collect()
+    gc.freeze()
 
 
 zipimport.zipimporter.invalidate_caches = _invalidate_if_changed  # type: ignore[method-assign]
@@ -99,8 +124,6 @@ if __name__ == "__main__":
     # task per worker keeps cycle garbage bounded for long-lived reused
     # workers at ~1/30th the cost. Automatic threshold GC stays active
     # throughout.
-    import gc as _gc
-
     class _BoundedGC:
         def __init__(self) -> None:
             self._n = 0
@@ -108,11 +131,15 @@ if __name__ == "__main__":
         def collect(self) -> int:
             self._n += 1
             if self._n % 32 == 0:
-                return _gc.collect()
-            return _gc.collect(1)
+                return gc.collect()
+            return gc.collect(1)
 
         def __getattr__(self, name):  # everything else: the real module
-            return getattr(_gc, name)
+            return getattr(gc, name)
 
     _daemon.gc = _BoundedGC()
+
+    # last step before the first fork: the runtime every worker needs,
+    # imported once and frozen out of the bounded GC's full collects
+    _warm_runtime()
     _daemon.manager()

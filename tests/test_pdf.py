@@ -29,16 +29,19 @@ def test_escapes_and_parens():
     assert extract_pdf_text(pdf) == "a (quoted) \\ backslash"
 
 
+def _flate_pdf(stream):
+    """A one-stream PDF whose FlateDecode content stream is ``stream``."""
+    return (
+        b"%PDF-1.4\n1 0 obj\n<< /Filter /FlateDecode /Length "
+        + str(len(stream)).encode()
+        + b" >>\nstream\n" + stream + b"\nendstream\nendobj\n%%EOF"
+    )
+
+
 def test_tj_array_operator():
     # hand-built TJ array form
     content = b"BT [(kerned) -120 (pair)] TJ ET"
-    body = zlib.compress(content)
-    pdf = (
-        b"%PDF-1.4\n1 0 obj\n<< /Filter /FlateDecode /Length "
-        + str(len(body)).encode()
-        + b" >>\nstream\n" + body + b"\nendstream\nendobj\n%%EOF"
-    )
-    assert extract_pdf_text(pdf) == "kerned pair"
+    assert extract_pdf_text(_flate_pdf(zlib.compress(content))) == "kerned pair"
 
 
 def test_not_a_pdf_raises():
@@ -88,6 +91,7 @@ _ROUTES = {
     ),
     "png_bomb": (_gray_png(8, 8, _BOMB), ""),
     "oversized_ihdr": (_gray_png(1 << 16, 1 << 16, _BOMB), ""),
+    "pdf_bomb": (_flate_pdf(_BOMB), ""),
     "gray_page": (encode_png(_PAGE), _PAGE),
     "rgb_page": (encode_png(_RGB_PAGE), _luminance(_RGB_PAGE)),
 }
