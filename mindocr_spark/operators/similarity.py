@@ -10,29 +10,34 @@
   nbits derived from corpus size so buckets stay ~TARGET_BUCKET rows), then
   exact rerank within the bucket. At 10^12 rows the bucket column is the
   shuffle/partition key and the query set is broadcast.
+
+Every operator here and ``pretrain.semdedup`` builds on one set of
+primitives: the :func:`l2` and :func:`cosine` distances, :func:`nearest`
+(the nearest-centroid argmin) and :func:`top_k` (the per-key
+``row_number`` tail); each caller passes its own distance expression, so
+its rounding and ``(dist, id)`` tie rule stay its own.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 N_QUERIES = 20
 TOP_K = 3
 # ann_lsh_topk / embedding_near_dup_lsh bucket width is DERIVED from corpus
-# size (round 3): bits = clamp(ceil(log2(N / TARGET_BUCKET)), MIN, MAX), so
+# size: bits = clamp(ceil(log2(N / TARGET_BUCKET)), MIN, MAX), so
 # the expected bucket size stays ~TARGET_BUCKET as the corpus grows and
 # per-bucket work is bounded by a constant, never by corpus size. The same
 # formula is evaluated from count(*) inside the oracle SQL, so Spark and
 # DuckDB always agree on the bucket layout at any sf.
 TARGET_BUCKET = 32
 MIN_TABLE_BITS = 3
-# Round 4: hyperplanes are SEEDED RANDOM-PROJECTION (Rademacher) planes —
-# sign vectors from a deterministic integer hash — so the plane supply is
+# Hyperplanes are SEEDED RANDOM-PROJECTION (Rademacher) planes — sign
+# vectors from a deterministic integer hash — so the plane supply is
 # unbounded and the bit ceiling is set by the bucket-key width alone (int32
-# positive), not by the 64-dim paired-difference supply that capped round 3
-# at 10 bits. At N = 10^12 the derived width is ceil(log2(N/32)) = 35 -> 30,
+# positive). At N = 10^12 the derived width is ceil(log2(N/32)) = 35 -> 30,
 # i.e. ~10^9 buckets/table of ~1000 rows; per-bucket matmul work stays
 # bounded by bucket size (chunked), never by corpus size.
 MAX_TABLE_BITS = 30
@@ -69,6 +74,45 @@ def _with_norm(df: DataFrame) -> DataFrame:
     )
 
 
+def l2(a: str, b: str) -> Column:
+    """Squared L2 distance of two array columns (SQL expressions): a raw
+    double, folded in index order like ``_L2_DUCK``."""
+    return F.expr(
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        "(cast(x as double) - cast(y as double)) * "
+        "(cast(x as double) - cast(y as double))), 0D, (acc, v) -> acc + v)"
+    )
+
+
+def cosine(a: str, b: str, na: str, nb: str) -> Column:
+    """Cosine of array columns ``a``, ``b`` with norms ``na``, ``nb``,
+    rounded to 4dp so Spark and DuckDB rank identically."""
+    return F.round(F.expr(_DOT.format(a=a, b=b)) / (F.col(na) * F.col(nb)), 4)
+
+
+def nearest(cands: DataFrame, by: list[str], cent: str, dist: Column) -> DataFrame:
+    """Argmin per ``by`` key: its ``cent`` of least ``dist``, ties to the lower
+    ``cent``; columns (by, cent, dist). ``min(struct(dist, cent))`` orders
+    exactly like ``dist asc, cent asc`` and combines map-side, so only one
+    partial row per key and partition crosses the exchange; value-identical
+    duplicate candidates collapse to one row. ``dist`` must be non-null. A
+    caller needing a payload joins it back once by key."""
+    return (
+        cands.groupBy(by)
+        .agg(F.min(F.struct(dist.alias("dist"), cent)).alias("m"))
+        .select(*by, f"m.{cent}", "m.dist")
+    )
+
+
+def top_k(scored: DataFrame, by: list[str], order: list[Column], k: int) -> DataFrame:
+    """The first ``k`` rows per ``by`` key under ``order`` (which must end in a
+    unique tie-break), numbered in int column ``rank`` from 1."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-3 cosine neighbors for vec_id < 20 (brute force)."""
     emb = _with_norm(_emb(spark, sf_dir))
@@ -83,22 +127,17 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("cn"),
     )
     # broadcast the small query side; the corpus side streams
-    pairs = c.crossJoin(F.broadcast(q)).filter(
-        F.col("neighbor_id") != F.col("query_id")
+    sims = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", cosine("qe", "ce", "qn", "cn").alias("sim"))
     )
-    sims = pairs.withColumn(
-        "sim", F.round(F.expr(_DOT.format(a="qe", b="ce")) / (F.col("qn") * F.col("cn")), 4)
-    ).select("query_id", "neighbor_id", "sim")
-    from pyspark.sql.window import Window
+    return _best_sims(sims, TOP_K).select("query_id", "neighbor_id", "sim", "rank")
 
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "neighbor_id", "sim", F.col("rank").cast("int").alias("rank"))
-    )
+
+def _best_sims(sims: DataFrame, k: int) -> DataFrame:
+    """Top-k neighbors per query by rounded cosine, ties to the lower id."""
+    return top_k(sims, ["query_id"], [F.col("sim").desc(), F.col("neighbor_id").asc()], k)
 
 
 _DOT_DUCK = "list_sum([cast({a}[i] as double) * cast({b}[i] as double) for i in range(1, 65)])"
@@ -155,9 +194,8 @@ _TABLES_BY_BITS = {
 }  # {3: 6, 4: 9, 5: 14, 6: 21, 7+: 24} at threshold 0.45 / recall 0.8
 
 
-# Deterministic Rademacher hyperplane family (round 4, replacing the
-# 64-dim paired-difference supply): the sign of plane (t, k) at dim d is a
-# middle bit of a two-round multiplicative avalanche over
+# Deterministic Rademacher hyperplane family: the sign of plane (t, k) at
+# dim d is a middle bit of a two-round multiplicative avalanche over
 # idx = (t * MAX_TABLE_BITS + k) * 64 + d:
 #     h1 = (idx * 2654435761) % 2^31
 #     h2 = (h1 XOR (h1 >> 15)) * 2246822519          (< 2^62: ANSI-safe)
@@ -200,10 +238,10 @@ def _bucket_spark_expr(t_sql: str, nbits: int) -> str:
     ``t_sql`` is the table index expression (a lambda variable or literal)
     in [0, MAX_LSH_TABLES]. The inner fold adds +-embedding[d] in index
     order (exact IEEE parity with the DuckDB comprehension and the numpy
-    twin). Round 4: the signs are driver-baked from plane_signs into one
-    constant-folded literal mask array indexed (t * nbits + k) — the
-    per-element interpreted work drops from the ~10-op avalanche to one
-    shift+and, same sign bit-for-bit by construction."""
+    twin). The signs are driver-baked from plane_signs into one
+    constant-folded literal mask array indexed (t * nbits + k), so each
+    element costs one shift+and instead of the ~10-op avalanche, same sign
+    bit-for-bit by construction."""
     masks = ", ".join(
         f"{_plane_mask(t, k)}L"
         for t in range(MAX_LSH_TABLES + 1)
@@ -268,22 +306,12 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("cn"),
         "bucket",
     )
-    pairs = c.join(F.broadcast(q), "bucket").filter(
-        F.col("neighbor_id") != F.col("query_id")
+    sims = (
+        c.join(F.broadcast(q), "bucket")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", cosine("qe", "ce", "qn", "cn").alias("sim"))
     )
-    sims = pairs.withColumn(
-        "sim", F.round(F.expr(_DOT.format(a="qe", b="ce")) / (F.col("qn") * F.col("cn")), 4)
-    ).select("query_id", "neighbor_id", "sim")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 1)
-        .select("query_id", "neighbor_id", "sim")
-    )
+    return _best_sims(sims, 1).select("query_id", "neighbor_id", "sim")
 
 
 ANN_LSH_SQL = f"""
@@ -319,34 +347,12 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-rank top-1 by cosine inside it.
 
     At 10^12 rows the cell id is the partition key; centroids are broadcast
-    (a ~KB table), so assignment is a map-side broadcast nested-loop, and
-    search shuffles only the probed cells.
+    (a ~KB table), so the distances are a map-side broadcast nested-loop,
+    the argmin ships one narrow partial row per vector, the embedding
+    joins back by id, and search shuffles only the probed cells.
     """
     emb = _with_norm(_emb(spark, sf_dir))
-    cents = emb.filter(F.col("vec_id") < N_IVF_CENTROIDS).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
-    )
-    dists = emb.crossJoin(F.broadcast(cents)).withColumn(
-        "dist",
-        F.round(
-            F.expr(
-                "aggregate(zip_with(embedding, ce, (x, y) -> "
-                "(cast(x as double) - cast(y as double)) * "
-                "(cast(x as double) - cast(y as double))), 0D, (a, v) -> a + v)"
-            ),
-            4,
-        ),
-    )
-    from pyspark.sql.window import Window
-
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("dist").asc(), F.col("cent_id").asc()
-    )
-    assigned = (
-        dists.withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "embedding", "norm", F.col("cent_id").alias("cell"))
-    )
+    assigned = _ivf_cells(_ivf_dists(emb)).join(emb, "vec_id")
     q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("qe"),
@@ -362,23 +368,26 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sims = (
         c.join(F.broadcast(q), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "sim",
-            F.round(
-                F.expr(_DOT.format(a="qe", b="ne")) / (F.col("qn") * F.col("nn")), 4
-            ),
-        )
-        .select("query_id", "neighbor_id", "sim")
+        .select("query_id", "neighbor_id", cosine("qe", "ne", "qn", "nn").alias("sim"))
     )
-    from pyspark.sql.window import Window as W2
+    return _best_sims(sims, 1).select("query_id", "neighbor_id", "sim")
 
-    w = W2.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("neighbor_id").asc()
+
+def _ivf_dists(emb: DataFrame) -> DataFrame:
+    """(vec_id, cent_id, dist): every vector against the broadcast
+    N_IVF_CENTROIDS centroids (the first vectors), dist = round(L2, 4)."""
+    cents = emb.filter(F.col("vec_id") < N_IVF_CENTROIDS).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
     )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 1)
-        .select("query_id", "neighbor_id", "sim")
+    return emb.crossJoin(F.broadcast(cents)).select(
+        "vec_id", "cent_id", F.round(l2("embedding", "ce"), 4).alias("dist")
+    )
+
+
+def _ivf_cells(dists: DataFrame) -> DataFrame:
+    """(vec_id, cell): the IVF cell of every vector in ``dists``."""
+    return nearest(dists, ["vec_id"], "cent_id", F.col("dist")).select(
+        "vec_id", F.col("cent_id").alias("cell")
     )
 
 
@@ -421,10 +430,10 @@ WHERE rank = 1
 
 
 def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEST ORACLE ONLY (not registered as a production query since round 2):
-    exact all-pairs cosine via crossJoin — O(N^2), cannot survive scale.
-    The production operator is :func:`embedding_near_dup_lsh`; this
-    quadratic form remains as the recall ground truth in tests/."""
+    """TEST ORACLE ONLY (not a registered query): exact all-pairs cosine
+    via crossJoin — O(N^2), cannot survive scale. The production operator
+    is :func:`embedding_near_dup_lsh`; this quadratic form remains as the
+    recall ground truth in tests/."""
     emb = _with_norm(_emb(spark, sf_dir))
     a = emb.select(
         F.col("vec_id").alias("doc_a"), F.col("embedding").alias("ea"),
@@ -436,12 +445,7 @@ def embedding_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = a.crossJoin(b).filter(F.col("doc_a") < F.col("doc_b"))
     return (
-        pairs.withColumn(
-            "cos",
-            F.round(
-                F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")), 4
-            ),
-        )
+        pairs.withColumn("cos", cosine("ea", "eb", "na", "nb"))
         .filter(F.col("cos") >= NEAR_DUP_COS)
         .select("doc_a", "doc_b", "cos")
     )
@@ -532,12 +536,10 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     clamp(ceil(log2(N / 32)), 3, 30), so the expected bucket holds ~32
     rows and total candidate volume is ~N * 32/2 * L tables = O(N) — the
     volume test in tests/test_dedup_banded.py asserts ~linear growth
-    between sfs, and the seeded plane supply is unbounded, so the round-3
-    10-bit ceiling (64-dim paired-difference supply) is gone: the width
-    that was clamped from N ~ 10^6 now derives freely to 30 bits
-    (N ~ 3*10^10 before buckets regrow, vs 10^6 before). The oracle SQL
-    computes the identical formula from count(*), so both engines always
-    agree on the layout. Recall is the LSH trade-off: inherently bounded
+    between sfs, and the seeded plane supply is unbounded, so the width
+    derives freely up to 30 bits (N ~ 3*10^10 before buckets regrow). The
+    oracle SQL computes the identical formula from count(*), so both
+    engines always agree on the layout. Recall is the LSH trade-off: inherently bounded
     here because the synthetic threshold 0.45 means ~63 deg angles
     (random-hyperplane collision prob 0.65/bit); at a real near-dup
     threshold (cos >= 0.9, ~26 deg) the same construction gives ~0.86/bit
@@ -558,12 +560,7 @@ def embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cand.join(ea, "doc_a")
         .join(eb, "doc_b")
-        .withColumn(
-            "cos",
-            F.round(
-                F.expr(_DOT.format(a="ea", b="eb")) / (F.col("na") * F.col("nb")), 4
-            ),
-        )
+        .withColumn("cos", cosine("ea", "eb", "na", "nb"))
         .filter(F.col("cos") >= NEAR_DUP_COS)
         .select("doc_a", "doc_b", "cos")
     )
@@ -616,7 +613,7 @@ WHERE round({_DOT_DUCK.format(a='a.embedding', b='b.embedding')} / (a.norm * b.n
 """
 
 
-# --- Scalar quantization (round 5) -------------------------------------------
+# --- Scalar quantization -----------------------------------------------------
 # The memory side of similarity search at 10^12 rows: 64 float32 dims
 # (256 B) -> 64 uint8 codes (64 B), the standard int8 scalar quantization
 # every large ANN deployment applies before/alongside IVF. Codes are
@@ -629,6 +626,36 @@ WHERE round({_DOT_DUCK.format(a='a.embedding', b='b.embedding')} / (a.norm * b.n
 EMB_DIM = 64
 
 
+def _sq_quantizer(df: DataFrame, col: str) -> tuple[str, str, str]:
+    """The int8 scalar quantizer of array column ``col``: SQL for its code
+    array, and for dim ``i``'s minimum and code step. The per-dim min/max
+    come from one map-side-combinable aggregate, baked driver-side into
+    literal arrays (the LSH sign-mask pattern), so coding is a stateless
+    map with no join."""
+    stats = {
+        int(r["d"]): (float(r["mn"]), float(r["mx"]))
+        for r in df.select(F.posexplode(col).alias("d", "x"))
+        .groupBy("d")
+        .agg(
+            F.min(F.col("x").cast("double")).alias("mn"),
+            F.max(F.col("x").cast("double")).alias("mx"),
+        )
+        .collect()
+    }
+    mins, maxs = (
+        "array(" + ", ".join(repr(stats[d][j]) + "D" for d in range(EMB_DIM)) + ")"
+        for j in (0, 1)
+    )
+    mn, mx = f"element_at({mins}, i + 1)", f"element_at({maxs}, i + 1)"
+    step = f"(({mx} - {mn}) / 255)"
+    codes = (
+        f"transform({col}, (x, i) -> case when {mx} > {mn} then "
+        f"cast(least(255L, greatest(0L, cast(floor((cast(x as double) - {mn}) "
+        f"/ {step}) as bigint))) as int) else 0 end)"
+    )
+    return codes, mn, step
+
+
 def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector uint8 code fingerprint + integer checksums.
 
@@ -639,27 +666,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stats pass is one scan and the code pass streams.
     """
     emb = _emb(spark, sf_dir)
-    stats = {
-        int(r["d"]): (float(r["mn"]), float(r["mx"]))
-        for r in emb.select(
-            F.posexplode("embedding").alias("d", "x")
-        )
-        .groupBy("d")
-        .agg(
-            F.min(F.col("x").cast("double")).alias("mn"),
-            F.max(F.col("x").cast("double")).alias("mx"),
-        )
-        .collect()
-    }
-    mins = ", ".join(repr(stats[d][0]) + "D" for d in range(EMB_DIM))
-    maxs = ", ".join(repr(stats[d][1]) + "D" for d in range(EMB_DIM))
-    codes = (
-        f"transform(embedding, (x, i) -> "
-        f"case when element_at(array({maxs}), i + 1) > element_at(array({mins}), i + 1) then "
-        f"cast(least(255L, greatest(0L, cast(floor((cast(x as double) - element_at(array({mins}), i + 1)) "
-        f"/ ((element_at(array({maxs}), i + 1) - element_at(array({mins}), i + 1)) / 255)) as bigint))) as int) "
-        f"else 0 end)"
-    )
+    codes, _, _ = _sq_quantizer(emb, "embedding")
     return emb.select(
         "vec_id",
         F.md5(
@@ -723,56 +730,24 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "transform(embedding, x -> cast(x as double) / norm)"
         ).alias("ne"),
     )
-    stats = {
-        int(r["d"]): (float(r["mn"]), float(r["mx"]))
-        for r in emb.select(F.posexplode("ne").alias("d", "x"))
-        .groupBy("d")
-        .agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
-        .collect()
-    }
-    mins = ", ".join(repr(stats[d][0]) + "D" for d in range(EMB_DIM))
-    maxs = ", ".join(repr(stats[d][1]) + "D" for d in range(EMB_DIM))
-    codes_expr = (
-        f"transform(ne, (x, i) -> "
-        f"case when element_at(array({maxs}), i + 1) > element_at(array({mins}), i + 1) then "
-        f"cast(least(255L, greatest(0L, cast(floor((x - element_at(array({mins}), i + 1)) "
-        f"/ ((element_at(array({maxs}), i + 1) - element_at(array({mins}), i + 1)) / 255)) as bigint))) as int) "
-        f"else 0 end)"
-    )
-    recon_expr = (
-        f"transform(codes, (c, i) -> element_at(array({mins}), i + 1) "
-        f"+ (cast(c as double) + 0.5D) "
-        f"* ((element_at(array({maxs}), i + 1) - element_at(array({mins}), i + 1)) / 255))"
-    )
-    coded = emb.select("vec_id", F.expr(codes_expr).alias("codes")).select(
-        "vec_id", F.expr(recon_expr).alias("recon")
+    codes, mn, step = _sq_quantizer(emb, "ne")
+    coded = emb.select("vec_id", F.expr(codes).alias("codes")).select(
+        "vec_id",
+        F.expr(
+            f"transform(codes, (c, i) -> {mn} + (cast(c as double) + 0.5D) * {step})"
+        ).alias("recon"),
     )
     q = coded.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("recon").alias("qr")
     )
-    from pyspark.sql.window import Window
-
     scored = (
         coded.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "qdot",
-            F.round(F.expr(_DOT.format(a="recon", b="qr")), 4),
-        )
+        .withColumn("qdot", F.round(F.expr(_DOT.format(a="recon", b="qr")), 4))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("qdot").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "qdot",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return top_k(
+        scored, ["query_id"], [F.col("qdot").desc(), F.col("vec_id").asc()], TOP_K
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), "qdot", "rank")
 
 
 _QCODES_CTE = f"""
@@ -816,7 +791,7 @@ WHERE rank <= {TOP_K}
 """
 
 
-# --- Product quantization (round 6) ------------------------------------------
+# --- Product quantization ----------------------------------------------------
 # The next rung past int8 SQ on the ANN memory ladder: 64 float32 dims
 # (256 B) -> PQ_M 4-bit codes (4 B) — the Jegou et al. 2011 PQ scheme
 # every billion-scale ANN deployment (FAISS IVFPQ) runs.  The codebook
@@ -830,11 +805,7 @@ PQ_M = 8    # subspaces
 PQ_SUB = 8  # dims per subspace (PQ_M * PQ_SUB == EMB_DIM)
 PQ_K = 16   # centroids per subspace -> 4-bit codes
 
-_L2SUB = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> "
-    "(cast(x as double) - cast(y as double)) * "
-    "(cast(x as double) - cast(y as double))), 0D, (acc, v) -> acc + v)"
-)
+_SUB = f"slice({{}}, s * {PQ_SUB} + 1, {PQ_SUB})"  # subspace s of an array
 _L2SUB_DUCK = (
     "list_sum([(cast({a}[{o} + i] as double) - cast({b}[i] as double)) * "
     "(cast({a}[{o} + i] as double) - cast({b}[i] as double)) "
@@ -851,9 +822,25 @@ def _pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     subs = spark.createDataFrame([(s,) for s in range(PQ_M)], "s int")
     return cents.crossJoin(F.broadcast(subs)).select(
+        "s", "code_id", F.expr(_SUB.format("embedding")).alias("carr")
+    )
+
+
+def _pq_units(dist: Column) -> Column:
+    """A PQ distance in exact integer 1e-4 units (floored)."""
+    return F.floor(dist * 10000).cast("bigint")
+
+
+def _pq_lut(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(query_id, s, code, lunits): each query's PQ_M x PQ_K table of
+    subspace distances to the codebook (raw query vs codebook, the
+    asymmetric side of ADC)."""
+    q = _emb(spark, sf_dir).filter(F.col("vec_id") < N_QUERIES)
+    return q.crossJoin(F.broadcast(_pq_codebook(spark, sf_dir))).select(
+        F.col("vec_id").alias("query_id"),
         "s",
-        "code_id",
-        F.expr(f"slice(embedding, s * {PQ_SUB} + 1, {PQ_SUB})").alias("carr"),
+        F.col("code_id").alias("code"),
+        _pq_units(l2(_SUB.format("embedding"), "carr")).alias("lunits"),
     )
 
 
@@ -862,36 +849,17 @@ def _pq_code_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     per subspace (raw-double L2 order — identical IEEE values on both
     engines, no rounding needed for the argmin — ties to the lower
     code_id) with the quantization distance in integer 1e-4 units."""
-    emb = _emb(spark, sf_dir)
-    cb = _pq_codebook(spark, sf_dir)
-    exploded = emb.select(
+    exploded = _emb(spark, sf_dir).select(
         "vec_id",
         F.explode(F.expr(f"sequence(0, {PQ_M - 1})")).alias("s"),
         "embedding",
-    ).select(
+    ).select("vec_id", "s", F.expr(_SUB.format("embedding")).alias("varr"))
+    d = exploded.join(F.broadcast(_pq_codebook(spark, sf_dir)), "s")
+    return nearest(d, ["vec_id", "s"], "code_id", l2("varr", "carr")).select(
         "vec_id",
         "s",
-        F.expr(f"slice(embedding, s * {PQ_SUB} + 1, {PQ_SUB})").alias("varr"),
-    )
-    d = exploded.join(F.broadcast(cb), "s").withColumn(
-        "dval", F.expr(_L2SUB.format(a="varr", b="carr"))
-    )
-    # argmin per (vec_id, s) as min(struct(dval, code_id)) — lexicographic
-    # struct ordering IS "order by dval asc, code_id asc pick first" (the
-    # r6 tie rule, unchanged; dval is a non-null arithmetic double). Round 7
-    # rewrite of the row_number window (guide §2.3-2.4): the aggregate is
-    # map-side combinable, so the PQ_K-way candidate fan-out collapses to
-    # PQ_M partial rows per vector BEFORE the exchange, and the window's
-    # full N×PQ_M×PQ_K shuffle+sort disappears.
-    return (
-        d.groupBy("vec_id", "s")
-        .agg(F.min(F.struct("dval", "code_id")).alias("m"))
-        .select(
-            "vec_id",
-            "s",
-            F.col("m.code_id").alias("code"),
-            F.expr("cast(floor(m.dval * 10000) as bigint)").alias("units"),
-        )
+        F.col("code_id").alias("code"),
+        _pq_units(F.col("dist")).alias("units"),
     )
 
 
@@ -901,9 +869,9 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     units — the 4-byte-per-vector memory representation.
 
     Plan: subspace explode (PQ_M rows/vector) -> broadcast 128-row
-    codebook join -> per-(vector, subspace) rank -> one groupBy(vec_id)
-    pack.  Stateless maps + map-side-combinable aggregation; at 10^12
-    vectors everything streams."""
+    codebook join -> per-(vector, subspace) :func:`nearest` -> one
+    groupBy(vec_id) pack.  Stateless maps + map-side-combinable
+    aggregation; at 10^12 vectors everything streams."""
     codes = _pq_code_table(spark, sf_dir)
     return codes.groupBy("vec_id").agg(
         F.sum(F.expr("shiftleft(cast(code as bigint), 4 * s)")).alias(
@@ -954,46 +922,21 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     N_QUERIES x PQ_M x PQ_K lookup table on (s, code) and folds with a
     map-side-combinable groupBy(query, vec) sum — per vector the join
     fans out to PQ_M x N_QUERIES rows regardless of corpus size."""
-    codes = _pq_code_table(spark, sf_dir)
-    emb = _emb(spark, sf_dir)
-    cb = _pq_codebook(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    lut = (
-        q.crossJoin(F.broadcast(cb))
-        .select(
-            "query_id",
-            "s",
-            F.col("code_id").alias("code"),
-            F.expr(
-                "cast(floor("
-                + _L2SUB.format(
-                    a=f"slice(embedding, s * {PQ_SUB} + 1, {PQ_SUB})", b="carr"
-                )
-                + " * 10000) as bigint)"
-            ).alias("lunits"),
-        )
-    )
     adc = (
-        codes.join(F.broadcast(lut), ["s", "code"])
+        _pq_code_table(spark, sf_dir)
+        .join(F.broadcast(_pq_lut(spark, sf_dir)), ["s", "code"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.sum("lunits").cast("long").alias("adc_units"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_units").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_units",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _best_adc(adc)
+
+
+def _best_adc(adc: DataFrame) -> DataFrame:
+    """Top-k candidates per query by ADC units, ties to the lower id."""
+    return top_k(
+        adc, ["query_id"], [F.col("adc_units").asc(), F.col("vec_id").asc()], TOP_K
+    ).select("query_id", F.col("vec_id").alias("neighbor_id"), "adc_units", "rank")
 
 
 N_IVF_PQ_PROBE = 2
@@ -1023,83 +966,27 @@ def ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, then a bounded per-query top-k window. At 10^12 vectors every
     join is either broadcast or keyed on a high-cardinality column.
     """
-    emb = _emb(spark, sf_dir)
-    cents = emb.filter(F.col("vec_id") < N_IVF_CENTROIDS).select(
-        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
-    )
-    dists = emb.crossJoin(F.broadcast(cents)).withColumn(
-        "dist",
-        F.round(
-            F.expr(
-                "aggregate(zip_with(embedding, ce, (x, y) -> "
-                "(cast(x as double) - cast(y as double)) * "
-                "(cast(x as double) - cast(y as double))), 0D, (a, v) -> a + v)"
-            ),
-            4,
-        ),
-    )
-    # round 7 (guide §2.3-2.4): corpus-side cell assignment as a map-side-
-    # combinable argmin aggregate — min(struct(dist, cent_id)) IS the
-    # "order by dist asc, cent_id asc pick first" tie rule, so the full
-    # N×k rank window (shuffle + sort of every candidate row) is gone;
-    # only the ≤N_QUERIES probe rows still rank through a window, after
-    # the query filter bounds its input to N_QUERIES×k rows.
-    assigned = (
-        dists.groupBy("vec_id")
-        .agg(F.min(F.struct("dist", "cent_id")).alias("m"))
-        .select("vec_id", F.col("m.cent_id").alias("cell"))
-    )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.col("dist").asc(), F.col("cent_id").asc()
-    )
-    q_probe = (
-        dists.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") <= N_IVF_PQ_PROBE)
-        .select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("cell"))
-    )
-
-    codes = _pq_code_table(spark, sf_dir)
-    cb = _pq_codebook(spark, sf_dir)
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    lut = q.crossJoin(F.broadcast(cb)).select(
-        "query_id",
-        "s",
-        F.col("code_id").alias("code"),
-        F.expr(
-            "cast(floor("
-            + _L2SUB.format(
-                a=f"slice(embedding, s * {PQ_SUB} + 1, {PQ_SUB})", b="carr"
-            )
-            + " * 10000) as bigint)"
-        ).alias("lunits"),
-    )
+    dists = _ivf_dists(_emb(spark, sf_dir))
+    # only the <= N_QUERIES x N_IVF_CENTROIDS query rows rank by window
+    q_probe = top_k(
+        dists.filter(F.col("vec_id") < N_QUERIES),
+        ["vec_id"],
+        [F.col("dist").asc(), F.col("cent_id").asc()],
+        N_IVF_PQ_PROBE,
+    ).select(F.col("vec_id").alias("query_id"), F.col("cent_id").alias("cell"))
     cand = (
-        assigned.join(F.broadcast(q_probe), "cell")
+        _ivf_cells(dists)
+        .join(F.broadcast(q_probe), "cell")
         .filter(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
     )
     adc = (
-        cand.join(codes, "vec_id")
-        .join(F.broadcast(lut), ["query_id", "s", "code"])
+        cand.join(_pq_code_table(spark, sf_dir), "vec_id")
+        .join(F.broadcast(_pq_lut(spark, sf_dir)), ["query_id", "s", "code"])
         .groupBy("query_id", "vec_id")
         .agg(F.sum("lunits").cast("long").alias("adc_units"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_units").asc(), F.col("vec_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            "adc_units",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _best_adc(adc)
 
 
 PQ_ADC_SQL = f"""

@@ -4,6 +4,8 @@ the optimization bought, in the style of test_plan_quality.py."""
 
 from __future__ import annotations
 
+import pytest
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -49,31 +51,39 @@ def test_pq_code_table_argmin_is_aggregate(spark):
     assert "partial_min" in plan or plan.count("HashAggregate") >= 2
 
 
-def test_ivf_pq_corpus_assignment_has_no_corpus_window(spark):
-    """Only the <=N_QUERIES probe ranking may use a window; the corpus
-    cell assignment and the code table are aggregates. One window spec
-    total (the probe row_number)."""
+@pytest.mark.parametrize(
+    ("query", "max_specs"),
+    # ivf_pq_topk: probe top-nprobe + final top-k; ivf_topk: final top-1
+    [("ivf_pq_topk", 2), ("ivf_topk", 1)],
+    ids=["ivf_pq_topk", "ivf_topk"],
+)
+def test_ivf_pq_corpus_assignment_has_no_corpus_window(spark, query, max_specs):
+    """The corpus cell assignment (and the PQ code table) are aggregates:
+    only per-query rankings over <= N_QUERIES rows use a window."""
     import re
 
-    from mindocr_spark.operators.similarity import ivf_pq_topk
+    from mindocr_spark.operators import similarity
 
-    plan = _plan(ivf_pq_topk(spark, SF))
-    # window SPECS remaining: probe top-nprobe + final per-query top-k = 2
+    plan = _plan(getattr(similarity, query)(spark, SF))
     specs = set(re.findall(r"row_number\(\) windowspecdefinition\([^)]*\)", plan))
-    assert len(specs) <= 2, specs
+    assert len(specs) <= max_specs, specs
 
 
 def test_semdedup_argmins_are_aggregates(spark):
-    """All three semdedup argmins (centroid->super, assignment) are
-    min_by aggregates; the only window left is the probe top-2 over the
-    narrow (vec_id, sup_id, dist) projection — its input must not carry
-    the embedding column."""
+    """Both semdedup argmins (centroid->super, assignment) are partial
+    min(struct) aggregates; the only window left is the probe top-2 over
+    the narrow (vec_id, sup_id, dist) projection — its input must not
+    carry the embedding column."""
     import re
 
     from mindocr_spark.operators.pretrain import semdedup
 
     plan = _plan(semdedup(spark, SF))
-    assert "min_by" in plan
+    argmins = {
+        re.sub(r"#\d+L?", "", s)
+        for s in re.findall(r"partial_min\(struct\(dist, [^)]*\)", plan)
+    }
+    assert len(argmins) == 2, argmins  # centroid -> super, vector -> cell
     specs = {
         re.sub(r"#\d+L?", "", s)
         for s in re.findall(

@@ -251,8 +251,8 @@ def test_pretrain_plans_no_cartesian(spark, fn):
 
 def test_semdedup_plan_shape(spark):
     # the only broadcast NL joins are against the ~sqrt(k)-row SUPER
-    # table (round 6 — never the full centroid table); cent2sup and the
-    # assignment are persisted and reused, the cell-candidate and
+    # table (never the full centroid table); the assignment is persisted
+    # and reused by its three consumers, the cell-candidate and
     # within-cell joins are shuffle equi-joins, and no cartesian product
     # exists (the BNLJ text recurring under each InMemoryTableScan is
     # the printed cached subtree, not re-execution)
@@ -779,6 +779,29 @@ def _numpy_pq(X):
         )
     packed = (codes << (4 * np.arange(M))[None, :]).sum(axis=1)
     return codes, packed, dist_units, np.floor(lut_d * 10000).astype(np.int64)
+
+
+def test_nearest_and_top_k_tie_rules(spark):
+    """The shared vector-search primitives on exact distance ties and on
+    value-identical duplicate candidates (what semdedup's candidate union
+    yields): ``nearest`` picks the lower ``cent`` and emits one row per key,
+    ``top_k`` keeps tied rows in id order."""
+    from pyspark.sql import functions as F
+
+    from mindocr_spark.operators import similarity as S
+
+    rows = [
+        (1, 5, 0.25), (1, 3, 0.25), (1, 3, 0.25), (1, 7, 0.5),  # tie + dup
+        (2, 4, 1.0), (2, 4, 1.0), (2, 9, 0.75),  # dup of the loser only
+    ]
+    cands = spark.createDataFrame(rows, "vec_id long, cent long, d double")
+    got = S.nearest(cands, ["vec_id"], "cent", F.col("d")).orderBy("vec_id").collect()
+    assert [tuple(r) for r in got] == [(1, 3, 0.25), (2, 9, 0.75)]
+    order = [F.col("d").asc(), F.col("cent").asc()]
+    top = S.top_k(cands.distinct(), ["vec_id"], order, 2).orderBy("vec_id", "rank")
+    assert [tuple(r) for r in top.collect()] == [
+        (1, 3, 0.25, 1), (1, 5, 0.25, 2), (2, 9, 0.75, 1), (2, 4, 1.0, 2),
+    ]
 
 
 def test_pq_codes_match_numpy(spark):

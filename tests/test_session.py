@@ -59,3 +59,33 @@ def test_one_session_builder():
         and "SparkSession.builder" in open(os.path.join(ROOT, path), encoding="utf-8").read()
     ]
     assert offenders == []
+
+
+def test_text_udf_survives_session_restart(tmp_path):
+    """A fused ``extract`` in a second session, after the first one stopped,
+    reports its text-UDF accumulator to the live SparkContext: stderr has no
+    ``Failed to update accumulator`` line."""
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "import sys\n"
+        "from mindocr_spark.data.gen_corpus import write_corpus_parquet\n"
+        "from mindocr_spark.plans.extract import extract\n"
+        "from mindocr_spark.session import get_spark\n"
+        "d = sys.argv[1]\n"
+        "write_corpus_parquet(d, 12, seed=42)\n"
+        "for cores in (1, 2):\n"
+        "    s = get_spark(app_name='accum', cores=cores)\n"
+        "    spans = s.read.parquet(d + '/documents_spans.parquet')\n"
+        "    media = s.read.parquet(d + '/media.parquet')\n"
+        "    print('DOCS', len(extract(s, spans, media).collect()))\n"
+        "    s.stop()\n"
+    )
+    env = dict(os.environ, PYTHONPATH=ROOT)
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    run = subprocess.run(
+        [sys.executable, str(probe), str(tmp_path / "corpus")],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert run.stdout.split().count("DOCS") == 2
+    assert "Failed to update accumulator" not in run.stderr

@@ -44,9 +44,7 @@ sequence_packing shows the two-phase prefix sum (per-bucket window after
 one hash exchange, the single-partition window ONLY over the tiny
 bucket-totals aggregate, broadcast join back); mixture_weights is one
 map-side-combinable aggregate plus windows over the ~|src|x|lang| group
-table; semdedup persists the centroid assignment (InMemoryTableScan x3 —
-the 8-row broadcast NL join under it executes once) and pairs via a
-SortMergeJoin on cell; boilerplate_line_removal is explode -> gram-count
+table; boilerplate_line_removal is explode -> gram-count
 exchange -> equi-join back -> per-doc reassembly aggregate;
 model_quality_filter is one compact-table repartition + one
 exchange-free aggregate, zero joins. Late round-5 minhash change: the
@@ -56,15 +54,7 @@ verify filter attached to each candidate pair.
 
 Round-6 additions: table_structure_acc / layout_map are pure
 Catalyst metric aggregates (integer basis points, the det_metric_prf
-pattern — grouped joins + single-row composition). pq_codes is a
-subspace explode -> broadcast 128-row codebook BroadcastNestedLoopJoin
--> per-(vec, s) window argmin -> one pack aggregate; pq_adc_topk adds
-the broadcast (query, s, code) LUT equi-join and a map-side-combinable
-integer sum; ivf_pq_topk composes the IVF cell assignment (8-row
-broadcast NL + per-vec window) with the same ADC lookup join — every
-nested-loop join in those plans is against a <=128-row broadcast
-(centroids / codebook / subspace ids), never corpus x corpus, and the
-candidate prefilter is a broadcast cell equi-join.
+pattern — grouped joins + single-row composition).
 sequence_packing_grouped shows the per-(source, lang) variant of the
 two-phase prefix sum: the grouped bucket-totals window replaces the
 single-partition global one.
@@ -74,11 +64,7 @@ OPTIMIZATION_r07.md for the measurements): the flagship's CPU-spread
 exchange now moves the 3-column span keys BELOW the media broadcast join
 (payloads attach in place) and the empty-doc restore join is gone
 (explode_outer + null-skipping collect_list — fused plan: 2 exchanges,
-no SortMergeJoin). The PQ/IVFADC argmins (pq_codes nearest-codebook,
-ivf_pq_topk cell assignment) and semdedup's three argmins are
-min(struct)/min_by HashAggregates instead of rank windows — partial
-aggregation collapses the candidate fan-out before the exchange; only
-query-side probe rankings (<= N_QUERIES rows) remain windows.
+no SortMergeJoin).
 Both minhash twins band through one function (dedup._minhash_bands):
 (band_no, band_key) rows keyed by xxhash64 longs, not string
 concatenations. Every exact-hamming form takes its join keys from
@@ -87,6 +73,23 @@ exact_hamming_pairs skeleton: key tables over DISTINCT signatures, (h,h,0)
 self-rows, member expansion — identical output, duplicate-cluster-safe
 candidate volume. simhash_near_dup_banded, the small-corpus form, keeps
 the direct signature-level band join.
+Vector search (operators/similarity.py and semdedup): every
+nearest-centroid argmin is similarity.nearest, a min(struct(dist, id))
+HashAggregate whose partial step collapses the candidate fan-out before
+the exchange — pq_codes' nearest codebook entry per (vec, s), the IVF
+cell of ivf_topk and ivf_pq_topk, and both semdedup levels (centroid ->
+super, vector -> cell); a payload (embedding, norm) joins back once by
+id. Every row_number is similarity.top_k: the six search operators'
+final per-query top-k, plus two probe rankings over narrow rows
+(ivf_pq_topk's nprobe cells for <= N_QUERIES queries, semdedup's top-2
+supers per vector). Every nested-loop join has a broadcast side of a few
+rows — the 8 IVF centroids, the 128-row PQ codebook, semdedup's
+~sqrt(k) supers, or the N_QUERIES query set of the brute-force
+operators — never corpus x corpus. pq_adc_topk and ivf_pq_topk add the
+broadcast (query, s, code) LUT equi-join and a map-side-combinable
+integer sum; ivf_pq_topk's candidates come from a broadcast cell
+equi-join. semdedup persists the assignment (InMemoryTableScan x3) and
+pairs via a SortMergeJoin on cell.
 ser_seqeval_metric is one side-exploded window chain + one conditional
 aggregate (was four window chains across three aggregate branches);
 decontamination_flags is one left-probe of the broadcast eval set + one
