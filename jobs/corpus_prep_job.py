@@ -58,38 +58,33 @@ def main() -> None:
     spark.stop()
 
 
-PREP_LINEAGE_SCHEMA = (
-    "bucket int, status string, n_docs long, n_tokens long, "
-    "wall_sec double, run_id string"
-)
-
-
 def run_corpus_prep(
     spark, sf_dir: str, out_dir: str, n_buckets: int = 64, run_id: str = "run"
 ) -> dict:
     """Run (or exactly resume) the bucketed corpus-prep job.
 
-    Resume protocol = plans/lineage.py's: doc_id hash buckets, dynamic
-    partition overwrite, a per-bucket lineage table appended only after
-    the partition commit, completed buckets anti-joined away on restart.
+    Resume protocol = ``plans/lineage.run_bucketed``, the extraction job's:
+    doc_id hash buckets, one dynamic-overwrite write of the pending
+    buckets, then one lineage row per written bucket (``n_docs``,
+    ``n_tokens`` and the write's wall time) appended after the commit;
+    completed buckets are filtered away on restart.
     The cross-document signals (near-dup clusters, boilerplate line
     frequencies, packing offsets) are GLOBAL: they are deterministically
     recomputed over the full corpus on resume — only the final per-bucket
     materialization and write are skipped (at production scale those
     signals live as stored tables maintained incrementally, the
     minhash_lsh_incremental pattern; the recomputation here keeps the
-    job stateless-in, exact-out). Correctness of the resume filter
+    job stateless-in, exact-out). That is also why the job commits all
+    pending buckets in one write rather than bucket by bucket: a crash
+    loses those signals whatever was committed, so per-bucket commits
+    would save no recomputation. Correctness of the resume filter
     placement (the bucket predicate must not push beneath the line-
     frequency aggregate or the packing windows — Catalyst only pushes
     predicates through aggregates/windows on their own keys, and the
     hash bucket is neither) is pinned by
     tests/test_pretrain.py::test_corpus_prep_resume_is_exact.
     """
-    import time as _time
-
     from pyspark.sql import functions as F
-
-    from mindocr_spark.plans.lineage import completed_buckets
 
     from mindocr_spark.operators.pretrain import (
         boilerplate_clean,
@@ -100,6 +95,7 @@ def run_corpus_prep(
     )
     from mindocr_spark.operators.quality import training_corpus_filter
     from mindocr_spark.operators.similarity import _emb, _with_norm
+    from mindocr_spark.plans.lineage import run_bucketed
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     n_raw = docs.count()
@@ -147,53 +143,11 @@ def run_corpus_prep(
             "n_tokens", "tok_start", "first_seq", "last_seq",
         )
     )
-    # bucket column = pmod(xxhash64(doc_id)) — the repo's stand-in for
-    # Iceberg bucket transforms (CLAUDE.md): downstream equi-joins and
-    # resumes prune/co-partition on it, same as plans/lineage.py's
-    # extract output (and the same bucket function, so the two jobs'
-    # outputs are co-bucketed)
     corpus_path = os.path.join(out_dir, "corpus")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    done = set(completed_buckets(spark, corpus_path))
-    final = final.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("doc_id")), F.lit(n_buckets)).cast("int")
+    job = run_bucketed(
+        spark, final.filter, corpus_path, n_buckets, run_id,
+        {"n_tokens": F.sum("n_tokens")},
     )
-    todo = final.filter(~F.col("bucket").isin(sorted(done))) if done else final
-    # Per-bucket commit loop: each bucket's partition is written and its
-    # lineage row appended immediately after that partition commits, so a
-    # mid-run crash loses at most the one in-flight bucket (the advertised
-    # resume granularity). The upstream pipeline is persisted once; the
-    # per-bucket writes are partition-pruned scans of the cached table.
-    from mindocr_spark.config import persist_intermediate
-
-    todo = persist_intermediate(todo.repartition(n_buckets, "bucket"))
-    stat_pdf = (
-        todo.groupBy(F.col("bucket").cast("int").alias("bucket"))
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-        )
-        .toPandas()
-        .sort_values("bucket", ignore_index=True)
-    )
-    stat_rows = []
-    for rec in stat_pdf.itertuples(index=False):
-        t0 = _time.time()
-        (
-            todo.filter(F.col("bucket") == int(rec.bucket))
-            .write.partitionBy("bucket")
-            .mode("overwrite")
-            .parquet(corpus_path)
-        )
-        row = (
-            int(rec.bucket), "complete", int(rec.n_docs), int(rec.n_tokens),
-            float(_time.time() - t0), run_id,
-        )
-        spark.createDataFrame([row], PREP_LINEAGE_SCHEMA).write.mode(
-            "append"
-        ).parquet(f"{corpus_path}/_lineage")
-        stat_rows.append(row)
-    todo.unpersist()
 
     # 6. sampling weights over the ORIGINAL corpus composition (the
     # mixture decision is made on what exists, not on what survived)
@@ -217,8 +171,8 @@ def run_corpus_prep(
         "n_sequences": (agg["end"] + SEQ_LEN - 1) // SEQ_LEN if agg["end"] else 0,
         "n_weight_groups": weights.count(),
         "buckets_total": n_buckets,
-        "buckets_skipped": len(done),
-        "buckets_processed": len(stat_rows),
+        "buckets_skipped": job["buckets_skipped"],
+        "buckets_processed": job["buckets_processed"],
         "out_dir": out_dir,
     }
     with open(os.path.join(out_dir, "manifest.json"), "w") as f:

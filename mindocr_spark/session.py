@@ -31,18 +31,15 @@ def _pin_blas_threads() -> None:
         os.environ.setdefault(var, "1")
 
 
-def _export_pkg_pythonpath() -> None:
-    """Make the package root importable in python WORKERS regardless of the
-    driver's cwd: the JVM passes the driver process's PYTHONPATH env through
-    to every worker, and the daemon shim
+def _pkg_root() -> str:
+    """The directory (or ``--py-files`` zip) this package is imported from.
+    ``get_spark`` puts it on python WORKERS' PYTHONPATH through
+    ``spark.executorEnv.PYTHONPATH``: the daemon shim
     (``spark.python.daemon.module=mindocr_spark.spark_daemon``) must be
-    importable there before any task runs."""
-    pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    existing = os.environ.get("PYTHONPATH", "")
-    if pkg_root not in existing.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            pkg_root + (os.pathsep + existing if existing else "")
-        )
+    importable there before any task runs, whatever the driver's cwd, and
+    under spark-submit the JVM is already running when this code does, so
+    the driver's own environment never reaches it."""
+    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _local_master(cores: int | None = None) -> str | None:
@@ -60,7 +57,6 @@ def get_spark(
     shuffle_partitions: int = SHUFFLE_PARTITIONS,
 ) -> SparkSession:
     _pin_blas_threads()
-    _export_pkg_pythonpath()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
@@ -75,6 +71,7 @@ def get_spark(
         )
         .config("spark.sql.files.maxPartitionBytes", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.executorEnv.PYTHONPATH", _pkg_root())
         # wide-aggregate codegen: the 129-column minhash
         # aggregates exceed the default 100-field whole-stage-codegen
         # ceiling and fell back to interpreted evaluation; 1024 keeps them

@@ -57,11 +57,15 @@ def stream_extract(
         from pyspark.sql import functions as F
 
         sess = batch_df.sparkSession
-        sess.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         out = extract(sess, batch_df, media, mode=mode).withColumn(
             "batch_id", F.lit(int(batch_id))
         )
-        out.write.partitionBy("batch_id").mode("overwrite").parquet(out_dir)
+        (
+            out.write.partitionBy("batch_id")
+            .mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(out_dir)
+        )
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

@@ -214,14 +214,21 @@ def test_media_join_back_edge_cases(spark, mode, salt):
 
 
 def _node_rows_of_last_execution(spark, desc_part: str) -> list[int]:
-    """``number of output rows`` of every plan node of the last finished SQL
-    execution whose description contains ``desc_part``."""
+    """``number of output rows`` of every plan node whose description
+    contains ``desc_part``, in the last SQL execution that has such a node."""
     import time
 
     store = spark._jsparkSession.sharedState().statusStore()
+
+    def matching_nodes(ex_id):
+        nodes = store.planGraph(ex_id).allNodes()
+        nodes = [nodes.apply(i) for i in range(nodes.size())]
+        return [n for n in nodes if desc_part in n.desc()]
+
     execs = store.executionsList()
-    last = execs.apply(execs.size() - 1)
-    ex_id = last.executionId()
+    ex_ids = [execs.apply(k).executionId() for k in range(execs.size())]
+    ex_id = next((e for e in reversed(ex_ids) if matching_nodes(e)), None)
+    assert ex_id is not None, f"no SQL execution has a {desc_part} node"
     deadline = time.monotonic() + 30
     # the listener bus aggregates an execution's metrics after it ends
     while store.execution(ex_id).get().completionTime().isEmpty():
@@ -232,12 +239,8 @@ def _node_rows_of_last_execution(spark, desc_part: str) -> list[int]:
     while it.hasNext():
         kv = it.next()
         values[int(kv._1())] = kv._2()
-    nodes = store.planGraph(ex_id).allNodes()
     out = []
-    for i in range(nodes.size()):
-        node = nodes.apply(i)
-        if desc_part not in node.desc():
-            continue
+    for node in matching_nodes(ex_id):
         metrics = node.metrics()
         for j in range(metrics.size()):
             m = metrics.apply(j)

@@ -389,6 +389,11 @@ def test_corpus_prep_resume_is_exact(spark, tmp_path):
 
     out = str(tmp_path / "prep")
     run_corpus_prep(spark, SF, out, n_buckets=8, run_id="r1")
+    # the lineage schema both the job and its readers rely on
+    assert spark.read.parquet(f"{out}/corpus/_lineage").dtypes == [
+        ("bucket", "int"), ("status", "string"), ("n_docs", "bigint"),
+        ("n_tokens", "bigint"), ("wall_sec", "double"), ("run_id", "string"),
+    ]
     full = (
         pd.read_parquet(f"{out}/corpus")
         .drop(columns=["bucket"])
@@ -405,12 +410,20 @@ def test_corpus_prep_resume_is_exact(spark, tmp_path):
     )
     stats = run_corpus_prep(spark, SF, out, n_buckets=8, run_id="r2")
     assert stats["buckets_skipped"] == 4 and stats["buckets_processed"] == 4
-    resumed = (
-        pd.read_parquet(f"{out}/corpus")
-        .drop(columns=["bucket"])
-        .sort_values("doc_id", ignore_index=True)
-    )
+    written = pd.read_parquet(f"{out}/corpus")
+    resumed = written.drop(columns=["bucket"]).sort_values("doc_id", ignore_index=True)
     pd.testing.assert_frame_equal(resumed, full)
+    # every complete lineage row counts exactly what its bucket holds
+    counts = (
+        written.astype({"bucket": int})
+        .groupby("bucket")
+        .agg(n_docs=("doc_id", "size"), n_tokens=("n_tokens", "sum"))
+    )
+    lin = pd.read_parquet(f"{out}/corpus/_lineage")
+    lin = lin[lin.status == "complete"].set_index("bucket").sort_index()
+    pd.testing.assert_frame_equal(
+        lin[["n_docs", "n_tokens"]], counts, check_dtype=False, check_index_type=False
+    )
 
 
 # --- Intra-document dedup ----------------------------------------------------

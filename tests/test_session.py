@@ -89,3 +89,31 @@ def test_text_udf_survives_session_restart(tmp_path):
     assert run.returncode == 0, run.stderr[-3000:]
     assert run.stdout.split().count("DOCS") == 2
     assert "Failed to update accumulator" not in run.stderr
+
+
+def test_spark_submit_py_files_from_any_cwd(tmp_path):
+    """``spark-submit --py-files dist/mindocr_spark.zip`` from a cwd outside
+    the repo, with no PYTHONPATH: python workers (and the daemon shim they
+    fork from) import the package from the zip and run a task."""
+    sys.path.insert(0, os.path.join(ROOT, "tools"))
+    from package import build
+
+    zip_path = build(ROOT)
+    probe = tmp_path / "probe.py"
+    probe.write_text(
+        "from mindocr_spark.session import get_spark\n"
+        "s = get_spark(app_name='probe')\n"
+        "print('PROBE', s.sparkContext.parallelize([1, 2], 1).map(lambda x: x + 1).sum())\n"
+        "s.stop()\n"
+    )
+    env = {
+        k: v for k, v in os.environ.items() if k not in ("SPARK_GRAFT_CPUS", "PYTHONPATH")
+    }
+    env["PYSPARK_PYTHON"] = env["PYSPARK_DRIVER_PYTHON"] = sys.executable
+    run = subprocess.run(
+        [shutil.which("spark-submit"), "--master", "local[2]", "--driver-memory", "512m",
+         "--py-files", zip_path, str(probe)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "PROBE 5" in run.stdout.splitlines()
