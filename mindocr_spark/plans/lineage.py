@@ -15,7 +15,9 @@ extraction job (``run_extract_job`` below) and the corpus-prep job
 - Output is written in one ``partitionBy(bucket)`` write with dynamic
   partition overwrite set on that write (not on the session), so
   re-processing a bucket is an idempotent partition rewrite (the parquet
-  analogue of Iceberg ``overwritePartitions``).
+  analogue of Iceberg ``overwritePartitions``). The rows are first
+  repartitioned on ``bucket``, so one task writes each bucket: one file
+  per bucket, not one per (write task, bucket).
 - A lineage table ``{out}/_lineage`` then gets one row per written bucket:
   ``n_docs`` plus the caller's named counters, counted from a
   partition-pruned re-read of exactly what landed, and ``wall_sec``, the
@@ -78,6 +80,7 @@ def run_bucketed(
     (
         build(~bucket.isin(done) if done else F.lit(True))
         .withColumn("bucket", bucket)
+        .repartition("bucket")
         .write.partitionBy("bucket")
         .mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")

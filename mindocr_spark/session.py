@@ -31,17 +31,6 @@ def _pin_blas_threads() -> None:
         os.environ.setdefault(var, "1")
 
 
-def _pkg_root() -> str:
-    """The directory (or ``--py-files`` zip) this package is imported from.
-    ``get_spark`` puts it on python WORKERS' PYTHONPATH through
-    ``spark.executorEnv.PYTHONPATH``: the daemon shim
-    (``spark.python.daemon.module=mindocr_spark.spark_daemon``) must be
-    importable there before any task runs, whatever the driver's cwd, and
-    under spark-submit the JVM is already running when this code does, so
-    the driver's own environment never reaches it."""
-    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
 def _local_master(cores: int | None = None) -> str | None:
     """``local[n]`` for a caller-sized local session (``cores``, else the
     ``SPARK_GRAFT_CPUS`` environment variable); None leaves the master to
@@ -71,7 +60,14 @@ def get_spark(
         )
         .config("spark.sql.files.maxPartitionBytes", "64m")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
-        .config("spark.executorEnv.PYTHONPATH", _pkg_root())
+        # python workers import the daemon shim (below) from the directory
+        # or --py-files zip this package came from, whatever the driver's
+        # cwd: under spark-submit the JVM is already running when this
+        # code does, so the driver's own environment never reaches them
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         # wide-aggregate codegen: the 129-column minhash
         # aggregates exceed the default 100-field whole-stage-codegen
         # ceiling and fell back to interpreted evaluation; 1024 keeps them

@@ -213,9 +213,21 @@ def test_media_join_back_edge_cases(spark, mode, salt):
     }
 
 
-def _node_rows_of_last_execution(spark, desc_part: str) -> list[int]:
+def _last_execution_id(spark) -> int:
+    """Id of the newest SQL execution so far (-1 before the first): record
+    it before the action under test, for ``_node_rows_of_last_execution``.
+    The status store is fed by the async listener bus, so drain it first:
+    an earlier action's execution must not show up only afterwards."""
+    spark._jsparkSession.sparkContext().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return max((execs.apply(k).executionId() for k in range(execs.size())), default=-1)
+
+
+def _node_rows_of_last_execution(spark, desc_part: str, after: int) -> list[int]:
     """``number of output rows`` of every plan node whose description
-    contains ``desc_part``, in the last SQL execution that has such a node."""
+    contains ``desc_part``, in the last SQL execution that has such a node
+    among those started after execution ``after``: a later action's stats
+    or lineage executions are skipped, an earlier action's never read."""
     import time
 
     store = spark._jsparkSession.sharedState().statusStore()
@@ -227,8 +239,9 @@ def _node_rows_of_last_execution(spark, desc_part: str) -> list[int]:
 
     execs = store.executionsList()
     ex_ids = [execs.apply(k).executionId() for k in range(execs.size())]
+    ex_ids = sorted(e for e in ex_ids if e > after)
     ex_id = next((e for e in reversed(ex_ids) if matching_nodes(e)), None)
-    assert ex_id is not None, f"no SQL execution has a {desc_part} node"
+    assert ex_id is not None, f"no SQL execution after {after} has a {desc_part} node"
     deadline = time.monotonic() + 30
     # the listener bus aggregates an execution's metrics after it ends
     while store.execution(ex_id).get().completionTime().isEmpty():
@@ -270,8 +283,9 @@ def test_fused_ocr_runs_once_per_distinct_ref(spark, small_corpus, tmp_path):
     query) is the number of distinct referenced refs, not of media spans."""
     spans, media, n_refs, n_spans = _shared_ref_corpus(spark, small_corpus[0])
     assert 0 < n_refs < n_spans
+    after = _last_execution_id(spark)
     extract(spark, spans, media, mode="fused").write.parquet(str(tmp_path / "out"))
-    assert _node_rows_of_last_execution(spark, "ocr_fused_iter") == [n_refs]
+    assert _node_rows_of_last_execution(spark, "ocr_fused_iter", after) == [n_refs]
 
 
 def test_exploded_det_stage_emits_one_sentinel_per_ref(spark, small_corpus, tmp_path):
@@ -290,5 +304,6 @@ def test_exploded_det_stage_emits_one_sentinel_per_ref(spark, small_corpus, tmp_
     rows = crops.select("media_ref", "box_idx").collect()
     sentinels = [r["media_ref"] for r in rows if r["box_idx"] == -1]
     assert len(sentinels) == len(set(sentinels)) == n_refs
+    after = _last_execution_id(spark)
     extract(spark, spans, media, mode="exploded").write.parquet(str(tmp_path / "out"))
-    assert _node_rows_of_last_execution(spark, "det_crops_iter") == [len(rows)]
+    assert _node_rows_of_last_execution(spark, "det_crops_iter", after) == [len(rows)]

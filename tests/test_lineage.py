@@ -60,7 +60,7 @@ def test_full_run_then_noop_resume(spark, corpus, tmp_path):
 
 
 def test_resume_recomputes_only_missing_bucket(spark, corpus, tmp_path):
-    from test_extract_e2e import _node_rows_of_last_execution
+    from test_extract_e2e import _last_execution_id, _node_rows_of_last_execution
 
     spans, media = corpus
     out = str(tmp_path / "out")
@@ -79,6 +79,7 @@ def test_resume_recomputes_only_missing_bucket(spark, corpus, tmp_path):
     )
     shutil.rmtree(f"{out}/bucket={victim}")
 
+    after = _last_execution_id(spark)
     stats = run_extract_job(spark, spans, media, out, n_buckets=N_BUCKETS, run_id="r2")
     assert stats["buckets_processed"] >= 1
     redone = read_lineage(spark, out).filter(F.col("run_id") == "r2")
@@ -98,7 +99,7 @@ def test_resume_recomputes_only_missing_bucket(spark, corpus, tmp_path):
         .count()
     )
     assert 0 < refs
-    assert _node_rows_of_last_execution(spark, "ocr_fused_iter") == [refs]
+    assert _node_rows_of_last_execution(spark, "ocr_fused_iter", after) == [refs]
 
 
 def test_lineage_metrics_counters(spark, corpus, tmp_path):

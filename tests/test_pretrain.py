@@ -413,6 +413,11 @@ def test_corpus_prep_resume_is_exact(spark, tmp_path):
     written = pd.read_parquet(f"{out}/corpus")
     resumed = written.drop(columns=["bucket"]).sort_values("doc_id", ignore_index=True)
     pd.testing.assert_frame_equal(resumed, full)
+    # both runs wrote each bucket as one parquet file (one task per bucket)
+    import glob
+
+    files = [glob.glob(f"{d}/*.parquet") for d in glob.glob(f"{out}/corpus/bucket=*")]
+    assert len(files) == 8 and all(len(f) == 1 for f in files)
     # every complete lineage row counts exactly what its bucket holds
     counts = (
         written.astype({"bucket": int})
