@@ -107,11 +107,10 @@ def _ocr_eval_selftest(spark: SparkSession, sf_dir: str) -> DataFrame:
     40-doc synthetic corpus (deterministic, sf-independent), OCR the media,
     evaluate det P/R/F and e2e accuracy against the renderer's ground
     truth. Expected row: all metrics 1.0."""
-    import json
-
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from mindocr_spark.config import spread
     from mindocr_spark.data.gen_corpus import gen_corpus_pandas
     from mindocr_spark.metrics import det_metric, e2e_eval
     from mindocr_spark.operators.media_path import (
@@ -128,8 +127,7 @@ def _ocr_eval_selftest(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
     )
-    n = media.sparkSession.sparkContext.defaultParallelism * 2
-    recs = media.repartition(n, "media_ref").mapInPandas(
+    recs = spread(media, "media_ref").mapInPandas(
         ocr_records_iter, OCR_RECORDS_SCHEMA
     )
     preds = (
@@ -202,13 +200,14 @@ def _tensor_stage_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _table_html_records(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TableMaster pred_html per ruled-table payload (round 5): the
+    """TableMaster pred_html per ruled-table payload: the
     structure-token decode + matcher composition the reference's
     predict_table_recognition emits, as a mapInPandas stage over the
     derived media table. Rows-only (OCR path; exact HTML goldens live in
     tests/test_table_extract.py + test_table_master.py)."""
     from pyspark.sql import functions as F
 
+    from mindocr_spark.config import spread
     from mindocr_spark.data.derive_corpus import derive_corpus
     from mindocr_spark.operators.table_path import (
         TABLE_HTML_SCHEMA,
@@ -216,10 +215,8 @@ def _table_html_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     _, media = derive_corpus(spark, sf_dir)
-    n = spark.sparkContext.defaultParallelism * 2
     return (
-        media.select("media_ref", "image")
-        .repartition(n, "media_ref")
+        spread(media.select("media_ref", "image"), "media_ref")
         .mapInPandas(table_html_iter, TABLE_HTML_SCHEMA)
         .orderBy(F.col("media_ref"))
     )

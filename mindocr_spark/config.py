@@ -33,9 +33,6 @@ NUM_CLASSES = len(CHARSET) + 1  # +1 CTC blank, appended last
 BLANK_IDX = len(CHARSET)
 REC_TARGET_HEIGHT = 32
 REC_MAX_WH_RATIO = 32.0  # width cap = target_h * max_wh_ratio
-REC_BATCH_NUM = 8  # reference's model micro-batch (predict_rec.py:139-197);
-# the template scorer is per-crop so micro-batching is a no-op here — the
-# Arrow batch (ARROW_MAX_RECORDS) plays this role
 
 # --- classification ----------------------------------------------------
 CLS_LABELS = ("0", "180")
@@ -67,7 +64,15 @@ MAX_PDF_STREAM_BYTES = 1 << 20
 # when media rows are large (256 x 100KB images = ~26MB per in-flight batch)
 ARROW_MAX_RECORDS = 256
 SHUFFLE_PARTITIONS = 32
-SKEW_SALT_BUCKETS = 8  # default for extract(salt_buckets=...) / --salt-buckets
+
+
+def spread(df, *keys):
+    """Hash-repartition ``df`` on ``keys`` over 2x the task slots. Every
+    CPU-bound Python stage (mapInPandas, pandas UDF) and every compact table
+    exploded into a heavy projection goes through here: AQE sizes
+    partitions by bytes and would coalesce a small table of large or
+    expensive rows onto one core."""
+    return df.repartition(2 * df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 
 def persist_intermediate(df):

@@ -55,7 +55,7 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import CHARSET
+from ..config import CHARSET, spread
 from ..functions.glyphs import mixed_height, render_page, render_table
 from ..functions.png_codec import encode_png
 
@@ -252,8 +252,7 @@ def derive_from_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     docs = docs.select("doc_id", "text")
     # rendering is CPU-bound Python: spread over task slots even when the
     # source parquet is one small split
-    n = docs.sparkSession.sparkContext.defaultParallelism * 2
-    docs = docs.repartition(n, "doc_id")
+    docs = spread(docs, "doc_id")
     spans = docs.mapInPandas(_gen_spans_iter, _SPANS_SCHEMA)
     media = docs.mapInPandas(_gen_media_iter, _MEDIA_SCHEMA)
     return spans, media

@@ -14,7 +14,6 @@ from ..config import CLS_LABELS, CLS_THRESH, DROP_SCORE
 from ..functions.ctc import ctc_greedy_decode
 from ..functions.imaging import rotate180, warp_perspective_crop
 from ..functions.ordering import sorted_boxes
-from .cls import cls_probs
 from .det import db_postprocess, det_resize, det_score, validate_det_res
 from .rec import rec_logits, rec_resize_norm
 
@@ -37,17 +36,6 @@ def crop_box(img: np.ndarray, poly: np.ndarray) -> np.ndarray:
     Also quarters the crop-shuffle bytes in exploded mode."""
     out = warp_perspective_crop(img, poly.astype(np.float64))
     return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
-def classify_and_rotate(crop: np.ndarray) -> tuple[np.ndarray, str, float]:
-    """Angle-cls a crop; rotate 180 when label=='180' and conf >= thresh
-    (``predict_system.py:294-309``)."""
-    probs = cls_probs(crop)
-    idx = int(probs.argmax())
-    label, conf = CLS_LABELS[idx], float(probs[idx])
-    if label == "180" and conf >= CLS_THRESH:
-        crop = rotate180(crop)
-    return crop, label, conf
 
 
 def recognize_crop(crop: np.ndarray) -> tuple[str, float]:

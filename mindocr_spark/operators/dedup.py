@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import persist_intermediate
+from ..config import persist_intermediate, spread
 
 SIMHASH_BITS = 60  # 15 hex chars -> fits signed int64 in both engines
 JACCARD_THRESHOLD = 0.12
@@ -136,9 +136,8 @@ def _shingles(docs: DataFrame) -> DataFrame:
     # (minhash agg, sizes), so the exploded shingle rows are never
     # shuffled — one small-table exchange replaces two big ones (and the
     # single-split parquet stops serializing tokenization on one core).
-    slots = docs.sparkSession.sparkContext.defaultParallelism
     return (
-        docs.repartition(2 * slots, "doc_id")
+        spread(docs, "doc_id")
         .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
         .select("doc_id", F.explode(grams).alias("shingle"))
         .distinct()
@@ -399,11 +398,10 @@ def _simhash(docs: DataFrame, token_hash, bits: int) -> DataFrame:
     combinable. At 64 bits, bit 63's addend is Long.MIN_VALUE; partial sums
     of the lower 63 bits stay < 2^63 so the fold never overflows
     (ANSI-safe)."""
-    slots = docs.sparkSession.sparkContext.defaultParallelism
     toks = (
         # compact-table repartition: the bit-vote aggregation below
         # groups by doc_id, so exploded token rows never shuffle
-        docs.repartition(2 * slots, "doc_id")
+        spread(docs, "doc_id")
         .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
         .withColumn("h", token_hash)
     )
@@ -447,44 +445,6 @@ SELECT doc_id,
        sum((CASE WHEN s >= 0 THEN 1::BIGINT ELSE 0 END) << b)::BIGINT AS simhash
 FROM bits GROUP BY doc_id
 """
-
-
-def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEST ORACLE ONLY (not registered as a production query since round 2):
-    all-pairs word-3-gram Jaccard via a raw shingle self-join — hot
-    stop-grams make the join key distribution unboundedly skewed at scale.
-    The production operator is :func:`ngram_jaccard_filtered` (identical
-    semantics over the surviving shingle sets, hot shingles dropped before
-    the join); this raw form remains as its small-scale comparison point.
-    """
-    sh = _shingles(_docs(spark, sf_dir))
-    sizes = sh.groupBy("doc_id").agg(F.count("*").cast("long").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count("*").cast("long").alias("inter"))
-    )
-    na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    return (
-        inter.join(na, "doc_a")
-        .join(nb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4
-            ),
-        )
-        .filter(
-            F.lit(JACCARD_T_DEN) * F.col("inter")
-            >= F.lit(JACCARD_T_NUM)
-            * (F.col("na") + F.col("nb") - F.col("inter"))
-        )
-        .select("doc_a", "doc_b", "inter", "jaccard")
-    )
 
 
 NGRAM_JACCARD_SQL = f"""
@@ -532,28 +492,6 @@ def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hamming_pairs_quadratic(
         simhash_signatures(spark, sf_dir), SIMHASH_HAMMING_MAX
     )
-
-
-SIMHASH_NEAR_PAIRS_SQL = f"""
-WITH toks AS (
-  SELECT doc_id, ('0x' || substr(md5(unnest(string_split(text,' '))),1,15))::BIGINT AS h
-  FROM documents
-),
-bits AS (
-  SELECT doc_id, b, sum(2 * ((h >> b) & 1) - 1) AS s
-  FROM toks, (SELECT unnest(range(0, {SIMHASH_BITS})) AS b)
-  GROUP BY doc_id, b
-),
-sig AS (
-  SELECT doc_id,
-         sum((CASE WHEN s >= 0 THEN 1::BIGINT ELSE 0 END) << b)::BIGINT AS simhash
-  FROM bits GROUP BY doc_id
-)
-SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-       bit_count(xor(a.simhash, b.simhash))::INT AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= {SIMHASH_HAMMING_MAX}
-"""
 
 
 SIMHASH_BANDED_HAMMING_MAX = 3

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..config import spread
+
 # XFUND's class set (minus OTHER, which bio_label_maps skips);
 # folded ids: O=0, B-QUESTION=1, B-ANSWER=3, B-HEADER=5
 CLASSES = ["QUESTION", "ANSWER", "HEADER"]
@@ -59,8 +61,7 @@ def ser_tokens(docs: DataFrame) -> DataFrame:
     # compact-table repartition by doc_id before the token explode: the
     # windows and every grouping below cluster by doc_id, so the exploded
     # rows are never shuffled (same trade as dedup._shingles)
-    slots = docs.sparkSession.sparkContext.defaultParallelism
-    t = docs.repartition(2 * slots, "doc_id").select(
+    t = spread(docs, "doc_id").select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
     ).drop("tok")
     t = t.withColumn(
@@ -187,37 +188,6 @@ SELECT doc_id, segment_id::BIGINT AS segment_id, fold_id::BIGINT AS pred_id,
        {_label_case("fold_id")} AS pred_label
 FROM top WHERE rn = 1
 """
-
-
-def _entities(t: DataFrame, prefix: str, cls: str) -> DataFrame:
-    """BIO chunk extraction (seqeval rules) from (prefix, class) columns:
-    a chunk starts at B, at I after O, or on a mid-chunk type change."""
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    prev = F.lag(F.col(cls)).over(w)
-    is_ent = F.col(cls) != O_CLASS
-    begins = is_ent & (
-        (F.col(prefix) == "B")
-        | prev.isNull()
-        | (prev == O_CLASS)
-        | (prev != F.col(cls))
-    )
-    wc = (
-        Window.partitionBy("doc_id")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ent = (
-        t.withColumn("begins", begins)
-        .withColumn("ent_id", F.sum(F.col("begins").cast("long")).over(wc))
-        .filter(is_ent)
-        .groupBy("doc_id", "ent_id")
-        .agg(
-            F.min(cls).alias("cls"),
-            F.min("pos").alias("start_pos"),
-            F.max("pos").alias("end_pos"),
-        )
-    )
-    return ent
 
 
 def ser_seqeval_metric(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -17,7 +17,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..config import spread
 from ..functions.imaging import resize_bilinear
+from ..functions.phash import dhash64
 from ..functions.png_codec import decode_png, encode_png
 
 IMAGE_META_SCHEMA = (
@@ -171,6 +173,24 @@ def video_frame_sample(df: DataFrame, every_n: int = 10, strict: bool = False) -
 # --- Perceptual image near-dup ------------------------------------------------
 
 PHASH_HAMMING_MAX = 3
+IMAGE_DHASH_SCHEMA = "media_ref string, dhash long, ok boolean"
+
+
+def image_dhash_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """(media_ref, image) -> (media_ref, dhash, ok): the shared dHash kernel
+    (``functions/phash.py``) per payload; one that fails to decode or hash
+    yields ``ok = false`` and ``dhash = 0``."""
+    for pdf in batches:
+        refs, sigs, oks = [], [], []
+        for ref, blob in zip(pdf["media_ref"], pdf["image"]):
+            try:
+                sig, ok = dhash64(decode_png(bytes(blob))), True
+            except Exception:  # noqa: BLE001 - undecodable payload
+                sig, ok = 0, False
+            refs.append(ref)
+            sigs.append(sig)
+            oks.append(ok)
+        yield pd.DataFrame({"media_ref": refs, "dhash": sigs, "ok": oks})
 
 
 def image_dhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,31 +205,15 @@ def image_dhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared pure-numpy kernel (``functions/phash.py``), no shuffle
     after. Rows-only surface: a PNG decode has no SQL mirror; the kernel
     is exact-pinned in pytest (identity / noise / distinct fixtures)."""
-    import pandas as pd
-
     from ..data.derive_corpus import derive_corpus
-    from ..functions.phash import dhash64
-    from ..functions.png_codec import decode_png
 
     _, media = derive_corpus(spark, sf_dir)
-    slots = spark.sparkContext.defaultParallelism
-
-    def it(batches):
-        for pdf in batches:
-            refs, sigs = [], []
-            for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-                try:
-                    img = decode_png(bytes(blob))
-                except Exception:  # noqa: BLE001 - non-PNG payloads skip
-                    continue
-                refs.append(ref)
-                sigs.append(dhash64(img))
-            yield pd.DataFrame({"media_ref": refs, "dhash": sigs})
-
     return (
-        media.repartition(2 * slots, "media_ref")
+        spread(media, "media_ref")
         .select("media_ref", "image")
-        .mapInPandas(it, "media_ref string, dhash long")
+        .mapInPandas(image_dhash_iter, IMAGE_DHASH_SCHEMA)
+        .filter("ok")
+        .drop("ok")
     )
 
 

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..config import spread
 from .similarity import (
     _DOT_DUCK,
     _L2_DUCK,
@@ -643,9 +644,8 @@ def boilerplate_clean(d: DataFrame) -> DataFrame:
     registered query fingerprints it with md5 instead of shipping it."""
     from ..config import persist_intermediate
 
-    slots = d.sparkSession.sparkContext.defaultParallelism
-    d = d.repartition(2 * slots, "doc_id")
-    # round 7: tokenize ONCE into a projected column — referencing
+    d = spread(d, "doc_id")
+    # tokenize ONCE into a projected column — referencing
     # split(text) inside the transform lambda made Catalyst re-split the
     # text for every line index, O(words x lines) string work per doc
     # (the _shingles lesson, dedup.py) — and persist the line table: it
@@ -896,12 +896,11 @@ def intra_doc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "else text end"
         ).alias("text"),
     )
-    slots = d.sparkSession.sparkContext.defaultParallelism
-    # round 7: tokenize once into a projected column (the _shingles /
+    # tokenize once into a projected column (the _shingles /
     # boilerplate lesson — split(text) inside the lambda re-splits per
     # line index, O(words x lines) per doc)
     lines = (
-        d.repartition(2 * slots, "doc_id")
+        spread(d, "doc_id")
         .select("doc_id", F.split("text", " ").alias("toks"))
         .select(
             "doc_id",

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import spread
+
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is")
 _SW_LIST_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
@@ -388,9 +390,8 @@ def _gopher_repetition(docs: DataFrame) -> DataFrame:
     # table replaces two shuffles of the ~3x-exploded gram table (the
     # trade a 100 TB corpus wants; checked by tests/test_plan_quality.py::
     # test_gopher_repetition_single_preexplode_exchange).
-    slots = docs.sparkSession.sparkContext.defaultParallelism
     g = (
-        docs.repartition(2 * slots, "doc_id")
+        spread(docs, "doc_id")
         .select("doc_id", F.split("text", " ").alias("toks"))
         .select("doc_id", F.explode(F.expr(grams_expr)).alias("g"))
         .select("doc_id", "g.n", "g.gram")
@@ -530,22 +531,17 @@ def decontamination_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id partitioning, exchange-free after the compact-table
     repartition)."""
     docs = _docs(spark, sf_dir).select("doc_id", "text")
-    slots = spark.sparkContext.defaultParallelism
-    train = docs.filter(F.col("doc_id") % DECON_EVAL_MOD != 0).repartition(
-        2 * slots, "doc_id"
-    )
+    train = spread(docs.filter(F.col("doc_id") % DECON_EVAL_MOD != 0), "doc_id")
     eval_grams = (
         _decon_grams(docs.filter(F.col("doc_id") % DECON_EVAL_MOD == 0))
         .select("gram")
         .distinct()
     )
-    # Round 7 (guide §2.3): sizes and hits were separate aggregate branches,
-    # so Catalyst evaluated the train-gram explode TWICE; a left-probe of
-    # the broadcast eval set + one conditional aggregate computes both
-    # counts in a single pass (eval_grams is distinct, so a gram matches at
-    # most once and count(hit) == the old inner-join count). Result rows
-    # identical (hash-oracled): the n_hits >= 1 filter reproduces the old
-    # inner-join's dropping of unflagged docs.
+    # a left-probe of the broadcast eval set + one conditional aggregate
+    # computes sizes and hits in a single pass over the train-gram explode
+    # (eval_grams is distinct, so a gram matches at most once and
+    # count(hit) is the inner-join count); the n_hits >= 1 filter drops
+    # unflagged docs as an inner join would.
     tg = _decon_grams(train)
     per_doc = (
         tg.join(
@@ -613,12 +609,11 @@ def duplicate_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated rows (bounded by dup density x SPAN_NGRAM). Coverage is a
     distinct-count of token positions, so overlapping spans never double
     count."""
-    slots = spark.sparkContext.defaultParallelism
-    d = (
+    d = spread(
         _docs(spark, sf_dir)
         .select("doc_id", F.split("text", " ").alias("toks"))
-        .withColumn("n_tokens", F.size("toks").cast("long"))
-        .repartition(2 * slots, "doc_id")
+        .withColumn("n_tokens", F.size("toks").cast("long")),
+        "doc_id",
     )
     grams = F.expr(
         f"transform(sequence(1, greatest(size(toks) - {SPAN_NGRAM - 1}, 1)), "
@@ -716,9 +711,8 @@ def model_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     no negative floor-division (Spark `div` truncates toward zero while
     DuckDB `//` floors — signed sums never enter a division)."""
     docs = _docs(spark, sf_dir)
-    slots = docs.sparkSession.sparkContext.defaultParallelism
     toks = (
-        docs.repartition(2 * slots, "doc_id")
+        spread(docs, "doc_id")
         .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
     )
     w = F.expr(f"pmod(xxhash64(tok), {MODEL_WEIGHT_MOD}) - {MODEL_WEIGHT_MOD // 2}")
@@ -795,9 +789,8 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     law), so the pair explode never touches corpus-scale rows.
     """
     docs = _docs(spark, sf_dir)
-    slots = docs.sparkSession.sparkContext.defaultParallelism
     words = (
-        docs.repartition(2 * slots, "doc_id")
+        spread(docs, "doc_id")
         .select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("wc"))
@@ -872,9 +865,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str, n_merges: int = 12) -> Da
     from ..config import persist_intermediate
 
     docs = _docs(spark, sf_dir)
-    slots = docs.sparkSession.sparkContext.defaultParallelism
     words = (
-        docs.repartition(2 * slots, "doc_id")
+        spread(docs, "doc_id")
         .select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
         .agg(F.count("*").alias("wc"))
@@ -929,9 +921,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str, n_merges: int = 12) -> Da
 def bpe_encode_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Encode a distinct-word table ``(w, wc)`` under an ordered merge
     list: one arrow-batched ``mapInPandas`` pass with the collected
-    merges riding the task closure (round 6, r5 verdict wrong #4 — the
-    r5 form baked each merge as one level of a nested Catalyst
-    ``aggregate()`` fold, whose expression depth grows with n_merges and
+    merges riding the task closure (a nested Catalyst ``aggregate()``
+    fold, one level per merge, grows expression depth with n_merges and
     blows analysis/codegen far below a real 32k-merge vocabulary; a
     32k-merge table is ~1 MB of closure, constant plan depth).
 
@@ -977,8 +968,7 @@ def bpe_encode_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFra
                 }
             )
 
-    slots = words.sparkSession.sparkContext.defaultParallelism
-    return words.repartition(2 * slots, "w").mapInPandas(
+    return spread(words, "w").mapInPandas(
         encode, "w string, wc long, n_chars int, n_bpe_tokens int"
     )
 
@@ -1000,9 +990,8 @@ def bpe_apply(spark: SparkSession, sf_dir: str, n_merges: int = 12) -> DataFrame
         for r in bpe_train_merges(spark, sf_dir, n_merges).orderBy("step").collect()
     ]
     docs = _docs(spark, sf_dir)
-    slots = docs.sparkSession.sparkContext.defaultParallelism
     words = (
-        docs.repartition(2 * slots, "doc_id")
+        spread(docs, "doc_id")
         .select(F.explode(F.split("text", " ")).alias("w"))
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("wc"))

@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..config import spread
+
 N_QUERIES = 20
 TOP_K = 3
 # ann_lsh_topk / embedding_near_dup_lsh bucket width is DERIVED from corpus
@@ -286,13 +288,10 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a cached approximate count — only the derived integer enters the plan."""
     nbits = _derived_bits(_emb(spark, sf_dir).count())
     bucket = F.expr(_bucket_spark_expr(str(MAX_LSH_TABLES), nbits))
-    slots = spark.sparkContext.defaultParallelism
-    emb = (
-        _with_norm(_emb(spark, sf_dir))
-        # CPU-bound interpreted bucket projection over a single parquet
-        # split: repartition or it runs on one core (CLAUDE.md invariant)
-        .repartition(2 * slots, "vec_id")
-        .withColumn("bucket", bucket)
+    # CPU-bound interpreted bucket projection over a single parquet split:
+    # spread or it runs on one core (CLAUDE.md invariant)
+    emb = spread(_with_norm(_emb(spark, sf_dir)), "vec_id").withColumn(
+        "bucket", bucket
     )
     q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
@@ -467,8 +466,7 @@ def _lsh_candidates(emb: DataFrame) -> DataFrame:
     # single split at bench scale — without an explicit repartition the
     # whole projection runs on ONE core (CLAUDE.md invariant; measured
     # 9.7s -> 0.6s at sf0.1 on local[32]).
-    slots = emb.sparkSession.sparkContext.defaultParallelism
-    emb = emb.repartition(2 * slots, "vec_id")
+    emb = spread(emb, "vec_id")
     tabs = emb.select(
         "vec_id",
         "embedding",
@@ -597,19 +595,6 @@ FROM cand c
 JOIN e ea ON ea.vec_id = c.doc_a
 JOIN e eb ON eb.vec_id = c.doc_b
 WHERE round({_DOT_DUCK.format(a='ea.embedding', b='eb.embedding')} / (ea.norm * eb.norm), 4) >= {NEAR_DUP_COS}
-"""
-
-
-EMBEDDING_NEAR_DUP_SQL = f"""
-WITH e AS (
-  SELECT vec_id, embedding,
-         sqrt({_DOT_DUCK.format(a='embedding', b='embedding')}) AS norm
-  FROM embeddings
-)
-SELECT a.vec_id AS doc_a, b.vec_id AS doc_b,
-       round({_DOT_DUCK.format(a='a.embedding', b='b.embedding')} / (a.norm * b.norm), 4) AS cos
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE round({_DOT_DUCK.format(a='a.embedding', b='b.embedding')} / (a.norm * b.norm), 4) >= {NEAR_DUP_COS}
 """
 
 

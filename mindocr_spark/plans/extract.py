@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import spread
 from ..operators.media_path import (
     DET_CROPS_SCHEMA,
     FUSED_SCHEMA,
@@ -217,13 +218,6 @@ def _exploded_spans(spans: DataFrame) -> DataFrame:
     )
 
 
-def _cpu_partitions(df: DataFrame) -> int:
-    """Partition count for CPU-bound Python stages: AQE sizes shuffles by
-    bytes and will coalesce a small-but-expensive image batch onto one core;
-    pin parallelism to the cluster instead (2x task slots)."""
-    return df.sparkSession.sparkContext.defaultParallelism * 2
-
-
 def _media_side(media: DataFrame) -> DataFrame:
     """The media columns the OCR stages consume. ``profile`` is per-item
     pipeline metadata (attn/poly routing); absent on older corpora."""
@@ -238,19 +232,17 @@ def _media_side(media: DataFrame) -> DataFrame:
 
 def _ocr_input(media_spans: DataFrame, media: DataFrame) -> DataFrame:
     """One ``(media_ref, image, profile)`` row per distinct non-null ref the
-    spans reference. The refs are spread over ``_cpu_partitions`` by
+    spans reference. The refs are spread (``config.spread``) by
     ``media_ref`` before the distinct, so the distinct adds no exchange and
     AQE cannot coalesce the OCR stage onto one core; only the narrow keys
     move and the payloads attach in place (guide §2.3/§8). LEFT join: only
     the media side may be broadcast, which keeps that spread; a ref absent
     from the media table gets a NULL image, which the OCR stages read as ''
     (``decode_node.py:30-42`` skip semantics)."""
-    refs = (
-        media_spans.select("media_ref")
-        .where(F.col("media_ref").isNotNull())
-        .repartition(_cpu_partitions(media_spans), "media_ref")
-        .distinct()
-    )
+    refs = spread(
+        media_spans.select("media_ref").where(F.col("media_ref").isNotNull()),
+        "media_ref",
+    ).distinct()
     return refs.join(_media_side(media), "media_ref", "left")
 
 

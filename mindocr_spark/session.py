@@ -85,11 +85,9 @@ def get_spark(
         # every worker shares those pages copy-on-write instead of holding
         # a private copy. Engine modules are left out: workers load them
         # from the task's sys.path, so --py-files/addPyFile updates apply.
-        # Overridable for stock behavior via MINDOCR_PYTHON_DAEMON=pyspark.daemon.
-        .config(
-            "spark.python.daemon.module",
-            os.environ.get("MINDOCR_PYTHON_DAEMON", "mindocr_spark.spark_daemon"),
-        )
+        # MINDOCR_SPARK_EXTRA_CONF (below) is applied last, so
+        # spark.python.daemon.module=pyspark.daemon reverts to the stock one.
+        .config("spark.python.daemon.module", "mindocr_spark.spark_daemon")
     )
     if os.name == "posix":
         # JVM<->python-worker channel over a unix domain socket

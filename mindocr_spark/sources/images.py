@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..config import spread
+
 
 def read_image_dir(
     spark: SparkSession, img_dir: str, pattern: str = "*.{png,jpg,jpeg}"
@@ -34,7 +36,6 @@ def predict_image_dir(spark: SparkSession, img_dir: str) -> DataFrame:
     from ..operators.media_path import OCR_RECORDS_SCHEMA, ocr_records_iter
 
     media = read_image_dir(spark, img_dir)
-    n = media.sparkSession.sparkContext.defaultParallelism * 2
-    return media.repartition(n, "media_ref").mapInPandas(
+    return spread(media, "media_ref").mapInPandas(
         ocr_records_iter, OCR_RECORDS_SCHEMA
     )

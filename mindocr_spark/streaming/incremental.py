@@ -138,7 +138,7 @@ def stream_windowed_counts_batch(
 ) -> DataFrame:
     """Run :func:`stream_windowed_counts` over the events table as an
     availableNow job and return the sink's contents — the driver-oracled
-    surface for the watermarked-window streaming path (round 5).
+    surface for the watermarked-window streaming path.
 
     Append-mode watermark semantics are DETERMINISTIC here and exactly
     SQL-expressible (``STREAM_WINDOWED_SQL``): the job processes the
@@ -171,20 +171,17 @@ def stream_windowed_counts_batch(
                 )
     else:
         os.symlink(src, os.path.join(landing, "part-0.parquet"))
-    # Round 7: state partitioning sized to the facade's bounded backlog.
-    # The stateful window agg creates one state store per shuffle
-    # partition, and EVERY micro-batch writes a delta + snapshot file per
-    # store into the checkpoint — at the session default (32) that is the
-    # dominant, high-variance I/O of this query (measured 2.4-4.2 s swings
-    # from the same plan). 8 stores cover the ~dozens of open windows
-    # here; a deployment with a wide key space raises it via
-    # MINDOCR_STREAM_STATE_PARTITIONS. Execution-layout only — the
-    # emitted window set is unchanged (re-oracled). The conf is restored
-    # after query START (it is captured into the query's offset log at
-    # start; later batches keep it).
-    n_state = os.environ.get("MINDOCR_STREAM_STATE_PARTITIONS", "8")
+    # State partitioning sized to the facade's bounded backlog. The
+    # stateful window agg creates one state store per shuffle partition,
+    # and EVERY micro-batch writes a delta + snapshot file per store into
+    # the checkpoint — at the session default (32) that is the dominant,
+    # high-variance I/O of this query (measured 2.4-4.2 s swings from the
+    # same plan). 8 stores cover the ~dozens of open windows here.
+    # Execution-layout only — the emitted window set is unchanged
+    # (re-oracled). The conf is restored after query START (it is captured
+    # into the query's offset log at start; later batches keep it).
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", n_state)
+    spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
         q = stream_windowed_counts(
             spark,
@@ -430,13 +427,15 @@ def stream_image_dedup_flags(
     partitioned by batch_id (idempotent overwrite). Undecodable payloads flag
     ``n_dups = -1`` (the decode node's skip-and-count contract) rather
     than vanishing."""
-    import pandas as pd
     from pyspark.sql import functions as F
 
-    from ..functions.phash import dhash64
-    from ..functions.png_codec import decode_png
+    from ..config import persist_intermediate
     from ..operators.dedup import MANKU64_BLOCKS, block_keys
-    from ..operators.multimodal import PHASH_HAMMING_MAX
+    from ..operators.multimodal import (
+        IMAGE_DHASH_SCHEMA,
+        PHASH_HAMMING_MAX,
+        image_dhash_iter,
+    )
 
     stored_combos = spark.read.parquet(f"{state_dir}/image_combos").select(
         F.col("media_ref").alias("ref_b"),
@@ -448,30 +447,11 @@ def stream_image_dedup_flags(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-
-        def it(batches):
-            for pdf in batches:
-                refs, sigs, oks = [], [], []
-                for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-                    try:
-                        sig = dhash64(decode_png(bytes(blob)))
-                        ok = True
-                    except Exception:  # noqa: BLE001 - undecodable arrival
-                        sig, ok = 0, False
-                    refs.append(ref)
-                    sigs.append(sig)
-                    oks.append(ok)
-                yield pd.DataFrame(
-                    {"media_ref": refs, "dhash": sigs, "ok": oks}
-                )
-
         # the dHash stage is CPU-bound Python feeding BOTH arr_bands and
         # the final flags join — persist so each arrival decodes once
-        from ..config import persist_intermediate
-
         sig = persist_intermediate(
             batch_df.select("media_ref", "image").mapInPandas(
-                it, "media_ref string, dhash long, ok boolean"
+                image_dhash_iter, IMAGE_DHASH_SCHEMA
             )
         )
         arr_combos = block_keys(

@@ -10,14 +10,22 @@ from mindocr_spark.registry import available_stages, build_pipeline
 
 
 def test_registry_lists_builtins():
-    names = available_stages()
-    for n in ["strip_html", "ocr_fused", "det_crops", "recognize", "drop_score"]:
-        assert n in names
+    assert available_stages() == [
+        "det_crops", "det_labels", "det_polys", "drop_score", "east_labels",
+        "filter", "gear_pad", "normalize_image", "ocr_fused", "pad_crops",
+        "pse_labels", "rec_resize_tensor", "recognize", "repartition_cpu",
+        "rotate_crops", "strip_html", "table_cells", "to_chw",
+    ]
 
 
 def test_unknown_stage_raises():
     with pytest.raises(KeyError):
         build_pipeline([{"name": "nope"}])
+    # an unknown parameter fails while the pipeline is built, on the driver
+    with pytest.raises(TypeError):
+        build_pipeline([{"name": "det_crops", "bogus": 1}])
+    with pytest.raises(TypeError):
+        build_pipeline([{"name": "recognize", "use_cls": False}])
 
 
 def test_config_pipeline_media(spark, small_corpus):

@@ -7,6 +7,7 @@ import os
 import shutil
 import subprocess
 import sys
+from pathlib import Path
 
 from mindocr_spark.session import _local_master
 
@@ -46,17 +47,17 @@ def test_spark_submit_master_and_engine_conf_apply(tmp_path):
 
 
 def test_one_session_builder():
-    """``session.get_spark`` is the only session builder: every other tracked
+    """``session.get_spark`` is the only session builder: every other source
     module (the benchmark's own runner aside) takes its session from it."""
-    tracked = subprocess.run(
-        ["git", "ls-files", "*.py"], cwd=ROOT, capture_output=True, text=True, check=True
-    ).stdout.split()
+    root = Path(ROOT)
+    patterns = ["*.py"] + [f"{d}/**/*.py" for d in ("mindocr_spark", "jobs", "tools", "tests")]
+    sources = [p.relative_to(root).as_posix() for pat in patterns for p in root.glob(pat)]
+    assert "mindocr_spark/session.py" in sources
     offenders = [
         path
-        for path in tracked
+        for path in sources
         if path not in ("mindocr_spark/session.py", "tests/test_session.py")
-        and not path.startswith("perfbench/")
-        and "SparkSession.builder" in open(os.path.join(ROOT, path), encoding="utf-8").read()
+        and "SparkSession.builder" in (root / path).read_text(encoding="utf-8")
     ]
     assert offenders == []
 
