@@ -7,8 +7,10 @@ Values mirror the reference defaults:
   ``mindocr/postprocess/det_db_postprocess.py:16-60``).
 - ``DROP_SCORE``: system-pipeline confidence filter (reference
   ``tools/infer/text/config.py:123``, applied ``predict_system.py:327-336``).
-- ``CHARSET``: default 36-char lowercase-alnum dict with the CTC blank
-  appended last (reference ``mindocr/postprocess/rec_postprocess.py:57-99``).
+- ``CHARSET``: default 36-char lowercase-alnum dict; ``REC_VOCABS``: each
+  rec head's class layout, its special tokens around ``CHARSET`` (reference
+  ``mindocr/postprocess/rec_postprocess.py``: CTC blank appended last
+  :57-99, attn :255-366, master :363-460, sar :494-547).
 - ``REC_TARGET_HEIGHT``: recognition input height (reference
   ``mindocr/data/transforms/rec_transforms.py:548-636`` uses 32 for CRNN).
 - ``DET_LIMIT_SIDE`` / divisor 32: DetResize defaults (reference
@@ -29,8 +31,14 @@ DET_DIVISOR = 32
 
 # --- recognition -------------------------------------------------------
 CHARSET = "0123456789abcdefghijklmnopqrstuvwxyz"
-NUM_CLASSES = len(CHARSET) + 1  # +1 CTC blank, appended last
-BLANK_IDX = len(CHARSET)
+REC_VOCABS = {
+    "ctc": (*CHARSET, "<blank>"),
+    "attn": ("<GO>", "<STOP>", *CHARSET),
+    "master": ("<GO>", "<STOP>", "<PAD>", *CHARSET),
+    "sar": (*CHARSET, "<UKN>", "<BOS/EOS>", "<PAD>"),
+}
+NUM_CLASSES = len(REC_VOCABS["ctc"])
+BLANK_IDX = REC_VOCABS["ctc"].index("<blank>")
 REC_TARGET_HEIGHT = 32
 REC_MAX_WH_RATIO = 32.0  # width cap = target_h * max_wh_ratio
 

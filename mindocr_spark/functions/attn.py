@@ -14,13 +14,12 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..config import CHARSET
+from ..config import REC_VOCABS
 
-ATTN_GO_IDX = 0
-ATTN_STOP_IDX = 1
-ATTN_NUM_CLASSES = 2 + len(CHARSET)
-
-_CHARS = ["<GO>", "<STOP>", *CHARSET]
+_CHARS = REC_VOCABS["attn"]
+ATTN_GO_IDX = _CHARS.index("<GO>")
+ATTN_STOP_IDX = _CHARS.index("<STOP>")
+ATTN_NUM_CLASSES = len(_CHARS)
 
 
 def attn_greedy_decode(logits: np.ndarray) -> tuple[str, float]:
@@ -39,21 +38,3 @@ def attn_greedy_decode(logits: np.ndarray) -> tuple[str, float]:
     conf = float(np.asarray(probs[:eos], dtype=np.float32).mean())
     return text, conf
 
-
-def attn_logits_from_analysis(
-    analysis: list[tuple[tuple[int, int, int, int], np.ndarray]],
-) -> np.ndarray:
-    """Glyph analyses (``kernels/rec.py:analyze_crop``) -> (T, 2+36) probs in
-    the attention-head contract: one step per glyph (char scores at offset
-    2), then a <STOP> step — the deterministic stand-in for a RARE/attention
-    forward, sharing the same crop analysis as the CTC head (the two heads
-    differ only in sequence framing, like the reference's model zoo)."""
-    steps: list[np.ndarray] = []
-    for _box, sims in analysis:
-        row = np.zeros(ATTN_NUM_CLASSES, dtype=np.float32)
-        row[2 : 2 + len(sims)] = sims
-        steps.append(row)
-    stop = np.zeros(ATTN_NUM_CLASSES, dtype=np.float32)
-    stop[ATTN_STOP_IDX] = 1.0
-    steps.append(stop)
-    return np.stack(steps).astype(np.float32)

@@ -12,7 +12,8 @@ LMDB label filtering ``rec_lmdb_dataset.py:142-199``).
 
 from __future__ import annotations
 
-from ..config import CHARSET
+from ..config import BLANK_IDX, CHARSET, REC_VOCABS
+from .attn import ATTN_GO_IDX, ATTN_STOP_IDX
 
 
 def load_char_dict(path: str | None = None, use_space_char: bool = False) -> list[str]:
@@ -47,12 +48,11 @@ def valid_rec_label(
     return ctc_effective_len(text) <= max_text_len
 
 
-# --- training-label encodes (round 5) ---------------------------------------
+# --- training-label encodes -------------------------------------------------
 # rec_transforms.py's deterministic label-encode transforms — the text ->
 # index-sequence prep a training-data pipeline runs per crop label.
 
 MAX_TEXT_LEN = 23  # the reference's RecCTCLabelEncode default
-CTC_BLANK_IDX = len(CHARSET)  # blank_at_last=True
 
 
 def str2idx(
@@ -82,10 +82,7 @@ def ctc_label_encode(
     the sequence blank-padded to ``max_text_len``; invalid labels encode
     as length 0 / all-blank."""
     idx = str2idx(label, max_text_len) or []
-    return len(idx), idx + [CTC_BLANK_IDX] * (max_text_len - len(idx))
-
-
-ATTN_GO_IDX, ATTN_STOP_IDX = 0, 1
+    return len(idx), idx + [BLANK_IDX] * (max_text_len - len(idx))
 
 
 def attn_label_encode(
@@ -96,7 +93,8 @@ def attn_label_encode(
     ``[GO] + ids + [STOP] + [GO]-padding`` (sequence length
     ``max_text_len + 2``)."""
     idx = str2idx(label, max_text_len) or []
-    ids = [i + 2 for i in idx]
+    off = REC_VOCABS["attn"].index(CHARSET[0])
+    ids = [i + off for i in idx]
     seq = (
         [ATTN_GO_IDX]
         + ids

@@ -1,4 +1,4 @@
-"""The remaining recognition decode heads (round 5): Master, SAR,
+"""The remaining recognition decode heads: Master, SAR,
 ABINet, VisionLAN — pure-numpy, reference-exact.
 
 These complete SURVEY §2.8's decode family beyond CTC
@@ -38,16 +38,16 @@ import re
 
 import numpy as np
 
-from ..config import CHARSET
+from ..config import CHARSET, REC_VOCABS
 
 # --- Master -----------------------------------------------------------------
 
-MASTER_GO_IDX, MASTER_STOP_IDX, MASTER_PAD_IDX = 0, 1, 2
+MASTER_STOP_IDX = REC_VOCABS["master"].index("<STOP>")
 MASTER_UNKNOWN_TOKEN = "<UNKNOWN>"
 
 
 def master_charset(use_unknown_char: bool = False) -> list[str]:
-    chars = ["<GO>", "<STOP>", "<PAD>", *CHARSET]
+    chars = list(REC_VOCABS["master"])
     if use_unknown_char:
         chars.append(MASTER_UNKNOWN_TOKEN)
     return chars
@@ -80,14 +80,9 @@ def master_decode(
 
 # --- SAR --------------------------------------------------------------------
 
-
-def sar_charset() -> list[str]:
-    return [*CHARSET, "<UKN>", "<BOS/EOS>", "<PAD>"]
-
-
-SAR_UNKNOWN_IDX = len(CHARSET)
-SAR_START_IDX = SAR_END_IDX = len(CHARSET) + 1
-SAR_PADDING_IDX = len(CHARSET) + 2
+SAR_UNKNOWN_IDX, SAR_END_IDX, SAR_PADDING_IDX = (
+    REC_VOCABS["sar"].index(t) for t in ("<UKN>", "<BOS/EOS>", "<PAD>")
+)
 
 _RM_SYMBOL_RE = re.compile("[^A-Z^a-z^0-9^一-龥]")
 
@@ -100,7 +95,7 @@ def sar_decode(
     """(B, T) indices -> (texts, confs), SARLabelDecode.decode semantics:
     skip padding, break at <BOS/EOS> (skipped at idx 0 when probs is
     None), conf = mean of kept-step probabilities."""
-    chars = sar_charset()
+    chars = REC_VOCABS["sar"]
     texts: list[str] = []
     confs: list[float] = []
     for b in range(len(char_indices)):
@@ -193,60 +188,3 @@ def visionlan_decode(
         confs.append(conf)
     return {"texts": texts, "confs": confs, "raw_chars": raw_chars}
 
-
-# --- deterministic-scorer framings (end-to-end reachability) ----------------
-# Same contract as functions/attn.attn_logits_from_analysis: one step per
-# glyph from the shared crop analysis (kernels/rec.analyze_crop), then the
-# head's own stop token — the heads differ only in vocabulary layout and
-# sequence framing, like the reference's rec model zoo.
-
-
-def master_logits_from_analysis(analysis) -> np.ndarray:
-    """Glyph analyses -> (T, 3 + num_chars) probs in the Master head
-    contract (char scores at offset 3, <STOP> step at index 1)."""
-    n = 3 + len(CHARSET)
-    steps: list[np.ndarray] = []
-    for _box, sims in analysis:
-        row = np.zeros(n, dtype=np.float32)
-        row[3 : 3 + len(sims)] = sims
-        steps.append(row)
-    stop = np.zeros(n, dtype=np.float32)
-    stop[MASTER_STOP_IDX] = 1.0
-    steps.append(stop)
-    return np.stack(steps).astype(np.float32)
-
-
-def sar_logits_from_analysis(analysis) -> np.ndarray:
-    """Glyph analyses -> (T, num_chars + 3) probs in the SAR head
-    contract (chars at their own indices, <BOS/EOS> step at the end)."""
-    n = len(CHARSET) + 3
-    steps: list[np.ndarray] = []
-    for _box, sims in analysis:
-        row = np.zeros(n, dtype=np.float32)
-        row[: len(sims)] = sims
-        steps.append(row)
-    stop = np.zeros(n, dtype=np.float32)
-    stop[SAR_END_IDX] = 1.0
-    steps.append(stop)
-    return np.stack(steps).astype(np.float32)
-
-
-def master_greedy_decode(logits: np.ndarray) -> tuple[str, float]:
-    """(T, 3+36) probs -> (text, conf) — the single-sequence wrapper the
-    fused kernel uses."""
-    if logits.size == 0:
-        return "", 0.0
-    ids = logits.argmax(axis=1)[None, :]
-    probs = logits.max(axis=1)[None, :]
-    texts, confs = master_decode(ids, probs)
-    return texts[0], float(confs[0])
-
-
-def sar_greedy_decode(logits: np.ndarray) -> tuple[str, float]:
-    if logits.size == 0:
-        return "", 0.0
-    ids = logits.argmax(axis=1)[None, :]
-    probs = logits.max(axis=1)[None, :]
-    texts, confs = sar_decode(ids, probs)
-    c = float(confs[0])
-    return texts[0], (0.0 if np.isnan(c) else c)

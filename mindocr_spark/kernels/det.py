@@ -13,8 +13,10 @@ so the standard inference unclip exactly inverts it.
 ``db_postprocess`` follows DBPostprocess semantics step by step
 (``mindocr/postprocess/det_db_postprocess.py:16-184``): threshold at 0.3 ->
 connected regions (cap 1000) -> mask-mean box score (drop < 0.6) ->
-min-area rect (drop short side < 3) -> unclip x1.5 -> re-fit rect (drop
-short side < 5) -> rescale to source space -> clockwise vertex order.
+candidate fit (``box_type='quad'``: min-area rect, drop short side < 3;
+``'poly'``: simplified convex contour) -> unclip x1.5 -> re-fit rect (drop
+short side < 5) -> rescale to source space (quads in clockwise vertex
+order).
 """
 
 from __future__ import annotations
@@ -34,15 +36,18 @@ from ..config import (
     MIN_SIDE_BEFORE_UNCLIP,
 )
 from ..functions.geometry import (
+    approx_poly_dp,
+    arc_length,
+    is_convex,
     min_area_rect,
-    row_extremes_xy,
     offset_convex_poly,
     order_points_clockwise,
     poly_area_perimeter,
     rescale_polys,
+    row_extremes_xy,
     unclip,
 )
-from ..functions.imaging import connected_components, resize_bilinear
+from ..functions.imaging import connected_components, resize_bilinear, trace_boundary
 
 _H_BRIDGE = 7  # horizontal dilation radius: merges intra-word glyph gaps
 # (<=14px), keeps words >=40px apart separate — the word-level blob behavior
@@ -177,43 +182,76 @@ def det_score(img: np.ndarray) -> np.ndarray:
     return prob
 
 
+def _quad_candidate(pts: np.ndarray) -> np.ndarray | None:
+    """A component's min-area rect; None when its short side < 3."""
+    rect, short_side, _ = min_area_rect(row_extremes_xy(pts))
+    return rect if short_side >= MIN_SIDE_BEFORE_UNCLIP else None
+
+
+def _poly_candidate(pts: np.ndarray) -> np.ndarray | None:
+    """A component's traced outer contour simplified with approxPolyDP
+    (epsilon = 0.005 * closed arc length); None when fewer than 4 points
+    remain (``det_db_postprocess.py:103-107``) or when the simplification is
+    not convex: the reference skips a candidate when pyclipper's offset
+    splits it into multiple polygons (``len(poly) > 1``, line 119-120), and
+    this kernel's miter offset is defined for convex input, so it applies
+    the same skip to non-convex simplifications (a strict superset of the
+    reference's skip on the corpus this engine generates, where all text
+    regions are convex)."""
+    contour = trace_boundary(pts)  # ordered (x, y)
+    points = approx_poly_dp(contour, 0.005 * arc_length(contour, closed=True))
+    return points if len(points) >= 4 and is_convex(points) else None
+
+
 def db_postprocess(
-    prob: np.ndarray, shape_list: tuple[int, int, float, float]
+    prob: np.ndarray,
+    shape_list: tuple[int, int, float, float],
+    box_type: str = "quad",
 ) -> tuple[list[np.ndarray], list[float]]:
-    """Prob map -> (polys int64 (4,2) in source coords, scores), DBPostprocess
-    semantics. Deterministic component order: by component top-left."""
+    """Prob map -> (int64 polys in source coords, scores), DBPostprocess
+    semantics. Deterministic component order: by component top-left.
+
+    ``box_type='quad'`` fits each candidate's min-area rect and emits the
+    clockwise (4,2) rect of its unclipped box; ``box_type='poly'``
+    (``det_db_postprocess.py:103-107,119-120,126-128``) fits the simplified
+    contour and emits the unclipped ragged polygon itself — the
+    representation curved/irregular text needs. Either way the unclipped
+    box's min-area-rect short side must clear ``min_size + 2``."""
     src_h, src_w, scale_h, scale_w = shape_list
-    bitmap = prob >= BINARY_THRESH
-    comps = connected_components(bitmap)[:MAX_CANDIDATES]
+    candidate = _quad_candidate if box_type == "quad" else _poly_candidate
+    comps = connected_components(prob >= BINARY_THRESH)[:MAX_CANDIDATES]
     polys: list[np.ndarray] = []
     scores: list[float] = []
     for pts in comps:
         score = float(prob[pts[:, 0], pts[:, 1]].mean())
         if score < BOX_THRESH:
             continue
-        xy = row_extremes_xy(pts)  # (x, y) per-row extremes
-        rect, short_side, _ = min_area_rect(xy)
-        if short_side < MIN_SIDE_BEFORE_UNCLIP:
+        box = candidate(pts)
+        if box is None:
             continue
-        expanded = unclip(rect, EXPAND_RATIO)
-        rect2, short2, _ = min_area_rect(expanded)
-        if short2 < MIN_SIDE_AFTER_UNCLIP:
+        expanded = unclip(box, EXPAND_RATIO)
+        rect, short_side, _ = min_area_rect(expanded)
+        if short_side < MIN_SIDE_AFTER_UNCLIP:
             continue
-        poly = rescale_polys(rect2, scale_h, scale_w, src_h, src_w)
-        polys.append(order_points_clockwise(poly).astype(np.int64))
+        if box_type == "quad":
+            poly = order_points_clockwise(
+                rescale_polys(rect, scale_h, scale_w, src_h, src_w)
+            )
+        else:
+            poly = rescale_polys(expanded, scale_h, scale_w, src_h, src_w)
+        polys.append(poly.astype(np.int64))
         scores.append(score)
     return polys, scores
 
 
 def validate_det_res(
-    polys: list[np.ndarray], src_h: int, src_w: int
-) -> list[np.ndarray]:
-    """Clip polys into the image, drop degenerate ones (area < 3)
-    (``tools/infer/text/predict_det.py:164-215``)."""
-    from ..functions.geometry import poly_area_perimeter
-
+    polys: list[np.ndarray], scores: list[float], src_h: int, src_w: int
+) -> tuple[list[np.ndarray], list[float]]:
+    """Clip polys into the image, drop degenerate ones (area < 3) with
+    their scores (``tools/infer/text/predict_det.py:164-215``)."""
     out: list[np.ndarray] = []
-    for p in polys:
+    kept: list[float] = []
+    for p, score in zip(polys, scores):
         q = p.astype(np.float64)
         q[:, 0] = np.clip(q[:, 0], 0, src_w - 1)
         q[:, 1] = np.clip(q[:, 1], 0, src_h - 1)
@@ -221,58 +259,8 @@ def validate_det_res(
         if area < 3.0:
             continue
         out.append(q.astype(np.int64))
-    return out
-
-
-def db_postprocess_poly(
-    prob: np.ndarray, shape_list: tuple[int, int, float, float]
-) -> tuple[list[np.ndarray], list[float]]:
-    """DBPostprocess with ``box_type='poly'``
-    (``mindocr/postprocess/det_db_postprocess.py:103-107,119-120,126-128``):
-    instead of fitting a min-area quad, the component's traced outer contour
-    is simplified with approxPolyDP (epsilon = 0.005 * closed arc length),
-    unclipped by area*ratio/perimeter, and emitted as a ragged polygon —
-    the representation curved/irregular text needs.
-
-    Reference parity notes: polys with < 4 points after simplification are
-    dropped (line 106-107); the reference skips a candidate when pyclipper's
-    offset splits it into multiple polygons (``len(poly) > 1``, line
-    119-120) — this kernel's miter offset is defined for convex input, so it
-    applies the same skip to non-convex simplifications (a strict superset
-    of the reference's skip on the corpus this engine generates, where all
-    text regions are convex); after expansion the min-area-rect short side
-    must clear ``min_size + 2`` (line 126-128).
-    """
-    from ..functions.geometry import approx_poly_dp, arc_length, is_convex
-    from ..functions.imaging import trace_boundary
-
-    src_h, src_w, scale_h, scale_w = shape_list
-    bitmap = prob >= BINARY_THRESH
-    comps = connected_components(bitmap)[:MAX_CANDIDATES]
-    polys: list[np.ndarray] = []
-    scores: list[float] = []
-    for pts in comps:
-        score = float(prob[pts[:, 0], pts[:, 1]].mean())
-        if score < BOX_THRESH:
-            continue
-        contour = trace_boundary(pts)  # ordered (x, y)
-        eps = 0.005 * arc_length(contour, closed=True)
-        points = approx_poly_dp(contour, eps, closed=True)
-        if len(points) < 4:
-            continue
-        area, per = poly_area_perimeter(points)
-        if per <= 1e-9:
-            continue
-        if not is_convex(points):
-            continue  # see docstring: the reference's multi-poly-split skip
-        expanded = offset_convex_poly(points, area * EXPAND_RATIO / per)
-        _rect, short2, _ = min_area_rect(expanded)
-        if short2 < MIN_SIDE_AFTER_UNCLIP:
-            continue
-        poly = rescale_polys(expanded, scale_h, scale_w, src_h, src_w)
-        polys.append(poly.astype(np.int64))
-        scores.append(score)
-    return polys, scores
+        kept.append(score)
+    return out, kept
 
 
 def validate_polygons_train(
@@ -285,8 +273,8 @@ def validate_polygons_train(
     min_vertices: int = 4,
 ) -> tuple[list[np.ndarray], list[str], np.ndarray]:
     """The TRAIN-side ValidatePolygons transform as a standalone kernel
-    (``mindocr/data/transforms/det_transforms.py:668-712``; round 5 —
-    previously folded into :func:`validate_det_res`):
+    (``mindocr/data/transforms/det_transforms.py:668-712``), kept apart
+    from the inference-side :func:`validate_det_res`:
 
     1. drop polygons fully outside the [0,w]x[0,h] image;
     2. mark ignored any polygon whose clipped area < ``min_area`` (a
@@ -299,7 +287,7 @@ def validate_polygons_train(
     The reference clips with shapely; here the same convex-border clip is
     Sutherland–Hodgman (``functions/geometry.clip_poly_to_rect``) —
     identical for simple polygons against the rectangular border."""
-    from ..functions.geometry import clip_poly_to_rect, poly_area_perimeter
+    from ..functions.geometry import clip_poly_to_rect
 
     h, w = int(hw[0]), int(hw[1])
     new_polys: list[np.ndarray] = []

@@ -1,26 +1,34 @@
-"""Recognition scorer: crop -> CTC logits via glyph template matching.
+"""Recognition scorer: crop -> per-head logits via glyph template matching.
 
 ``rec_resize_norm`` mirrors RecResizeNormForInfer (keep-ratio resize to
 target height 32, width capped at ``target_h * max_wh_ratio``;
 ``mindocr/data/transforms/rec_transforms.py:548-636``).
 
-``rec_logits`` is the deterministic stand-in for the CRNN/CTC forward: the
+``analyze_crop`` is the deterministic stand-in for a rec forward: the
 binarized crop is segmented into ink column-runs (glyph candidates), each
 glyph is area-resampled to the 7x5 font grid and matched against all 36
-templates; output is a (T, 37) prob array with blanks between glyph steps,
-satisfying the reference's rec contract ``[T, num_classes]``
-(``rec_postprocess.py:139-157``) so ``ctc_greedy_decode`` applies unchanged.
+templates. ``head_logits`` frames those scores as a ``[T, num_classes]``
+prob array in one head's contract (``rec_postprocess.py:139-157``):
+``REC_HEADS`` holds each head of the reference's rec model zoo (CTC,
+attention, Master, SAR) as its class layout, the token framing the glyph
+steps and its greedy decode, so the reference decoders apply unchanged.
 Confidence therefore equals the mean template-match similarity of the kept
 characters — garbage crops score low and fall to the drop-score filter.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from typing import NamedTuple
+
 import numpy as np
 
-from ..config import BLANK_IDX, NUM_CLASSES, REC_MAX_WH_RATIO, REC_TARGET_HEIGHT
+from ..config import CHARSET, REC_MAX_WH_RATIO, REC_TARGET_HEIGHT, REC_VOCABS
+from ..functions.attn import attn_greedy_decode
+from ..functions.ctc import ctc_greedy_decode
 from ..functions.glyphs import GLYPH_H, GLYPH_W, templates
 from ..functions.imaging import resize_bilinear
+from ..functions.rec_decoders import master_decode, sar_decode
 
 _INK_THRESH = 128.0
 
@@ -141,7 +149,7 @@ def analyze_crop(
 ) -> list[tuple[tuple[int, int, int, int], np.ndarray]]:
     """Segment a resized crop into glyph boxes and match each against all
     templates. The single shared analysis consumed by BOTH the angle
-    classifier (orientation evidence) and the recognizer (CTC logits) — one
+    classifier (orientation evidence) and the recognizer (head logits) — one
     pass instead of three per crop."""
     ink = resized_crop < _INK_THRESH
     return [
@@ -150,24 +158,74 @@ def analyze_crop(
     ]
 
 
-def logits_from_analysis(
+def _batch_of_one(batch_decode):
+    """Greedy decode of one (T, C) probs sequence through a reference batch
+    decoder: the per-step argmax ids and max probs as a batch of one."""
+
+    def decode(logits: np.ndarray) -> tuple[str, float]:
+        texts, confs = batch_decode(
+            logits.argmax(axis=1)[None], logits.max(axis=1)[None]
+        )
+        return texts[0], float(confs[0])
+
+    return decode
+
+
+class RecHead(NamedTuple):
+    """One rec head over the shared crop analysis: its class layout, the
+    token framing the glyph steps (``between``: a CTC blank before and after
+    every glyph step; else one stop step after the last) and its greedy
+    decode of one (T, C) probs sequence."""
+
+    vocab: tuple[str, ...]
+    frame: str
+    between: bool
+    decode: Callable[[np.ndarray], tuple[str, float]]
+
+
+REC_HEADS = {
+    "ctc": RecHead(REC_VOCABS["ctc"], "<blank>", True, ctc_greedy_decode),
+    "attn": RecHead(REC_VOCABS["attn"], "<STOP>", False, attn_greedy_decode),
+    "master": RecHead(
+        REC_VOCABS["master"], "<STOP>", False, _batch_of_one(master_decode)
+    ),
+    "sar": RecHead(
+        REC_VOCABS["sar"], "<BOS/EOS>", False, _batch_of_one(sar_decode)
+    ),
+}
+
+
+def head_logits(
     analysis: list[tuple[tuple[int, int, int, int], np.ndarray]],
+    head: str = "ctc",
 ) -> np.ndarray:
-    """Glyph analyses -> (T, 37) probs; blank-sandwiched glyph steps."""
-    blank = np.zeros(NUM_CLASSES, dtype=np.float32)
-    blank[BLANK_IDX] = 1.0
-    steps: list[np.ndarray] = [blank]
-    for _box, sims in analysis:
-        row = np.zeros(NUM_CLASSES, dtype=np.float32)
-        row[: len(sims)] = sims
-        steps.append(row)
-        steps.append(blank)
-    return np.stack(steps).astype(np.float32)
+    """Glyph analyses -> (T, len(vocab)) float32 probs in ``head``'s
+    contract: one step per glyph holding its template scores where
+    ``CHARSET`` starts in the head's layout, framed by the head's token."""
+    vocab, frame, between, _decode = REC_HEADS[head]
+    n = len(analysis)
+    out = np.zeros((2 * n + 1 if between else n + 1, len(vocab)), dtype=np.float32)
+    frames, glyphs = (out[0::2], out[1::2]) if between else (out[n:], out[:n])
+    frames[:, vocab.index(frame)] = 1.0
+    start = vocab.index(CHARSET[0])
+    for row, (_box, sims) in zip(glyphs, analysis):
+        row[start : start + len(sims)] = sims
+    return out
+
+
+def recognize_analysis(
+    analysis: list[tuple[tuple[int, int, int, int], np.ndarray]],
+    head: str = "ctc",
+) -> tuple[str, float]:
+    """One crop's glyph analysis -> (text, confidence) under ``head``; an
+    empty decode scores 0.0 under every head."""
+    text, conf = REC_HEADS[head].decode(head_logits(analysis, head))
+    return (text, conf) if text else ("", 0.0)
 
 
 def rec_logits(resized_crop: np.ndarray) -> np.ndarray:
-    """(32, W) float crop -> (T, 37) probs (analyze + assemble)."""
-    return logits_from_analysis(analyze_crop(resized_crop))
+    """(32, W) float crop -> (T, 37) CTC probs (analyze + frame)."""
+    return head_logits(analyze_crop(resized_crop))
 
 
 def rec_resize_padded(

@@ -11,21 +11,39 @@ from __future__ import annotations
 import numpy as np
 
 from ..config import CLS_LABELS, CLS_THRESH, DROP_SCORE
-from ..functions.ctc import ctc_greedy_decode
+from ..functions.geometry import min_area_rect, order_points_clockwise
 from ..functions.imaging import rotate180, warp_perspective_crop
 from ..functions.ordering import sorted_boxes
+from .cls import cls_probs_from_analyses
 from .det import db_postprocess, det_resize, det_score, validate_det_res
-from .rec import rec_logits, rec_resize_norm
+from .rec import analyze_crop, rec_resize_norm, recognize_analysis
+
+
+def profile_heads(profile: str | None, decoder: str = "ctc") -> tuple[str, str]:
+    """A media item's ``profile`` -> its (rec head, det box type).
+
+    ``profile`` is per-item pipeline metadata (the media table's ``profile``
+    column — the per-source analogue of the reference's yaml config choice):
+    ``'attn'`` decodes recognition with the attention head contract,
+    ``'poly'`` detects with ``box_type='poly'``; None/'default' keeps
+    ``decoder`` with quad boxes."""
+    return (
+        "attn" if profile == "attn" else decoder,
+        "poly" if profile == "poly" else "quad",
+    )
+
+
+def _detect(img: np.ndarray, box_type: str) -> tuple[list[np.ndarray], list[float]]:
+    """resize -> DB score map -> DB postprocess -> validate: int64 polys in
+    source coords and their scores, in component order."""
+    resized, shape_list = det_resize(img)
+    polys, scores = db_postprocess(det_score(resized), shape_list, box_type)
+    return validate_det_res(polys, scores, img.shape[0], img.shape[1])
 
 
 def detect_boxes(img: np.ndarray) -> list[np.ndarray]:
     """Gray uint8 image -> reading-ordered int64 (4,2) quads in source coords."""
-    resized, shape_list = det_resize(img)
-    prob = det_score(resized)
-    polys, _scores = db_postprocess(prob, shape_list)
-    polys = validate_det_res(polys, img.shape[0], img.shape[1])
-    order = sorted_boxes(polys)
-    return [polys[i] for i in order]
+    return detect_quads(img)
 
 
 def crop_box(img: np.ndarray, poly: np.ndarray) -> np.ndarray:
@@ -40,8 +58,7 @@ def crop_box(img: np.ndarray, poly: np.ndarray) -> np.ndarray:
 
 def recognize_crop(crop: np.ndarray) -> tuple[str, float]:
     """Crop -> (text, confidence) via resize-norm + template logits + CTC."""
-    resized = rec_resize_norm(crop)
-    return ctc_greedy_decode(rec_logits(resized))
+    return classify_and_recognize(crop, use_cls=False)
 
 
 def classify_and_recognize(
@@ -51,68 +68,25 @@ def classify_and_recognize(
     the cls evidence and the chosen orientation's logits share the
     analysis instead of recomputing it (3 passes -> 2).
 
-    ``decoder`` selects the head contract: ``'ctc'`` (RecCTCLabelDecode,
-    blank-sandwiched steps), ``'attn'`` (RecAttnLabelDecode, GO/STOP
-    framing, ``rec_postprocess.py:255-366``), ``'master'``
-    (RecMasterLabelDecode: GO/STOP/PAD vocabulary, ``:363-460``) or
-    ``'sar'`` (SARLabelDecode: trailing UKN/BOS-EOS/PAD specials,
-    ``:494-547``) — the decode families of the reference's rec model zoo
-    over the same crop analysis."""
-    from .cls import cls_probs_from_analyses
-    from .rec import analyze_crop, logits_from_analysis
-
-    def _decode(analysis):
-        if decoder == "attn":
-            from ..functions.attn import attn_greedy_decode, attn_logits_from_analysis
-
-            return attn_greedy_decode(attn_logits_from_analysis(analysis))
-        if decoder == "master":
-            from ..functions.rec_decoders import (
-                master_greedy_decode,
-                master_logits_from_analysis,
-            )
-
-            return master_greedy_decode(master_logits_from_analysis(analysis))
-        if decoder == "sar":
-            from ..functions.rec_decoders import (
-                sar_greedy_decode,
-                sar_logits_from_analysis,
-            )
-
-            return sar_greedy_decode(sar_logits_from_analysis(analysis))
-        return ctc_greedy_decode(logits_from_analysis(analysis))
-
+    ``decoder`` names a head of ``kernels.rec.REC_HEADS`` (``'ctc'``,
+    ``'attn'``, ``'master'`` or ``'sar'``) — the decode families of the
+    reference's rec model zoo over the same crop analysis."""
     resized = rec_resize_norm(crop)
-    up = analyze_crop(resized)
-    if not use_cls:
-        return _decode(up)
-    flipped = analyze_crop(rotate180(resized))
-    probs = cls_probs_from_analyses(up, flipped)
-    idx = int(probs.argmax())
-    if CLS_LABELS[idx] == "180" and float(probs[idx]) >= CLS_THRESH:
-        chosen = flipped
-    else:
-        chosen = up
-    return _decode(chosen)
+    chosen = analyze_crop(resized)
+    if use_cls:
+        flipped = analyze_crop(rotate180(resized))
+        probs = cls_probs_from_analyses(chosen, flipped)
+        idx = int(probs.argmax())
+        if CLS_LABELS[idx] == "180" and float(probs[idx]) >= CLS_THRESH:
+            chosen = flipped
+    return recognize_analysis(chosen, decoder)
 
 
 def detect_polys(img: np.ndarray) -> tuple[list[np.ndarray], list[float]]:
     """Poly-mode detection (``box_type='poly'``): ragged polygons in source
     coords, validated (clip + area>=3) like the quad path, with scores.
     Returned in component order (deterministic top-left)."""
-    from .det import db_postprocess_poly
-
-    resized, shape_list = det_resize(img)
-    prob = det_score(resized)
-    polys, scores = db_postprocess_poly(prob, shape_list)
-    kept_polys: list[np.ndarray] = []
-    kept_scores: list[float] = []
-    for p, s in zip(polys, scores):
-        v = validate_det_res([p], img.shape[0], img.shape[1])
-        if v:
-            kept_polys.append(v[0])
-            kept_scores.append(s)
-    return kept_polys, kept_scores
+    return _detect(img, "poly")
 
 
 def layout_region_text(img: np.ndarray, bbox: tuple[float, float, float, float]) -> str:
@@ -138,24 +112,21 @@ def layout_region_text(img: np.ndarray, bbox: tuple[float, float, float, float])
 def detect_quads(img: np.ndarray, box_mode: str = "quad") -> list[np.ndarray]:
     """Reading-ordered recognition quads under either detection mode.
 
-    ``box_mode='quad'`` is :func:`detect_boxes`; ``box_mode='poly'`` runs
+    ``box_mode='quad'`` fits DB quads directly; ``box_mode='poly'`` runs
     poly-mode detection (``box_type='poly'``) and fits each ragged polygon's
     min-area rect — the quad the crop stage needs (the reference's
     ``crop_text_region`` consumes 4-point boxes regardless of det box_type).
     """
     if box_mode == "quad":
-        return detect_boxes(img)
-    from ..functions.geometry import min_area_rect, order_points_clockwise
-
-    polys, _scores = detect_polys(img)
-    quads = [
-        order_points_clockwise(
-            min_area_rect(p.astype(np.float64))[0]
-        ).astype(np.int64)
-        for p in polys
-    ]
-    order = sorted_boxes(quads)
-    return [quads[i] for i in order]
+        quads, _scores = _detect(img, "quad")
+    else:
+        quads = [
+            order_points_clockwise(
+                min_area_rect(p.astype(np.float64))[0]
+            ).astype(np.int64)
+            for p in detect_polys(img)[0]
+        ]
+    return [quads[i] for i in sorted_boxes(quads)]
 
 
 def ocr_image(
@@ -241,22 +212,13 @@ def media_payload_text(
     payload: bytes | None, use_cls: bool = True, profile: str | None = None
 ) -> str:
     """The extracted text of one media payload: :func:`route_payload`, then
-    OCR of a page.
-
-    ``profile`` is per-item pipeline metadata (the media table's ``profile``
-    column — the per-source analogue of the reference's yaml config choice):
-    ``'attn'`` decodes recognition with the attention head contract,
-    ``'poly'`` detects with ``box_type='poly'``; None/'default' is the
-    CTC+quad system."""
+    OCR of a page under the contract :func:`profile_heads` picks for
+    ``profile`` (None/'default' is the CTC+quad system)."""
     text, img = route_payload(payload)
     if img is None:
         return text
-    return media_span_text(
-        img,
-        use_cls=use_cls,
-        decoder="attn" if profile == "attn" else "ctc",
-        box_mode="poly" if profile == "poly" else "quad",
-    )
+    decoder, box_mode = profile_heads(profile)
+    return media_span_text(img, use_cls=use_cls, decoder=decoder, box_mode=box_mode)
 
 
 def media_span_text(

@@ -82,32 +82,32 @@ def erase_lines(
     return out
 
 
+def _grid_ocr(img: np.ndarray) -> tuple | None:
+    """The OCR pass both extractors share: ruled grid -> cell boxes ->
+    line erase -> OCR -> text boxes. Returns (n_rows, n_cols, cell boxes,
+    text boxes, texts) with boxes as float64 [x0, y0, x1, y1] rows; None
+    when no ruled grid is found."""
+    h_lines, v_lines = detect_grid(img)
+    if len(h_lines) < 2 or len(v_lines) < 2:
+        return None
+    cells = np.array(grid_cells(h_lines, v_lines), dtype=np.float64)
+    records = ocr_image(erase_lines(img, h_lines, v_lines))
+    boxes = np.array(
+        [[*r["points"][0], *r["points"][2]] for r in records], dtype=np.float64
+    ).reshape(-1, 4)
+    texts = [r["transcription"] for r in records]
+    return len(h_lines) - 1, len(v_lines) - 1, cells, boxes, texts
+
+
 def extract_table(img: np.ndarray) -> dict:
     """Gray table image -> {"n_rows", "n_cols", "cells": [[text,...],...]}.
 
     Empty dict-shape (0 rows/cols) when no ruled grid is found.
     """
-    h_lines, v_lines = detect_grid(img)
-    if len(h_lines) < 2 or len(v_lines) < 2:
+    grid = _grid_ocr(img)
+    if grid is None:
         return {"n_rows": 0, "n_cols": 0, "cells": []}
-    cells = np.array(grid_cells(h_lines, v_lines), dtype=np.float64)
-    n_rows = len(h_lines) - 1
-    n_cols = len(v_lines) - 1
-    clean = erase_lines(img, h_lines, v_lines)
-    records = ocr_image(clean)
-    texts = [r["transcription"] for r in records]
-    boxes = np.array(
-        [
-            [
-                r["points"][0][0],
-                r["points"][0][1],
-                r["points"][2][0],
-                r["points"][2][1],
-            ]
-            for r in records
-        ],
-        dtype=np.float64,
-    ).reshape(-1, 4)
+    n_rows, n_cols, cells, boxes, texts = grid
     assignments = match_boxes_to_cells(boxes, cells)
     flat = cells_to_text(texts, assignments, len(cells), boxes)
     return {
@@ -133,26 +133,9 @@ def extract_table_html(img: np.ndarray, header_rows: int = 1) -> str:
         table_master_html,
     )
 
-    h_lines, v_lines = detect_grid(img)
-    if len(h_lines) < 2 or len(v_lines) < 2:
+    grid = _grid_ocr(img)
+    if grid is None:
         return ""
-    cells = np.array(grid_cells(h_lines, v_lines), dtype=np.float64)
-    n_rows = len(h_lines) - 1
-    n_cols = len(v_lines) - 1
-    clean = erase_lines(img, h_lines, v_lines)
-    records = ocr_image(clean)
-    texts = [r["transcription"] for r in records]
-    boxes = np.array(
-        [
-            [
-                r["points"][0][0],
-                r["points"][0][1],
-                r["points"][2][0],
-                r["points"][2][1],
-            ]
-            for r in records
-        ],
-        dtype=np.float64,
-    ).reshape(-1, 4)
+    n_rows, n_cols, cells, boxes, texts = grid
     tokens = grid_structure_tokens(n_rows, n_cols, header_rows=header_rows)
     return table_master_html(tokens, cells, boxes, texts)

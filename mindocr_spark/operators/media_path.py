@@ -30,8 +30,11 @@ from ..kernels.system import (
     classify_and_recognize,
     crop_box,
     decode_gray,
+    detect_polys,
+    detect_quads,
     media_payload_text,
     ocr_image,
+    profile_heads,
     route_payload,
 )
 
@@ -41,11 +44,10 @@ if TYPE_CHECKING:
 # schemas for mapInPandas stages. OCR is a function of the media payload
 # alone, so every stage is keyed by ``media_ref`` and reads only
 # ``media_ref``/``image``/``profile`` (extra input columns are ignored).
-# ``profile`` is per-item pipeline metadata from the media table
-# (None/'default' = CTC+quad; 'attn' = attention-head rec decode; 'poly' =
-# box_type='poly' detection) — the per-source analogue of the reference's
-# yaml config axes, carried through the exploded plan so the rec stage
-# decodes each crop under its source's contract. In DET_CROPS/REC rows,
+# ``profile`` is per-item pipeline metadata from the media table (its rec
+# head and det box type: ``kernels.system.profile_heads``), carried through
+# the exploded plan so the rec stage decodes each crop under its source's
+# contract. In DET_CROPS/REC rows,
 # ``box_idx = -1`` is the ref's own row (its routed text, one per ref) and
 # ``box_idx >= 0`` a page crop in reading order.
 FUSED_SCHEMA = "media_ref string, text string"
@@ -85,8 +87,6 @@ def det_crops_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     A page's crops follow with ``box_idx`` = the reading-order index
     (``sorted_boxes`` applied inside ``detect_quads``).
     """
-    from ..kernels.system import detect_quads
-
     for pdf in batches:
         out: dict[str, list] = {k: [] for k in (
             "media_ref", "box_idx", "crop", "crop_h", "crop_w", "profile"
@@ -103,7 +103,7 @@ def det_crops_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             emit(media_ref, -1, (text or "").encode("utf-8"), 0, 0, prof)
             if img is None:
                 continue
-            box_mode = "poly" if prof == "poly" else "quad"
+            box_mode = profile_heads(prof)[1]
             for idx, poly in enumerate(detect_quads(img, box_mode=box_mode)):
                 crop = crop_box(img, poly)  # uint8
                 emit(media_ref, idx, crop.tobytes(), crop.shape[0], crop.shape[1], prof)
@@ -114,7 +114,8 @@ def recognize_iter(
     batches: Iterator[pd.DataFrame], use_cls: bool = True, decoder: str = "ctc"
 ) -> Iterator[pd.DataFrame]:
     """Crop rows -> (media_ref, box_idx, text, conf): cls-rotate then
-    recognition. ``decoder`` picks the head contract ('ctc' | 'attn').
+    recognition. ``decoder`` picks the head contract ('ctc' | 'attn' |
+    'master' | 'sar') of crops whose profile does not pick one.
     A ref row (``box_idx < 0``) passes its routed text through with
     conf 1.0."""
     for pdf in batches:
@@ -130,9 +131,7 @@ def recognize_iter(
                 continue
             crop = np.frombuffer(blob, dtype=np.uint8).reshape(int(h), int(w))
             text, conf = classify_and_recognize(
-                crop,
-                use_cls=use_cls,
-                decoder="attn" if prof == "attn" else decoder,
+                crop, use_cls=use_cls, decoder=profile_heads(prof, decoder)[0]
             )
             texts.append(text)
             confs.append(conf)
@@ -186,8 +185,6 @@ def det_polys_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     ``det_db_postprocess.py:103-107``): ragged ``array<array<int>>`` points
     instead of the fixed 4-point quad — the output representation for
     curved/irregular text regions."""
-    from ..kernels.system import detect_polys
-
     for pdf in batches:
         out: dict[str, list] = {
             "media_ref": [], "poly_idx": [], "points": [], "score": [],

@@ -23,8 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import CHARSET
-from ..functions.chardict import CTC_BLANK_IDX, MAX_TEXT_LEN
+from ..config import BLANK_IDX, CHARSET
+from ..functions.chardict import MAX_TEXT_LEN
 
 _RAW = "array_join(slice(split(text, ' '), 1, 4), ' ')"
 
@@ -34,7 +34,7 @@ def rec_label_encodings(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text"
     )
     m = MAX_TEXT_LEN
-    b = CTC_BLANK_IDX
+    b = BLANK_IDX
     idx = (
         f"filter(transform(sequence(1, greatest(length(raw), 1)), "
         f"i -> instr('{CHARSET}', substring(raw, i, 1)) - 1), x -> x >= 0)"
@@ -84,7 +84,7 @@ SELECT doc_id, raw AS label,
        len(ids)::INT AS enc_len,
        array_to_string(
          list_concat(ids,
-                     [{CTC_BLANK_IDX} for _ in
+                     [{BLANK_IDX} for _ in
                       range(1, {MAX_TEXT_LEN} - len(ids) + 1)]),
          '-') AS ctc_seq,
        array_to_string(

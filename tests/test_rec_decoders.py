@@ -4,6 +4,7 @@ values derived by hand-executing the reference decode paths
 same index/probability inputs."""
 
 import numpy as np
+import pytest
 
 from mindocr_spark.config import CHARSET
 from mindocr_spark.functions import rec_decoders as rd
@@ -137,16 +138,27 @@ def test_end_to_end_all_heads_agree_on_clean_crop():
     assert got["master"][1] > 0.5 and got["sar"][1] > 0.5
 
 
+@pytest.mark.parametrize("use_cls", [True, False])
+@pytest.mark.parametrize("decoder", ["ctc", "attn", "master", "sar"])
+def test_blank_crop_decodes_empty_with_zero_conf(decoder, use_cls):
+    """A crop with no ink decodes to ('', 0.0) under every head; the batch
+    master_decode's NaN for a stop at step 0 stays its own."""
+    from mindocr_spark.kernels.system import classify_and_recognize
+
+    blank = np.full((32, 64), 255, np.uint8)
+    assert classify_and_recognize(blank, use_cls=use_cls, decoder=decoder) == ("", 0.0)
+
+
 def test_framing_contracts():
-    from mindocr_spark.kernels.rec import analyze_crop, rec_resize_norm
+    from mindocr_spark.kernels.rec import analyze_crop, head_logits, rec_resize_norm
     from mindocr_spark.functions.glyphs import render_page
     from mindocr_spark.kernels.system import crop_box, detect_boxes
 
     page, _ = render_page([("ab", 16, 16)], 64, 128)
     (poly,) = detect_boxes(page)
     analysis = analyze_crop(rec_resize_norm(crop_box(page, poly)))
-    m = rd.master_logits_from_analysis(analysis)
-    s = rd.sar_logits_from_analysis(analysis)
+    m = head_logits(analysis, "master")
+    s = head_logits(analysis, "sar")
     assert m.shape[1] == 3 + len(CHARSET)
     assert s.shape[1] == len(CHARSET) + 3
     assert m[-1].argmax() == rd.MASTER_STOP_IDX

@@ -12,7 +12,6 @@ from mindocr_spark.functions.attn import (
     ATTN_NUM_CLASSES,
     ATTN_STOP_IDX,
     attn_greedy_decode,
-    attn_logits_from_analysis,
 )
 from mindocr_spark.functions.geometry import approx_poly_dp, arc_length, is_convex
 from mindocr_spark.functions.glyphs import render_page
@@ -79,12 +78,12 @@ class TestAttnDecode:
         assert c_attn > 0.5
 
     def test_logits_contract_shape(self):
-        from mindocr_spark.kernels.rec import analyze_crop, rec_resize_norm
+        from mindocr_spark.kernels.rec import analyze_crop, head_logits, rec_resize_norm
 
         page, _ = render_page([("ab", 16, 16)], 64, 128)
         (poly,) = detect_boxes(page)
         crop = rec_resize_norm(crop_box(page, poly))
-        logits = attn_logits_from_analysis(analyze_crop(crop))
+        logits = head_logits(analyze_crop(crop), "attn")
         assert logits.shape[1] == ATTN_NUM_CLASSES
         assert logits[-1].argmax() == ATTN_STOP_IDX
 

@@ -24,6 +24,20 @@ def test_extract_table_exact(cells):
     assert out["cells"] == gt
 
 
+@pytest.mark.parametrize("cells", TABLES + [[["ab", "cd"], ["ef", "ab"]]])
+def test_extract_table_cells_match_html_cells(cells):
+    """Both extractors read one OCR pass: extract_table's row-major cells
+    are extract_table_html's <td> texts with <b> stripped."""
+    import re
+
+    from mindocr_spark.kernels.table import extract_table_html
+
+    page, _ = render_table(cells)
+    html = extract_table_html(page)
+    tds = [re.sub("</?b>", "", t) for t in re.findall("<td>(.*?)</td>", html)]
+    assert [t for row in extract_table(page)["cells"] for t in row] == tds
+
+
 def test_no_grid_returns_empty():
     from mindocr_spark.functions.glyphs import render_page
 

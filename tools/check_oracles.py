@@ -67,7 +67,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    n_fail = 0
+    n_fail = n_pass = n_rows_only = 0
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -80,6 +80,7 @@ def main() -> int:
             continue
         if name not in oracles:
             print(f"ok?  {name}: rows-only, {len(sdf)} rows ({time.time()-t0:.1f}s)")
+            n_rows_only += 1
             continue
         try:
             odf = con.execute(oracles[name]).fetchdf()
@@ -114,8 +115,13 @@ def main() -> int:
             )
         if status == "FAIL":
             n_fail += 1
+        else:
+            n_pass += 1
         print(f"{status} {name}: {len(a)} rows ({time.time()-t0:.1f}s) {detail[:400]}")
     spark.stop()
+    # on its own line: Spark's console progress bar (stderr, carriage-return
+    # updates) can share a line with any earlier print in a merged log
+    print(f"\nTOTAL {n_pass} PASS, {n_rows_only} rows-only, {n_fail} FAIL", flush=True)
     return n_fail
 
 
