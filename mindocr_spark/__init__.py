@@ -15,4 +15,18 @@ Reference citations in docstrings point into the read-only checkout of
 mindspore-lab/mindocr (e.g. ``tools/infer/text/predict_system.py:255-355``).
 """
 
+import os
+
+# One BLAS/OMP thread per process: each Spark task is already a process, and
+# letting OpenBLAS fan out inside every worker (or the driver running kernels
+# in-process) oversubscribes the box. OpenBLAS reads these once, when numpy
+# loads, so they are set here, before any submodule imports numpy.
+for _var in (
+    "OMP_NUM_THREADS",
+    "OPENBLAS_NUM_THREADS",
+    "MKL_NUM_THREADS",
+    "NUMEXPR_NUM_THREADS",
+):
+    os.environ.setdefault(_var, "1")
+
 __version__ = "0.1.0"

@@ -89,7 +89,7 @@ def persist_intermediate(df):
     the expensive upstream aggregation once per side; with it the table is
     built once.
 
-    Explicit decision (r2 verdict item): MEMORY_AND_DISK — spill to local
+    Explicit decision: MEMORY_AND_DISK — spill to local
     disk rather than recompute, because every such intermediate here is the
     OUTPUT of a shuffle-heavy aggregation (minhash over all shingles,
     60-bit simhash votes) that costs far more to rebuild than to re-read,

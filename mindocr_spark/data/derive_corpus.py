@@ -2,7 +2,7 @@
 table — deterministically, on executors (no driver-side rendering).
 
 Each document row (doc_id bigint, text) maps to one of EIGHT span shapes
-keyed on ``doc_id % 8`` (round 3: the corpus exercises every reassembly
+keyed on ``doc_id % 8`` (the corpus exercises every reassembly
 behavior the engine claims, so the driver's DuckDB hash gate certifies
 them all — variable span counts, interleaved/non-contiguous offsets,
 out-of-order span listings, media_refs shared across documents, missing
@@ -266,7 +266,7 @@ def derive_from_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 # job reads an Iceberg table; it does not synthesize its input) — instead
 # of paying the PNG/PDF render again inside every timed query.
 #
-# Cluster contract (round 4, hardened round 5): the memo root is
+# Cluster contract: the memo root is
 # configurable via MINDOCR_CORPUS_MEMO_DIR. The default is a per-process
 # local tempdir — correct on a single driver, WRONG for multi-driver or
 # restart scenarios (another driver cannot see a local path); point the

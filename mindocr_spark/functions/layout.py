@@ -76,7 +76,7 @@ def recover_page_text(regions: list[dict], page_width: int) -> str:
 
 def recover_page_docx(regions: list[dict], page_width: int) -> bytes:
     """Reading-ordered .docx payload from typed layout regions — the full
-    ``convert_info_docx`` surface (round 5; ``functions/docx_writer``):
+    ``convert_info_docx`` surface (``functions/docx_writer``):
     regions ordered by ``sorted_layout_boxes`` (which stamps the
     single/double/triple ``layout`` used for column sections), then
     emitted as WordprocessingML. Each region: {"bbox": [...], "type":

@@ -107,7 +107,7 @@ def extract_pdf_text(data: bytes) -> str:
             length = int(lm.group(1))
             # match at a position, not on a slice: slicing copies the
             # whole remaining buffer per stream — O(n^2) bytes on PDFs
-            # with many streams (round-3 advice)
+            # with many streams
             if _ENDSTREAM_RE.match(data, start + length):
                 body = data[start : start + length]
                 raw_end = start + length

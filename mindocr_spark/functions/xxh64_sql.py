@@ -1,4 +1,4 @@
-"""DuckDB-SQL code generator for Spark's ``xxhash64`` (round 4).
+"""DuckDB-SQL code generator for Spark's ``xxhash64``.
 
 Spark's ``F.xxhash64(...)`` is standard XXH64 with seed chaining: the
 running hash starts at 42 and each argument's hash (``hashInt`` for

@@ -1,8 +1,8 @@
 """DBNet training-label generation: shrunk binary map + border map.
 
 The train-side half of the DB pipeline (SURVEY §1.1 canonical keys
-``binary_map/mask/thresh_map/thresh_mask``), previously out of scope with
-the rest of training — but these are pure deterministic geometry/raster
+``binary_map/mask/thresh_map/thresh_mask``). Training is out of scope,
+but these are pure deterministic geometry/raster
 operators, exactly the kind of preprocessing a training-DATA pipeline
 runs over billions of images, so they belong in the engine:
 

@@ -1,5 +1,5 @@
-"""EAST / PSE training-label generation — the remaining train-side det
-family after round 5's DBNet pair (kernels/det_label.py).
+"""EAST / PSE training-label generation — the train-side det family
+beside the DBNet pair (kernels/det_label.py).
 
 Both are pure deterministic geometry/raster operators (the reference
 wraps them in random augmentation — height/width jitter, rotate, crop —

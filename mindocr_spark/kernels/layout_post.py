@@ -16,7 +16,6 @@ from __future__ import annotations
 import numpy as np
 
 PUBLAYNET_CLASS_IDS = (2, 1, 5, 4, 3)
-CLASS_NAMES = ("text", "title", "list", "table", "figure")
 
 
 def xywh2xyxy(x: np.ndarray) -> np.ndarray:

@@ -41,11 +41,6 @@ def _detect(img: np.ndarray, box_type: str) -> tuple[list[np.ndarray], list[floa
     return validate_det_res(polys, scores, img.shape[0], img.shape[1])
 
 
-def detect_boxes(img: np.ndarray) -> list[np.ndarray]:
-    """Gray uint8 image -> reading-ordered int64 (4,2) quads in source coords."""
-    return detect_quads(img)
-
-
 def crop_box(img: np.ndarray, poly: np.ndarray) -> np.ndarray:
     """Perspective-crop one quad (``crop_text_region`` semantics).
 
@@ -54,11 +49,6 @@ def crop_box(img: np.ndarray, poly: np.ndarray) -> np.ndarray:
     Also quarters the crop-shuffle bytes in exploded mode."""
     out = warp_perspective_crop(img, poly.astype(np.float64))
     return np.clip(np.rint(out), 0, 255).astype(np.uint8)
-
-
-def recognize_crop(crop: np.ndarray) -> tuple[str, float]:
-    """Crop -> (text, confidence) via resize-norm + template logits + CTC."""
-    return classify_and_recognize(crop, use_cls=False)
 
 
 def classify_and_recognize(

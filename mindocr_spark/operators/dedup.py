@@ -24,8 +24,8 @@ JACCARD_THRESHOLD = 0.12
 # the threshold as an exact integer ratio: every >= filter is evaluated as
 # T_DEN*inter >= T_NUM*union in pure int64 on BOTH engines, so a jaccard
 # that lands exactly on the threshold (e.g. 3/25) can never split across
-# float rounding (round-4 ADVICE; the round(...,4) jaccard OUTPUT columns
-# are unchanged — they are values, not predicates)
+# float rounding (the round(...,4) jaccard OUTPUT columns are values, not
+# predicates)
 JACCARD_T_NUM, JACCARD_T_DEN = 12, 100
 assert JACCARD_T_NUM / JACCARD_T_DEN == JACCARD_THRESHOLD
 SHINGLE_N = 3
@@ -34,7 +34,7 @@ MAX_MINHASHES = 128  # hash budget (DataSketch-standard): bands*rows <= this
 
 def _bands_rows_for_threshold(t: float) -> tuple[int, int]:
     """(bands, rows-per-band) DERIVED from the target jaccard threshold via
-    the LSH S-curve (round 4, replacing the fixed 4x2): the banding's
+    the LSH S-curve: the banding's
     ~50%-collision point is s* = (1/bands)^(1/rows) (Mining of Massive
     Datasets, ch.3); pick the (bands, rows) inside the hash budget whose
     s* lands closest to the operator threshold, ties to fewer hashes.
@@ -905,10 +905,10 @@ MAX_SHINGLE_FREQ = 25  # FLOOR of the corpus-relative cap, see _shingle_cap
 
 def _shingle_cap(n_docs: int) -> int:
     """Corpus-relative hot-shingle cap: max(25, ceil(N/20)) — all integer
-    math so Spark and DuckDB agree exactly. The r2 absolute cap of 25
-    silently changed the query's semantics with scale (at 100x corpus,
-    every common phrase exceeds 25 docs and is dropped); a cap relative to
-    corpus size keeps 'hot' meaning 'hot for this corpus'."""
+    math so Spark and DuckDB agree exactly. An absolute cap of 25 would
+    change the query's semantics with scale (at 100x corpus, every common
+    phrase exceeds 25 docs and is dropped); a cap relative to corpus size
+    keeps 'hot' meaning 'hot for this corpus'."""
     return max(MAX_SHINGLE_FREQ, (n_docs + 19) // 20)
 
 
@@ -928,7 +928,7 @@ def ngram_jaccard_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     BEFORE any join (they are stop-gram noise and the join-skew risk);
     pair Jaccard is computed over each doc's surviving shingle set.
 
-    Threshold-adaptive plan (round 3): at high thresholds the candidate
+    Threshold-adaptive plan: at high thresholds the candidate
     join runs over rare-first PREFIXES (SSJoin/All-Pairs prefix filtering)
     with exact array verification; at low thresholds (incl. the registered
     t=0.12) prefix filtering cannot drop enough rows to pay for its extra
@@ -947,7 +947,7 @@ def _jaccard_near_dup(docs: DataFrame, t_pct: int = 12) -> DataFrame:
     sh = persist_intermediate(_shingles(docs))  # feeds freq AND kept
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     # persisted: sizes + both self-join sides consume kept, and without
-    # the cache each re-runs the freq groupBy shuffle (round-3 advice)
+    # the cache each re-runs the freq groupBy shuffle
     kept = persist_intermediate(sh.join(freq.filter(F.col("df") <= cap), "shingle"))
     if t_pct >= PREFIX_FILTER_MIN_PCT:
         return _jaccard_prefix_verified(kept, t_pct)
@@ -1202,12 +1202,12 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reachable from it (the canonical "keeper" of its duplicate cluster —
     the dedup decision a training-data pipeline actually applies).
 
-    Spark implementation (round 3): alternating small-star/large-star
-    contraction — O(log n) rounds (chain-graph regression test:
-    tests/test_dedup_banded.py), replacing the r2 Hash-Min loop whose
-    round count was O(diameter) with a driver count per round. Same
-    fixpoint (min reachable doc_id), so the oracle — a DuckDB recursive
-    CTE computing min-reachable-id directly — is unchanged. If the round
+    Spark implementation: alternating small-star/large-star contraction —
+    O(log n) rounds (chain-graph regression test:
+    tests/test_dedup_banded.py), where Hash-Min takes O(diameter) rounds
+    with a driver count per round. Same fixpoint (min reachable doc_id)
+    as the oracle, a DuckDB recursive CTE computing min-reachable-id
+    directly. If the round
     budget is ever exhausted (a pathology no duplicate graph exhibits),
     the operator falls back to Hash-Min rather than failing the job.
     """

@@ -1,4 +1,4 @@
-"""SER/RE (key information extraction) operators (round 4).
+"""SER/RE (key information extraction) operators.
 
 The reference drives KIE with LayoutLM-family NN heads; per SURVEY §2.13
 this engine replaces NN scoring with deterministic scorers and keeps the
@@ -196,16 +196,13 @@ def ser_seqeval_metric(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NOTE a chunk interrupted by a class flip contributes its fragments,
     exactly as seqeval scores a real token classifier's output."""
-    # Round 7 single-pass restructure (guide §2.3-2.4; result and oracle
-    # SQL unchanged, hash-verified): the old form evaluated the token
-    # table + BIO windows once per aggregate branch (pred twice, gt twice
-    # — four window chains), then three single-row joins.  Both sides now
-    # explode into (side, cls, prefix) rows and run ONE window chain
-    # partitioned by (doc_id, side) — satisfied by ser_tokens' existing
-    # hash(doc_id) clustering, so no new exchange — and tp/n_pred/n_gt
-    # fall out of one conditional aggregate over the per-(doc, cls, span)
-    # side flags (an entity span is unique within a side, so max() flags
-    # are exact).
+    # Single pass (guide §2.3-2.4): both sides explode into (side, cls,
+    # prefix) rows and run ONE window chain partitioned by (doc_id, side)
+    # — satisfied by ser_tokens' existing hash(doc_id) clustering, so no
+    # new exchange, and no per-side window chains or single-row joins —
+    # and tp/n_pred/n_gt fall out of one conditional aggregate over the
+    # per-(doc, cls, span) side flags (an entity span is unique within a
+    # side, so max() flags are exact).
     t = ser_tokens(_docs(spark, sf_dir))
     sides = t.select(
         "doc_id",
@@ -376,60 +373,7 @@ FROM agg
 """
 
 
-def ser_decode_xfund(spark: SparkSession, path: str) -> DataFrame:
-    """SER decode over a real XFUND annotation file: tokenizes each
-    entity's text, derives deterministic token predictions (the stand-in
-    for the LayoutLM head, per §2.13), majority-votes per entity — the
-    ``predict_ser.py`` flow with the same decode kernel semantics."""
-    from ..sources.datasets import read_xfund
-
-    ents = read_xfund(spark, path).select(
-        "doc_id", "entity_id", "label", "text"
-    )
-    t = ents.select(
-        "doc_id",
-        "entity_id",
-        "label",
-        F.posexplode(F.split("text", " ")).alias("pos", "tok"),
-    )
-    # deterministic token classifier: hash the token into a class, biased
-    # to the gt label so the decode is meaningful (mostly-correct model)
-    gt_idx = F.when(F.lower("label") == "question", 0).when(
-        F.lower("label") == "answer", 1
-    ).when(F.lower("label") == "header", 2).otherwise(3)
-    noisy = F.abs(F.xxhash64("tok", "entity_id")) % 5 == 0
-    pred_class = F.when(
-        noisy, (gt_idx + 1 + F.col("pos") % 2) % 4
-    ).otherwise(gt_idx)
-    votes = (
-        t.withColumn(
-            "fold_id",
-            F.when(pred_class == O_CLASS, F.lit(0)).otherwise(
-                1 + 2 * pred_class
-            ),
-        )
-        .groupBy("doc_id", "entity_id", "fold_id")
-        .agg(F.count("*").alias("cnt"))
-    )
-    wv = Window.partitionBy("doc_id", "entity_id").orderBy(
-        F.desc("cnt"), F.asc("fold_id")
-    )
-    label = F.when(F.col("fold_id") == 0, F.lit("O"))
-    for i, c in enumerate(CLASSES):
-        label = label.when(F.col("fold_id") == 1 + 2 * i, F.lit(c))
-    return (
-        votes.withColumn("rn", F.row_number().over(wv))
-        .filter(F.col("rn") == 1)
-        .select(
-            "doc_id",
-            "entity_id",
-            F.col("fold_id").cast("long").alias("pred_id"),
-            label.alias("pred_label"),
-        )
-    )
-
-
-# --- XFUND file-decode path under the driver oracle (round 5, verdict #5) ----
+# --- XFUND file-decode path under the driver oracle ---------------------------
 # The SER/RE queries above derive their token table in-plan; this query
 # instead drives the FILE path: a deterministic XFUND-format JSON document
 # (mindocr/data/kie_dataset.py reads the same shape) is rendered from the

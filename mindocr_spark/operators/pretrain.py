@@ -250,7 +250,7 @@ def sequence_packing_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence numbering, so a dataloader can draw whole sequences from
     one group at the :func:`mixture_weights` rates without cross-group
     attention contamination (the grouped twin of
-    :func:`sequence_packing`; round 6 depth).
+    :func:`sequence_packing`).
 
     Scale shape: the two-phase prefix sum runs PER GROUP — within-bucket
     windows partition by (source, lang, bucket) and the bucket-totals

@@ -147,9 +147,8 @@ FROM v
 
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style fingerprint: min md5 over word-5-gram shingles."""
-    # round 7: tokenize once into a projected column (the _shingles
-    # lesson — split(text) inside the lambda re-splits per gram index,
-    # O(tokens^2) string work per doc)
+    # tokenize once into a projected column: split(text) inside the
+    # lambda would re-split per gram index, O(tokens^2) string work per doc
     grams = F.expr(
         "transform(sequence(1, greatest(size(toks) - 4, 1)), "
         "i -> md5(array_join(slice(toks, i, 5), ' ')))"
@@ -342,7 +341,7 @@ WHERE q.quality_milli >= {TRAINING_MIN_QUALITY} AND doc.lang IN ({langs})
 TRAINING_CORPUS_SQL = _training_corpus_sql()
 
 
-# --- Gopher-style repetition signals (round 4) -------------------------------
+# --- Gopher-style repetition signals -----------------------------------------
 # The repetition family from the Gopher data pipeline (Rae et al. 2021,
 # arXiv:2112.11446, Appendix A1.1): documents dominated by repeated
 # n-grams are low-quality for LM training. Per document and n in {2,3,4}:
@@ -490,7 +489,7 @@ WHERE {conds}
 GOPHER_FILTER_SQL = _gopher_filter_sql()
 
 
-# --- Benchmark decontamination (round 4) -------------------------------------
+# --- Benchmark decontamination -----------------------------------------------
 # The eval-set n-gram overlap check every serious LM data pipeline runs
 # before training (e.g. GPT-3 appendix C / PaLM / Llama decontamination):
 # a training document is contaminated if it shares any long n-gram with a
@@ -584,7 +583,7 @@ FROM hits h JOIN sizes s ON s.doc_id = h.doc_id
 """
 
 
-# --- Cross-document duplicated-span coverage (round 4) -----------------------
+# --- Cross-document duplicated-span coverage ---------------------------------
 # The exact-substring dedup signal (Lee et al. 2022, "Deduplicating
 # Training Data Makes Language Models Better": docs dominated by spans
 # that also appear verbatim in OTHER documents are memorization risks).
@@ -683,17 +682,16 @@ FROM cov GROUP BY doc_id
 """
 
 
-# --- Model-based quality filtering (round 5) ---------------------------------
+# --- Model-based quality filtering -------------------------------------------
 # The DCLM/FineWeb-Edu pipeline stage the rule-based filters above don't
 # cover: a LEARNED classifier scoring each document. The model here is a
 # fastText-style hashed linear scorer — tokenize, hash each token into a
 # weight table, average — which is exactly the serving plumbing a real
 # classifier needs (the hashing-trick feature map IS fastText's). The
 # weights are a deterministic function of the token hash (a seeded stand-in
-# for a trained artifact, same honesty contract as the multimodal decoder
-# stubs: the PLUMBING is real and hash-oracled; swap `pmod(xxhash64(tok),
-# 2001) - 1000` for a broadcast weight-table join when a trained model
-# exists). All arithmetic is integer (weights in [-1000, 1000], fixed-point
+# for a trained artifact: the PLUMBING is real and hash-oracled; swap
+# `pmod(xxhash64(tok), 2001) - 1000` for a broadcast weight-table join when
+# a trained model exists). All arithmetic is integer (weights in [-1000, 1000], fixed-point
 # milli threshold), so the oracle is float-free; the DuckDB mirror
 # recomputes Spark's xxhash64 via the generated inline XXH64 SQL.
 
@@ -767,7 +765,7 @@ FROM agg
 MODEL_QUALITY_SQL = _model_quality_sql()
 
 
-# --- BPE merge-candidate statistics (round 5) --------------------------------
+# --- BPE merge-candidate statistics ------------------------------------------
 # The inner statistic of BPE tokenizer training (Sennrich et al. 2016):
 # corpus-weighted adjacent-symbol-pair counts. A full BPE train is this
 # count -> merge -> recount loop (driver-coordinated like the CC rounds);

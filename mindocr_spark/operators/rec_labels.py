@@ -1,4 +1,4 @@
-"""Recognition label-encoding as a corpus query (round 5).
+"""Recognition label-encoding as a corpus query.
 
 ``RecCTCLabelEncode`` / ``RecAttnLabelEncode``
 (``mindocr/data/transforms/rec_transforms.py:28-135, 233-318`` over

@@ -1,7 +1,7 @@
-"""Reference evaluation metrics over surrogate pred/gt pairs (round 6).
+"""Reference evaluation metrics over surrogate pred/gt pairs.
 
-Two metrics from the reference's metric zoo that previously had no driver
-surface, following the ``det_metric_prf``/``rec_metric`` precedent: derive
+Two metrics from the reference's metric zoo given a driver surface,
+following the ``det_metric_prf``/``rec_metric`` precedent: derive
 deterministic prediction/ground-truth pairs from the synthetic tables,
 then compute the reference's exact aggregation — engine-exact (integer
 basis points, no float boundary), so both are fully hash-oracled.

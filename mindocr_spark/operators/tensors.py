@@ -108,7 +108,7 @@ def gear_pad_iter(
     envelope upstream, ``rec_resize_norm``'s width cap), so when it DOES
     happen here it is data loss and is flagged: ``truncated = true`` lets
     downstream consumers drop/reroute instead of silently reading a crop
-    with its trailing glyphs cut off (r2 ADVICE item)."""
+    with its trailing glyphs cut off."""
     from ..functions.gear import get_matched_gear_hw, pad_to_gear
 
     hw_list = [(int(height), int(g)) for g in sorted(gears)]

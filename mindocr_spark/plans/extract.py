@@ -69,7 +69,7 @@ OUT_SPAN_TYPE = (
 #   - serialization: Spark to_json omits null fields, so a text span is
 #     {"kind","text","order"} and a media span adds "media_ref"; document
 #     text is lowercase [a-z0-9 ]+ so no JSON escaping is needed.
-# Round 3: the corpus has EIGHT span shapes keyed on doc_id % 8
+# The corpus has EIGHT span shapes keyed on doc_id % 8
 # (data/derive_corpus.py module docstring) — variable span counts,
 # interleaved/non-contiguous offsets (output order = offset RANK, not the
 # offset value), out-of-order span listings, shared media_refs (m=4 reads
@@ -78,8 +78,7 @@ OUT_SPAN_TYPE = (
 # error, drop-score misfire, ordering bug, shared-media fan-out, empty-doc
 # loss) breaks the hash — a real end-to-end check, not a tautology.
 #
-# Round 4 sub-shapes (doc_id % 16), each hash-certifying a pipeline path
-# that was previously pytest-only:
+# Sub-shapes (doc_id % 16), each hash-certifying a pipeline path:
 #   9  — ROTATED page (when all words mixed-height): the cls stage must
 #        flip every crop; extracted words read in REVERSE placement order
 #        (a rotated page is read in its own flipped frame). The
@@ -203,11 +202,8 @@ def _exploded_spans(spans: DataFrame) -> DataFrame:
     """One row per span, plus one all-null row per EMPTY document
     (``explode_outer``): the null row carries the doc_id through the
     reassembly so an empty document still yields its empty out_spans row
-    without the round-1..6 ``all_docs.distinct() + left join`` restore
-    (round 7: that was a per-doc aggregate + exchange + sort-merge join
-    on the critical path of every flagship variant; the null rows ride
-    the existing text-path union instead and vanish inside the final
-    null-skipping collect_list)."""
+    with no per-doc aggregate or join: the null rows ride the text-path
+    union and vanish inside the final null-skipping collect_list."""
     s = spans.select("doc_id", F.explode_outer("spans").alias("span"))
     return s.select(
         "doc_id",

@@ -28,6 +28,7 @@ from .config import spread
 from .functions.imaging import add_padding, img_rotate
 from .kernels.det_label import border_map, shrink_binary_map
 from .kernels.det_label_alt import east_score_geo, pse_gt_decode
+from .kernels.rec import REC_HEADS
 from .operators.media_path import (
     DET_CROPS_SCHEMA,
     DET_POLYS_SCHEMA,
@@ -206,6 +207,14 @@ def _gear_pad(gears: list[int] | None = None, height: int = 32) -> Stage:
     return lambda df: spread(stage(df), F.element_at("dims", -1))
 
 
+def _recognize(decoder: str = "ctc") -> Stage:
+    """Recognition over exploded crops; an unknown ``decoder`` raises here,
+    on the driver, rather than in the first Python-worker task."""
+    if decoder not in REC_HEADS:
+        raise KeyError(f"unknown decoder {decoder!r}; known: {sorted(REC_HEADS)}")
+    return _map(recognize_iter, REC_SCHEMA, decoder=decoder)
+
+
 # --- built-in stages ----------------------------------------------------
 
 _STAGES: dict[str, Callable[..., Stage]] = {
@@ -214,10 +223,9 @@ _STAGES: dict[str, Callable[..., Stage]] = {
     ),
     "ocr_fused": lambda: _map(ocr_fused_iter, FUSED_SCHEMA),
     "det_crops": lambda: _map(det_crops_iter, DET_CROPS_SCHEMA),
-    # decoder: 'ctc' (RecCTCLabelDecode) or 'attn' (RecAttnLabelDecode)
-    "recognize": lambda decoder="ctc": _map(
-        recognize_iter, REC_SCHEMA, decoder=decoder
-    ),
+    # decoder: 'ctc' (RecCTCLabelDecode), 'attn' (RecAttnLabelDecode),
+    # 'master' (RecMasterLabelDecode) or 'sar' (SARLabelDecode)
+    "recognize": _recognize,
     # box_type='poly' detection output: ragged polygons per media row
     "det_polys": lambda: _map(det_polys_iter, DET_POLYS_SCHEMA),
     # the layout-region pre-rec pad (predict_table_e2e.py:183)

@@ -18,19 +18,6 @@ from pyspark.sql import SparkSession
 from .config import ARROW_MAX_RECORDS, SHUFFLE_PARTITIONS
 
 
-def _pin_blas_threads() -> None:
-    """One BLAS/OMP thread per python worker: each Spark task is already a
-    process; letting OpenBLAS fan out inside every worker oversubscribes the
-    box and collapses scaling of the numpy-heavy UDF stages."""
-    for var in (
-        "OMP_NUM_THREADS",
-        "OPENBLAS_NUM_THREADS",
-        "MKL_NUM_THREADS",
-        "NUMEXPR_NUM_THREADS",
-    ):
-        os.environ.setdefault(var, "1")
-
-
 def _local_master(cores: int | None = None) -> str | None:
     """``local[n]`` for a caller-sized local session (``cores``, else the
     ``SPARK_GRAFT_CPUS`` environment variable); None leaves the master to
@@ -45,7 +32,6 @@ def get_spark(
     cores: int | None = None,
     shuffle_partitions: int = SHUFFLE_PARTITIONS,
 ) -> SparkSession:
-    _pin_blas_threads()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -4,7 +4,6 @@
   (``mindocr/data/det_dataset.py:19-24``) and system output
   (``tools/infer/text/predict_system.py:358-379``).
 - rec: ``<img>\\t<text>`` (``mindocr/data/rec_dataset.py:1-43``).
-- cls: ``<img>\\t<0|180>``.
 
 Ignore-region convention: transcription ``###`` or ``*`` marks an ignored
 box (``det_transforms.py:79-81``).
@@ -48,10 +47,6 @@ def read_det_gt(spark: SparkSession, path: str) -> DataFrame:
 
 def read_rec_gt(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.csv(path, sep="\t", schema="img string, label string")
-
-
-def read_cls_gt(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.csv(path, sep="\t", schema="img string, angle string")
 
 
 def format_system_results(df: DataFrame) -> DataFrame:

@@ -121,7 +121,7 @@ def stream_windowed_counts(
     return writer.start()
 
 
-# --- driver-gated batch facade (round 5, verdict #5) -------------------------
+# --- driver-gated batch facade ----------------------------------------------
 
 STREAM_WINDOWED_SQL = """
 WITH mx AS (SELECT max(ts) AS m FROM events),

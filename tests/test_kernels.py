@@ -12,10 +12,9 @@ from mindocr_spark.kernels.det import db_postprocess, det_resize, det_score
 from mindocr_spark.kernels.rec import rec_logits, rec_resize_norm
 from mindocr_spark.kernels.system import (
     crop_box,
-    detect_boxes,
+    detect_quads,
     media_span_text,
     ocr_image,
-    recognize_crop,
 )
 
 WORDS = [
@@ -33,7 +32,7 @@ def _page_for(word, rotate=False):
 class TestDetect:
     def test_boxes_cover_gt(self):
         page, gt = render_page([("hello", 20, 20), ("world", 64, 20)], 128, 256)
-        boxes = detect_boxes(page)
+        boxes = detect_quads(page)
         assert len(boxes) == 2
         for box, rec in zip(boxes, gt):
             (gx0, gy0) = rec["points"][0]
@@ -46,7 +45,7 @@ class TestDetect:
 
     def test_blank_page_no_boxes(self):
         page = np.full((64, 64), 255, dtype=np.uint8)
-        assert detect_boxes(page) == []
+        assert detect_quads(page) == []
 
     def test_prob_map_contract(self):
         page, _ = _page_for("abc")
@@ -84,7 +83,7 @@ class TestRecognize:
 
     def test_logits_contract(self):
         page, _ = _page_for("ab")
-        crop = crop_box(page, detect_boxes(page)[0])
+        crop = crop_box(page, detect_quads(page)[0])
         logits = rec_logits(rec_resize_norm(crop))
         assert logits.ndim == 2 and logits.shape[1] == len(CHARSET) + 1
         assert logits.dtype == np.float32
@@ -93,7 +92,7 @@ class TestRecognize:
 class TestCls:
     def test_upright_label_0(self):
         page, _ = _page_for("reading")
-        crop = crop_box(page, detect_boxes(page)[0])
+        crop = crop_box(page, detect_quads(page)[0])
         probs = cls_probs(crop)
         assert probs.argmax() == 0 and probs[0] > 0.9
 

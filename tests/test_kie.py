@@ -114,36 +114,6 @@ def test_re_link_metric_bounded_and_consistent(spark):
     assert row.hmean_bp == 20000 * row.tp // (2 * row.tp + row.fp + row.fn)
 
 
-def test_ser_decode_xfund(spark, tmp_path):
-    data = {
-        "documents": [
-            {
-                "id": "d1",
-                "img": {"fname": "d1.png", "width": 100, "height": 100},
-                "document": [
-                    {"id": 0, "label": "question",
-                     "text": "name of the first applicant here",
-                     "box": [1, 2, 30, 12], "linking": [[0, 1]]},
-                    {"id": 1, "label": "answer",
-                     "text": "smith john middle extra tokens",
-                     "box": [35, 2, 70, 12], "linking": [[0, 1]]},
-                    {"id": 2, "label": "header",
-                     "text": "application form page one",
-                     "box": [0, 0, 99, 8], "linking": []},
-                ],
-            }
-        ]
-    }
-    p = tmp_path / "xfund.json"
-    p.write_text(json.dumps(data))
-    rows = ops.ser_decode_xfund(spark, str(p)).orderBy("entity_id").collect()
-    assert [r.entity_id for r in rows] == [0, 1, 2]
-    # mostly-correct deterministic classifier: majority vote recovers the
-    # gt label for every entity on this fixture
-    assert [r.pred_label for r in rows] == ["QUESTION", "ANSWER", "HEADER"]
-    assert [r.pred_id for r in rows] == [1, 3, 5]
-
-
 def test_xfund_entities_file_decode_roundtrip(spark):
     """The XFUND driver query (round 5): render-from-documents -> wholetext
     JSON decode -> double explode must reproduce the segment table's

@@ -1,15 +1,10 @@
-"""Multimodal operators: real image meta/resize; stubbed (deterministic
-fake) audio/video with real Spark plumbing."""
+"""Multimodal operators: image metadata from the PNG codec and dHash
+perceptual near-dup."""
 
 import pandas as pd
 import pytest
 
-from mindocr_spark.operators.multimodal import (
-    audio_features,
-    image_meta,
-    image_resize,
-    video_frame_sample,
-)
+from mindocr_spark.operators.multimodal import image_meta
 
 
 @pytest.fixture(scope="module")
@@ -42,46 +37,6 @@ def test_image_meta_junk(spark):
     )
     r = image_meta(df).collect()[0]
     assert r["ok"] is False and r["width"] is None
-
-
-def test_image_resize(spark, media_df):
-    from mindocr_spark.functions.png_codec import decode_png
-
-    rows = image_resize(media_df, 32, 48).collect()
-    assert len(rows) == 6
-    for r in rows:
-        img = decode_png(bytes(r["image"]))
-        assert img.shape == (32, 48)
-
-
-def test_audio_features_fake_deterministic(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_ref": ["a", "b"], "audio": [b"\x01" * 32000, b"\x02" * 16000]})
-    )
-    rows1 = {r["media_ref"]: r for r in audio_features(df).collect()}
-    rows2 = {r["media_ref"]: r for r in audio_features(df).collect()}
-    assert rows1["a"]["features"] == rows2["a"]["features"]  # deterministic
-    assert rows1["a"]["n_windows"] == len(rows1["a"]["features"])
-    assert rows1["a"]["duration_s"] > 0
-
-
-def test_audio_strict_raises(spark):
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_ref": ["a"], "audio": [b"xx"]})
-    )
-    with pytest.raises(Exception, match="NotImplementedError|codec"):
-        audio_features(df, strict=True).collect()
-
-
-def test_video_frame_sample(spark):
-    from mindocr_spark.functions.png_codec import decode_png
-
-    df = spark.createDataFrame(
-        pd.DataFrame({"media_ref": ["v"], "video": [b"\x00" * 50000]})
-    )
-    rows = video_frame_sample(df, every_n=10).collect()
-    assert [r["frame_idx"] for r in rows] == list(range(0, 50, 10))
-    assert decode_png(bytes(rows[0]["frame"])).shape == (16, 16)
 
 
 # --- Perceptual image dedup (round 5) ----------------------------------------

@@ -124,11 +124,11 @@ def test_end_to_end_all_heads_agree_on_clean_crop():
     from mindocr_spark.kernels.system import (
         classify_and_recognize,
         crop_box,
-        detect_boxes,
+        detect_quads,
     )
 
     page, _ = render_page([("spark", 16, 16)], 64, 224)
-    (poly,) = detect_boxes(page)
+    (poly,) = detect_quads(page)
     crop = crop_box(page, poly)
     got = {
         d: classify_and_recognize(crop, decoder=d)
@@ -152,10 +152,10 @@ def test_blank_crop_decodes_empty_with_zero_conf(decoder, use_cls):
 def test_framing_contracts():
     from mindocr_spark.kernels.rec import analyze_crop, head_logits, rec_resize_norm
     from mindocr_spark.functions.glyphs import render_page
-    from mindocr_spark.kernels.system import crop_box, detect_boxes
+    from mindocr_spark.kernels.system import crop_box, detect_quads
 
     page, _ = render_page([("ab", 16, 16)], 64, 128)
-    (poly,) = detect_boxes(page)
+    (poly,) = detect_quads(page)
     analysis = analyze_crop(rec_resize_norm(crop_box(page, poly)))
     m = head_logits(analysis, "master")
     s = head_logits(analysis, "sar")

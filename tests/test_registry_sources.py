@@ -21,6 +21,8 @@ def test_registry_lists_builtins():
 def test_unknown_stage_raises():
     with pytest.raises(KeyError):
         build_pipeline([{"name": "nope"}])
+    with pytest.raises(KeyError, match="unknown decoder"):
+        build_pipeline([{"name": "recognize", "decoder": "foo"}])
     # an unknown parameter fails while the pipeline is built, on the driver
     with pytest.raises(TypeError):
         build_pipeline([{"name": "det_crops", "bogus": 1}])

@@ -25,8 +25,8 @@ from mindocr_spark.functions.imaging import (
 from mindocr_spark.kernels.system import (
     classify_and_recognize,
     crop_box,
-    detect_boxes,
     detect_polys,
+    detect_quads,
     layout_region_text,
 )
 
@@ -70,7 +70,7 @@ class TestAttnDecode:
 
     def test_end_to_end_attn_equals_ctc_on_clean_crop(self):
         page, _ = render_page([("spark", 16, 16)], 64, 224)
-        (poly,) = detect_boxes(page)
+        (poly,) = detect_quads(page)
         crop = crop_box(page, poly)
         t_ctc, _ = classify_and_recognize(crop, decoder="ctc")
         t_attn, c_attn = classify_and_recognize(crop, decoder="attn")
@@ -81,7 +81,7 @@ class TestAttnDecode:
         from mindocr_spark.kernels.rec import analyze_crop, head_logits, rec_resize_norm
 
         page, _ = render_page([("ab", 16, 16)], 64, 128)
-        (poly,) = detect_boxes(page)
+        (poly,) = detect_quads(page)
         crop = rec_resize_norm(crop_box(page, poly))
         logits = head_logits(analyze_crop(crop), "attn")
         assert logits.shape[1] == ATTN_NUM_CLASSES
@@ -92,7 +92,7 @@ class TestPolyOutput:
     def test_poly_covers_ink_axis_aligned(self):
         page, _ = render_page([("hello", 16, 16), ("spark", 80, 16)], 128, 224)
         polys, scores = detect_polys(page)
-        quads = detect_boxes(page)
+        quads = detect_quads(page)
         assert len(polys) == len(quads) == 2
         for p, s in zip(polys, scores):
             assert len(p) >= 4

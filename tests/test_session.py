@@ -22,6 +22,29 @@ def test_local_master_choice(monkeypatch):
     assert _local_master() is None  # left to the launcher
 
 
+def test_import_pins_blas_threads_before_numpy():
+    """``import mindocr_spark`` sets one BLAS thread before anything loads
+    numpy (OpenBLAS reads the variables once, at load) and keeps a value
+    the caller already set."""
+    blas = ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS", "NUMEXPR_NUM_THREADS")
+    env = {k: v for k, v in os.environ.items() if k not in blas}
+    env["PYTHONPATH"] = ROOT
+    probe = (
+        "import os, sys, mindocr_spark\n"
+        "print('numpy' in sys.modules, os.environ['OPENBLAS_NUM_THREADS'],"
+        " os.environ['OMP_NUM_THREADS'])\n"
+    )
+
+    def run(extra):
+        return subprocess.run(
+            [sys.executable, "-c", probe], env={**env, **extra},
+            capture_output=True, text=True, timeout=120, check=True,
+        ).stdout.split()
+
+    assert run({}) == ["False", "1", "1"]
+    assert run({"OMP_NUM_THREADS": "3"}) == ["False", "1", "3"]
+
+
 def test_spark_submit_master_and_engine_conf_apply(tmp_path):
     """Under spark-submit, ``get_spark`` keeps ``--master`` and still sets
     the engine's own session conf (daemon shim, UDS worker sockets)."""
