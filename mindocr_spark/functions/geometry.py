@@ -9,7 +9,10 @@ Replaces the reference's cv2/shapely/pyclipper geometry:
   (``mindocr/data/transforms/det_transforms.py:553-556``), exact for convex
   polygons (our rects always are).
 - ``poly_iou`` ~ shapely intersection/union used by DetMetric
-  (``mindocr/metrics/det_metrics.py:14-19``) via Sutherland–Hodgman clipping.
+  (``mindocr/metrics/det_metrics.py:14-19``) via Sutherland–Hodgman clipping;
+  the one polygon IoU (DetMetric matching and LANMS's ``nms.box_iou`` call it).
+- ``aabb_iou`` is the one axis-aligned IoU, an (N, M) matrix (the table
+  matcher's IoU rule and the layout NMS).
 - ``rescale_polys`` ~ ``det_base_postprocess.py:110-125``.
 """
 
@@ -302,6 +305,20 @@ def poly_iou(p1: np.ndarray, p2: np.ndarray) -> float:
     a2, _ = poly_area_perimeter(np.asarray(p2, dtype=np.float64))
     union = a1 + a2 - inter
     return inter / union if union > 1e-12 else 0.0
+
+
+def aabb_iou(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(N, M) IoU matrix of axis-aligned ``[x0, y0, x1, y1]`` boxes; 0 where
+    the union is empty."""
+    x0 = np.maximum(a[:, None, 0], b[None, :, 0])
+    y0 = np.maximum(a[:, None, 1], b[None, :, 1])
+    x1 = np.minimum(a[:, None, 2], b[None, :, 2])
+    y1 = np.minimum(a[:, None, 3], b[None, :, 3])
+    inter = np.clip(x1 - x0, 0, None) * np.clip(y1 - y0, 0, None)
+    area_a = (a[:, 2] - a[:, 0]) * (a[:, 3] - a[:, 1])
+    area_b = (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])
+    union = area_a[:, None] + area_b[None, :] - inter
+    return np.divide(inter, union, out=np.zeros(inter.shape), where=union > 0)
 
 
 def arc_length(points: np.ndarray, closed: bool = True) -> float:

@@ -7,6 +7,9 @@ and the Spark UDFs share identical code paths:
   (``mindocr/data/transforms/det_transforms.py:375-550``,
   ``rec_transforms.py:548-636``).
 - ``box_filter`` ~ the smoothing implicit in a conv-net probability head.
+- ``runs`` / ``label_runs`` are the one run scanner and the one row-run
+  union-find: ``connected_components`` (8-connected, DB) and
+  ``pse._components4`` (4-connected, PSE) are both built on ``label_runs``.
 - ``connected_components`` ~ ``cv2.findContours`` component discovery
   (``mindocr/postprocess/det_db_postprocess.py:90``).
 - ``warp_perspective_crop`` ~ ``crop_text_region``'s
@@ -70,14 +73,36 @@ def box_filter(img: np.ndarray, k: int) -> np.ndarray:
     return (s / (k2 * k2)).astype(np.float32)
 
 
-def connected_components(mask: np.ndarray) -> list[np.ndarray]:
-    """8-connected components of a boolean mask via row-run union-find.
+def runs(mask: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Maximal True runs of a 1-D mask -> (starts, exclusive ends)."""
+    padded = np.zeros(len(mask) + 2, dtype=np.int8)
+    padded[1:-1] = mask
+    # the zero ends make edges alternate: start, end, start, end, ...
+    edges = np.flatnonzero(padded[1:] != padded[:-1])
+    return edges[0::2], edges[1::2]
 
-    Returns a list of (n_i, 2) int arrays of (y, x) pixel coordinates, ordered
-    by component top-left (deterministic). Pure numpy + O(#runs) python.
+
+def label_runs(
+    mask: np.ndarray, diagonal: bool = True
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Row-run union-find over a 2-D mask -> (run_y, run_x0, run_x1, root).
+
+    Runs are in raster order, ``run_x1`` exclusive. Runs on adjacent rows
+    meet when ``x0 < px1 + e and px0 < x1 + e`` with ``e = 1`` for
+    8-connectivity (``diagonal``) and ``0`` for 4-connectivity. A union
+    keeps the smaller root, so a root is its component's first run in
+    raster order. Pure numpy + O(#runs) python.
     """
     h, w = mask.shape
-    parent: list[int] = []
+    # one zero column per row keeps runs from wrapping onto the next row
+    flat = np.zeros((h, w + 1), dtype=bool)
+    flat[:, :w] = mask
+    starts, ends = runs(flat.ravel())
+    run_y = starts // (w + 1)
+    run_x0 = starts - run_y * (w + 1)
+    run_x1 = ends - run_y * (w + 1)
+    e = 1 if diagonal else 0
+    parent = list(range(len(starts)))
 
     def find(i: int) -> int:
         while parent[i] != i:
@@ -85,61 +110,56 @@ def connected_components(mask: np.ndarray) -> list[np.ndarray]:
             i = parent[i]
         return i
 
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    # extract all runs in one vectorized pass over the zero-padded raster
-    padded = np.zeros((h, w + 2), dtype=np.int8)
-    padded[:, 1:-1] = mask
-    d = np.diff(padded.ravel())
-    starts = np.nonzero(d == 1)[0] + 1
-    ends = np.nonzero(d == -1)[0] + 1  # exclusive; same row (padding splits)
-    stride = w + 2
-    run_y = starts // stride
-    run_x0 = starts % stride - 1
-    run_x1 = ends % stride - 1  # exclusive
-
-    runs: list[tuple[int, int, int, int]] = []  # (y, x0, x1_exclusive, label)
     prev_runs: list[tuple[int, int, int]] = []  # runs of row y-1
     cur_runs: list[tuple[int, int, int]] = []  # runs of current row
     cur_y = -2
-    for y, x0, x1 in zip(run_y.tolist(), run_x0.tolist(), run_x1.tolist()):
+    for i, (y, x0, x1) in enumerate(
+        zip(run_y.tolist(), run_x0.tolist(), run_x1.tolist())
+    ):
         if y != cur_y:
             prev_runs = cur_runs if y == cur_y + 1 else []
             cur_runs = []
             cur_y = y
-        lbl = len(parent)
-        parent.append(lbl)
-        # 8-connectivity: [x0,x1) touches [px0,px1) iff x0 <= px1 and px0 <= x1
-        for px0, px1, plbl in prev_runs:
-            if x0 <= px1 and px0 <= x1:
-                union(lbl, plbl)
-        runs.append((y, x0, x1, lbl))
-        cur_runs.append((x0, x1, lbl))
-    if not runs:
-        return []
-    # vectorized point assembly: emit every run's pixels in one arange pass
-    # (per-run np.stack/np.full dominated this function's profile), grouped
-    # by root via a stable sort that preserves raster run order per group
-    run_arr = np.array(runs, dtype=np.int64)  # (R, 4): y, x0, x1, lbl
-    roots = np.array([find(int(lbl)) for lbl in run_arr[:, 3]], dtype=np.int64)
-    order = np.argsort(roots, kind="stable")
-    run_arr = run_arr[order]
-    roots = roots[order]
-    lens = run_arr[:, 2] - run_arr[:, 1]
-    total = int(lens.sum())
-    ys_all = np.repeat(run_arr[:, 0], lens)
-    ends = np.cumsum(lens)
-    starts_off = ends - lens
-    xs_all = np.arange(total, dtype=np.int64) + np.repeat(
-        run_arr[:, 1] - starts_off, lens
+        for px0, px1, j in prev_runs:
+            if x0 < px1 + e and px0 < x1 + e:
+                ri, rj = find(i), find(j)
+                if ri != rj:
+                    parent[max(ri, rj)] = min(ri, rj)
+        cur_runs.append((x0, x1, i))
+    root = np.array([find(i) for i in range(len(parent))], dtype=np.int64)
+    return run_y, run_x0, run_x1, root
+
+
+def run_pixels(
+    run_y: np.ndarray, run_x0: np.ndarray, run_x1: np.ndarray
+) -> tuple[np.ndarray, np.ndarray]:
+    """Every pixel of the given runs, in run order -> (ys, xs), emitted in
+    one arange pass (per-run np.stack/np.full dominated the profile)."""
+    lens = run_x1 - run_x0
+    offsets = np.cumsum(lens) - lens
+    xs = np.arange(int(lens.sum()), dtype=np.int64) + np.repeat(
+        run_x0 - offsets, lens
     )
-    pts_all = np.stack([ys_all, xs_all], axis=1)
-    # split at root boundaries (runs are root-sorted)
-    cut = np.nonzero(np.diff(roots))[0] + 1
-    comps = np.split(pts_all, ends[cut - 1]) if len(cut) else [pts_all]
+    return np.repeat(run_y, lens), xs
+
+
+def connected_components(mask: np.ndarray) -> list[np.ndarray]:
+    """8-connected components of a boolean mask (:func:`label_runs`).
+
+    Returns a list of (n_i, 2) int arrays of (y, x) pixel coordinates, ordered
+    by component top-left (deterministic).
+    """
+    run_y, run_x0, run_x1, roots = label_runs(mask)
+    if not len(roots):
+        return []
+    # group runs by root with a stable sort that keeps raster run order
+    order = np.argsort(roots, kind="stable")
+    run_y, run_x0, run_x1 = run_y[order], run_x0[order], run_x1[order]
+    roots = roots[order]
+    pts_all = np.stack(run_pixels(run_y, run_x0, run_x1), axis=1)
+    # split where the root changes (each later root's first run)
+    first = np.nonzero(np.diff(roots))[0] + 1
+    comps = np.split(pts_all, np.cumsum(run_x1 - run_x0)[first - 1])
     comps.sort(key=lambda p: (int(p[:, 0].min()), int(p[:, 1].min())))
     return comps
 

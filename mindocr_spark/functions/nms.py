@@ -13,7 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from .geometry import poly_area_perimeter, poly_intersection_area
+from .geometry import poly_area_perimeter, poly_iou
 
 
 def _quad_valid(q: np.ndarray) -> bool:
@@ -27,11 +27,7 @@ def box_iou(box1: np.ndarray, box2: np.ndarray) -> float:
     q2 = np.asarray(box2[:8], dtype=np.float64).reshape(4, 2)
     if not (_quad_valid(q1) and _quad_valid(q2)):
         return 0.0
-    inter = poly_intersection_area(q1, q2)
-    a1, _ = poly_area_perimeter(q1)
-    a2, _ = poly_area_perimeter(q2)
-    union = a1 + a2 - inter
-    return inter / union if union > 0 else 0.0
+    return poly_iou(q1, q2)
 
 
 def weighted_merge(box1: np.ndarray, box2: np.ndarray) -> np.ndarray:

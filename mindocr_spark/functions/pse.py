@@ -2,7 +2,8 @@
 
 Semantics follow the reference's Cython kernel
 (``mindocr/postprocess/pse/pse.pyx``): seed labels are the 4-connected
-components of the SMALLEST kernel (last channel); labels below ``min_area``
+components of the SMALLEST kernel (last channel, labeled by the shared
+row-run union-find ``imaging.label_runs``); labels below ``min_area``
 are dropped; a BFS queue then grows labels outward one kernel at a time
 (second-smallest ... largest/text mask), 4-neighborhood,
 first-come-first-served — ties go to whichever label reaches a pixel first
@@ -15,54 +16,19 @@ from collections import deque
 
 import numpy as np
 
+from .imaging import label_runs, run_pixels
+
 
 def _components4(mask: np.ndarray) -> np.ndarray:
-    """4-connected labeling via row runs + union-find (strict overlap)."""
-    h, w = mask.shape
-    label = np.zeros((h, w), dtype=np.int32)
-    nxt = 1
-    # simple two-pass union-find on runs with STRICT overlap (4-conn)
-    parent: list[int] = [0]
-
-    def find(i: int) -> int:
-        while parent[i] != i:
-            parent[i] = parent[parent[i]]
-            i = parent[i]
-        return i
-
-    def union(a: int, b: int) -> None:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-
-    prev: list[tuple[int, int, int]] = []
-    runs: list[tuple[int, int, int, int]] = []
-    for y in range(h):
-        row = mask[y]
-        if not row.any():
-            prev = []
-            continue
-        padded = np.concatenate(([False], row.astype(bool), [False]))
-        d = np.diff(padded.astype(np.int8))
-        starts = np.nonzero(d == 1)[0]
-        ends = np.nonzero(d == -1)[0]
-        cur: list[tuple[int, int, int]] = []
-        for x0, x1 in zip(starts.tolist(), ends.tolist()):
-            lbl = nxt
-            parent.append(lbl)
-            nxt += 1
-            for px0, px1, plbl in prev:
-                if x0 < px1 and px0 < x1:  # strict overlap: 4-connectivity
-                    union(lbl, plbl)
-            runs.append((y, x0, x1, lbl))
-            cur.append((x0, x1, lbl))
-        prev = cur
-    remap: dict[int, int] = {}
-    for y, x0, x1, lbl in runs:
-        root = find(lbl)
-        if root not in remap:
-            remap[root] = len(remap) + 1
-        label[y, x0:x1] = remap[root]
+    """4-connected label map (:func:`label_runs` without diagonals), labels
+    1.. numbered in raster order of each component's first pixel."""
+    run_y, run_x0, run_x1, root = label_runs(mask, diagonal=False)
+    label = np.zeros(mask.shape, dtype=np.int32)
+    # a root is its component's first run, so ranking roots numbers the
+    # components in raster order
+    rank = np.unique(root, return_inverse=True)[1] + 1
+    ys, xs = run_pixels(run_y, run_x0, run_x1)
+    label[ys, xs] = np.repeat(rank, run_x1 - run_x0)
     return label
 
 
@@ -72,10 +38,7 @@ def pse_expand(kernels: np.ndarray, min_area: int = 0) -> np.ndarray:
     c, h, w = kernels.shape
     label = _components4(kernels[-1] > 0)
     if min_area > 0:
-        counts = np.bincount(label.ravel())
-        for idx in range(1, len(counts)):
-            if counts[idx] < min_area:
-                label[label == idx] = 0
+        label[np.bincount(label.ravel())[label] < min_area] = 0
     pred = label.copy()
     ys, xs = np.nonzero(label > 0)
     que: deque[tuple[int, int]] = deque(zip(ys.tolist(), xs.tolist()))

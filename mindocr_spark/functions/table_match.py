@@ -11,23 +11,13 @@ from __future__ import annotations
 
 import numpy as np
 
+from .geometry import aabb_iou
+
 
 def _centers(boxes: np.ndarray) -> np.ndarray:
     return np.stack(
         [(boxes[:, 0] + boxes[:, 2]) / 2, (boxes[:, 1] + boxes[:, 3]) / 2], axis=1
     )
-
-
-def _iou_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    x0 = np.maximum(a[:, None, 0], b[None, :, 0])
-    y0 = np.maximum(a[:, None, 1], b[None, :, 1])
-    x1 = np.minimum(a[:, None, 2], b[None, :, 2])
-    y1 = np.minimum(a[:, None, 3], b[None, :, 3])
-    inter = np.clip(x1 - x0, 0, None) * np.clip(y1 - y0, 0, None)
-    area_a = (a[:, 2] - a[:, 0]) * (a[:, 3] - a[:, 1])
-    area_b = (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])
-    union = area_a[:, None] + area_b[None, :] - inter
-    return np.where(union > 0, inter / union, 0.0)
 
 
 def match_boxes_to_cells(
@@ -41,7 +31,7 @@ def match_boxes_to_cells(
     cell_boxes = np.asarray(cell_boxes, dtype=np.float64).reshape(-1, 4)
     tc = _centers(text_boxes)
     cc = _centers(cell_boxes)
-    iou = _iou_matrix(text_boxes, cell_boxes)
+    iou = aabb_iou(text_boxes, cell_boxes)
     out: list[tuple[int, str]] = []
     for i, (cx, cy) in enumerate(tc):
         inside = np.nonzero(

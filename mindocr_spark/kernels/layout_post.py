@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..functions.geometry import aabb_iou
+
 PUBLAYNET_CLASS_IDS = (2, 1, 5, 4, 3)
 
 
@@ -36,19 +38,6 @@ def xyxy2xywh(x: np.ndarray) -> np.ndarray:
     return y
 
 
-def _aabb_iou(box: np.ndarray, others: np.ndarray) -> np.ndarray:
-    """IoU of one xyxy box vs (M,4) others, vectorized."""
-    x0 = np.maximum(box[0], others[:, 0])
-    y0 = np.maximum(box[1], others[:, 1])
-    x1 = np.minimum(box[2], others[:, 2])
-    y1 = np.minimum(box[3], others[:, 3])
-    inter = np.clip(x1 - x0, 0, None) * np.clip(y1 - y0, 0, None)
-    a = (box[2] - box[0]) * (box[3] - box[1])
-    b = (others[:, 2] - others[:, 0]) * (others[:, 3] - others[:, 1])
-    union = a + b - inter
-    return np.where(union > 0, inter / union, 0.0)
-
-
 def nms_boxes(boxes_xyxy: np.ndarray, scores: np.ndarray, iou_thres: float) -> list[int]:
     """Greedy score-descending NMS on axis-aligned boxes; returns kept idx."""
     order = np.argsort(-scores, kind="stable")
@@ -58,16 +47,11 @@ def nms_boxes(boxes_xyxy: np.ndarray, scores: np.ndarray, iou_thres: float) -> l
         if not alive[pos]:
             continue
         kept.append(int(idx))
-        rest = order[pos + 1 :][alive[pos + 1 :]]
+        rest = pos + 1 + np.nonzero(alive[pos + 1 :])[0]
         if len(rest) == 0:
             break
-        ious = _aabb_iou(boxes_xyxy[idx], boxes_xyxy[rest])
-        dead = rest[ious > iou_thres]
-        if len(dead):
-            dead_set = set(dead.tolist())
-            for p2 in range(pos + 1, len(order)):
-                if alive[p2] and int(order[p2]) in dead_set:
-                    alive[p2] = False
+        ious = aabb_iou(boxes_xyxy[idx][None], boxes_xyxy[order[rest]])[0]
+        alive[rest[ious > iou_thres]] = False
     return kept
 
 

@@ -27,7 +27,7 @@ from ..config import CHARSET, REC_MAX_WH_RATIO, REC_TARGET_HEIGHT, REC_VOCABS
 from ..functions.attn import attn_greedy_decode
 from ..functions.ctc import ctc_greedy_decode
 from ..functions.glyphs import GLYPH_H, GLYPH_W, templates
-from ..functions.imaging import resize_bilinear
+from ..functions.imaging import resize_bilinear, runs
 from ..functions.rec_decoders import master_decode, sar_decode
 
 _INK_THRESH = 128.0
@@ -87,15 +87,8 @@ def area_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 def _segment_glyphs(ink: np.ndarray) -> list[tuple[int, int, int, int]]:
     """Binary ink mask -> list of glyph boxes (y0, y1, x0, x1) from column
     runs; each run's row extent is its own ink bounding rows."""
-    cols = ink.any(axis=0)
-    if not cols.any():
-        return []
-    padded = np.concatenate(([False], cols, [False]))
-    d = np.diff(padded.astype(np.int8))
-    starts = np.nonzero(d == 1)[0]
-    ends = np.nonzero(d == -1)[0]
     boxes = []
-    for x0, x1 in zip(starts, ends):
+    for x0, x1 in zip(*runs(ink.any(axis=0))):
         rows = np.nonzero(ink[:, x0:x1].any(axis=1))[0]
         boxes.append((int(rows[0]), int(rows[-1]) + 1, int(x0), int(x1)))
     return boxes

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..functions.imaging import runs
 from ..functions.table_match import cells_to_text, match_boxes_to_cells
 from .system import ocr_image
 
@@ -27,20 +28,8 @@ def detect_grid(img: np.ndarray) -> tuple[list[int], list[int]]:
     row_cov = ink.sum(axis=1) / max(w, 1)
 
     def centers(cov: np.ndarray) -> list[int]:
-        mask = cov >= _LINE_COVERAGE
-        out = []
-        i = 0
-        n = len(mask)
-        while i < n:
-            if mask[i]:
-                j = i
-                while j < n and mask[j]:
-                    j += 1
-                out.append((i + j - 1) // 2)
-                i = j
-            else:
-                i += 1
-        return out
+        starts, ends = runs(cov >= _LINE_COVERAGE)
+        return ((starts + ends - 1) // 2).tolist()
 
     h_lines = centers(row_cov)
     if len(h_lines) < 2:

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .config import CHARSET
-from .functions.geometry import poly_area_perimeter, poly_intersection_area
+from .functions.geometry import poly_area_perimeter, poly_intersection_area, poly_iou
 
 MIN_IOU = 0.5
 MIN_INTERSECT = 0.5
@@ -57,14 +57,6 @@ def quad_is_valid(poly: np.ndarray) -> bool:
     if area <= 0:
         return False
     return not _segments_cross(np.asarray(poly, dtype=np.float64))
-
-
-def _iou(a: np.ndarray, b: np.ndarray) -> float:
-    inter = poly_intersection_area(a, b)
-    aa, _ = poly_area_perimeter(a)
-    ab, _ = poly_area_perimeter(b)
-    union = aa + ab - inter
-    return inter / union if union > 1e-12 else 0.0
 
 
 def match_image_labels(
@@ -101,7 +93,7 @@ def match_image_labels(
         if matched_det[di]:
             continue
         for gi, g in enumerate(gts):
-            if _iou(d, g) > MIN_IOU:
+            if poly_iou(d, g) > MIN_IOU:
                 matched_det[di] = True
                 det_labels[gi] = 1
                 break

@@ -24,6 +24,33 @@ def test_nms_suppresses_overlaps():
     scores = np.array([0.9, 0.8, 0.7])
     kept = nms_boxes(boxes, scores, iou_thres=0.5)
     assert kept == [0, 2]
+    rng = np.random.RandomState(0)
+    for _ in range(200):
+        n = rng.randint(0, 15)
+        xy = rng.randint(0, 40, size=(n, 2))
+        boxes = np.concatenate([xy, xy + rng.randint(0, 20, size=(n, 2))], axis=1)
+        boxes = boxes.astype(float)
+        scores = rng.randint(0, 6, size=n) / 5.0  # ties keep input order
+        for thr in (0.0, 0.3, 0.65):
+            assert nms_boxes(boxes, scores, thr) == _greedy_nms(boxes, scores, thr)
+
+
+def _greedy_nms(boxes, scores, thr):
+    """Reference: in descending score order, keep a box unless a kept box
+    overlaps it by IoU > thr."""
+
+    def iou(a, b):
+        iw = max(0.0, min(a[2], b[2]) - max(a[0], b[0]))
+        ih = max(0.0, min(a[3], b[3]) - max(a[1], b[1]))
+        inter = iw * ih
+        union = (a[2] - a[0]) * (a[3] - a[1]) + (b[2] - b[0]) * (b[3] - b[1]) - inter
+        return inter / union if union > 0 else 0.0
+
+    kept = []
+    for i in sorted(range(len(scores)), key=lambda i: -scores[i]):
+        if all(iou(boxes[i], boxes[k]) <= thr for k in kept):
+            kept.append(i)
+    return kept
 
 
 def test_scale_coords_letterbox_undo():

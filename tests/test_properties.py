@@ -1,6 +1,9 @@
 """Property-based tests (hypothesis) over the kernel library — a layer the
 reference lacks (SURVEY.md §5: no randomized testing there)."""
 
+import warnings
+from collections import deque
+
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -8,6 +11,7 @@ from hypothesis import strategies as st
 from mindocr_spark.config import BLANK_IDX, CHARSET, NUM_CLASSES
 from mindocr_spark.functions.ctc import ctc_greedy_decode
 from mindocr_spark.functions.geometry import (
+    aabb_iou,
     convex_hull,
     min_area_rect,
     offset_convex_poly,
@@ -17,6 +21,7 @@ from mindocr_spark.functions.geometry import (
 from mindocr_spark.functions.html_text import extract_main_text
 from mindocr_spark.functions.imaging import connected_components
 from mindocr_spark.functions.png_codec import decode_png, encode_png
+from mindocr_spark.functions.pse import _components4
 
 points_strategy = st.lists(
     st.tuples(
@@ -71,6 +76,43 @@ def test_iou_symmetric_bounded(p1, p2):
     assert 0.0 <= i12 <= 1.0 + 1e-9
 
 
+box_strategy = st.tuples(
+    st.integers(min_value=0, max_value=50),
+    st.integers(min_value=0, max_value=50),
+    st.integers(min_value=0, max_value=30),
+    st.integers(min_value=0, max_value=30),
+)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(box_strategy, min_size=1, max_size=6),
+    st.lists(box_strategy, min_size=1, max_size=6),
+)
+def test_aabb_iou_equals_poly_iou(a, b):
+    def xyxy(boxes):
+        xywh = np.array(boxes, dtype=float)
+        return np.concatenate([xywh[:, :2], xywh[:, :2] + xywh[:, 2:]], axis=1)
+
+    def quad(x0, y0, x1, y1):
+        return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], dtype=float)
+
+    a, b = xyxy(a), xyxy(b)
+    got = aabb_iou(a, b)
+    assert got.shape == (len(a), len(b))
+    for i in range(len(a)):
+        for j in range(len(b)):
+            assert abs(got[i, j] - poly_iou(quad(*a[i]), quad(*b[j]))) <= 1e-12
+
+
+def test_aabb_iou_empty_union_is_zero():
+    points = np.array([[3.0, 3.0, 3.0, 3.0], [5.0, 1.0, 5.0, 1.0]])
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        got = aabb_iou(points, points)
+    assert np.array_equal(got, np.zeros((2, 2)))
+
+
 @settings(max_examples=60, deadline=None)
 @given(
     st.lists(st.integers(min_value=0, max_value=NUM_CLASSES - 1), max_size=30)
@@ -120,6 +162,57 @@ def test_components_partition_mask(seed):
             assert mask[y, x]
             assert (y, x) not in seen
             seen.add((y, x))
+
+
+def _flood_fill(mask: np.ndarray, diagonal: bool) -> list[list[tuple[int, int]]]:
+    """Reference labeler: BFS from each unvisited pixel in raster order, so
+    components come in raster order of their first pixel."""
+    h, w = mask.shape
+    steps = [(-1, 0), (1, 0), (0, -1), (0, 1)]
+    if diagonal:
+        steps += [(-1, -1), (-1, 1), (1, -1), (1, 1)]
+    seen = np.zeros((h, w), dtype=bool)
+    comps = []
+    for y in range(h):
+        for x in range(w):
+            if not mask[y, x] or seen[y, x]:
+                continue
+            seen[y, x] = True
+            queue, comp = deque([(y, x)]), []
+            while queue:
+                cy, cx = queue.popleft()
+                comp.append((cy, cx))
+                for dy, dx in steps:
+                    ny, nx = cy + dy, cx + dx
+                    if 0 <= ny < h and 0 <= nx < w and mask[ny, nx] and not seen[ny, nx]:
+                        seen[ny, nx] = True
+                        queue.append((ny, nx))
+            comps.append(comp)
+    return comps
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=24),
+    st.integers(min_value=1, max_value=24),
+    st.floats(min_value=0.05, max_value=0.95),
+    st.integers(min_value=0, max_value=2**31 - 1),
+)
+def test_labelers_match_flood_fill(h, w, density, seed):
+    mask = np.random.RandomState(seed).rand(h, w) < density
+    # 8-connected: the same pixel sets, ordered by (min y, min x)
+    ref8 = sorted(
+        _flood_fill(mask, diagonal=True),
+        key=lambda c: (min(y for y, _ in c), min(x for _, x in c)),
+    )
+    got8 = connected_components(mask)
+    assert [set(map(tuple, c.tolist())) for c in got8] == [set(c) for c in ref8]
+    # 4-connected: the same label map, numbered in raster order
+    ref4 = np.zeros((h, w), dtype=np.int32)
+    for k, comp in enumerate(_flood_fill(mask, diagonal=False), start=1):
+        for y, x in comp:
+            ref4[y, x] = k
+    assert np.array_equal(_components4(mask), ref4)
 
 
 @settings(max_examples=40, deadline=None)
