@@ -467,7 +467,7 @@ def oracle_sql() -> dict[str, str]:
         "simhash_near_dup_banded": dedup.SIMHASH_NEAR_DUP_BANDED_SQL,
         "simhash_near_dup_manku": dedup.SIMHASH_NEAR_DUP_MANKU_SQL,
         "ngram_jaccard_filtered": dedup.NGRAM_JACCARD_FILTERED_SQL,
-        # iterative Hash-Min CC in Spark vs a recursive CTE in DuckDB —
+        # star-contraction CC in Spark vs a recursive CTE in DuckDB —
         # same fixpoint (min reachable doc_id per component)
         "near_dup_clusters": dedup.NEAR_DUP_CLUSTERS_SQL,
         "cosine_topk": similarity.COSINE_TOPK_SQL,

@@ -44,12 +44,17 @@ def pse_postprocess(
     kernels = (pred > binary_thresh).astype(np.uint8)
     kernels = (kernels * kernels[:1]).astype(np.uint8)  # mask by text channel
     label = pse_expand(kernels, min_area)
+    # the stable sort lists each label's pixels in raster order, as
+    # np.nonzero(label == idx) does, so every score mean sums in that order
+    flat = label.ravel()
+    order = np.argsort(flat, kind="stable")
+    ends = np.cumsum(np.bincount(flat))
     polys: list[np.ndarray] = []
     scores: list[float] = []
-    for idx in range(1, int(label.max()) + 1):
-        ys, xs = np.nonzero(label == idx)
-        if len(ys) < min_area:
+    for idx in range(1, len(ends)):
+        if ends[idx] - ends[idx - 1] < min_area:
             continue
+        ys, xs = np.divmod(order[ends[idx - 1]:ends[idx]], label.shape[1])
         s = float(score[ys, xs].mean())
         if s < box_thresh:
             continue

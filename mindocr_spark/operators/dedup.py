@@ -14,7 +14,7 @@ broadcast nothing.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import persist_intermediate, spread
@@ -119,17 +119,22 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
-def _shingles(docs: DataFrame) -> DataFrame:
-    """(doc_id, shingle): distinct word n-grams, n=3.
+def word_ngrams(n: int) -> Column:
+    """The word n-grams of the projected ``toks`` column, in order; a doc
+    shorter than n tokens yields its single truncated gram.
 
     Tokenize ONCE into a projected column: referencing ``split(text,' ')``
     inside the transform lambda makes Catalyst re-split the text for every
     gram index — O(tokens^2) string work per document (measured 3x the
     whole-stage cost at sf0.1)."""
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(toks) - {SHINGLE_N - 1}, 1)), "
-        f"i -> concat_ws(' ', slice(toks, i, {SHINGLE_N})))"
+    return F.expr(
+        f"transform(sequence(1, greatest(size(toks) - {n - 1}, 1)), "
+        f"i -> concat_ws(' ', slice(toks, i, {n})))"
     )
+
+
+def _shingles(docs: DataFrame) -> DataFrame:
+    """(doc_id, shingle): distinct word n-grams, n=3."""
     # partition the COMPACT docs table by doc_id before the ~n_tokens-x
     # explode: HashPartitioning(doc_id) satisfies the distinct's
     # (doc_id, shingle) clustering AND every downstream per-doc grouping
@@ -139,7 +144,7 @@ def _shingles(docs: DataFrame) -> DataFrame:
     return (
         spread(docs, "doc_id")
         .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-        .select("doc_id", F.explode(grams).alias("shingle"))
+        .select("doc_id", F.explode(word_ngrams(SHINGLE_N)).alias("shingle"))
         .distinct()
     )
 
@@ -912,53 +917,26 @@ def _shingle_cap(n_docs: int) -> int:
     return max(MAX_SHINGLE_FREQ, (n_docs + 19) // 20)
 
 
-# Below this threshold (in percent) the prefix filter stops paying for
-# itself: the prefix keeps a (1 - t) fraction of every doc's shingles, so at
-# t=0.12 it drops only ~12% of join rows while adding a collect_list shuffle,
-# a distinct, and two array join-backs. Measured at sf0.1: direct 3.7 s vs
-# prefix 4.7 s at t=0.12; the inequality flips near t≈0.5 where the prefix
-# join shrinks superlinearly (candidate pairs scale with the square of the
-# kept fraction).
-PREFIX_FILTER_MIN_PCT = 50
-
-
 def ngram_jaccard_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard near-dup with hot-shingle removal — the production scale
     path: shingles occurring in more than _shingle_cap(N) docs are dropped
     BEFORE any join (they are stop-gram noise and the join-skew risk);
     pair Jaccard is computed over each doc's surviving shingle set.
 
-    Threshold-adaptive plan: at high thresholds the candidate
-    join runs over rare-first PREFIXES (SSJoin/All-Pairs prefix filtering)
-    with exact array verification; at low thresholds (incl. the registered
-    t=0.12) prefix filtering cannot drop enough rows to pay for its extra
-    shuffles, so pairs are counted DIRECTLY from the kept-shingle
-    self-join — one bounded join (per-key fan-out <= _shingle_cap) + a
-    map-side-combinable count, the same shape as the oracle SQL. Both
-    paths are lossless and compared against the oracle at sf0.001."""
-    return _jaccard_near_dup(_docs(spark, sf_dir))
-
-
-def _jaccard_near_dup(docs: DataFrame, t_pct: int = 12) -> DataFrame:
-    """Exact Jaccard >= t_pct/100 over hot-capped 3-gram shingle sets.
-    ceil(t*n) is computed as (t_pct*n + 99) div 100 — integer-exact in
-    both engines."""
+    Pairs are counted directly from the kept-shingle self-join: candidate
+    volume is sum_s df(s)^2 <= cap * |kept rows| (skew bounded by the hot
+    cap), then one map-side-combinable count per pair — the same shape as
+    the oracle SQL. The per-doc size join is a plain equi-join (AQE
+    broadcasts it at small N, shuffle-joins on doc id at cluster scale).
+    The threshold test is the oracle's integer predicate over
+    JACCARD_T_NUM / JACCARD_T_DEN."""
+    docs = _docs(spark, sf_dir)
     cap = _shingle_cap(docs.count())
     sh = persist_intermediate(_shingles(docs))  # feeds freq AND kept
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     # persisted: sizes + both self-join sides consume kept, and without
     # the cache each re-runs the freq groupBy shuffle
     kept = persist_intermediate(sh.join(freq.filter(F.col("df") <= cap), "shingle"))
-    if t_pct >= PREFIX_FILTER_MIN_PCT:
-        return _jaccard_prefix_verified(kept, t_pct)
-    return _jaccard_direct(kept, t_pct)
-
-
-def _jaccard_direct(kept: DataFrame, t_pct: int) -> DataFrame:
-    """Self-join on shingle + count per pair. Candidate volume is
-    sum_s df(s)^2 <= cap * |kept rows| (skew bounded by the hot cap); the
-    per-doc size join is a plain equi-join — AQE broadcasts it at small N
-    and shuffle-joins co-partitioned on doc id at cluster scale."""
     sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = kept.select("doc_id", "shingle").alias("a")
     b = kept.select("doc_id", "shingle").alias("b")
@@ -972,79 +950,13 @@ def _jaccard_direct(kept: DataFrame, t_pct: int) -> DataFrame:
     )
     na = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
     nb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
+    union = F.col("na") + F.col("nb") - F.col("inter")
     return (
         inter.join(na, "doc_a")
         .join(nb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4),
-        )
+        .withColumn("jaccard", F.round(F.col("inter") / union, 4))
         .filter(
-            F.lit(100) * F.col("inter")
-            >= F.lit(t_pct) * (F.col("na") + F.col("nb") - F.col("inter"))
-        )
-        .select("doc_a", "doc_b", "inter", "jaccard")
-    )
-
-
-def _jaccard_prefix_verified(kept: DataFrame, t_pct: int) -> DataFrame:
-    """PREFIX FILTERING (Chaudhuri/Ganti/Kaushik SSJoin, Bayardo et al.
-    "Scaling Up All Pairs"): under a global rare-first total order (df
-    asc, shingle asc), J(A,B) >= t implies the
-    length-(|X| - ceil(t*|X|) + 1) prefixes of A and B intersect — so the
-    candidate self-join runs only over per-doc prefixes, excluding
-    precisely each doc's hottest shingles (the ones that generate the most
-    pairs), and the exact Jaccard is then computed per candidate from the
-    full kept sets via array_intersect (no third shuffle over shingle
-    rows). Lossless by the prefix-filter theorem."""
-    grouped = (
-        kept.groupBy("doc_id")
-        .agg(F.sort_array(F.collect_list(F.struct("df", "shingle"))).alias("arr"))
-        .select(
-            "doc_id",
-            F.expr("transform(arr, x -> x.shingle)").alias("shingles"),
-            F.size("arr").alias("n"),
-        )
-    )
-    # feeds the prefix explode and both candidate join-backs
-    grouped = persist_intermediate(grouped)
-    prefix = grouped.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"slice(shingles, 1, n - cast(({t_pct} * n + 99) div 100 as int) + 1)"
-            )
-        ).alias("shingle"),
-    )
-    a = prefix.alias("a")
-    b = prefix.alias("b")
-    cand = (
-        a.join(b, "shingle")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    ga = grouped.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("shingles").alias("sa"),
-        F.col("n").alias("na"),
-    )
-    gb = grouped.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("shingles").alias("sb"),
-        F.col("n").alias("nb"),
-    )
-    return (
-        cand.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .withColumn("inter", F.size(F.array_intersect("sa", "sb")).cast("long"))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 4),
-        )
-        .filter(
-            F.lit(100) * F.col("inter")
-            >= F.lit(t_pct) * (F.col("na") + F.col("nb") - F.col("inter"))
+            F.lit(JACCARD_T_DEN) * F.col("inter") >= F.lit(JACCARD_T_NUM) * union
         )
         .select("doc_a", "doc_b", "inter", "jaccard")
     )
@@ -1071,9 +983,6 @@ JOIN sizes na ON na.doc_id = i.doc_a
 JOIN sizes nb ON nb.doc_id = i.doc_b
 WHERE {JACCARD_T_DEN} * i.inter >= {JACCARD_T_NUM} * (na.n + nb.n - i.inter)
 """
-
-
-MAX_CC_ITERS = 30
 
 
 def _large_star(e: DataFrame) -> DataFrame:
@@ -1123,62 +1032,18 @@ def _edge_fingerprint(e: DataFrame) -> tuple:
     return (row["c"], row["h"])
 
 
-def _cc_hash_min(docs: DataFrame, pairs: DataFrame, max_iters: int) -> DataFrame:
-    """Hash-Min label propagation — O(diameter) rounds. Kept as the
-    documented FALLBACK for :func:`near_dup_clusters` if star contraction
-    ever exceeds its round budget (it cannot on bounded-diameter duplicate
-    graphs, but the budget must fail safe, not fail the job)."""
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-        )
-    )
-    edges = persist_intermediate(edges)
-    labels = docs.select("doc_id", F.col("doc_id").alias("cluster_id"))
-    labels = labels.localCheckpoint()
-    for _ in range(max_iters):
-        nbr_min = (
-            edges.join(labels, edges.dst == labels.doc_id)
-            .groupBy("src")
-            .agg(F.min("cluster_id").alias("nbr_min"))
-        )
-        new_labels = (
-            labels.join(nbr_min, labels.doc_id == nbr_min.src, "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"),
-                    F.coalesce(F.col("nbr_min"), F.col("cluster_id")),
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint()
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.cluster_id") != F.col("o.cluster_id"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        raise RuntimeError(f"CC did not converge in {max_iters} rounds")
-    return labels.select("doc_id", "cluster_id")
-
-
-def cc_star_labels(edges: DataFrame, max_rounds: int) -> DataFrame | None:
+def cc_star_labels(edges: DataFrame, max_rounds: int) -> DataFrame:
     """Alternating small-star/large-star contraction (Kiveris et al.):
     O(log n) rounds to collapse every component into a star rooted at its
-    minimum node — same min-reachable-id fixpoint as Hash-Min, so the
-    recursive-CTE oracle is unchanged, but a 10^12-doc graph needs ~40
-    rounds instead of O(diameter). Convergence is detected by an edge-set
+    minimum node — the min-reachable-id fixpoint the recursive-CTE oracle
+    computes, in ~40 rounds for a 10^12-doc graph where label propagation
+    needs O(diameter). Convergence is detected by an edge-set
     fingerprint (one aggregate per round, no extra join), confirmed with
     one exact set comparison at the first fingerprint match.
 
     Returns (doc_id, cluster_id) for every node that appears in ``edges``
-    (callers attach singletons), or None if ``max_rounds`` was exhausted.
+    (callers attach singletons); raises RuntimeError if ``max_rounds``
+    rounds do not reach the fixpoint.
     """
     e = edges.localCheckpoint()
     fp = _edge_fingerprint(e)
@@ -1193,7 +1058,9 @@ def cc_star_labels(edges: DataFrame, max_rounds: int) -> DataFrame | None:
                     F.col("u").alias("doc_id"), "cluster_id"
                 )
         e, fp = e2, fp2
-    return None
+    raise RuntimeError(
+        f"star contraction did not converge in max_rounds={max_rounds}"
+    )
 
 
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1204,27 +1071,21 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Spark implementation: alternating small-star/large-star contraction —
     O(log n) rounds (chain-graph regression test:
-    tests/test_dedup_banded.py), where Hash-Min takes O(diameter) rounds
-    with a driver count per round. Same fixpoint (min reachable doc_id)
-    as the oracle, a DuckDB recursive CTE computing min-reachable-id
-    directly. If the round
-    budget is ever exhausted (a pathology no duplicate graph exhibits),
-    the operator falls back to Hash-Min rather than failing the job.
+    tests/test_dedup_banded.py) under a 4*ceil(log2 n)+8 round budget.
+    Same fixpoint (min reachable doc_id) as the oracle, a DuckDB recursive
+    CTE computing min-reachable-id directly.
     """
     import math
 
     docs = _docs(spark, sf_dir).select("doc_id")
-    pairs = minhash_lsh_pairs(spark, sf_dir)
     edges = (
-        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
+        minhash_lsh_pairs(spark, sf_dir)
+        .select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter("u != v")
         .distinct()
     )
-    n_docs = docs.count()
-    budget = 4 * math.ceil(math.log2(max(n_docs, 2))) + 8
+    budget = 4 * math.ceil(math.log2(max(docs.count(), 2))) + 8
     labels = cc_star_labels(edges, budget)
-    if labels is None:  # documented fallback, not a job failure
-        return _cc_hash_min(docs, pairs, MAX_CC_ITERS)
     return docs.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("cluster_id", "doc_id").alias("cluster_id")
     )

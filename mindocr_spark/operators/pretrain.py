@@ -448,11 +448,11 @@ def semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semdedup_flags(_with_norm(_emb(spark, sf_dir)))
 
 
-def semdedup_flags(emb: DataFrame, n_cells: int | None = None) -> DataFrame:
+def semdedup_flags(emb: DataFrame) -> DataFrame:
     """Composable core of :func:`semdedup` over a ``(vec_id, embedding,
     norm)`` frame (jobs/corpus_prep_job.py feeds it the corpus
-    embeddings directly).  ``n_cells`` defaults to the corpus-derived
-    count (one count() action, the scale-aware-LSH precedent).
+    embeddings directly).  The cell count is the corpus-derived one (one
+    count() action, the scale-aware-LSH precedent).
 
     Assignment is two-level: s = ceil(sqrt(k)) SUPER-centroids (the
     first s vectors — a prefix of the centroids, which are the first k)
@@ -470,8 +470,7 @@ def semdedup_flags(emb: DataFrame, n_cells: int | None = None) -> DataFrame:
     Every distance is a round(L2, 4) double with integer-id tie-breaks,
     and the oracle SQL mirrors the construction CTE-for-CTE, so the
     two-level layout is hash-certified, not approximated."""
-    if n_cells is None:
-        n_cells = _derived_cells(emb.count())
+    n_cells = _derived_cells(emb.count())
     n_super = _ceil_sqrt(n_cells)
     cents = emb.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")

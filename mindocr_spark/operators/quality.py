@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..config import spread
+from .dedup import word_ngrams
 
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is")
 _SW_LIST_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
@@ -147,16 +148,13 @@ FROM v
 
 def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winnowing-style fingerprint: min md5 over word-5-gram shingles."""
-    # tokenize once into a projected column: split(text) inside the
-    # lambda would re-split per gram index, O(tokens^2) string work per doc
-    grams = F.expr(
-        "transform(sequence(1, greatest(size(toks) - 4, 1)), "
-        "i -> md5(array_join(slice(toks, i, 5), ' ')))"
-    )
     return (
         _docs(spark, sf_dir)
         .select("doc_id", F.split(F.col("text"), " ").alias("toks"))
-        .select("doc_id", F.array_min(grams).alias("fingerprint"))
+        .select(
+            "doc_id",
+            F.array_min(F.transform(word_ngrams(5), F.md5)).alias("fingerprint"),
+        )
     )
 
 
@@ -377,11 +375,17 @@ def _gopher_repetition(docs: DataFrame) -> DataFrame:
     tokens contribute their single truncated gram (same `greatest(...,1)`
     convention as the dedup shingles), so total >= 1 and the floor-div
     never sees zero."""
-    grams_expr = "flatten(array(" + ", ".join(
-        f"transform(sequence(1, greatest(size(toks) - {n - 1}, 1)), "
-        f"i -> struct({n} as n, concat_ws(' ', slice(toks, i, {n})) as gram))"
-        for n in GOPHER_NGRAMS
-    ) + "))"
+    # F.transform calls its lambda at once (and reads a second parameter
+    # as the element index), so the closure over n is bound per n
+    grams = F.flatten(
+        F.array(*(
+            F.transform(
+                word_ngrams(n),
+                lambda g: F.struct(F.lit(n).alias("n"), g.alias("gram")),
+            )
+            for n in GOPHER_NGRAMS
+        ))
+    )
     # partition by doc_id BEFORE the gram explode: HashPartitioning on a
     # subset of every downstream grouping key ((doc,n,gram), (doc,n),
     # (doc)) satisfies their ClusteredDistributions, so all three
@@ -392,7 +396,7 @@ def _gopher_repetition(docs: DataFrame) -> DataFrame:
     g = (
         spread(docs, "doc_id")
         .select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(F.expr(grams_expr)).alias("g"))
+        .select("doc_id", F.explode(grams).alias("g"))
         .select("doc_id", "g.n", "g.gram")
     )
     per_n = (
@@ -508,13 +512,9 @@ DECON_EVAL_MOD = 97  # doc_id % 97 == 0 plays the benchmark/eval suite
 
 
 def _decon_grams(docs: DataFrame) -> DataFrame:
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(toks) - {DECON_NGRAM - 1}, 1)), "
-        f"i -> concat_ws(' ', slice(toks, i, {DECON_NGRAM})))"
-    )
     return (
         docs.select("doc_id", F.split("text", " ").alias("toks"))
-        .select("doc_id", F.explode(grams).alias("gram"))
+        .select("doc_id", F.explode(word_ngrams(DECON_NGRAM)).alias("gram"))
         .distinct()
     )
 
@@ -614,12 +614,10 @@ def duplicate_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_tokens", F.size("toks").cast("long")),
         "doc_id",
     )
-    grams = F.expr(
-        f"transform(sequence(1, greatest(size(toks) - {SPAN_NGRAM - 1}, 1)), "
-        f"i -> concat_ws(' ', slice(toks, i, {SPAN_NGRAM})))"
-    )
     g = d.select(
-        "doc_id", "n_tokens", F.posexplode(grams).alias("pos0", "gram")
+        "doc_id",
+        "n_tokens",
+        F.posexplode(word_ngrams(SPAN_NGRAM)).alias("pos0", "gram"),
     )
     dup = (
         g.select("gram", "doc_id")

@@ -10,6 +10,7 @@ must agree with their exact quadratic test oracles.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from mindocr_spark.operators import dedup, similarity
@@ -254,9 +255,9 @@ def test_simhash64_manku_exact_and_equivalent(spark):
 
 
 def test_cc_star_converges_in_log_rounds_on_chain(spark):
-    """Adversarial chain graph 0-1-2-...-63: Hash-Min needs 63 rounds
-    (diameter); small-star/large-star must collapse it in O(log n) — the
-    r2 verdict's MAX_CC_ITERS failure case is now the fast path."""
+    """Adversarial chain graph 0-1-2-...-63: label propagation needs 63
+    rounds (diameter); small-star/large-star must collapse it in
+    O(log n)."""
     import math
 
     from pyspark.sql import functions as F
@@ -282,11 +283,19 @@ def test_cc_star_converges_in_log_rounds_on_chain(spark):
     _ = F
 
 
-def test_ngram_prefix_filter_is_lossless(spark):
-    """BOTH jaccard plans (direct count-by-pair, the registered low-t
-    path; prefix-filtered + array verification, the high-t path) must
-    produce exactly the oracle's pairs at the same threshold — the prefix
-    filter may drop join rows but never a qualifying pair."""
+def test_cc_star_labels_raises_when_budget_exhausted(spark):
+    """A round budget too small for the graph is an error, not a None the
+    caller has to branch on: the 64-node chain needs more than 1 round."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "u long, v long"
+    )
+    with pytest.raises(RuntimeError, match="max_rounds=1"):
+        dedup.cc_star_labels(edges, 1)
+
+
+def test_ngram_jaccard_matches_oracle(spark):
+    """The count-by-pair plan produces exactly the oracle's pairs at the
+    registered threshold."""
     import duckdb
 
     con = duckdb.connect()
@@ -305,16 +314,49 @@ def test_ngram_prefix_filter_is_lossless(spark):
     assert got_direct == want
     assert len(got_direct) > 0
 
-    docs = dedup._docs(spark, SF)
-    cap = dedup._shingle_cap(docs.count())
-    sh = dedup._shingles(docs)
-    freq = sh.groupBy(F.col("shingle")).agg(F.count("*").alias("df"))
-    kept = sh.join(freq.filter(F.col("df") <= cap), "shingle")
-    got_prefix = {
-        (r.doc_a, r.doc_b, r.inter, round(r.jaccard, 4))
-        for r in dedup._jaccard_prefix_verified(kept, t_pct=12).collect()
+
+def test_ngram_jaccard_follows_threshold_constants(spark, tmp_path, monkeypatch):
+    """The Spark predicate reads JACCARD_T_NUM / JACCARD_T_DEN, the
+    constants the oracle SQL is built from: with the threshold moved to
+    1/2, exactly the pairs with 2 * inter >= union come back. The corpus
+    holds pairs on both sides of 1/2 (J = 0.31 and 0.58) and none is a
+    hot shingle (5 docs, cap 25)."""
+    import itertools
+
+    import pandas as pd
+
+    w = [f"w{i}" for i in range(40)]
+    texts = [
+        w,
+        w[:20] + [f"x{i}" for i in range(20)],
+        w,
+        w[:30] + [f"y{i}" for i in range(10)],
+        [f"z{i}" for i in range(40)],
+    ]
+    pd.DataFrame(
+        {"doc_id": range(len(texts)), "text": [" ".join(t) for t in texts]}
+    ).to_parquet(tmp_path / "documents.parquet")
+    sets = [
+        {" ".join(t[i:i + 3]) for i in range(len(t) - 2)} for t in texts
+    ]
+    below = set()
+    want = set()
+    for a, b in itertools.combinations(range(len(texts)), 2):
+        inter = len(sets[a] & sets[b])
+        union = len(sets[a] | sets[b])
+        if 2 * inter >= union:
+            want.add((a, b, inter))
+        elif 100 * inter >= 12 * union:
+            below.add((a, b))
+    assert want and below  # pairs on both sides of the moved threshold
+
+    monkeypatch.setattr(dedup, "JACCARD_T_NUM", 1)
+    monkeypatch.setattr(dedup, "JACCARD_T_DEN", 2)
+    got = {
+        (r.doc_a, r.doc_b, r.inter)
+        for r in dedup.ngram_jaccard_filtered(spark, str(tmp_path)).collect()
     }
-    assert got_prefix == want
+    assert got == want
 
 
 def test_minhash_fast_equivalence(spark):
@@ -374,7 +416,7 @@ def test_shingle_cap_is_corpus_relative():
 
 
 def test_near_dup_clusters_match_local_union_find(spark):
-    """Iterative Hash-Min CC fixpoint == a local union-find over the same
+    """Star-contraction CC fixpoint == a local union-find over the same
     candidate-pair edges (min reachable doc_id per component)."""
     pairs = [(r.doc_a, r.doc_b) for r in dedup.minhash_lsh_pairs(spark, SF).collect()]
     labels = {r.doc_id: r.cluster_id for r in dedup.near_dup_clusters(spark, SF).collect()}
