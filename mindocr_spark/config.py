@@ -19,6 +19,10 @@ Values mirror the reference defaults:
 
 from __future__ import annotations
 
+import inspect
+from functools import wraps
+from itertools import repeat
+
 # --- detection ---------------------------------------------------------
 BINARY_THRESH = 0.3
 BOX_THRESH = 0.6
@@ -81,6 +85,64 @@ def spread(df, *keys):
     partitions by bytes and would coalesce a small table of large or
     expensive rows onto one core."""
     return df.repartition(2 * df.sparkSession.sparkContext.defaultParallelism, *keys)
+
+
+def _schema_columns(schema: str) -> list[str]:
+    """The top-level field names of a DDL schema string (commas inside
+    ``<...>`` belong to nested types)."""
+    names, depth, start = [], 0, 0
+    for i, ch in enumerate(schema + ","):
+        depth += (ch == "<") - (ch == ">")
+        if ch == "," and depth == 0:
+            names.append(schema[start:i].split()[0])
+            start = i + 1
+    return names
+
+
+def row_stage(schema: str):
+    """Decorator: a per-row function -> the ``mapInPandas`` function over
+    Arrow batches, ``df.mapInPandas(fn, schema)``. This is the one batch
+    loop of every per-row Python stage.
+
+    The row function's positional parameters name its input columns; one
+    with a default is optional, and a batch without that column reads the
+    default (older corpora lack ``profile``). A missing required column
+    raises ``KeyError`` on the first batch; other input columns are
+    ignored. Keyword-only parameters are stage settings, bound with
+    ``partial`` (or ``registry._map``) on the batch function. The row
+    function yields zero or more output tuples per row, in ``schema``
+    order; each batch yields one frame, zero-row included. The batch
+    function keeps the row function's name, so plan nodes read it."""
+    columns = _schema_columns(schema)
+
+    def decorate(row_fn):
+        inputs = [
+            (p.name, p.default)
+            for p in inspect.signature(row_fn).parameters.values()
+            if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
+        ]
+
+        @wraps(row_fn)
+        def batches_fn(batches, **settings):
+            import pandas as pd
+
+            for pdf in batches:
+                cols = []
+                for name, default in inputs:
+                    if name in pdf.columns:
+                        cols.append(pdf[name].tolist())
+                    elif default is not inspect.Parameter.empty:
+                        cols.append(repeat(default, len(pdf)))
+                    else:
+                        raise KeyError(f"{row_fn.__name__}: no input column {name!r}")
+                yield pd.DataFrame(
+                    [out for row in zip(*cols) for out in row_fn(*row, **settings)],
+                    columns=columns,
+                )
+
+        return batches_fn
+
+    return decorate
 
 
 def persist_intermediate(df):

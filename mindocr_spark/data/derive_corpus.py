@@ -50,12 +50,10 @@ produce identical corpora at any parallelism, and EXTRACT_ORACLE_SQL
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import CHARSET, spread
+from ..config import CHARSET, row_stage, spread
 from ..functions.glyphs import mixed_height, render_page, render_table
 from ..functions.png_codec import encode_png
 
@@ -219,33 +217,18 @@ _MEDIA_SCHEMA = (
 )
 
 
-def _gen_spans_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            srows, _ = spans_for_doc(int(doc_id), text, with_media=False)
-            rows.extend(
-                {
-                    "doc_id": r["doc_id"],
-                    "spans": [
-                        (s["kind"], s["text"], s["media_ref"], s["offset"])
-                        for s in r["spans"]
-                    ],
-                }
-                for r in srows
-            )
-        yield pd.DataFrame(rows, columns=["doc_id", "spans"])
+@row_stage(_SPANS_SCHEMA)
+def _gen_spans_iter(doc_id, text):
+    for r in spans_for_doc(doc_id, text, with_media=False)[0]:
+        yield r["doc_id"], [
+            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]
+        ]
 
 
-def _gen_media_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-            _, mrows = spans_for_doc(int(doc_id), text)
-            rows.extend(mrows)
-        yield pd.DataFrame(
-            rows, columns=["media_ref", "image", "width", "height", "profile"]
-        )
+@row_stage(_MEDIA_SCHEMA)
+def _gen_media_iter(doc_id, text):
+    for m in spans_for_doc(doc_id, text)[1]:
+        yield m["media_ref"], m["image"], m["width"], m["height"], m["profile"]
 
 
 def derive_from_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:

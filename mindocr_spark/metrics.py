@@ -4,9 +4,10 @@
   per-image greedy IoU>0.5 matching of predicted vs ground-truth quads
   (invalid gt quads dropped, ignore-region handling at intersect/area>0.5),
   binary labels -> global TP/FP/FN sums -> precision/recall/f-score. The
-  per-image matcher runs in a grouped pandas UDF; the global sum is a native
-  partial+final aggregation — the Spark analogue of the reference's
-  ``AllReduce(sum)`` (det_metrics.py:110-111,159-162).
+  per-image matcher is a row function under ``config.row_stage`` (one
+  ``mapInPandas``, no shuffle: each image row is matched on its own); the
+  global sum is a native partial+final aggregation — the Spark analogue
+  of the reference's ``AllReduce(sum)`` (det_metrics.py:110-111,159-162).
 - ``rec_metric``: RecMetric semantics (``mindocr/metrics/rec_metrics.py:16-158``):
   strip spaces, lower, filter label chars outside the dictionary, then
   exact-match accuracy and 1 - mean(levenshtein / max(len)).
@@ -18,11 +19,10 @@ from __future__ import annotations
 import json
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import CHARSET
+from .config import CHARSET, row_stage
 from .functions.geometry import poly_area_perimeter, poly_intersection_area, poly_iou
 
 MIN_IOU = 0.5
@@ -105,25 +105,25 @@ def match_image_labels(
     return tp, fp, fn
 
 
+_DET_LABELS_SCHEMA = "tp long, fp long, fn long"
+
+
+@row_stage(_DET_LABELS_SCHEMA)
+def _det_labels_iter(pred_polys, gt_polys, gt_ignore):
+    yield match_image_labels(
+        [np.array(p) for p in json.loads(pred_polys)],
+        [np.array(p) for p in json.loads(gt_polys)],
+        list(json.loads(gt_ignore)),
+    )
+
+
 def det_metric(df: DataFrame) -> DataFrame:
     """df: (img string, pred_polys string-json [[x,y]x4...],
     gt_polys string-json, gt_ignore string-json [bool...]).
 
     Returns one row: (tp, fp, fn, recall, precision, f_score).
     """
-
-    def per_image(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for _, r in pdf.iterrows():
-            tp, fp, fn = match_image_labels(
-                [np.array(p) for p in json.loads(r["pred_polys"])],
-                [np.array(p) for p in json.loads(r["gt_polys"])],
-                list(json.loads(r["gt_ignore"])),
-            )
-            rows.append({"tp": tp, "fp": fp, "fn": fn})
-        return pd.DataFrame(rows, columns=["tp", "fp", "fn"])
-
-    labels = df.groupBy("img").applyInPandas(per_image, "tp long, fp long, fn long")
+    labels = df.mapInPandas(_det_labels_iter, _DET_LABELS_SCHEMA)
     agg = labels.agg(
         F.sum("tp").alias("tp"), F.sum("fp").alias("fp"), F.sum("fn").alias("fn")
     )
@@ -222,20 +222,20 @@ def e2e_match_image(
     return correct, len(gts)
 
 
+_E2E_SCORES_SCHEMA = "correct long, total long"
+
+
+@row_stage(_E2E_SCORES_SCHEMA)
+def _e2e_scores_iter(pred_json, gt_json):
+    yield e2e_match_image(json.loads(pred_json), json.loads(gt_json))
+
+
 def e2e_eval(df: DataFrame) -> DataFrame:
     """df: (img string, pred_json string, gt_json string), each a JSON list
     of {"transcription", "points"}. Returns (correct_num, total_num, acc) —
     the Spark aggregation replacing the reference's joblib multiprocessing
     (``eval_pipeline.py:76-87``)."""
-
-    def per_image(pdf: pd.DataFrame) -> pd.DataFrame:
-        rows = []
-        for _, r in pdf.iterrows():
-            c, t = e2e_match_image(json.loads(r["pred_json"]), json.loads(r["gt_json"]))
-            rows.append({"correct": c, "total": t})
-        return pd.DataFrame(rows, columns=["correct", "total"])
-
-    scored = df.groupBy("img").applyInPandas(per_image, "correct long, total long")
+    scored = df.mapInPandas(_e2e_scores_iter, _E2E_SCORES_SCHEMA)
     agg = scored.agg(
         F.sum("correct").alias("correct_num"), F.sum("total").alias("total_num")
     )

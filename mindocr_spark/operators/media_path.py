@@ -1,5 +1,6 @@
 """Media-span path: decode -> detect -> crop -> cls -> rec as mapInPandas
-stages over Arrow batches (SURVEY.md §3.1 Spark rebuild).
+stages over Arrow batches (SURVEY.md §3.1 Spark rebuild). Each stage is a
+per-row function under ``config.row_stage``, the one batch loop.
 
 Two physical strategies, same semantics:
 
@@ -19,13 +20,11 @@ Both share every kernel bit-for-bit with the oracle.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
 from typing import TYPE_CHECKING
 
 import numpy as np
-import pandas as pd
 
-from ..config import DROP_SCORE
+from ..config import DROP_SCORE, row_stage
 from ..kernels.system import (
     classify_and_recognize,
     crop_box,
@@ -58,26 +57,14 @@ DET_CROPS_SCHEMA = (
 REC_SCHEMA = "media_ref string, box_idx int, text string, conf double"
 
 
-def _profiles_col(pdf: pd.DataFrame) -> "pd.Series | list[None]":
-    """The optional ``profile`` column (older corpora lack it)."""
-    if "profile" in pdf.columns:
-        return pdf["profile"]
-    return [None] * len(pdf)
-
-
-def ocr_fused_iter(
-    batches: Iterator[pd.DataFrame], use_cls: bool = True
-) -> Iterator[pd.DataFrame]:
+@row_stage(FUSED_SCHEMA)
+def ocr_fused_iter(media_ref, image, profile=None, *, use_cls=True):
     """(media_ref, image, profile) -> (media_ref, text)."""
-    for pdf in batches:
-        texts = [
-            media_payload_text(blob, use_cls=use_cls, profile=prof)
-            for blob, prof in zip(pdf["image"], _profiles_col(pdf))
-        ]
-        yield pd.DataFrame({"media_ref": pdf["media_ref"], "text": texts})
+    yield media_ref, media_payload_text(image, use_cls=use_cls, profile=profile)
 
 
-def det_crops_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@row_stage(DET_CROPS_SCHEMA)
+def det_crops_iter(media_ref, image, profile=None):
     """(media_ref, image, profile) -> one ref row per input row, i.e. per
     media ref, plus one row per crop of a page.
 
@@ -87,62 +74,34 @@ def det_crops_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     A page's crops follow with ``box_idx`` = the reading-order index
     (``sorted_boxes`` applied inside ``detect_quads``).
     """
-    for pdf in batches:
-        out: dict[str, list] = {k: [] for k in (
-            "media_ref", "box_idx", "crop", "crop_h", "crop_w", "profile"
-        )}
-
-        def emit(media_ref, idx, blob, ch, cw, prof):
-            for k, v in zip(out, (media_ref, idx, blob, ch, cw, prof)):
-                out[k].append(v)
-
-        for media_ref, png, prof in zip(
-            pdf["media_ref"], pdf["image"], _profiles_col(pdf)
-        ):
-            text, img = route_payload(png)
-            emit(media_ref, -1, (text or "").encode("utf-8"), 0, 0, prof)
-            if img is None:
-                continue
-            box_mode = profile_heads(prof)[1]
-            for idx, poly in enumerate(detect_quads(img, box_mode=box_mode)):
-                crop = crop_box(img, poly)  # uint8
-                emit(media_ref, idx, crop.tobytes(), crop.shape[0], crop.shape[1], prof)
-        yield pd.DataFrame(out)
+    text, img = route_payload(image)
+    yield media_ref, -1, (text or "").encode("utf-8"), 0, 0, profile
+    if img is None:
+        return
+    box_mode = profile_heads(profile)[1]
+    for idx, poly in enumerate(detect_quads(img, box_mode=box_mode)):
+        crop = crop_box(img, poly)  # uint8
+        yield media_ref, idx, crop.tobytes(), crop.shape[0], crop.shape[1], profile
 
 
+@row_stage(REC_SCHEMA)
 def recognize_iter(
-    batches: Iterator[pd.DataFrame], use_cls: bool = True, decoder: str = "ctc"
-) -> Iterator[pd.DataFrame]:
+    media_ref, box_idx, crop, crop_h, crop_w, profile=None, *, use_cls=True,
+    decoder="ctc",
+):
     """Crop rows -> (media_ref, box_idx, text, conf): cls-rotate then
     recognition. ``decoder`` picks the head contract ('ctc' | 'attn' |
     'master' | 'sar') of crops whose profile does not pick one.
     A ref row (``box_idx < 0``) passes its routed text through with
     conf 1.0."""
-    for pdf in batches:
-        texts: list[str] = []
-        confs: list[float] = []
-        for blob, h, w, bidx, prof in zip(
-            pdf["crop"], pdf["crop_h"], pdf["crop_w"], pdf["box_idx"],
-            _profiles_col(pdf),
-        ):
-            if int(bidx) < 0:
-                texts.append(bytes(blob).decode("utf-8"))
-                confs.append(1.0)
-                continue
-            crop = np.frombuffer(blob, dtype=np.uint8).reshape(int(h), int(w))
-            text, conf = classify_and_recognize(
-                crop, use_cls=use_cls, decoder=profile_heads(prof, decoder)[0]
-            )
-            texts.append(text)
-            confs.append(conf)
-        yield pd.DataFrame(
-            {
-                "media_ref": pdf["media_ref"],
-                "box_idx": pdf["box_idx"],
-                "text": texts,
-                "conf": confs,
-            }
-        )
+    if box_idx < 0:
+        yield media_ref, box_idx, bytes(crop).decode("utf-8"), 1.0
+        return
+    img = np.frombuffer(crop, dtype=np.uint8).reshape(crop_h, crop_w)
+    text, conf = classify_and_recognize(
+        img, use_cls=use_cls, decoder=profile_heads(profile, decoder)[0]
+    )
+    yield media_ref, box_idx, text, conf
 
 
 def kept_crops(df: DataFrame, threshold: float = DROP_SCORE) -> DataFrame:
@@ -153,26 +112,20 @@ def kept_crops(df: DataFrame, threshold: float = DROP_SCORE) -> DataFrame:
     return df.filter((F.col("conf") >= F.lit(threshold)) & (F.col("text") != ""))
 
 
-def ocr_records_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+OCR_RECORDS_SCHEMA = "media_ref string, transcription string, score double, points string"
+
+
+@row_stage(OCR_RECORDS_SCHEMA)
+def ocr_records_iter(media_ref, image):
     """(media_ref, image) -> per-image OCR record rows (transcription, score,
     points json) — the det/system golden-file shape (FIXTURES.md F3)."""
     import json
 
-    for pdf in batches:
-        out: dict[str, list] = {"media_ref": [], "transcription": [], "score": [], "points": []}
-        for media_ref, png in zip(pdf["media_ref"], pdf["image"]):
-            img = decode_gray(png)
-            if img is None:
-                continue
-            for rec in ocr_image(img):
-                out["media_ref"].append(media_ref)
-                out["transcription"].append(rec["transcription"])
-                out["score"].append(rec["score"])
-                out["points"].append(json.dumps(rec["points"]))
-        yield pd.DataFrame(out)
-
-
-OCR_RECORDS_SCHEMA = "media_ref string, transcription string, score double, points string"
+    img = decode_gray(image)
+    if img is None:
+        return
+    for rec in ocr_image(img):
+        yield media_ref, rec["transcription"], rec["score"], json.dumps(rec["points"])
 
 
 DET_POLYS_SCHEMA = (
@@ -180,23 +133,15 @@ DET_POLYS_SCHEMA = (
 )
 
 
-def det_polys_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@row_stage(DET_POLYS_SCHEMA)
+def det_polys_iter(media_ref, image):
     """(media_ref, image) -> one row per detected POLYGON (box_type='poly',
     ``det_db_postprocess.py:103-107``): ragged ``array<array<int>>`` points
     instead of the fixed 4-point quad — the output representation for
     curved/irregular text regions."""
-    for pdf in batches:
-        out: dict[str, list] = {
-            "media_ref": [], "poly_idx": [], "points": [], "score": [],
-        }
-        for media_ref, png in zip(pdf["media_ref"], pdf["image"]):
-            img = decode_gray(png)
-            if img is None:
-                continue
-            polys, scores = detect_polys(img)
-            for i, (p, s) in enumerate(zip(polys, scores)):
-                out["media_ref"].append(media_ref)
-                out["poly_idx"].append(i)
-                out["points"].append([[int(x), int(y)] for x, y in p])
-                out["score"].append(float(s))
-        yield pd.DataFrame(out)
+    img = decode_gray(image)
+    if img is None:
+        return
+    polys, scores = detect_polys(img)
+    for i, (p, score) in enumerate(zip(polys, scores)):
+        yield media_ref, i, [[int(x), int(y)] for x, y in p], float(score)

@@ -4,12 +4,9 @@ typed metadata from the PNG codec and dHash perceptual near-dup.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
-from ..config import spread
+from ..config import row_stage, spread
 from ..functions.phash import dhash64
 from ..functions.png_codec import decode_png
 
@@ -18,21 +15,16 @@ IMAGE_META_SCHEMA = (
 )
 
 
-def image_meta_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@row_stage(IMAGE_META_SCHEMA)
+def image_meta_iter(media_ref, image):
     """(media_ref, image) -> typed metadata; junk bytes yield ok=false."""
-    for pdf in batches:
-        rows = []
-        for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-            try:
-                img = decode_png(bytes(blob))
-                h, w = img.shape[:2]
-                c = 1 if img.ndim == 2 else img.shape[2]
-                rows.append((ref, w, h, c, len(blob), True))
-            except Exception:  # noqa: BLE001
-                rows.append((ref, None, None, None, len(blob or b""), False))
-        yield pd.DataFrame(
-            rows, columns=["media_ref", "width", "height", "channels", "n_bytes", "ok"]
-        )
+    try:
+        img = decode_png(bytes(image))
+    except Exception:  # noqa: BLE001
+        yield media_ref, None, None, None, len(image or b""), False
+        return
+    c = 1 if img.ndim == 2 else img.shape[2]
+    yield media_ref, img.shape[1], img.shape[0], c, len(image), True
 
 
 def image_meta(df: DataFrame) -> DataFrame:
@@ -48,21 +40,16 @@ PHASH_HAMMING_MAX = 3
 IMAGE_DHASH_SCHEMA = "media_ref string, dhash long, ok boolean"
 
 
-def image_dhash_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@row_stage(IMAGE_DHASH_SCHEMA)
+def image_dhash_iter(media_ref, image):
     """(media_ref, image) -> (media_ref, dhash, ok): the shared dHash kernel
     (``functions/phash.py``) per payload; one that fails to decode or hash
     yields ``ok = false`` and ``dhash = 0``."""
-    for pdf in batches:
-        refs, sigs, oks = [], [], []
-        for ref, blob in zip(pdf["media_ref"], pdf["image"]):
-            try:
-                sig, ok = dhash64(decode_png(bytes(blob))), True
-            except Exception:  # noqa: BLE001 - undecodable payload
-                sig, ok = 0, False
-            refs.append(ref)
-            sigs.append(sig)
-            oks.append(ok)
-        yield pd.DataFrame({"media_ref": refs, "dhash": sigs, "ok": oks})
+    try:
+        sig, ok = dhash64(decode_png(bytes(image))), True
+    except Exception:  # noqa: BLE001 - undecodable payload
+        sig, ok = 0, False
+    yield media_ref, sig, ok
 
 
 def image_dhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:

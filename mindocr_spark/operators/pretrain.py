@@ -181,38 +181,41 @@ def sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pack_token_layout(d)
 
 
-def pack_token_layout(d: DataFrame) -> DataFrame:
+def pack_token_layout(d: DataFrame, by: tuple[str, ...] = ()) -> DataFrame:
     """Composable core of :func:`sequence_packing` over a
-    ``(doc_id, n_tokens)`` frame (jobs/corpus_prep_job.py packs the
-    CLEANED, FILTERED corpus through this).  Callers must drop
-    zero-token docs first: ``last_seq = (start + n - 1) div SEQ_LEN``
-    is meaningless at n=0 (and Spark's truncating ``div`` vs DuckDB's
-    flooring ``//`` disagree on the negative numerator) — the registered
-    query's ``split()`` always yields >= 1 token and the prep job
-    filters empty documents.
+    ``(*by, doc_id, n_tokens)`` frame (jobs/corpus_prep_job.py packs the
+    CLEANED, FILTERED corpus through this). Each ``by`` group owns its own
+    token axis and sequence numbering (``by=()``: one global axis).
+    Callers must drop zero-token docs first: ``last_seq = (start + n - 1)
+    div SEQ_LEN`` is meaningless at n=0 (and Spark's truncating ``div`` vs
+    DuckDB's flooring ``//`` disagree on the negative numerator) — the
+    registered query's ``split()`` always yields >= 1 token and the prep
+    job filters empty documents.
 
-    The global prefix sum is NOT a single-partition window: docs fold
+    The prefix sum is NOT a single-partition window: docs fold
     into ``doc_id div PACK_BUCKET_DOCS`` buckets, the within-bucket
-    running sum is a window PARTITIONED by bucket (parallel), and only
-    the bucket-totals table (N / 1024 rows) pays a one-partition ordered
-    window before being broadcast back.  At 10^12 docs that inner table
-    is ~10^9 rows — fold it once more with the same trick if needed; the
-    pattern telescopes.
+    running sum is a window PARTITIONED by (by, bucket) (parallel), and
+    only the bucket-totals table (N / 1024 rows) pays an ordered window
+    per ``by`` group before being broadcast back. At 10^12 docs that
+    inner table is ~10^9 rows — fold it once more with the same trick if
+    needed; the pattern telescopes.
     """
     d = d.withColumn("bucket", F.expr(f"doc_id div {PACK_BUCKET_DOCS}"))
-    w_in = Window.partitionBy("bucket").orderBy("doc_id")
+    w_in = Window.partitionBy(*by, "bucket").orderBy("doc_id")
     d = d.withColumn("local_end", F.sum("n_tokens").over(w_in))
-    totals = d.groupBy("bucket").agg(F.sum("n_tokens").alias("btot"))
+    totals = d.groupBy(*by, "bucket").agg(F.sum("n_tokens").alias("btot"))
     w_b = (
-        Window.orderBy("bucket")
+        Window.partitionBy(*by)
+        .orderBy("bucket")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     offsets = totals.withColumn(
         "boffset", F.coalesce(F.sum("btot").over(w_b), F.lit(0).cast("long"))
-    ).select("bucket", "boffset")
-    j = d.join(F.broadcast(offsets), "bucket")
+    ).select(*by, "bucket", "boffset")
+    j = d.join(F.broadcast(offsets), [*by, "bucket"])
     j = j.withColumn("tok_start", F.col("boffset") + F.col("local_end") - F.col("n_tokens"))
     return j.select(
+        *by,
         "doc_id",
         "n_tokens",
         "tok_start",
@@ -263,36 +266,7 @@ def sequence_packing_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
     )
-    d = d.withColumn("bucket", F.expr(f"doc_id div {PACK_BUCKET_DOCS}"))
-    w_in = Window.partitionBy("source", "lang", "bucket").orderBy("doc_id")
-    d = d.withColumn("local_end", F.sum("n_tokens").over(w_in))
-    totals = d.groupBy("source", "lang", "bucket").agg(
-        F.sum("n_tokens").alias("btot")
-    )
-    w_b = (
-        Window.partitionBy("source", "lang")
-        .orderBy("bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = totals.withColumn(
-        "boffset", F.coalesce(F.sum("btot").over(w_b), F.lit(0).cast("long"))
-    ).select("source", "lang", "bucket", "boffset")
-    j = d.join(F.broadcast(offsets), ["source", "lang", "bucket"])
-    j = j.withColumn(
-        "tok_start", F.col("boffset") + F.col("local_end") - F.col("n_tokens")
-    )
-    return j.select(
-        "source",
-        "lang",
-        "doc_id",
-        "n_tokens",
-        "tok_start",
-        F.expr(f"tok_start div {SEQ_LEN}").alias("first_seq"),
-        F.expr(f"(tok_start + n_tokens - 1) div {SEQ_LEN}").alias("last_seq"),
-        F.expr(
-            f"cast(((tok_start + n_tokens - 1) div {SEQ_LEN}) - (tok_start div {SEQ_LEN}) as int)"
-        ).alias("n_boundaries_crossed"),
-    )
+    return pack_token_layout(d, by=("source", "lang"))
 
 
 SEQUENCE_PACKING_GROUPED_SQL = f"""

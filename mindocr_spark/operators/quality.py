@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..config import spread
+from ..config import row_stage, spread
 from .dedup import word_ngrams
 
 STOPWORDS = ("the", "a", "of", "to", "and", "in", "is")
@@ -937,36 +937,24 @@ def bpe_encode_words(words: DataFrame, merges: list[tuple[str, str]]) -> DataFra
     Heaps-law-small distinct-word table, not the corpus."""
     triples = [(l, r, l + r) for l, r in merges]
 
-    def encode(batches):
-        import pandas as pd
+    schema = "w string, wc long, n_chars int, n_bpe_tokens int"
 
-        for pdf in batches:
-            toks = []
-            for w in pdf["w"]:
-                syms = list(w)
-                for l, r, m in triples:
-                    if m not in w:
-                        continue
-                    acc = []
-                    for x in syms:
-                        if acc and acc[-1] == l and x == r:
-                            acc[-1] = m
-                        else:
-                            acc.append(x)
-                    syms = acc
-                toks.append(len(syms))
-            yield pd.DataFrame(
-                {
-                    "w": pdf["w"],
-                    "wc": pdf["wc"],
-                    "n_chars": pdf["w"].str.len().astype("int32"),
-                    "n_bpe_tokens": pd.Series(toks, dtype="int32"),
-                }
-            )
+    @row_stage(schema)
+    def encode(w, wc):
+        syms = list(w)
+        for l, r, m in triples:
+            if m not in w:
+                continue
+            acc = []
+            for x in syms:
+                if acc and acc[-1] == l and x == r:
+                    acc[-1] = m
+                else:
+                    acc.append(x)
+            syms = acc
+        yield w, wc, len(w), len(syms)
 
-    return spread(words, "w").mapInPandas(
-        encode, "w string, wc long, n_chars int, n_bpe_tokens int"
-    )
+    return spread(words, "w").mapInPandas(encode, schema)
 
 
 def bpe_apply(spark: SparkSession, sf_dir: str, n_merges: int = 12) -> DataFrame:

@@ -17,86 +17,57 @@ the OCR scorers consume raw uint8 crops and are unaffected.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
+
+from ..config import row_stage
 
 CROP_TENSOR_SCHEMA = (
     "media_ref string, box_idx int, tensor binary, dims array<int>"
 )
+GEAR_TENSOR_SCHEMA = CROP_TENSOR_SCHEMA + ", valid_w int, truncated boolean"
 
 
-def _rows(pdf: pd.DataFrame, tensors: list[bytes], dims: list[list[int]]) -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "media_ref": pdf["media_ref"],
-            "box_idx": pdf["box_idx"],
-            "tensor": tensors,
-            "dims": dims,
-        }
-    )
-
-
-def rec_resize_tensor_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@row_stage(CROP_TENSOR_SCHEMA)
+def rec_resize_tensor_iter(media_ref, box_idx, crop, crop_h, crop_w):
     """Det-crop rows -> float32 (32, W') resize-norm tensors
     (``rec_transforms.py:548-636`` keep-ratio, width-capped). Sentinel /
     payload rows (box_idx < 0) are dropped — they carry no image."""
     from ..kernels.rec import rec_resize_norm
 
-    for pdf in batches:
-        keep, tensors, dims = [], [], []
-        for i, (blob, h, w, bidx) in enumerate(
-            zip(pdf["crop"], pdf["crop_h"], pdf["crop_w"], pdf["box_idx"])
-        ):
-            if int(bidx) < 0 or int(h) == 0:
-                continue
-            crop = np.frombuffer(blob, dtype=np.uint8).reshape(int(h), int(w))
-            t = rec_resize_norm(crop).astype(np.float32)
-            keep.append(i)
-            tensors.append(t.tobytes())
-            dims.append([int(d) for d in t.shape])
-        yield _rows(pdf.iloc[keep], tensors, dims)
+    if box_idx < 0 or crop_h == 0:
+        return
+    img = np.frombuffer(crop, dtype=np.uint8).reshape(crop_h, crop_w)
+    t = rec_resize_norm(img).astype(np.float32)
+    yield media_ref, box_idx, t.tobytes(), list(t.shape)
 
 
-def normalize_image_iter(
-    batches: Iterator[pd.DataFrame], mean: float = 127.5, std: float = 127.5
-) -> Iterator[pd.DataFrame]:
+@row_stage(CROP_TENSOR_SCHEMA)
+def normalize_image_iter(media_ref, box_idx, tensor, dims, *, mean=127.5, std=127.5):
     """NormalizeImage (``general_transforms.py:89-130``):
     (x.astype(float32) - mean) / std, elementwise, dims unchanged."""
-    m = np.float32(mean)
-    s = np.float32(std)
-    for pdf in batches:
-        tensors = [
-            ((np.frombuffer(b, dtype=np.float32) - m) / s).astype(np.float32).tobytes()
-            for b in pdf["tensor"]
-        ]
-        yield _rows(pdf, tensors, list(pdf["dims"]))
+    x = np.frombuffer(tensor, dtype=np.float32)
+    out = ((x - np.float32(mean)) / np.float32(std)).astype(np.float32)
+    yield media_ref, box_idx, out.tobytes(), dims
 
 
-def to_chw_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+@row_stage(CROP_TENSOR_SCHEMA)
+def to_chw_iter(media_ref, box_idx, tensor, dims):
     """ToCHWImage (``general_transforms.py:149-160``): HWC -> CHW; a 2-dim
     gray (H, W) tensor gains a leading channel axis (1, H, W). Bytes are
     re-laid-out accordingly."""
-    for pdf in batches:
-        tensors, dims = [], []
-        for b, d in zip(pdf["tensor"], pdf["dims"]):
-            d = [int(x) for x in d]
-            arr = np.frombuffer(b, dtype=np.float32).reshape(d)
-            if arr.ndim == 2:
-                out = arr[None, :, :]
-            elif arr.ndim == 3:
-                out = np.ascontiguousarray(np.transpose(arr, (2, 0, 1)))
-            else:
-                raise ValueError(f"to_chw expects 2- or 3-dim tensor, got {d}")
-            tensors.append(out.tobytes())
-            dims.append([int(x) for x in out.shape])
-        yield _rows(pdf, tensors, dims)
+    d = [int(x) for x in dims]
+    arr = np.frombuffer(tensor, dtype=np.float32).reshape(d)
+    if arr.ndim == 2:
+        out = arr[None, :, :]
+    elif arr.ndim == 3:
+        out = np.ascontiguousarray(np.transpose(arr, (2, 0, 1)))
+    else:
+        raise ValueError(f"to_chw expects 2- or 3-dim tensor, got {d}")
+    yield media_ref, box_idx, out.tobytes(), list(out.shape)
 
 
-def gear_pad_iter(
-    batches: Iterator[pd.DataFrame], gears: list[int], height: int = 32
-) -> Iterator[pd.DataFrame]:
+@row_stage(GEAR_TENSOR_SCHEMA)
+def gear_pad_iter(media_ref, box_idx, tensor, dims, *, gears, height=32):
     """Match each tensor's (h, w) to the nearest (height, gear) shape and
     zero-pad up to it (``get_matched_gear_hw`` + ``padding_to_batch``
     zero-fill). Emits ``valid_w`` so consumers can unpad; callers should
@@ -112,26 +83,12 @@ def gear_pad_iter(
     from ..functions.gear import get_matched_gear_hw, pad_to_gear
 
     hw_list = [(int(height), int(g)) for g in sorted(gears)]
-    for pdf in batches:
-        tensors, dims, valid, trunc = [], [], [], []
-        for b, d in zip(pdf["tensor"], pdf["dims"]):
-            d = [int(x) for x in d]
-            arr = np.frombuffer(b, dtype=np.float32).reshape(d)
-            h, w = arr.shape[-2], arr.shape[-1]
-            gear = get_matched_gear_hw((h, w), [g for g in hw_list if g[1] >= w] or [hw_list[-1]])
-            was_truncated = gear[1] < w
-            if was_truncated:  # wider than every gear: crop to the max cap
-                arr = arr[..., :, : gear[1]]
-                w = gear[1]
-            out = pad_to_gear(arr, gear)
-            tensors.append(out.tobytes())
-            dims.append([int(x) for x in out.shape])
-            valid.append(int(w))
-            trunc.append(bool(was_truncated))
-        out_pdf = _rows(pdf, tensors, dims)
-        out_pdf["valid_w"] = valid
-        out_pdf["truncated"] = trunc
-        yield out_pdf
-
-
-GEAR_TENSOR_SCHEMA = CROP_TENSOR_SCHEMA + ", valid_w int, truncated boolean"
+    arr = np.frombuffer(tensor, dtype=np.float32).reshape([int(x) for x in dims])
+    h, w = arr.shape[-2], arr.shape[-1]
+    gear = get_matched_gear_hw((h, w), [g for g in hw_list if g[1] >= w] or [hw_list[-1]])
+    truncated = gear[1] < w
+    if truncated:  # wider than every gear: crop to the max cap
+        arr = arr[..., :, : gear[1]]
+        w = gear[1]
+    out = pad_to_gear(arr, gear)
+    yield media_ref, box_idx, out.tobytes(), list(out.shape), w, truncated

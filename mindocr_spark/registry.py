@@ -15,16 +15,15 @@ from __future__ import annotations
 
 import json
 import zlib
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from functools import partial, update_wrapper
 from typing import Any
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .config import spread
+from .config import row_stage, spread
 from .functions.imaging import add_padding, img_rotate
 from .kernels.det_label import border_map, shrink_binary_map
 from .kernels.det_label_alt import east_score_geo, pse_gt_decode
@@ -86,24 +85,13 @@ def _map(fn: Callable, schema: str, /, **params: Any) -> Stage:
     return lambda df: df.mapInPandas(bound, schema)
 
 
-def _crops_iter(
-    batches: Iterator[pd.DataFrame], fn: Callable[[np.ndarray], np.ndarray]
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        crops, hs, ws = [], [], []
-        for blob, h, w, bidx in zip(
-            pdf["crop"], pdf["crop_h"], pdf["crop_w"], pdf["box_idx"]
-        ):
-            if int(bidx) >= 0 and int(h) > 0:  # sentinel / empty rows pass
-                img = np.frombuffer(blob, dtype=np.uint8).reshape(int(h), int(w))
-                img = np.clip(np.rint(fn(img)), 0, 255).astype(np.uint8)
-                blob, (h, w) = img.tobytes(), img.shape
-            crops.append(blob)
-            hs.append(h)
-            ws.append(w)
-        out = pdf.copy()
-        out["crop"], out["crop_h"], out["crop_w"] = crops, hs, ws
-        yield out
+@row_stage(DET_CROPS_SCHEMA)
+def _crops_iter(media_ref, box_idx, crop, crop_h, crop_w, profile, *, fn):
+    if box_idx >= 0 and crop_h > 0:  # sentinel / empty rows pass
+        img = np.frombuffer(crop, dtype=np.uint8).reshape(crop_h, crop_w)
+        img = np.clip(np.rint(fn(img)), 0, 255).astype(np.uint8)
+        crop, (crop_h, crop_w) = img.tobytes(), img.shape
+    yield media_ref, box_idx, crop, crop_h, crop_w, profile
 
 
 def _crops(fn: Callable[..., np.ndarray], **params: Any) -> Stage:
@@ -112,89 +100,79 @@ def _crops(fn: Callable[..., np.ndarray], **params: Any) -> Stage:
     return _map(_crops_iter, DET_CROPS_SCHEMA, fn=partial(fn, **params))
 
 
-def _checksum_iter(
-    batches: Iterator[pd.DataFrame], row: Callable[..., dict], columns: list[str],
-    **params: Any,
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [
-            {"media_ref": r["media_ref"], **row(r, **params)}
-            for _, r in pdf.iterrows()
-        ]
-        yield pd.DataFrame(rows, columns=columns)
-
-
-def _checksum(row: Callable[..., dict], schema: str, **params: Any) -> Stage:
+def _checksum(row: Callable, schema: str, **params: Any) -> Stage:
     """Training-label generation over (media_ref, ...) rows, spread on
-    media_ref: ``row`` runs one kernel per input row and returns integer
+    media_ref: ``row``, a ``config.row_stage`` row function over the input
+    columns, runs one kernel per input row and yields one row of integer
     checksums of its exact maps plus pixel counts, so the stage is cheap to
     verify at scale; the maps themselves stay kernel-level (exact-geometry
     pytest goldens)."""
-    columns = [c.split()[0] for c in schema.split(", ")]
-    stage = _map(_checksum_iter, schema, row=row, columns=columns, **params)
+    stage = _map(row_stage(schema)(row), schema, **params)
     return lambda df: stage(spread(df, "media_ref"))
 
 
-def _polys(r: pd.Series) -> list[np.ndarray]:
-    return [np.array(p, dtype=np.float64) for p in json.loads(r["polys_json"])]
+def _polys(polys_json: str) -> list[np.ndarray]:
+    return [np.array(p, dtype=np.float64) for p in json.loads(polys_json)]
 
 
-def _hw(r: pd.Series) -> tuple[int, int]:
-    return int(r["height"]), int(r["width"])
-
-
-def _det_label_row(r: pd.Series, min_text_size: int, shrink_ratio: float) -> dict:
-    polys, hw = _polys(r), _hw(r)
+def _det_label_row(
+    media_ref, width, height, polys_json, ignore_json, *, min_text_size, shrink_ratio
+):
+    polys, hw = _polys(polys_json), (int(height), int(width))
     gt, mask, tags = shrink_binary_map(
-        hw, polys, list(json.loads(r["ignore_json"])),
+        hw, polys, list(json.loads(ignore_json)),
         min_text_size=min_text_size, shrink_ratio=shrink_ratio,
     )
     tm, tmask = border_map(hw, polys, list(tags), shrink_ratio=shrink_ratio)
-    return {
-        "n_polys": len(polys),
-        "n_ignored": int(tags.sum()),
-        "gt_pixels": int(gt.sum()),
-        "masked_pixels": int((mask == 0).sum()),
-        "thresh_pixels": int(tmask.sum()),
-        "gt_hash": zlib.crc32(gt.tobytes()),
-        "thresh_hash": zlib.crc32(np.round(tm, 5).astype(np.float32).tobytes()),
-    }
+    yield (
+        media_ref,
+        len(polys),
+        int(tags.sum()),
+        int(gt.sum()),
+        int((mask == 0).sum()),
+        int(tmask.sum()),
+        zlib.crc32(gt.tobytes()),
+        zlib.crc32(np.round(tm, 5).astype(np.float32).tobytes()),
+    )
 
 
-def _east_label_row(r: pd.Series, length: int, scale: float) -> dict:
-    polys = np.array(json.loads(r["polys_json"]), dtype=np.float64)
-    labels = np.array(json.loads(r["labels_json"]))
+def _east_label_row(media_ref, polys_json, labels_json, *, length, scale):
+    polys = np.array(json.loads(polys_json), dtype=np.float64)
+    labels = np.array(json.loads(labels_json))
     score, geo, ignored = east_score_geo(
         polys.reshape(-1, 8) if polys.size else polys.reshape(0, 8),
         labels, length=length, scale=scale,
     )
-    return {
-        "n_polys": int(len(labels)),
-        "n_ignored": int((labels == 0).sum()),
-        "score_pixels": int(score.sum()),
-        "ignored_pixels": int(ignored.sum()),
-        "score_hash": zlib.crc32(score.tobytes()),
-        "geo_hash": zlib.crc32(np.round(geo, 4).astype(np.float32).tobytes()),
-    }
+    yield (
+        media_ref,
+        int(len(labels)),
+        int((labels == 0).sum()),
+        int(score.sum()),
+        int(ignored.sum()),
+        zlib.crc32(score.tobytes()),
+        zlib.crc32(np.round(geo, 4).astype(np.float32).tobytes()),
+    )
 
 
 def _pse_label_row(
-    r: pd.Series, kernel_num: int, min_shrink_ratio: float, min_shortest_edge: int
-) -> dict:
-    polys = _polys(r)
+    media_ref, width, height, polys_json, ignore_json, *, kernel_num,
+    min_shrink_ratio, min_shortest_edge,
+):
+    polys = _polys(polys_json)
     out = pse_gt_decode(
-        _hw(r), polys, list(json.loads(r["ignore_json"])),
+        (int(height), int(width)), polys, list(json.loads(ignore_json)),
         kernel_num=kernel_num, min_shrink_ratio=min_shrink_ratio,
         min_shortest_edge=min_shortest_edge,
     )
-    return {
-        "n_polys": len(polys),
-        "text_pixels": int(out["gt_text"].sum()),
-        "masked_pixels": int((out["mask"] == 0).sum()),
-        "kernel_pixels": int(out["gt_kernels"].sum()),
-        "text_hash": zlib.crc32(out["gt_text"].tobytes()),
-        "kernels_hash": zlib.crc32(out["gt_kernels"].tobytes()),
-    }
+    yield (
+        media_ref,
+        len(polys),
+        int(out["gt_text"].sum()),
+        int((out["mask"] == 0).sum()),
+        int(out["gt_kernels"].sum()),
+        zlib.crc32(out["gt_text"].tobytes()),
+        zlib.crc32(out["gt_kernels"].tobytes()),
+    )
 
 
 def _gear_pad(gears: list[int] | None = None, height: int = 32) -> Stage:

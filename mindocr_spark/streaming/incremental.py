@@ -133,6 +133,15 @@ FROM agg, mx WHERE ws + INTERVAL 1 HOUR <= m - INTERVAL 30 MINUTE
 """
 
 
+def _drain(q: StreamingQuery, timeout_s: int) -> None:
+    """Wait for an availableNow query to process its backlog. On a timeout
+    the query is stopped and ``TimeoutError`` raised: its sink holds only
+    part of the output."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        raise TimeoutError(f"streaming query did not finish in {timeout_s} s")
+
+
 def stream_windowed_counts_batch(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -191,7 +200,7 @@ def stream_windowed_counts_batch(
         )
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination(600)
+    _drain(q, 600)
     return spark.read.parquet(os.path.join(tmp, "out"))
 
 
@@ -355,7 +364,7 @@ def stream_dedup_flags_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     arriving.iloc[half:].to_parquet(f"{land}/b1.parquet", index=False)
 
     q = stream_dedup_flags(spark, land, state, out, ckpt)
-    q.awaitTermination(300)
+    _drain(q, 300)
     return spark.read.parquet(out).select("doc_id", "n_dups", "nearest")
 
 

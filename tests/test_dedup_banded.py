@@ -359,6 +359,39 @@ def test_ngram_jaccard_follows_threshold_constants(spark, tmp_path, monkeypatch)
     assert got == want
 
 
+def test_ngram_jaccard_keeps_pair_at_threshold(spark, tmp_path):
+    """At the registered threshold 12/100 the predicate is ``>=``: a pair
+    at J = 3/25 exactly is kept and one at 3/26 is dropped, by the
+    operator and by its oracle SQL alike. Each pair shares 5 leading
+    tokens (3 shingles) and no token with the other pair; no shingle is
+    hot (4 docs, cap 25)."""
+    import duckdb
+    import pandas as pd
+
+    def doc(shared, own, n_own):
+        return " ".join([f"{shared}{i}" for i in range(5)] + [f"{own}{i}" for i in range(n_own)])
+
+    # shingles per doc = tokens - 2: 14 + 14 - 3 = 25 and 14 + 15 - 3 = 26
+    texts = [doc("s", "a", 11), doc("s", "b", 11), doc("t", "c", 11), doc("t", "d", 12)]
+    pd.DataFrame({"doc_id": range(len(texts)), "text": texts}).to_parquet(
+        tmp_path / "documents.parquet"
+    )
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{tmp_path}/documents.parquet')"
+    )
+    want = {
+        (a, b, i, round(j, 4))
+        for a, b, i, j in con.execute(dedup.NGRAM_JACCARD_FILTERED_SQL).fetchall()
+    }
+    got = {
+        (r.doc_a, r.doc_b, r.inter, round(r.jaccard, 4))
+        for r in dedup.ngram_jaccard_filtered(spark, str(tmp_path)).collect()
+    }
+    assert got == want == {(0, 1, 3, 0.12)}
+
+
 def test_minhash_fast_equivalence(spark):
     """The xxhash64 hash family is a different (equally valid) set of
     minhash permutations, so CANDIDATES may differ from the md5 form on

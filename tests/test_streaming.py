@@ -347,3 +347,41 @@ def test_stream_image_dedup_flags(spark, tmp_path):
     assert flags["arr_copy"]["n_dups"] >= 1
     assert flags["arr_fresh"]["n_dups"] == 0
     assert flags["arr_junk"]["n_dups"] == -1 and flags["arr_junk"]["nearest_ref"] is None
+
+
+class _StalledQuery:
+    """A streaming query whose ``awaitTermination`` times out."""
+
+    stopped = False
+
+    def awaitTermination(self, timeout=None):  # noqa: N802 - pyspark's name
+        return False
+
+    def stop(self):
+        self.stopped = True
+
+
+@pytest.mark.parametrize(
+    "facade, factory",
+    [
+        ("stream_windowed_counts_batch", "stream_windowed_counts"),
+        ("stream_dedup_flags_batch", "stream_dedup_flags"),
+    ],
+)
+def test_batch_facade_stops_query_on_timeout(spark, tmp_path, monkeypatch, facade, factory):
+    """A facade whose query does not finish stops it and raises, rather
+    than reading a half-written sink and leaving the query running."""
+    import pandas as pd
+
+    from mindocr_spark.streaming import incremental
+
+    pd.DataFrame({"doc_id": [0, 1], "text": ["a b c", "d e f"]}).to_parquet(
+        tmp_path / "documents.parquet"
+    )
+    (tmp_path / "events.parquet").write_bytes(b"")
+    q = _StalledQuery()
+    monkeypatch.setattr(incremental, factory, lambda *a, **k: q)
+    monkeypatch.setattr(incremental, "build_dedup_state", lambda *a: None)
+    with pytest.raises(TimeoutError):
+        getattr(incremental, facade)(spark, str(tmp_path))
+    assert q.stopped

@@ -3,16 +3,21 @@ on Spark and its oracle_sql() on DuckDB at sf0.01; compare row count, schema
 arity, and order-insensitive values (columns sorted by name, rows sorted).
 
 Usage: python tools/check_oracles.py [sf_dir] [query ...]
+
+A query without an oracle prints its row count and the sha256 of its sorted
+rows (rows_sha256), so two trees can be compared on it.
 """
 
 from __future__ import annotations
 
+import hashlib
 import sys
 import time
 
 sys.path.insert(0, ".")
 
 import duckdb
+import numpy as np
 import pandas as pd
 
 TABLES = [
@@ -52,6 +57,18 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return out.sort_values(by=list(out.columns)).reset_index(drop=True)
 
 
+def rows_sha256(df: pd.DataFrame) -> str:
+    """sha256 of the rows as sorted full-precision reprs, columns sorted by
+    name and array cells as lists (numpy's repr rounds and elides): two
+    trees agree on it only when every value is bit-equal."""
+    df = df.reindex(sorted(df.columns), axis=1)
+    rows = sorted(
+        repr([v.tolist() if isinstance(v, np.ndarray) else v for v in r])
+        for r in df.itertuples(index=False, name=None)
+    )
+    return hashlib.sha256("\n".join(rows).encode()).hexdigest()
+
+
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
@@ -79,7 +96,10 @@ def main() -> int:
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"ok?  {name}: rows-only, {len(sdf)} rows ({time.time()-t0:.1f}s)")
+            print(
+                f"ok?  {name}: rows-only, {len(sdf)} rows "
+                f"sha256={rows_sha256(sdf)} ({time.time()-t0:.1f}s)"
+            )
             n_rows_only += 1
             continue
         try:
