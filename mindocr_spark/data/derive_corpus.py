@@ -332,13 +332,7 @@ def _materialized_dir(spark: SparkSession, sf_dir: str, tag: str) -> str:
     return final
 
 
-def derive_corpus(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> tuple[DataFrame, DataFrame]:
-    if not materialize:
-        return derive_from_docs(
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-        )
+def derive_corpus(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     key = (sf_dir, _source_fingerprint(f"{sf_dir}/documents.parquet"))
     if key not in _CORPUS_CACHE:
         _CORPUS_CACHE[key] = _materialized_dir(spark, sf_dir, key[1])

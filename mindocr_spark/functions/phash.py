@@ -50,7 +50,3 @@ def dhash64(img: np.ndarray) -> int:
     if v >= 1 << 63:
         v -= 1 << 64
     return v
-
-
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & ((1 << 64) - 1)).count("1")

@@ -20,9 +20,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..functions.imaging import rotate180
-from .rec import analyze_crop, rec_resize_norm
-
 _SHARPEN = 24.0
 _ALIGN_K = 0.5  # weight on the baseline-alignment evidence (px^2 variance)
 
@@ -54,11 +51,3 @@ def cls_probs_from_analyses(up_analysis: Analysis, flip_analysis: Analysis) -> n
     if a + b <= 0.0:
         return np.array([1.0, 0.0], dtype=np.float32)
     return np.array([a / (a + b), b / (a + b)], dtype=np.float32)
-
-
-def cls_probs(crop: np.ndarray) -> np.ndarray:
-    """Crop (float gray, any size) -> float32 (2,) probs for ('0', '180')."""
-    up = rec_resize_norm(crop)
-    return cls_probs_from_analyses(
-        analyze_crop(up), analyze_crop(rotate180(up))
-    )

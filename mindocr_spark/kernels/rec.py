@@ -216,11 +216,6 @@ def recognize_analysis(
     return (text, conf) if text else ("", 0.0)
 
 
-def rec_logits(resized_crop: np.ndarray) -> np.ndarray:
-    """(32, W) float crop -> (T, 37) CTC probs (analyze + frame)."""
-    return head_logits(analyze_crop(resized_crop))
-
-
 def rec_resize_padded(
     crop: np.ndarray, image_shape: tuple[int, int] = (32, 320), padding: bool = True
 ) -> tuple[np.ndarray, float]:

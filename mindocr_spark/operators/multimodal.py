@@ -83,9 +83,7 @@ def image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     recipe applied to the media column.  Rendered pages repeat across
     documents, so identical dHashes form large clusters: the case
     ``dedup.exact_hamming_pairs`` keeps from multiplying through the 35
-    tables.  At 10^12 images the combo table is the stored state and
-    arriving images probe it
-    (:func:`mindocr_spark.streaming.incremental.stream_image_dedup_flags`)."""
+    tables."""
     from .dedup import MANKU64_BLOCKS, exact_hamming_pairs
 
     return exact_hamming_pairs(

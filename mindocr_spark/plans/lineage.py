@@ -150,7 +150,3 @@ def run_extract_job(
             ),
         },
     )
-
-
-def read_output(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(out_dir).drop("bucket")

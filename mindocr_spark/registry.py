@@ -71,10 +71,6 @@ def build_pipeline(config: list[dict[str, Any]]) -> Stage:
     return run
 
 
-def available_stages() -> list[str]:
-    return sorted(_STAGES)
-
-
 # --- the three stage builders -------------------------------------------
 
 

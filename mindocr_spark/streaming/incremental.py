@@ -1,16 +1,17 @@
-"""Incremental extraction over a growing spans table.
+"""Structured Streaming over an arriving table, with batch facades.
 
 The reference's "streaming" is pipeline parallelism over bounded queues
 (``deploy/py_infer``, SURVEY.md §2.11) — batch semantics with flow control.
-The Spark-native equivalent for a continuously-ingested corpus is a file
-(or Iceberg incremental) stream + ``foreachBatch`` running the SAME batch
-extraction plan per micro-batch, writing partition-append output with an
-exactly-once checkpoint. The media table is a static (slowly-changing) side
-input joined per micro-batch, as the reference joins crops to their source
-image.
+The extraction itself is one batch plan, run by the spark-submit jobs
+through ``plans/lineage.run_bucketed``. What streaming adds here is two
+things the batch plan has no counterpart for: a watermarked tumbling-window
+aggregation over an event stream (:func:`stream_windowed_counts`) and a
+near-dup probe of arriving documents against a STORED dedup state
+(:func:`stream_dedup_flags`).
 
-``availableNow`` trigger processes the backlog and stops — the batch-job
-mode used in tests; remove the trigger for a long-running tail.
+Both streams run with the ``availableNow`` trigger: they process the
+backlog and stop. Each has a driver-gated facade that lands its input in a
+fresh directory, drains the query and returns the sink.
 """
 
 from __future__ import annotations
@@ -18,75 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..plans.extract import extract
-
-SPANS_DDL = (
-    "doc_id string, spans array<struct<kind:string,text:string,"
-    "media_ref:string,offset:int>>"
-)
-
-
-def stream_extract(
-    spark: SparkSession,
-    spans_dir: str,
-    media: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    mode: str = "fused",
-    available_now: bool = True,
-) -> StreamingQuery:
-    """File-stream the spans table; extract per micro-batch; parquet sink
-    partitioned by ``batch_id``.
-
-    Exactly-once = checkpointed offsets + an idempotent sink. foreachBatch
-    alone is at-least-once (a crash between the sink write and the offset
-    commit replays the micro-batch), so the sink must absorb replays: each
-    micro-batch dynamically OVERWRITES its own ``batch_id=N`` partition —
-    Structured Streaming guarantees a replayed batch has the same batch_id
-    and the same input rows, so the rewrite is a no-op, never a duplicate.
-    """
-    stream = (
-        spark.readStream.schema(SPANS_DDL)
-        .option("maxFilesPerTrigger", 4)
-        .parquet(spans_dir)
-    )
-
-    def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pyspark.sql import functions as F
-
-        sess = batch_df.sparkSession
-        out = extract(sess, batch_df, media, mode=mode).withColumn(
-            "batch_id", F.lit(int(batch_id))
-        )
-        (
-            out.write.partitionBy("batch_id")
-            .mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
-        )
-
-    writer = (
-        stream.writeStream.foreachBatch(process_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
 
 def stream_windowed_counts(
-    spark: SparkSession,
-    events_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    window: str = "1 hour",
-    watermark: str = "30 minutes",
-    available_now: bool = True,
+    spark: SparkSession, events_dir: str, out_dir: str, checkpoint_dir: str
 ) -> StreamingQuery:
-    """Watermarked tumbling-window aggregation over an event stream.
+    """Watermarked 1-hour tumbling-window aggregation over an event stream,
+    with a 30-minute watermark (the two figures ``STREAM_WINDOWED_SQL``
+    recomputes).
 
     Late events older than the watermark relative to the max seen ts are
     dropped; windows close and emit once finalized (append mode) — the
@@ -101,8 +40,8 @@ def stream_windowed_counts(
         .parquet(events_dir)
     )
     agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"))
+        stream.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"))
         .agg(F.count("*").alias("n"), F.round(F.sum("value"), 4).alias("sum_value"))
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -110,15 +49,14 @@ def stream_windowed_counts(
             "sum_value",
         )
     )
-    writer = (
+    return (
         agg.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 # --- driver-gated batch facade ----------------------------------------------
@@ -237,14 +175,14 @@ def stream_dedup_flags(
     state_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Streaming daily-crawl dedup: arriving documents are a file stream;
     each micro-batch computes its own shingle/band rows with the SAME
     kernels as the batch operator, probes the STORED corpus band table on
     (band_no, band_key), exact-verifies candidates against the stored
     shingle table, and appends per-arrival flags partitioned by batch_id
-    (idempotent overwrite — the stream_extract recovery contract).
+    (idempotent overwrite: a replayed micro-batch keeps its batch_id and
+    its input rows, so it rewrites its own partition, never duplicates it).
 
     This is :func:`mindocr_spark.operators.dedup.minhash_lsh_incremental`
     with its "at scale the corpus band table is stored" note made real:
@@ -307,12 +245,12 @@ def stream_dedup_flags(
         .option("maxFilesPerTrigger", 1)
         .parquet(docs_dir)
     )
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
+    return (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 ARRIVAL_OFFSET = 10_000_000
@@ -400,119 +338,3 @@ LEFT JOIN (
 
 
 STREAM_DEDUP_SQL = _stream_dedup_sql()
-
-
-# --- Streaming image-dedup probe: the phash twin -----------------------------
-
-
-def build_image_dedup_state(
-    spark: SparkSession, sf_dir: str, state_dir: str
-) -> None:
-    """Materialize the perceptual-hash state a streaming image ingest
-    probes: the Manku C(7,4) combo table of the corpus media's dHashes
-    (the image twin of :func:`build_dedup_state`'s band/shingle tables —
-    probe-ready combo keys stored, not recomputed per micro-batch)."""
-    from ..operators.dedup import MANKU64_BLOCKS, block_keys
-    from ..operators.multimodal import image_dhash_signatures
-
-    block_keys(
-        image_dhash_signatures(spark, sf_dir), "dhash", MANKU64_BLOCKS
-    ).write.mode("overwrite").parquet(f"{state_dir}/image_combos")
-
-
-def stream_image_dedup_flags(
-    spark: SparkSession,
-    images_dir: str,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Streaming image near-dup: arriving (media_ref, image) rows are a
-    file stream; each micro-batch dHashes its images with the shared
-    pure-numpy kernel, probes the STORED Manku combo table (C(7,4)
-    tables on >= 2^36-key prefixes — the ``simhash64_near_dup`` layout),
-    exact-filters on ``bit_count(xor) <= 3`` and appends per-arrival flags
-    partitioned by batch_id (idempotent overwrite). Undecodable payloads flag
-    ``n_dups = -1`` (the decode node's skip-and-count contract) rather
-    than vanishing."""
-    from pyspark.sql import functions as F
-
-    from ..config import persist_intermediate
-    from ..operators.dedup import MANKU64_BLOCKS, block_keys
-    from ..operators.multimodal import (
-        IMAGE_DHASH_SCHEMA,
-        PHASH_HAMMING_MAX,
-        image_dhash_iter,
-    )
-
-    stored_combos = spark.read.parquet(f"{state_dir}/image_combos").select(
-        F.col("media_ref").alias("ref_b"),
-        F.col("dhash").alias("dh_b"),
-        "combo_id",
-        "combo_key",
-    )
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # the dHash stage is CPU-bound Python feeding BOTH arr_bands and
-        # the final flags join — persist so each arrival decodes once
-        sig = persist_intermediate(
-            batch_df.select("media_ref", "image").mapInPandas(
-                image_dhash_iter, IMAGE_DHASH_SCHEMA
-            )
-        )
-        arr_combos = block_keys(
-            sig.filter("ok").select("media_ref", "dhash"), "dhash", MANKU64_BLOCKS
-        ).select(
-            F.col("media_ref").alias("ref_a"),
-            F.col("dhash").alias("dh_a"),
-            "combo_id",
-            "combo_key",
-        )
-        hits = (
-            arr_combos.join(stored_combos, ["combo_id", "combo_key"])
-            .withColumn(
-                "hamming", F.expr("cast(bit_count(dh_a ^ dh_b) as int)")
-            )
-            .filter(F.col("hamming") <= PHASH_HAMMING_MAX)
-            .select("ref_a", "ref_b", "hamming")
-            .distinct()
-            .groupBy("ref_a")
-            .agg(
-                F.count("*").cast("long").alias("n_dups"),
-                F.min("ref_b").alias("nearest_ref"),
-            )
-        )
-        flags = (
-            sig.select("media_ref", "ok")
-            .join(hits.withColumnRenamed("ref_a", "media_ref"), "media_ref", "left")
-            .select(
-                "media_ref",
-                F.when(~F.col("ok"), F.lit(-1).cast("long"))
-                .otherwise(F.coalesce("n_dups", F.lit(0).cast("long")))
-                .alias("n_dups"),
-                "nearest_ref",
-                F.lit(batch_id).alias("batch_id"),
-            )
-        )
-        (
-            flags.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_dir)
-        )
-        sig.unpersist()
-
-    stream = (
-        spark.readStream.schema("media_ref string, image binary")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(images_dir)
-    )
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -123,7 +123,9 @@ def test_derive_corpus_memoization_exact(spark):
     import os
 
     cached_spans, cached_media = dc.derive_corpus(spark, SF_DIR)
-    fresh_spans, fresh_media = dc.derive_corpus(spark, SF_DIR, materialize=False)
+    fresh_spans, fresh_media = dc.derive_from_docs(
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    )
     fp = dc._source_fingerprint(f"{SF_DIR}/documents.parquet")
     assert (SF_DIR, fp) in dc._CORPUS_CACHE
 

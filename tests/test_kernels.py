@@ -7,9 +7,10 @@ import pytest
 
 from mindocr_spark.config import CHARSET, DROP_SCORE
 from mindocr_spark.functions.glyphs import render_page
-from mindocr_spark.kernels.cls import cls_probs
+from mindocr_spark.functions.imaging import rotate180
+from mindocr_spark.kernels.cls import cls_probs_from_analyses
 from mindocr_spark.kernels.det import db_postprocess, det_resize, det_score
-from mindocr_spark.kernels.rec import rec_logits, rec_resize_norm
+from mindocr_spark.kernels.rec import analyze_crop, head_logits, rec_resize_norm
 from mindocr_spark.kernels.system import (
     crop_box,
     detect_quads,
@@ -84,7 +85,7 @@ class TestRecognize:
     def test_logits_contract(self):
         page, _ = _page_for("ab")
         crop = crop_box(page, detect_quads(page)[0])
-        logits = rec_logits(rec_resize_norm(crop))
+        logits = head_logits(analyze_crop(rec_resize_norm(crop)))
         assert logits.ndim == 2 and logits.shape[1] == len(CHARSET) + 1
         assert logits.dtype == np.float32
 
@@ -93,7 +94,10 @@ class TestCls:
     def test_upright_label_0(self):
         page, _ = _page_for("reading")
         crop = crop_box(page, detect_quads(page)[0])
-        probs = cls_probs(crop)
+        up = rec_resize_norm(crop)
+        probs = cls_probs_from_analyses(
+            analyze_crop(up), analyze_crop(rotate180(up))
+        )
         assert probs.argmax() == 0 and probs[0] > 0.9
 
     def test_rotated_page_recovered(self):

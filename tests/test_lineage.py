@@ -12,7 +12,6 @@ from mindocr_spark.plans.extract import extract, load_corpus
 from mindocr_spark.plans.lineage import (
     completed_buckets,
     read_lineage,
-    read_output,
     run_extract_job,
 )
 
@@ -51,7 +50,7 @@ def test_full_run_then_noop_resume(spark, corpus, tmp_path):
 
     # output equals the direct plan
     direct = extract(spark, spans, media, mode="fused")
-    assert _sorted_tuples(read_output(spark, out)) == _sorted_tuples(direct)
+    assert _sorted_tuples(spark.read.parquet(out)) == _sorted_tuples(direct)
 
     # resume with everything complete: nothing reprocessed
     stats2 = run_extract_job(spark, spans, media, out, n_buckets=N_BUCKETS, run_id="r2")
@@ -84,7 +83,7 @@ def test_resume_recomputes_only_missing_bucket(spark, corpus, tmp_path):
     assert stats["buckets_processed"] >= 1
     redone = read_lineage(spark, out).filter(F.col("run_id") == "r2")
     assert victim in {r["bucket"] for r in redone.select("bucket").collect()}
-    assert _sorted_tuples(read_output(spark, out)) == direct
+    assert _sorted_tuples(spark.read.parquet(out)) == direct
 
     # the resume OCR'd only the victim bucket's refs: the pending-bucket
     # filter reached the OCR input, not just the written output
@@ -130,7 +129,7 @@ def test_lineage_exploded_salted(spark, corpus, tmp_path):
     )
     assert stats["buckets_processed"] == len(completed_buckets(spark, out))
     direct = extract(spark, spans, media, mode="fused")
-    assert _sorted_tuples(read_output(spark, out)) == _sorted_tuples(direct)
+    assert _sorted_tuples(spark.read.parquet(out)) == _sorted_tuples(direct)
 
 
 def test_resume_stats_scan_prunes_partitions(spark, corpus, tmp_path):

@@ -45,7 +45,10 @@ def test_image_meta_junk(spark):
 def test_dhash_kernel_identity_noise_distinct():
     import numpy as np
 
-    from mindocr_spark.functions.phash import dhash64, hamming64
+    from mindocr_spark.functions.phash import dhash64
+
+    def hamming64(a, b):
+        return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
     rng = np.random.default_rng(7)
     base = rng.integers(0, 256, size=(96, 128), dtype=np.uint8)

@@ -1,69 +1,9 @@
-"""Incremental (Structured Streaming) extraction: stream output == batch
-output; checkpoint prevents reprocessing."""
+"""Structured Streaming: the watermarked window aggregation, the stored-state
+near-dup probe and their driver facades."""
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
-from mindocr_spark.plans.extract import extract, load_corpus
-from mindocr_spark.streaming.incremental import stream_extract
-
-
-def _write_spans_slice(spans_pdf, path):
-    span_struct = pa.struct(
-        [
-            ("kind", pa.string()),
-            ("text", pa.string()),
-            ("media_ref", pa.string()),
-            ("offset", pa.int32()),
-        ]
-    )
-    tbl = pa.table(
-        {
-            "doc_id": pa.array(spans_pdf["doc_id"], pa.string()),
-            "spans": pa.array(spans_pdf["spans"], pa.list_(span_struct)),
-        }
-    )
-    pq.write_table(tbl, path)
-
-
-def _tuples(df):
-    return sorted(
-        (
-            r["doc_id"],
-            tuple(
-                (s["kind"], s["text"], s["media_ref"], s["order"])
-                for s in r["out_spans"]
-            ),
-        )
-        for r in df.collect()
-    )
-
-
-def test_stream_matches_batch(spark, small_corpus, tmp_path):
-    corpus_dir, spans_pdf, _ = small_corpus
-    _, media = load_corpus(spark, corpus_dir)
-
-    spans_dir = tmp_path / "spans_stream"
-    spans_dir.mkdir()
-    # two arriving files
-    _write_spans_slice(spans_pdf.iloc[:10], str(spans_dir / "part0.parquet"))
-    _write_spans_slice(spans_pdf.iloc[10:], str(spans_dir / "part1.parquet"))
-
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    q = stream_extract(spark, str(spans_dir), media, out_dir, ckpt)
-    q.awaitTermination(240)
-
-    got = _tuples(spark.read.parquet(out_dir))
-    spans, _ = load_corpus(spark, corpus_dir)
-    want = _tuples(extract(spark, spans, media, mode="fused"))
-    assert got == want
-
-    # restart on the same checkpoint: nothing reprocessed, no duplicates
-    q2 = stream_extract(spark, str(spans_dir), media, out_dir, ckpt)
-    q2.awaitTermination(120)
-    assert _tuples(spark.read.parquet(out_dir)) == want
+from mindocr_spark.streaming.incremental import _drain
 
 
 def test_watermarked_window_drops_late_events(spark, tmp_path):
@@ -104,34 +44,12 @@ def test_watermarked_window_drops_late_events(spark, tmp_path):
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_windowed_counts(spark, str(ev_dir), out, ckpt)
-    q.awaitTermination(240)
+    _drain(stream_windowed_counts(spark, str(ev_dir), out, ckpt), 240)
 
     rows = {r["window_start"]: r for r in spark.read.parquet(out).collect()}
     # the 10:00 window closed with ONLY the two on-time events
     assert rows["2024-01-01 10:00:00"]["n"] == 2
     assert rows["2024-01-01 10:00:00"]["sum_value"] == 3.0
-
-
-def test_stream_replay_is_idempotent(spark, small_corpus, tmp_path):
-    """Exactly-once = offsets + idempotent sink: reprocessing the same input
-    (checkpoint lost, batches replayed with the same batch ids) dynamically
-    overwrites each batch_id=N partition instead of appending duplicates."""
-    corpus_dir, spans_pdf, _ = small_corpus
-    _, media = load_corpus(spark, corpus_dir)
-    spans_dir = tmp_path / "spans_stream"
-    spans_dir.mkdir()
-    _write_spans_slice(spans_pdf, str(spans_dir / "part0.parquet"))
-    out_dir = str(tmp_path / "out")
-
-    q = stream_extract(spark, str(spans_dir), media, out_dir, str(tmp_path / "c1"))
-    q.awaitTermination(240)
-    want = _tuples(spark.read.parquet(out_dir))
-
-    # fresh checkpoint, same sink: the whole input replays as batch 0 again
-    q2 = stream_extract(spark, str(spans_dir), media, out_dir, str(tmp_path / "c2"))
-    q2.awaitTermination(240)
-    assert _tuples(spark.read.parquet(out_dir)) == want
 
 
 def test_stream_windowed_counts_batch_equals_closed_windows(spark):
@@ -231,8 +149,7 @@ def test_stream_dedup_flags_probe_stored_state(spark, tmp_path):
 
     out = str(tmp_path / "flags")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_dedup_flags(spark, str(land), state, out, ckpt)
-    q.awaitTermination(240)
+    _drain(stream_dedup_flags(spark, str(land), state, out, ckpt), 240)
 
     flags = spark.read.parquet(out).toPandas().sort_values("doc_id", ignore_index=True)
     assert len(flags) == len(arriving)
@@ -286,67 +203,9 @@ def test_stream_dedup_flags_probe_stored_state(spark, tmp_path):
     assert got_flagged.nearest.to_dict() == want_flags.nearest.astype(int).to_dict()
 
     # restart: availableNow over a consumed checkpoint is a no-op
-    q2 = stream_dedup_flags(spark, str(land), state, out, ckpt)
-    q2.awaitTermination(120)
+    _drain(stream_dedup_flags(spark, str(land), state, out, ckpt), 120)
     again = spark.read.parquet(out).toPandas()
     assert len(again) == len(flags)
-
-
-def test_stream_image_dedup_flags(spark, tmp_path):
-    """Arriving images probe the stored dHash state: a lightly perturbed
-    copy of a stored page flags its original; a fresh random image flags
-    nothing; junk bytes flag -1 (decode-skip contract)."""
-    import numpy as np
-    import pandas as pd
-
-    from mindocr_spark.functions.png_codec import decode_png, encode_png
-    from mindocr_spark.streaming.incremental import (
-        build_image_dedup_state,
-        stream_image_dedup_flags,
-    )
-
-    sf = "/root/testdata/sf0.001"
-    state = str(tmp_path / "istate")
-    build_image_dedup_state(spark, sf, state)
-    combos = spark.read.parquet(f"{state}/image_combos")
-    sigs = combos.limit(1).collect()
-    assert sigs, "corpus must contribute at least one decodable image"
-    # round-6 layout: the stored state is the Manku combo table (35 rows
-    # per image on >= 2^36-key prefixes), not the bounded 16-bit bands
-    n_imgs = combos.select("media_ref").distinct().count()
-    assert combos.count() == 35 * n_imgs
-    ref0 = sigs[0]["media_ref"]
-
-    from mindocr_spark.data.derive_corpus import derive_corpus
-
-    _, media = derive_corpus(spark, sf)
-    src = media.filter(media.media_ref == ref0).select("image").collect()[0][0]
-    img = decode_png(bytes(src)).astype(np.int16)
-    img[::17, ::13] += 1
-    perturbed = encode_png(np.clip(img, 0, 255).astype("uint8"))
-    rng = np.random.default_rng(3)
-    fresh = encode_png(rng.integers(0, 256, size=(64, 96), dtype="uint8"))
-
-    land = tmp_path / "img_arrivals"
-    land.mkdir()
-    pd.DataFrame(
-        {
-            "media_ref": ["arr_copy", "arr_fresh", "arr_junk"],
-            "image": [perturbed, fresh, b"not a png"],
-        }
-    ).to_parquet(land / "b0.parquet", index=False)
-
-    out = str(tmp_path / "iflags")
-    q = stream_image_dedup_flags(
-        spark, str(land), state, out, str(tmp_path / "ickpt")
-    )
-    q.awaitTermination(240)
-    flags = {
-        r.media_ref: r.asDict() for r in spark.read.parquet(out).collect()
-    }
-    assert flags["arr_copy"]["n_dups"] >= 1
-    assert flags["arr_fresh"]["n_dups"] == 0
-    assert flags["arr_junk"]["n_dups"] == -1 and flags["arr_junk"]["nearest_ref"] is None
 
 
 class _StalledQuery:

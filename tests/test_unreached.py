@@ -1,0 +1,67 @@
+"""Every engine definition has a production caller or an allow-list entry
+(tools/unreached.py). No Spark session."""
+
+from __future__ import annotations
+
+import sys
+
+sys.path.insert(0, ".")
+
+from tools.unreached import report  # noqa: E402
+
+
+def test_repo_has_no_unreached_definitions():
+    unreached, stale = report(".")
+    assert unreached == [], "engine definitions no production path reaches"
+    assert stale == [], "allow-list entries that name nothing unreached"
+
+
+def _write(root, rel, src):
+    path = root / rel
+    path.parent.mkdir(parents=True, exist_ok=True)
+    path.write_text(src)
+
+
+def test_scan_reports_test_only_code_and_follows_fstrings(tmp_path):
+    _write(tmp_path, "mindocr_spark/__init__.py", "")
+    _write(
+        tmp_path,
+        "mindocr_spark/engine.py",
+        'def run():\n'
+        '    """Mentions only_tested, which does not count."""\n'
+        '    return f"SELECT {_fragment_sql()} FROM t"\n'
+        "\n\n"
+        "def _fragment_sql():\n"
+        '    return "1"\n'
+        "\n\n"
+        "def only_tested():\n"
+        "    return 2\n"
+        "\n\n"
+        "def kept():\n"
+        "    return _kept_helper()\n"
+        "\n\n"
+        "def _kept_helper():\n"
+        "    return 3\n",
+    )
+    _write(
+        tmp_path,
+        "jobs/job.py",
+        "from mindocr_spark.engine import run\n\nrun()\n",
+    )
+    _write(
+        tmp_path,
+        "tests/test_engine.py",
+        "from mindocr_spark.engine import kept, only_tested\n\n"
+        "def test_it():\n    assert only_tested() + kept() == 5\n",
+    )
+    unreached, stale = report(str(tmp_path), allowed={})
+    assert unreached == ["engine._kept_helper", "engine.kept", "engine.only_tested"]
+    assert stale == []
+
+    # an allowed definition keeps what it uses; an entry for a reached or
+    # missing definition is stale
+    unreached, stale = report(
+        str(tmp_path), allowed={"engine.kept": "", "engine.run": "", "engine.gone": ""}
+    )
+    assert unreached == ["engine.only_tested"]
+    assert stale == ["engine.gone", "engine.run"]
