@@ -3,7 +3,11 @@
 Replaces the reference's cv2/shapely/pyclipper geometry:
 
 - ``min_area_rect`` ~ ``cv2.minAreaRect`` + ``cv2.boxPoints``
-  (``mindocr/postprocess/det_db_postprocess.py:142-174``).
+  (``mindocr/postprocess/det_db_postprocess.py:142-174``). Its inputs are a
+  few to ~150 points, so the per-call numpy overhead is the cost: the
+  bounding-box fast path and the monotone chain run on python floats (the
+  same IEEE arithmetic), and the calipers project the hull onto every
+  candidate angle in one numpy step.
 - ``order_points_clockwise`` ~ ``tools/infer/text/predict_det.py:151-161``.
 - ``offset_convex_poly`` ~ pyclipper unclip ``expand_poly``
   (``mindocr/data/transforms/det_transforms.py:553-556``), exact for convex
@@ -21,22 +25,6 @@ from __future__ import annotations
 import numpy as np
 
 
-def row_extremes_xy(pts_yx: np.ndarray) -> np.ndarray:
-    """Reduce a dense (y,x) pixel set to per-row x-extremes, returned as
-    (x,y) points. The convex hull of a row-run set only uses each row's min
-    and max x, so min_area_rect over components drops from O(pixels) to
-    O(rows) without changing the result."""
-    ys = pts_yx[:, 0]
-    xs = pts_yx[:, 1]
-    order = np.lexsort((xs, ys))
-    ys_s = ys[order]
-    xs_s = xs[order]
-    _, first = np.unique(ys_s, return_index=True)
-    last = np.concatenate([first[1:] - 1, [len(ys_s) - 1]])
-    sel = np.unique(np.concatenate([first, last]))
-    return np.stack([xs_s[sel], ys_s[sel]], axis=1).astype(np.float64)
-
-
 def convex_hull(points: np.ndarray) -> np.ndarray:
     """Andrew monotone chain. points (N,2) -> hull (M,2) counter-clockwise
     in image coords (y down), no duplicate endpoint.
@@ -45,7 +33,8 @@ def convex_hull(points: np.ndarray) -> np.ndarray:
     the pop-loop costs ~10x the same math on floats, and np.unique(axis=0)
     costs more than the dedup it does — sorted(set(...)) gives the same
     lexicographic (x, y) order."""
-    pts = sorted({(float(x), float(y)) for x, y in np.asarray(points, dtype=np.float64)})
+    rows = np.asarray(points, dtype=np.float64).reshape(-1, 2).tolist()
+    pts = sorted({(x, y) for x, y in rows})
     if len(pts) <= 2:
         return np.array(pts, dtype=np.float64)
 
@@ -67,43 +56,41 @@ def convex_hull(points: np.ndarray) -> np.ndarray:
     return np.array(lower[:-1] + upper[:-1], dtype=np.float64)
 
 
-def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float, float]:
-    """Minimum-area enclosing rectangle via rotating calipers.
+def _bbox_rect(pts: np.ndarray) -> tuple[np.ndarray, float, float] | None:
+    """``min_area_rect``'s fast path: the bounding box when all four of its
+    corners are in the point set and every point lies on its border (the
+    shape of per-row extremes of an axis-aligned filled region) — the
+    minimal enclosing rectangle of a rectangle's corners is that rectangle.
+    None otherwise. Runs on python floats; a NaN point fails the range
+    check, as it fails numpy's min/max comparison."""
+    if len(pts) < 4:
+        return None
+    rows = pts.tolist()
+    xs = [p[0] for p in rows]
+    ys = [p[1] for p in rows]
+    x0, x1, y0, y1 = min(xs), max(xs), min(ys), max(ys)
+    if not (x1 > x0 and y1 > y0):
+        return None
+    corners_seen = set()
+    for x, y in rows:
+        if not (x0 <= x <= x1 and y0 <= y <= y1):
+            return None
+        on_x = x == x0 or x == x1
+        on_y = y == y0 or y == y1
+        if not (on_x or on_y):
+            return None
+        if on_x and on_y:
+            corners_seen.add((x, y))
+    if len(corners_seen) < 4:
+        return None
+    rect = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], dtype=np.float64)
+    w = x1 - x0
+    h = y1 - y0
+    return rect, float(min(w, h)), float(max(w, h))
 
-    Returns (corners (4,2) float64, short_side, long_side). Corners are in
-    clockwise order starting top-left (see ``order_points_clockwise``).
 
-    Fast path: when all four bounding-box corners are themselves in the
-    point set (the shape of per-row extremes of an axis-aligned filled
-    region), the bbox is provably the minimum rectangle — the minimal
-    enclosing rectangle of a rectangle's corners is that rectangle — so the
-    hull/calipers can be skipped.
-    """
-    pts0 = np.asarray(points, dtype=np.float64)
-    if len(pts0) >= 4:
-        xs = pts0[:, 0]
-        ys = pts0[:, 1]
-        x0 = xs.min()
-        x1 = xs.max()
-        y0 = ys.min()
-        y1 = ys.max()
-        if x1 > x0 and y1 > y0:
-            on_x0 = xs == x0
-            on_x1 = xs == x1
-            corners_present = (
-                np.any(on_x0 & (ys == y0))
-                and np.any(on_x1 & (ys == y0))
-                and np.any(on_x1 & (ys == y1))
-                and np.any(on_x0 & (ys == y1))
-            )
-            if corners_present and np.all(on_x0 | on_x1 | (ys == y0) | (ys == y1)):
-                rect = np.array(
-                    [[x0, y0], [x1, y0], [x1, y1], [x0, y1]], dtype=np.float64
-                )
-                w = float(x1 - x0)
-                h = float(y1 - y0)
-                return rect, float(min(w, h)), float(max(w, h))
-    hull = convex_hull(points)
+def _hull_rect(hull: np.ndarray) -> tuple[np.ndarray, float, float]:
+    """Rotating calipers over a convex hull (``convex_hull``'s output)."""
     if len(hull) == 1:
         c = np.tile(hull[0], (4, 1))
         return c, 0.0, 0.0
@@ -112,15 +99,17 @@ def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float, float]:
         corners = np.array([a, b, b, a], dtype=np.float64)
         side = float(np.linalg.norm(b - a))
         return order_points_clockwise(corners), 0.0, side
-    edges = np.roll(hull, -1, axis=0) - hull
+    edges = np.concatenate((hull[1:], hull[:1])) - hull
     angles = np.unique(np.mod(np.arctan2(edges[:, 1], edges[:, 0]), np.pi / 2))
     # all candidate angles in one shot: px/py = hull projected onto every
-    # rotated frame (A, N) — replaces a python loop of tiny matmuls
-    ca, sa = np.cos(angles), np.sin(angles)
-    px = np.outer(ca, hull[:, 0]) + np.outer(sa, hull[:, 1])
-    py = -np.outer(sa, hull[:, 0]) + np.outer(ca, hull[:, 1])
-    mnx, mxx = px.min(axis=1), px.max(axis=1)
-    mny, mxy = py.min(axis=1), py.max(axis=1)
+    # rotated frame (A, N) — replaces a python loop of tiny matmuls; the
+    # broadcast products are np.outer's, elementwise
+    ca, sa = np.cos(angles)[:, None], np.sin(angles)[:, None]
+    hx, hy = hull[:, 0], hull[:, 1]
+    px = ca * hx + sa * hy
+    py = -(sa * hx) + ca * hy
+    mnx, mxx = np.minimum.reduce(px, axis=1), np.maximum.reduce(px, axis=1)
+    mny, mxy = np.minimum.reduce(py, axis=1), np.maximum.reduce(py, axis=1)
     areas = (mxx - mnx) * (mxy - mny)
     # exact replica of the original running-best update (strictly-better by
     # 1e-9), now over precomputed scalars instead of per-angle matmuls
@@ -131,8 +120,8 @@ def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float, float]:
         if area_list[i] < best_area - 1e-9:
             k, best_area = i, area_list[i]
     ang = float(angles[k])
-    mn = np.array([mnx[k], mny[k]])
-    mx = np.array([mxx[k], mxy[k]])
+    mn = (float(mnx[k]), float(mny[k]))
+    mx = (float(mxx[k]), float(mxy[k]))
     c, s = np.cos(ang), np.sin(ang)
     rot = np.array([[c, s], [-s, c]])
     rect = np.array(
@@ -156,9 +145,24 @@ def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float, float]:
         rows.reverse()
     start = min(range(4), key=lambda i: (rows[i][1], rows[i][0]))
     corners = np.array(rows[start:] + rows[:start], dtype=np.float64)
-    w = float(mx[0] - mn[0])
-    h = float(mx[1] - mn[1])
+    w = mx[0] - mn[0]
+    h = mx[1] - mn[1]
     return corners, float(min(w, h)), float(max(w, h))
+
+
+def min_area_rect(points: np.ndarray) -> tuple[np.ndarray, float, float]:
+    """Minimum-area enclosing rectangle via rotating calipers.
+
+    Returns (corners (4,2) float64, short_side, long_side). Corners are in
+    clockwise order starting top-left (see ``order_points_clockwise``).
+
+    Fast path (:func:`_bbox_rect`): when all four bounding-box corners are
+    in the point set and no point is off its border, the bbox is the
+    minimum rectangle and the hull/calipers are skipped.
+    """
+    pts = np.asarray(points, dtype=np.float64)
+    fast = _bbox_rect(pts)
+    return fast if fast is not None else _hull_rect(convex_hull(pts))
 
 
 def order_points_clockwise(pts: np.ndarray) -> np.ndarray:

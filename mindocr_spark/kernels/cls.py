@@ -26,6 +26,16 @@ _ALIGN_K = 0.5  # weight on the baseline-alignment evidence (px^2 variance)
 Analysis = list  # [(box, sims)] from rec.analyze_crop
 
 
+def _var(a: np.ndarray) -> float:
+    """``a.var()`` by the ufunc steps numpy's ``_var`` takes (add-reduce,
+    divide, subtract, square, add-reduce, divide): the same bits without
+    the method's dispatch and keepdims wrapping. A python sum would not
+    follow numpy's pairwise summation order."""
+    n = len(a)
+    dev = a - np.add.reduce(a) / n
+    return float(np.add.reduce(dev * dev) / n)
+
+
 def _orientation_evidence(analysis: Analysis) -> tuple[float, float]:
     """Returns (mean template similarity, alignment = var(tops)-var(bottoms)).
 
@@ -34,11 +44,11 @@ def _orientation_evidence(analysis: Analysis) -> tuple[float, float]:
     """
     if not analysis:
         return 0.0, 0.0
-    sims = [float(s.max()) for _b, s in analysis]
-    tops = np.array([b[0] for b, _s in analysis], dtype=np.float64)
-    bottoms = np.array([b[1] for b, _s in analysis], dtype=np.float64)
-    align = float(tops.var() - bottoms.var())
-    return float(np.mean(sims)), align
+    n = len(analysis)
+    sims = np.array([s.max() for _b, s in analysis], dtype=np.float64)
+    edges = np.array([b[:2] for b, _s in analysis], dtype=np.float64)
+    align = _var(edges[:, 0]) - _var(edges[:, 1])
+    return float(np.add.reduce(sims) / n), align
 
 
 def cls_probs_from_analyses(up_analysis: Analysis, flip_analysis: Analysis) -> np.ndarray:

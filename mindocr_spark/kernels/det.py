@@ -17,6 +17,12 @@ candidate fit (``box_type='quad'``: min-area rect, drop short side < 3;
 ``'poly'``: simplified convex contour) -> unclip x1.5 -> re-fit rect (drop
 short side < 5) -> rescale to source space (quads in clockwise vertex
 order).
+
+Both stages keep components as runs (``imaging.label_runs`` once per map,
+``imaging.component_order`` for the top-left order): a rect is fit to the
+per-row run extremes (``imaging.row_extremes``), and pixels are expanded
+only where a value needs them, the box score's mean (in the same raster
+pixel order) and the poly contour.
 """
 
 from __future__ import annotations
@@ -44,10 +50,17 @@ from ..functions.geometry import (
     order_points_clockwise,
     poly_area_perimeter,
     rescale_polys,
-    row_extremes_xy,
     unclip,
 )
-from ..functions.imaging import connected_components, resize_bilinear, trace_boundary
+from ..functions.imaging import (
+    component_order,
+    label_runs,
+    resize_bilinear,
+    row_extremes,
+    row_runs,
+    run_pixels,
+    trace_boundary,
+)
 
 _H_BRIDGE = 7  # horizontal dilation radius: merges intra-word glyph gaps
 # (<=14px), keeps words >=40px apart separate — the word-level blob behavior
@@ -71,19 +84,25 @@ def det_resize(img: np.ndarray) -> tuple[np.ndarray, tuple[int, int, float, floa
     return resized, (src_h, src_w, out_h / src_h, out_w / src_w)
 
 
-def _dilate_h(mask: np.ndarray, radius: int) -> np.ndarray:
-    """Horizontal binary dilation via windowed run-sum (cumsum trick)."""
-    c = np.zeros((mask.shape[0], mask.shape[1] + 1), dtype=np.int32)
-    np.cumsum(mask.astype(np.int32), axis=1, out=c[:, 1:])
-    w = mask.shape[1]
-    lo = np.clip(np.arange(w) - radius, 0, w)
-    hi = np.clip(np.arange(w) + radius + 1, 0, w)
-    return (c[:, hi] - c[:, lo]) > 0
-
-
-def _dilate_v(mask: np.ndarray, radius: int) -> np.ndarray:
-    """Vertical binary dilation (merges i/j tittles into the word blob)."""
-    return _dilate_h(mask.T, radius).T
+def _dilate(mask: np.ndarray, radius: int, axis: int) -> np.ndarray:
+    """Binary dilation along ``axis`` (1: horizontal, 0: vertical): the
+    mask zero-padded by ``radius`` on both sides, then window ORs that
+    double their span (1, 2, 4, ... up to ``2 * radius + 1``) by OR-ing two
+    slices — no running sums, gathers or transposes."""
+    shape = list(mask.shape)
+    shape[axis] += 2 * radius
+    acc = np.zeros(shape, dtype=bool)
+    head = [slice(None), slice(None)]
+    head[axis] = slice(radius, radius + mask.shape[axis])
+    acc[tuple(head)] = mask
+    span, width = 1, 2 * radius + 1
+    tail = [slice(None), slice(None)]
+    while span < width:  # acc[i] = OR of the padded mask's [i, i + span)
+        step = min(span, width - span)
+        head[axis], tail[axis] = slice(None, -step), slice(step, None)
+        acc = acc[tuple(head)] | acc[tuple(tail)]
+        span += step
+    return acc
 
 
 def _solve_shrink_distance(rect: np.ndarray) -> float:
@@ -112,38 +131,44 @@ def _solve_shrink_distance(rect: np.ndarray) -> float:
 
 
 def _fill_convex_poly(prob: np.ndarray, poly: np.ndarray, value: float) -> None:
-    """Set pixels whose centers lie inside the convex polygon."""
+    """Set pixels whose centers lie inside the convex polygon.
+
+    The polygon's few vertices are python floats (the same IEEE values and
+    arithmetic as numpy scalars), and each edge's half-plane test
+    broadcasts a row term against a column term instead of two meshgrids.
+    Callers pass polygons of area well above 0, so the shoelace sign is the
+    winding."""
     h, w = prob.shape
-    x0 = max(int(np.floor(poly[:, 0].min())), 0)
-    x1 = min(int(np.ceil(poly[:, 0].max())) + 1, w)
-    y0 = max(int(np.floor(poly[:, 1].min())), 0)
-    y1 = min(int(np.ceil(poly[:, 1].max())) + 1, h)
+    pts = np.asarray(poly, dtype=np.float64).tolist()
+    pxs = [p[0] for p in pts]
+    pys = [p[1] for p in pts]
+    x0 = max(math.floor(min(pxs)), 0)
+    x1 = min(math.ceil(max(pxs)) + 1, w)
+    y0 = max(math.floor(min(pys)), 0)
+    y1 = min(math.ceil(max(pys)) + 1, h)
     if x0 >= x1 or y0 >= y1:
         return
+    n = len(pts)
+    edges = [(pts[i], pts[(i + 1) % n]) for i in range(n)]
     # axis-aligned fast path: every edge horizontal or vertical -> the
     # inclusive half-plane tests reduce to a slice fill with identical
     # pixel-center semantics (ceil(min) .. floor(max) inclusive)
-    dx = np.abs(np.diff(np.append(poly[:, 0], poly[0, 0])))
-    dy = np.abs(np.diff(np.append(poly[:, 1], poly[0, 1])))
-    if bool(((dx < 1e-12) | (dy < 1e-12)).all()):
-        ax0 = max(int(np.ceil(poly[:, 0].min())), 0)
-        ax1 = min(int(np.floor(poly[:, 0].max())) + 1, w)
-        ay0 = max(int(np.ceil(poly[:, 1].min())), 0)
-        ay1 = min(int(np.floor(poly[:, 1].max())) + 1, h)
+    if all(abs(bx - ax) < 1e-12 or abs(by - ay) < 1e-12 for (ax, ay), (bx, by) in edges):
+        ax0 = max(math.ceil(min(pxs)), 0)
+        ax1 = min(math.floor(max(pxs)) + 1, w)
+        ay0 = max(math.ceil(min(pys)), 0)
+        ay1 = min(math.floor(max(pys)) + 1, h)
         if ax0 < ax1 and ay0 < ay1:
             prob[ay0:ay1, ax0:ax1] = value
         return
-    xs, ys = np.meshgrid(np.arange(x0, x1), np.arange(y0, y1))
-    inside = np.ones(xs.shape, dtype=bool)
-    n = len(poly)
+    xs = np.arange(x0, x1)[None, :]
+    ys = np.arange(y0, y1)[:, None]
     # consistent winding sign from shoelace
-    px, py = poly[:, 0], poly[:, 1]
-    sign = 1.0 if 0.5 * (np.dot(px, np.roll(py, -1)) - np.dot(py, np.roll(px, -1))) > 0 else -1.0
-    for i in range(n):
-        ax, ay = poly[i]
-        bx, by = poly[(i + 1) % n]
+    clockwise = sum(ax * by - ay * bx for (ax, ay), (bx, by) in edges) <= 0
+    inside = np.ones((y1 - y0, x1 - x0), dtype=bool)
+    for (ax, ay), (bx, by) in edges:
         cross = (bx - ax) * (ys - ay) - (by - ay) * (xs - ax)
-        inside &= sign * cross >= 0
+        inside &= (cross <= 0) if clockwise else (cross >= 0)
     region = prob[y0:y1, x0:x1]
     region[inside] = value
 
@@ -161,17 +186,33 @@ def det_score(img: np.ndarray) -> np.ndarray:
     DB head is trained to produce (``det_db_head.py:8-57`` +
     ``ShrinkBinaryMap``). ``db_postprocess``'s standard threshold ->
     rect-fit -> unclip then restores the full word box.
+
+    Words stay runs throughout: the blobs are labeled once, each ink run
+    lies inside exactly one blob run (the dilation only grows ink), so one
+    ``searchsorted`` gives every ink run its word, and a word's rect is fit
+    to its ink's per-row extremes (:func:`imaging.row_extremes`).
     """
-    ink = img.astype(np.float32) < 127.5
-    blobs = _dilate_v(_dilate_h(ink, _H_BRIDGE), _V_BRIDGE)
+    ink = np.asarray(img, dtype=np.float32) < 127.5
+    blobs = _dilate(_dilate(ink, _H_BRIDGE, 1), _V_BRIDGE, 0)
     prob = np.full(img.shape, _PROB_BG, dtype=np.float32)
-    for comp in connected_components(blobs):
-        sel = ink[comp[:, 0], comp[:, 1]]
-        pts = comp[sel]
-        if len(pts) == 0:
+    by, bx0, _bx1, root = label_runs(blobs)
+    order, bounds = component_order(by, bx0, root)
+    word = np.empty(len(by), dtype=np.int64)
+    word[order] = np.repeat(np.arange(len(bounds) - 1), np.diff(bounds))
+    iy, ix0, ix1 = row_runs(ink)
+    stride = img.shape[1] + 1
+    blob_run = np.searchsorted(by * stride + bx0, iy * stride + ix0, side="right") - 1
+    ink_word = word[blob_run]
+    by_word = np.argsort(ink_word, kind="stable")  # raster order within a word
+    word_bounds = np.searchsorted(ink_word[by_word], np.arange(len(bounds)))
+    xy, pt_bounds = row_extremes(
+        iy[by_word], ix0[by_word], ix1[by_word], word_bounds
+    )
+    bounds = pt_bounds.tolist()
+    for lo, hi in zip(bounds[:-1], bounds[1:]):
+        if lo == hi:
             continue
-        xy = row_extremes_xy(pts)
-        rect, short, _ = min_area_rect(xy)
+        rect, short, _ = min_area_rect(xy[lo:hi])
         if short <= 0:
             continue
         d = _solve_shrink_distance(rect)
@@ -180,12 +221,6 @@ def det_score(img: np.ndarray) -> np.ndarray:
         # pixel; overshoot slightly so the restored box never clips ink
         _fill_convex_poly(prob, offset_convex_poly(shrunk, 1.25), _PROB_FG)
     return prob
-
-
-def _quad_candidate(pts: np.ndarray) -> np.ndarray | None:
-    """A component's min-area rect; None when its short side < 3."""
-    rect, short_side, _ = min_area_rect(row_extremes_xy(pts))
-    return rect if short_side >= MIN_SIDE_BEFORE_UNCLIP else None
 
 
 def _poly_candidate(pts: np.ndarray) -> np.ndarray | None:
@@ -211,24 +246,46 @@ def db_postprocess(
     """Prob map -> (int64 polys in source coords, scores), DBPostprocess
     semantics. Deterministic component order: by component top-left.
 
-    ``box_type='quad'`` fits each candidate's min-area rect and emits the
-    clockwise (4,2) rect of its unclipped box; ``box_type='poly'``
-    (``det_db_postprocess.py:103-107,119-120,126-128``) fits the simplified
-    contour and emits the unclipped ragged polygon itself — the
-    representation curved/irregular text needs. Either way the unclipped
-    box's min-area-rect short side must clear ``min_size + 2``."""
+    ``box_type='quad'`` fits each candidate's min-area rect (short side
+    >= 3) and emits the clockwise (4,2) rect of its unclipped box;
+    ``box_type='poly'`` (``det_db_postprocess.py:103-107,119-120,126-128``)
+    fits the simplified contour and emits the unclipped ragged polygon
+    itself — the representation curved/irregular text needs. Either way the
+    unclipped box's min-area-rect short side must clear ``min_size + 2``.
+
+    Components stay runs: the score is the mean of the component's pixels
+    in raster order (the only per-pixel value), the quad candidate is fit
+    to the per-row run extremes, and only the poly contour expands pixels.
+    """
     src_h, src_w, scale_h, scale_w = shape_list
-    candidate = _quad_candidate if box_type == "quad" else _poly_candidate
-    comps = connected_components(prob >= BINARY_THRESH)[:MAX_CANDIDATES]
+    run_y, run_x0, run_x1, root = label_runs(prob >= BINARY_THRESH)
+    order, bounds = component_order(run_y, run_x0, root)
+    bounds = bounds[: MAX_CANDIDATES + 1]
+    order = order[: bounds[-1]]
+    run_y, run_x0, run_x1 = run_y[order], run_x0[order], run_x1[order]
+    ys, xs = run_pixels(run_y, run_x0, run_x1)
+    values = prob[ys, xs]
+    pix_bounds = np.zeros(len(run_y) + 1, dtype=np.int64)
+    np.cumsum(run_x1 - run_x0, out=pix_bounds[1:])
+    pix_bounds = pix_bounds[bounds].tolist()
+    if box_type == "quad":
+        xy, pt_bounds = row_extremes(run_y, run_x0, run_x1, bounds)
+        pt_bounds = pt_bounds.tolist()
     polys: list[np.ndarray] = []
     scores: list[float] = []
-    for pts in comps:
-        score = float(prob[pts[:, 0], pts[:, 1]].mean())
+    for k in range(len(bounds) - 1):
+        p0, p1 = pix_bounds[k], pix_bounds[k + 1]
+        score = float(values[p0:p1].mean())
         if score < BOX_THRESH:
             continue
-        box = candidate(pts)
-        if box is None:
-            continue
+        if box_type == "quad":
+            box, short_side, _ = min_area_rect(xy[pt_bounds[k] : pt_bounds[k + 1]])
+            if short_side < MIN_SIDE_BEFORE_UNCLIP:
+                continue
+        else:
+            box = _poly_candidate(np.stack([ys[p0:p1], xs[p0:p1]], axis=1))
+            if box is None:
+                continue
         expanded = unclip(box, EXPAND_RATIO)
         rect, short_side, _ = min_area_rect(expanded)
         if short_side < MIN_SIDE_AFTER_UNCLIP:

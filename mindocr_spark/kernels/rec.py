@@ -34,8 +34,12 @@ _INK_THRESH = 128.0
 
 
 def rec_resize_norm(crop: np.ndarray) -> np.ndarray:
-    """Crop (float gray) -> float32 (32, W') keep-ratio, W' capped."""
+    """Crop (float gray) -> float32 (32, W') keep-ratio, W' capped. An empty
+    crop (a degenerate box, ``imaging.warp_perspective_crop``) gives an
+    empty (32, 0) image: no glyphs, so no text."""
     h, w = crop.shape[:2]
+    if h == 0 or w == 0:
+        return np.zeros((REC_TARGET_HEIGHT, 0), dtype=np.float32)
     target_h = REC_TARGET_HEIGHT
     ratio = target_h / max(h, 1)
     target_w = max(1, int(round(w * ratio)))
@@ -86,12 +90,18 @@ def area_resize(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
 
 def _segment_glyphs(ink: np.ndarray) -> list[tuple[int, int, int, int]]:
     """Binary ink mask -> list of glyph boxes (y0, y1, x0, x1) from column
-    runs; each run's row extent is its own ink bounding rows."""
-    boxes = []
-    for x0, x1 in zip(*runs(ink.any(axis=0))):
-        rows = np.nonzero(ink[:, x0:x1].any(axis=1))[0]
-        boxes.append((int(rows[0]), int(rows[-1]) + 1, int(x0), int(x1)))
-    return boxes
+    runs; each run's row extent is its own ink bounding rows.
+
+    One ``logical_or.reduceat`` gives every run's per-row ink at once: a
+    segment from one run's start to the next also spans the ink-free gap
+    between them, which adds nothing."""
+    starts, ends = runs(ink.any(axis=0))
+    if not len(starts):
+        return []
+    rows = np.logical_or.reduceat(ink, starts, axis=1)  # (h, runs)
+    top = rows.argmax(axis=0)
+    bottom = len(rows) - rows[::-1].argmax(axis=0)
+    return list(zip(top.tolist(), bottom.tolist(), starts.tolist(), ends.tolist()))
 
 
 _BBOX_TEMPLATES: np.ndarray | None = None

@@ -22,7 +22,8 @@ from mindocr_spark.functions.glyphs import glyph_bitmap, render_page, render_wor
 from mindocr_spark.functions.html_text import extract_main_text
 from mindocr_spark.functions.imaging import (
     box_filter,
-    connected_components,
+    component_order,
+    label_runs,
     resize_bilinear,
     rotate180,
     warp_perspective_crop,
@@ -102,19 +103,24 @@ class TestImaging:
         img = np.full((8, 8), 3.0, dtype=np.float32)
         assert np.allclose(box_filter(img, 5), 3.0)
 
+    @staticmethod
+    def _component_sizes(m):
+        run_y, run_x0, run_x1, root = label_runs(m)
+        order, bounds = component_order(run_y, run_x0, root)
+        lens = (run_x1 - run_x0)[order]
+        return [int(lens[a:b].sum()) for a, b in zip(bounds[:-1], bounds[1:])]
+
     def test_connected_components_two_blobs(self):
         m = np.zeros((10, 10), dtype=bool)
         m[1:3, 1:3] = True
         m[6:9, 6:9] = True
-        comps = connected_components(m)
-        assert len(comps) == 2
-        assert len(comps[0]) == 4 and len(comps[1]) == 9
+        assert self._component_sizes(m) == [4, 9]
 
     def test_connected_components_diagonal_8conn(self):
         m = np.zeros((4, 4), dtype=bool)
         m[0, 0] = True
         m[1, 1] = True
-        assert len(connected_components(m)) == 1
+        assert len(self._component_sizes(m)) == 1
 
     def test_warp_identity_rect(self):
         img = np.arange(100, dtype=np.float32).reshape(10, 10)

@@ -19,9 +19,19 @@ from mindocr_spark.functions.geometry import (
     poly_iou,
 )
 from mindocr_spark.functions.html_text import extract_main_text
-from mindocr_spark.functions.imaging import connected_components
+from mindocr_spark.functions.geometry import _bbox_rect
+from mindocr_spark.functions.imaging import (
+    _homography,
+    component_order,
+    label_runs,
+    row_extremes,
+    run_pixels,
+    warp_perspective_crop,
+)
 from mindocr_spark.functions.png_codec import decode_png, encode_png
 from mindocr_spark.functions.pse import _components4
+from mindocr_spark.kernels.cls import _var
+from mindocr_spark.kernels.det import _dilate
 
 points_strategy = st.lists(
     st.tuples(
@@ -153,7 +163,7 @@ def test_png_roundtrip_random(h, w, seed):
 def test_components_partition_mask(seed):
     rng = np.random.RandomState(seed)
     mask = rng.rand(20, 20) > 0.7
-    comps = connected_components(mask)
+    comps = _components(mask)
     total = sum(len(c) for c in comps)
     assert total == int(mask.sum())
     seen = set()
@@ -162,6 +172,19 @@ def test_components_partition_mask(seed):
             assert mask[y, x]
             assert (y, x) not in seen
             seen.add((y, x))
+
+
+def _components(mask: np.ndarray) -> list[list[tuple[int, int]]]:
+    """Each 8-connected component's (y, x) pixels, raster order, the
+    components in :func:`component_order`'s top-left order."""
+    run_y, run_x0, run_x1, root = label_runs(mask)
+    order, bounds = component_order(run_y, run_x0, root)
+    ys, xs = run_pixels(run_y[order], run_x0[order], run_x1[order])
+    pix = np.concatenate([[0], np.cumsum((run_x1 - run_x0)[order])])[bounds]
+    return [
+        list(zip(ys[a:b].tolist(), xs[a:b].tolist()))
+        for a, b in zip(pix[:-1], pix[1:])
+    ]
 
 
 def _flood_fill(mask: np.ndarray, diagonal: bool) -> list[list[tuple[int, int]]]:
@@ -205,8 +228,8 @@ def test_labelers_match_flood_fill(h, w, density, seed):
         _flood_fill(mask, diagonal=True),
         key=lambda c: (min(y for y, _ in c), min(x for _, x in c)),
     )
-    got8 = connected_components(mask)
-    assert [set(map(tuple, c.tolist())) for c in got8] == [set(c) for c in ref8]
+    got8 = _components(mask)
+    assert [set(c) for c in got8] == [set(c) for c in ref8]
     # 4-connected: the same label map, numbered in raster order
     ref4 = np.zeros((h, w), dtype=np.int32)
     for k, comp in enumerate(_flood_fill(mask, diagonal=False), start=1):
@@ -301,3 +324,171 @@ def test_img_rotate_360_identity(seed):
     img = rng.rand(17, 23).astype(np.float32) * 255
     out = img_rotate(img, 360.0)
     assert np.allclose(out, img, atol=1e-2)
+
+
+def _row_extremes_of_pixels(pts_yx: np.ndarray) -> np.ndarray:
+    """Reference: a pixel set's per-row x-extremes as (x, y) points, rows
+    ascending, left then right extreme (one point when they coincide)."""
+    ys, xs = pts_yx[:, 0], pts_yx[:, 1]
+    order = np.lexsort((xs, ys))
+    ys_s, xs_s = ys[order], xs[order]
+    _, first = np.unique(ys_s, return_index=True)
+    last = np.concatenate([first[1:] - 1, [len(ys_s) - 1]])
+    sel = np.unique(np.concatenate([first, last]))
+    return np.stack([xs_s[sel], ys_s[sel]], axis=1).astype(np.float64)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=30),
+    st.integers(min_value=1, max_value=30),
+    st.floats(min_value=0.05, max_value=0.95),
+    st.integers(min_value=0, max_value=2**31 - 1),
+)
+def test_row_extremes_of_runs_match_pixels(h, w, density, seed):
+    """Runs-based per-row extremes of every component equal the extremes
+    of its expanded pixels, point for point."""
+    mask = np.random.RandomState(seed).rand(h, w) < density
+    run_y, run_x0, run_x1, root = label_runs(mask)
+    order, bounds = component_order(run_y, run_x0, root)
+    xy, pt_bounds = row_extremes(run_y[order], run_x0[order], run_x1[order], bounds)
+    comps = _components(mask)
+    assert len(pt_bounds) == len(comps) + 1
+    for k, comp in enumerate(comps):
+        want = _row_extremes_of_pixels(np.array(comp))
+        got = xy[pt_bounds[k] : pt_bounds[k + 1]]
+        assert got.dtype == want.dtype and np.array_equal(got, want)
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.integers(min_value=1, max_value=25),
+    st.integers(min_value=1, max_value=25),
+    st.integers(min_value=0, max_value=9),
+    st.sampled_from([0, 1]),
+    st.integers(min_value=0, max_value=2**31 - 1),
+)
+def test_dilate_equals_shifted_or(h, w, radius, axis, seed):
+    mask = np.random.RandomState(seed).rand(h, w) < 0.15
+    want = mask.copy()
+    n = mask.shape[axis]
+    for k in range(1, radius + 1):  # OR of the mask shifted by -k .. +k
+        if k >= n:
+            break
+        if axis:
+            want[:, k:] |= mask[:, :-k]
+            want[:, :-k] |= mask[:, k:]
+        else:
+            want[k:] |= mask[:-k]
+            want[:-k] |= mask[k:]
+    assert np.array_equal(_dilate(mask, radius, axis), want)
+
+
+def _bbox_rect_numpy(pts: np.ndarray):
+    """Reference: min_area_rect's bounding-box fast path as numpy
+    reductions (all four bbox corners present, every point on the border)."""
+    if len(pts) < 4:
+        return None
+    xs, ys = pts[:, 0], pts[:, 1]
+    x0, x1, y0, y1 = xs.min(), xs.max(), ys.min(), ys.max()
+    if not (x1 > x0 and y1 > y0):
+        return None
+    on_x0, on_x1 = xs == x0, xs == x1
+    corners = (
+        np.any(on_x0 & (ys == y0)) and np.any(on_x1 & (ys == y0))
+        and np.any(on_x1 & (ys == y1)) and np.any(on_x0 & (ys == y1))
+    )
+    if not (corners and np.all(on_x0 | on_x1 | (ys == y0) | (ys == y1))):
+        return None
+    rect = np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], dtype=np.float64)
+    w, h = float(x1 - x0), float(y1 - y0)
+    return rect, min(w, h), max(w, h)
+
+
+point_set_strategy = st.one_of(
+    points_strategy,  # random integer sets
+    st.lists(  # duplicates
+        st.sampled_from([(0, 0), (3, 1), (3, 1), (7, 7), (2, 9)]), min_size=1, max_size=20
+    ),
+    st.lists(  # <= 2 points
+        st.tuples(st.integers(0, 9), st.integers(0, 9)), min_size=1, max_size=2
+    ),
+    st.builds(  # collinear
+        lambda d, o, ks: [(o[0] + k * d[0], o[1] + k * d[1]) for k in ks],
+        st.tuples(st.integers(-3, 3), st.integers(-3, 3)),
+        st.tuples(st.integers(0, 50), st.integers(0, 50)),
+        st.lists(st.integers(0, 30), min_size=1, max_size=25),
+    ),
+    st.builds(  # an axis-aligned rect's corners and border points
+        lambda x0, y0, w, h, ts: [(x0, y0), (x0 + w, y0), (x0 + w, y0 + h), (x0, y0 + h)]
+        + [(x0 + t % (w + 1), y0 + h * (t % 2)) for t in ts],
+        st.integers(0, 40), st.integers(0, 40), st.integers(1, 30),
+        st.integers(1, 30), st.lists(st.integers(0, 100), max_size=20),
+    ),
+)
+
+
+@settings(max_examples=150, deadline=None)
+@given(point_set_strategy, st.integers(min_value=-1, max_value=40), st.booleans())
+def test_bbox_fast_path_matches_numpy(pts, nan_at, nan_x):
+    """min_area_rect's python fast path takes the same decision and returns
+    the same bits as the numpy reductions, including on a NaN point."""
+    arr = np.array(pts, dtype=np.float64)
+    if 0 <= nan_at < len(arr):
+        arr[nan_at, 0 if nan_x else 1] = np.nan
+    got, want = _bbox_rect(arr), _bbox_rect_numpy(arr)
+    assert (got is None) == (want is None)
+    if want is not None:
+        assert got[0].tobytes() == want[0].tobytes()
+        assert (got[1].hex(), got[2].hex()) == (want[1].hex(), want[2].hex())
+        assert min_area_rect(arr)[0].tobytes() == want[0].tobytes()
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(st.integers(min_value=0, max_value=64), min_size=1, max_size=40),
+    st.lists(st.floats(min_value=-1e3, max_value=1e3), min_size=1, max_size=300),
+)
+def test_cls_variance_matches_numpy_var(ints, floats):
+    """The cls evidence's variance is numpy's, bit for bit (float.hex)."""
+    for arr in (np.array(ints, dtype=np.float64), np.array(floats, dtype=np.float64)):
+        assert _var(arr).hex() == float(arr.var()).hex()
+
+
+@settings(max_examples=80, deadline=None)
+@given(
+    st.integers(min_value=2, max_value=30),
+    st.integers(min_value=2, max_value=30),
+    st.lists(st.integers(min_value=-4, max_value=34), min_size=8, max_size=8),
+    st.integers(min_value=0, max_value=2**31 - 1),
+)
+def test_warp_flat_gathers_match_2d_gathers(h, w, coords, seed):
+    """The crop's flat-index gathers sample the same four neighbours, with
+    the same replicated border and bilinear weights, as 2-D gathers."""
+    img = np.random.RandomState(seed).randint(0, 256, size=(h, w)).astype(np.uint8)
+    quad = np.array(coords, dtype=np.float64).reshape(4, 2)
+    got = warp_perspective_crop(img, quad)
+    if got.size == 0:
+        return  # a degenerate quad (tests/test_degenerate_boxes.py)
+    w_out = int(round(max(np.linalg.norm(quad[0] - quad[1]), np.linalg.norm(quad[2] - quad[3]))))
+    h_out = int(round(max(np.linalg.norm(quad[0] - quad[3]), np.linalg.norm(quad[1] - quad[2]))))
+    w_out, h_out = max(w_out, 1), max(h_out, 1)
+    dst = np.array([[0, 0], [w_out - 1, 0], [w_out - 1, h_out - 1], [0, h_out - 1]], dtype=np.float64)
+    hm = _homography(quad, dst)
+    xs = np.arange(w_out, dtype=np.float64)[None, :]
+    ys = np.arange(h_out, dtype=np.float64)[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        denom = hm[2, 0] * xs + hm[2, 1] * ys + hm[2, 2]
+        sx = np.clip((hm[0, 0] * xs + hm[0, 1] * ys + hm[0, 2]) / denom, 0, w - 1)
+        sy = np.clip((hm[1, 0] * xs + hm[1, 1] * ys + hm[1, 2]) / denom, 0, h - 1)
+    x0, y0 = np.floor(sx).astype(np.int64), np.floor(sy).astype(np.int64)
+    x1, y1 = np.minimum(x0 + 1, w - 1), np.minimum(y0 + 1, h - 1)
+    fx, fy = (sx - x0).astype(np.float32), (sy - y0).astype(np.float32)
+    src = img.astype(np.float32)
+    want = (
+        src[y0, x0] * (1 - fx) * (1 - fy) + src[y0, x1] * fx * (1 - fy)
+        + src[y1, x0] * (1 - fx) * fy + src[y1, x1] * fx * fy
+    )
+    if h_out / w_out >= 1.5:
+        want = np.rot90(want)
+    assert got.tobytes() == want.astype(np.float32).tobytes()

@@ -20,7 +20,6 @@ from mindocr_spark.functions.imaging import (
     img_rotate,
     rotate180,
     trace_boundary,
-    connected_components,
 )
 from mindocr_spark.kernels.system import (
     classify_and_recognize,
@@ -135,8 +134,7 @@ class TestPolyOutput:
         mask = np.zeros((12, 12), bool)
         mask[2:9, 3:10] = True
         mask[5, 1:3] = True  # protrusion
-        comp = connected_components(mask)[0]
-        b = trace_boundary(comp)
+        b = trace_boundary(np.argwhere(mask))  # one component's (y, x) pixels
         # consecutive boundary pixels are 8-neighbors, including wraparound
         d = np.abs(np.diff(np.vstack([b, b[:1]]), axis=0)).max(axis=1)
         assert (d <= 1).all()

@@ -7,20 +7,37 @@ Usage::
 
 ``<other-tree>`` is a checkout of another commit (``git archive`` of the
 parent, say); ``<sf-dir>`` holds the scale-factor ``documents.parquet`` the
-derived corpus comes from. Each tree runs in its own child interpreter with
-only that tree on ``PYTHONPATH`` and pickles its outputs into a temporary
-directory; the parent process compares them exactly (arrays by dtype, shape
-and bytes, floats by ``float.hex``). Exit status 1 when any output differs.
+derived corpus comes from. The inputs are built once, by a child
+interpreter with only this tree on ``PYTHONPATH``; each tree then runs in
+its own child interpreter with only that tree on ``PYTHONPATH``, computes
+its outputs on those inputs and pickles them into a temporary directory;
+the parent process compares them exactly (arrays by dtype, shape and
+bytes, floats by ``float.hex``). Exit status 1 when any output differs.
 
 Inputs: the media payloads derived from ``<sf-dir>``, those of
-``gen_corpus_pandas(40, seed=11)``, the ink masks of every decoded page,
-and seeded masks, PSE maps and box sets. Outputs: ``media_payload_text``
-under profiles None/attn/poly, ``detect_quads`` in both modes,
-``extract_table``, ``detect_grid``, ``_segment_glyphs``, both labelers,
-``pse_expand`` / ``pse_postprocess``, ``match_boxes_to_cells``,
-``nms_boxes``, ``locality_aware_nms`` (on seeded 9-value boxes, plus the
-reference's LANMS JSON fixtures when ``--lanms-dir`` names them) and
-``match_image_labels``.
+``gen_corpus_pandas(40, seed=11)`` and the media rows of perfbench's
+``ocr_heavy`` and ``shared_media`` inputs at seed 1
+(``perfbench.inputs.make_corpus``, in a temporary directory); the ink masks
+of every decoded page; seeded masks, point sets, PSE maps and box sets.
+
+Outputs, per payload: ``media_payload_text`` under profiles
+None/attn/poly. Per decoded page: ``detect_quads`` in both modes,
+``extract_table``, ``detect_grid``, the ``det_score`` map of the resized
+page, ``db_postprocess`` polygons and scores of that map for both box
+types, and for every quad of the page's profile mode its ``crop_box``
+bytes, ``classify_and_recognize`` text and confidence under all four rec
+heads, and ``cls_probs_from_analyses`` of the crop's upright and flipped
+analyses. Per mask: ``label_runs`` (8-connected), ``_components4`` and
+``_segment_glyphs``. Seeded: ``detect_grid`` and ``det_score`` of the
+masks as gray images, ``db_postprocess`` of smoothed random masks (both box
+types), ``crop_box`` of random images and convex quads crossing their
+borders, ``min_area_rect`` (random
+integer and float sets, rotated rects, collinear points, duplicates and
+sets of at most 2 points), ``pse_expand`` / ``pse_postprocess``,
+``match_boxes_to_cells``, ``nms_boxes``, ``locality_aware_nms`` (on seeded
+9-value boxes, plus the reference's LANMS JSON fixtures when
+``--lanms-dir`` names them) and ``match_image_labels``. Only names both
+trees define are called.
 """
 
 from __future__ import annotations
@@ -36,6 +53,9 @@ from collections import Counter
 
 N_MASKS = 2000
 N_BOX_SETS = 2000
+N_POINT_SETS = 3000
+N_CROPS = 2000
+REC_HEADS = ("ctc", "attn", "master", "sar")
 
 
 def canon(x):
@@ -55,15 +75,61 @@ def canon(x):
     return x
 
 
-def _payloads(sf_dir: str) -> list[bytes | None]:
+def build_inputs(sf_dir: str, out_path: str) -> None:
+    """Pickle every media payload (with its profile) into ``out_path``."""
     import pandas as pd
+    import pyarrow.parquet as pq
 
     from mindocr_spark.data.derive_corpus import derive_corpus_pandas
     from mindocr_spark.data.gen_corpus import gen_corpus_pandas
+    from perfbench.inputs import make_corpus
 
-    derived = derive_corpus_pandas(pd.read_parquet(f"{sf_dir}/documents.parquet"))[1]
-    generated = gen_corpus_pandas(40, seed=11)[1]
-    return list(derived["image"]) + list(generated["image"])
+    media = [
+        derive_corpus_pandas(pd.read_parquet(f"{sf_dir}/documents.parquet"))[1],
+        gen_corpus_pandas(40, seed=11)[1],
+    ]
+    payloads = [(p, None) for m in media for p in m["image"]]
+    for workload in ("ocr_heavy", "shared_media"):
+        with tempfile.TemporaryDirectory() as tmp:
+            make_corpus(workload, 1, tmp)
+            rows = pq.read_table(f"{tmp}/media.parquet", columns=["image", "profile"])
+            payloads += [(m["image"], m["profile"]) for m in rows.to_pylist()]
+    with open(out_path, "wb") as f:
+        pickle.dump(payloads, f)
+
+
+def _point_sets():
+    """Seeded ``min_area_rect`` inputs: random integer and float sets,
+    rotated rects, collinear points, duplicates and <= 2 points."""
+    import numpy as np
+
+    for seed in range(N_POINT_SETS):
+        rng = np.random.RandomState(seed)
+        kind = seed % 6
+        n = int(rng.randint(1, 60))
+        if kind == 0:
+            pts = rng.randint(0, 80, size=(n, 2)).astype(np.float64)
+        elif kind == 1:
+            pts = rng.rand(n, 2) * 50
+        elif kind == 2:  # a rotated rect's corners and border points
+            w, h = rng.uniform(1, 40, size=2)
+            t = rng.uniform(0, np.pi)
+            u = rng.rand(n, 1)
+            side = np.array([[0, 0], [w, 0], [w, h], [0, h]])
+            k = rng.randint(0, 4, size=n)
+            local = np.concatenate([side, side[k] + u * (side[(k + 1) % 4] - side[k])])
+            rot = np.array([[np.cos(t), -np.sin(t)], [np.sin(t), np.cos(t)]])
+            pts = local @ rot.T + rng.uniform(0, 100, size=2)
+        elif kind == 3:  # collinear, integer or float
+            d = rng.randint(-3, 4, size=2)
+            pts = rng.randint(0, 30, size=(n, 1)) * d + rng.randint(0, 50, size=2)
+            pts = pts.astype(np.float64) * (1.0 if rng.rand() < 0.5 else 0.37)
+        elif kind == 4:  # duplicates
+            base = rng.randint(0, 20, size=(max(n // 4, 1), 2))
+            pts = base[rng.randint(0, len(base), size=n)].astype(np.float64)
+        else:  # at most 2 points
+            pts = rng.randint(0, 50, size=(int(rng.randint(1, 3)), 2)).astype(np.float64)
+        yield seed, pts
 
 
 def _seeded_masks():
@@ -107,31 +173,68 @@ def _quad(rng):
     return q + rng.randint(-2, 3, size=(4, 2)) * (rng.rand() < 0.5)
 
 
-def dump(sf_dir: str, lanms_dir: str | None, out_path: str) -> None:
+def _seeded_crops():
+    """Random gray images and convex quads (sides >= 2 px, so neither tree
+    meets a degenerate box) that may cross every image border."""
+    import numpy as np
+
+    for seed in range(N_CROPS):
+        rng = np.random.RandomState(seed)
+        h, w = rng.randint(4, 48, size=2)
+        img = rng.randint(0, 256, size=(h, w)).astype(np.uint8)
+        x, y = rng.randint(-3, w - 1), rng.randint(-3, h - 1)
+        qw, qh = rng.randint(4, 40, size=2)
+        quad = np.array([[x, y], [x + qw, y], [x + qw, y + qh], [x, y + qh]])
+        yield seed, img, quad + rng.randint(-1, 2, size=(4, 2))
+
+
+def _prob_maps():
+    """Seeded probability maps: smoothed random masks, so components of
+    every shape clear or miss the box threshold."""
+    import numpy as np
+
+    from mindocr_spark.functions.imaging import box_filter
+
+    for seed in range(N_MASKS // 4):
+        rng = np.random.RandomState(seed)
+        h, w = rng.randint(8, 64, size=2)
+        mask = rng.rand(h, w) < rng.uniform(0.05, 0.6)
+        yield seed, (h, w), box_filter(mask.astype(np.float32), int(rng.randint(1, 4)) * 2 - 1)
+
+
+def dump(inputs_path: str, lanms_dir: str | None, out_path: str) -> None:
     """Compute every output of the tree on PYTHONPATH into ``out_path``."""
     import numpy as np
 
-    from mindocr_spark.functions.imaging import connected_components
+    from mindocr_spark.functions.geometry import min_area_rect
+    from mindocr_spark.functions.imaging import label_runs, rotate180
     from mindocr_spark.functions.nms import locality_aware_nms
     from mindocr_spark.functions.pse import _components4, pse_expand
     from mindocr_spark.functions.table_match import match_boxes_to_cells
+    from mindocr_spark.kernels.cls import cls_probs_from_analyses
+    from mindocr_spark.kernels.det import db_postprocess, det_resize, det_score
     from mindocr_spark.kernels.det_alt import pse_postprocess
     from mindocr_spark.kernels.layout_post import nms_boxes
-    from mindocr_spark.kernels.rec import _segment_glyphs
+    from mindocr_spark.kernels.rec import _segment_glyphs, analyze_crop, rec_resize_norm
     from mindocr_spark.kernels.system import (
+        classify_and_recognize,
+        crop_box,
         decode_gray,
         detect_quads,
         media_payload_text,
+        profile_heads,
     )
     from mindocr_spark.kernels.table import detect_grid, extract_table
     from mindocr_spark.metrics import match_image_labels
 
+    with open(inputs_path, "rb") as f:  # written by build_inputs
+        payloads = pickle.load(f)
     out: dict = {}
     pages = []
-    for i, payload in enumerate(_payloads(sf_dir)):
-        for profile in (None, "attn", "poly"):
-            out[f"media_payload_text/{i}/{profile}"] = media_payload_text(
-                payload, profile=profile
+    for i, (payload, profile) in enumerate(payloads):
+        for prof in (None, "attn", "poly"):
+            out[f"media_payload_text/{i}/{prof}"] = media_payload_text(
+                payload, profile=prof
             )
         img = decode_gray(payload)  # None for PDFs and missing or junk media
         if img is None:
@@ -141,16 +244,44 @@ def dump(sf_dir: str, lanms_dir: str | None, out_path: str) -> None:
             out[f"detect_quads/{i}/{mode}"] = detect_quads(img, mode)
         out[f"detect_grid/{i}"] = detect_grid(img)
         out[f"extract_table/{i}"] = extract_table(img)
+        resized, shape_list = det_resize(img)
+        prob = det_score(resized)
+        out[f"det_score/{i}"] = prob
+        for box_type in ("quad", "poly"):
+            out[f"db_postprocess/{i}/{box_type}"] = db_postprocess(
+                prob, shape_list, box_type
+            )
+        for j, quad in enumerate(detect_quads(img, profile_heads(profile)[1])):
+            crop = crop_box(img, quad)
+            out[f"crop_box/{i}/{j}"] = crop
+            for head in REC_HEADS:
+                out[f"classify_and_recognize/{i}/{j}/{head}"] = (
+                    classify_and_recognize(crop, decoder=head)
+                )
+            resized_crop = rec_resize_norm(crop)
+            out[f"cls_probs_from_analyses/{i}/{j}"] = cls_probs_from_analyses(
+                analyze_crop(resized_crop), analyze_crop(rotate180(resized_crop))
+            )
+
+    for seed, pts in _point_sets():
+        out[f"min_area_rect/{seed}"] = min_area_rect(pts)
+    for seed, img, quad in _seeded_crops():
+        out[f"crop_box_seeded/{seed}"] = crop_box(img, quad)
+    for seed, (h, w), prob in _prob_maps():
+        for box_type in ("quad", "poly"):
+            out[f"db_postprocess_seeded/{seed}/{box_type}"] = db_postprocess(
+                prob, (h, w, 1.0, 1.0), box_type
+            )
 
     masks = list(_seeded_masks()) + pages
     for i, mask in enumerate(masks):
-        out[f"connected_components/{i}"] = connected_components(mask)
+        out[f"label_runs/{i}"] = label_runs(mask)
         out[f"components4/{i}"] = _components4(mask)
         out[f"segment_glyphs/{i}"] = _segment_glyphs(mask)
         if i < N_MASKS:  # the seeded masks as ink of a gray image
-            out[f"detect_grid_seeded/{i}"] = detect_grid(
-                np.where(mask, 0, 255).astype(np.uint8)
-            )
+            gray = np.where(mask, 0, 255).astype(np.uint8)
+            out[f"detect_grid_seeded/{i}"] = detect_grid(gray)
+            out[f"det_score_seeded/{i}"] = det_score(gray)
 
     for seed, pred in _pse_maps():
         kernels = (pred > 0.5).astype(np.uint8)
@@ -192,19 +323,29 @@ def main() -> int:
     ap.add_argument("other_tree")
     ap.add_argument("sf_dir")
     ap.add_argument("--lanms-dir")
+    ap.add_argument("--inputs", help=argparse.SUPPRESS)
     ap.add_argument("--dump", help=argparse.SUPPRESS)
     args = ap.parse_args()
-    if args.dump:
+    if args.inputs:
+        build_inputs(args.sf_dir, args.inputs)
+        return 0
+    if args.dump:  # the second positional argument is then the inputs pickle
         dump(args.sf_dir, args.lanms_dir, args.dump)
         return 0
     here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     trees = {"this": here, "other": os.path.abspath(args.other_tree)}
     dumps = {}
+    script = os.path.abspath(__file__)
     with tempfile.TemporaryDirectory() as tmp:
+        inputs = os.path.join(tmp, "inputs.pkl")
+        subprocess.run(
+            [sys.executable, script, here, os.path.abspath(args.sf_dir),
+             "--inputs", inputs],
+            env=dict(os.environ, PYTHONPATH=here), cwd=tmp, check=True,
+        )
         for name, tree in trees.items():
             path = os.path.join(tmp, f"{name}.pkl")
-            cmd = [sys.executable, os.path.abspath(__file__), tree, args.sf_dir,
-                   "--dump", path]
+            cmd = [sys.executable, script, tree, inputs, "--dump", path]
             if args.lanms_dir:
                 cmd += ["--lanms-dir", args.lanms_dir]
             env = dict(os.environ, PYTHONPATH=tree)
