@@ -109,7 +109,7 @@ def row_stage(schema: str):
     default (older corpora lack ``profile``). A missing required column
     raises ``KeyError`` on the first batch; other input columns are
     ignored. Keyword-only parameters are stage settings, bound with
-    ``partial`` (or ``registry._map``) on the batch function. The row
+    ``partial`` on the batch function. The row
     function yields zero or more output tuples per row, in ``schema``
     order; each batch yields one frame, zero-row included. The batch
     function keeps the row function's name, so plan nodes read it."""

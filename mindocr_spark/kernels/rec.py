@@ -19,6 +19,7 @@ characters — garbage crops score low and fall to the drop-score filter.
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import lru_cache
 from typing import NamedTuple
 
 import numpy as np
@@ -46,9 +47,6 @@ def rec_resize_norm(crop: np.ndarray) -> np.ndarray:
     max_w = int(target_h * REC_MAX_WH_RATIO)
     target_w = min(target_w, max_w)
     return resize_bilinear(crop, target_h, target_w)
-
-
-from functools import lru_cache
 
 
 @lru_cache(maxsize=4096)

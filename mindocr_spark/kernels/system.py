@@ -19,16 +19,16 @@ from .det import db_postprocess, det_resize, det_score, validate_det_res
 from .rec import analyze_crop, rec_resize_norm, recognize_analysis
 
 
-def profile_heads(profile: str | None, decoder: str = "ctc") -> tuple[str, str]:
+def profile_heads(profile: str | None) -> tuple[str, str]:
     """A media item's ``profile`` -> its (rec head, det box type).
 
     ``profile`` is per-item pipeline metadata (the media table's ``profile``
     column — the per-source analogue of the reference's yaml config choice):
     ``'attn'`` decodes recognition with the attention head contract,
-    ``'poly'`` detects with ``box_type='poly'``; None/'default' keeps
-    ``decoder`` with quad boxes."""
+    ``'poly'`` detects with ``box_type='poly'``; None/'default' is CTC with
+    quad boxes."""
     return (
-        "attn" if profile == "attn" else decoder,
+        "attn" if profile == "attn" else "ctc",
         "poly" if profile == "poly" else "quad",
     )
 
@@ -51,9 +51,7 @@ def crop_box(img: np.ndarray, poly: np.ndarray) -> np.ndarray:
     return np.clip(np.rint(out), 0, 255).astype(np.uint8)
 
 
-def classify_and_recognize(
-    crop: np.ndarray, use_cls: bool = True, decoder: str = "ctc"
-) -> tuple[str, float]:
+def classify_and_recognize(crop: np.ndarray, decoder: str = "ctc") -> tuple[str, float]:
     """Fused cls+rec: one resize, one glyph analysis per orientation —
     the cls evidence and the chosen orientation's logits share the
     analysis instead of recomputing it (3 passes -> 2).
@@ -63,12 +61,11 @@ def classify_and_recognize(
     reference's rec model zoo over the same crop analysis."""
     resized = rec_resize_norm(crop)
     chosen = analyze_crop(resized)
-    if use_cls:
-        flipped = analyze_crop(rotate180(resized))
-        probs = cls_probs_from_analyses(chosen, flipped)
-        idx = int(probs.argmax())
-        if CLS_LABELS[idx] == "180" and float(probs[idx]) >= CLS_THRESH:
-            chosen = flipped
+    flipped = analyze_crop(rotate180(resized))
+    probs = cls_probs_from_analyses(chosen, flipped)
+    idx = int(probs.argmax())
+    if CLS_LABELS[idx] == "180" and float(probs[idx]) >= CLS_THRESH:
+        chosen = flipped
     return recognize_analysis(chosen, decoder)
 
 
@@ -120,10 +117,7 @@ def detect_quads(img: np.ndarray, box_mode: str = "quad") -> list[np.ndarray]:
 
 
 def ocr_image(
-    img: np.ndarray,
-    use_cls: bool = True,
-    decoder: str = "ctc",
-    box_mode: str = "quad",
+    img: np.ndarray, decoder: str = "ctc", box_mode: str = "quad"
 ) -> list[dict]:
     """Full per-image system; returns kept records in reading order:
     ``[{"transcription": str, "score": float, "points": [[x,y]x4]}]``
@@ -135,7 +129,7 @@ def ocr_image(
     records: list[dict] = []
     for poly in detect_quads(img, box_mode=box_mode):
         crop = crop_box(img, poly)
-        text, conf = classify_and_recognize(crop, use_cls=use_cls, decoder=decoder)
+        text, conf = classify_and_recognize(crop, decoder)
         if not text or conf < DROP_SCORE:
             continue
         records.append(
@@ -198,9 +192,7 @@ def route_payload(payload: bytes | None) -> tuple[str | None, np.ndarray | None]
     return None, img
 
 
-def media_payload_text(
-    payload: bytes | None, use_cls: bool = True, profile: str | None = None
-) -> str:
+def media_payload_text(payload: bytes | None, profile: str | None = None) -> str:
     """The extracted text of one media payload: :func:`route_payload`, then
     OCR of a page under the contract :func:`profile_heads` picks for
     ``profile`` (None/'default' is the CTC+quad system)."""
@@ -208,19 +200,16 @@ def media_payload_text(
     if img is None:
         return text
     decoder, box_mode = profile_heads(profile)
-    return media_span_text(img, use_cls=use_cls, decoder=decoder, box_mode=box_mode)
+    return media_span_text(img, decoder=decoder, box_mode=box_mode)
 
 
 def media_span_text(
-    img: np.ndarray,
-    use_cls: bool = True,
-    decoder: str = "ctc",
-    box_mode: str = "quad",
+    img: np.ndarray, decoder: str = "ctc", box_mode: str = "quad"
 ) -> str:
     """The extracted text of one media span: kept transcriptions in reading
     order joined by single spaces (join convention from
     ``predict_table_e2e.py:186-189``; ordering ``utils.py:95-103``)."""
     return " ".join(
         r["transcription"]
-        for r in ocr_image(img, use_cls=use_cls, decoder=decoder, box_mode=box_mode)
+        for r in ocr_image(img, decoder=decoder, box_mode=box_mode)
     )

@@ -29,7 +29,6 @@ from ..kernels.system import (
     classify_and_recognize,
     crop_box,
     decode_gray,
-    detect_polys,
     detect_quads,
     media_payload_text,
     ocr_image,
@@ -58,9 +57,9 @@ REC_SCHEMA = "media_ref string, box_idx int, text string, conf double"
 
 
 @row_stage(FUSED_SCHEMA)
-def ocr_fused_iter(media_ref, image, profile=None, *, use_cls=True):
+def ocr_fused_iter(media_ref, image, profile=None):
     """(media_ref, image, profile) -> (media_ref, text)."""
-    yield media_ref, media_payload_text(image, use_cls=use_cls, profile=profile)
+    yield media_ref, media_payload_text(image, profile=profile)
 
 
 @row_stage(DET_CROPS_SCHEMA)
@@ -85,31 +84,25 @@ def det_crops_iter(media_ref, image, profile=None):
 
 
 @row_stage(REC_SCHEMA)
-def recognize_iter(
-    media_ref, box_idx, crop, crop_h, crop_w, profile=None, *, use_cls=True,
-    decoder="ctc",
-):
+def recognize_iter(media_ref, box_idx, crop, crop_h, crop_w, profile=None):
     """Crop rows -> (media_ref, box_idx, text, conf): cls-rotate then
-    recognition. ``decoder`` picks the head contract ('ctc' | 'attn' |
-    'master' | 'sar') of crops whose profile does not pick one.
-    A ref row (``box_idx < 0``) passes its routed text through with
-    conf 1.0."""
+    recognition under the head contract the crop's profile picks
+    (:func:`profile_heads`). A ref row (``box_idx < 0``) passes its routed
+    text through with conf 1.0."""
     if box_idx < 0:
         yield media_ref, box_idx, bytes(crop).decode("utf-8"), 1.0
         return
     img = np.frombuffer(crop, dtype=np.uint8).reshape(crop_h, crop_w)
-    text, conf = classify_and_recognize(
-        img, use_cls=use_cls, decoder=profile_heads(profile, decoder)[0]
-    )
+    text, conf = classify_and_recognize(img, decoder=profile_heads(profile)[0])
     yield media_ref, box_idx, text, conf
 
 
-def kept_crops(df: DataFrame, threshold: float = DROP_SCORE) -> DataFrame:
+def kept_crops(df: DataFrame) -> DataFrame:
     """The drop-score filter over recognized rows (``predict_system.py:
-    327-336``): keep non-empty text scored at or above ``threshold``."""
+    327-336``): keep non-empty text scored at or above ``DROP_SCORE``."""
     from pyspark.sql import functions as F
 
-    return df.filter((F.col("conf") >= F.lit(threshold)) & (F.col("text") != ""))
+    return df.filter((F.col("conf") >= F.lit(DROP_SCORE)) & (F.col("text") != ""))
 
 
 OCR_RECORDS_SCHEMA = "media_ref string, transcription string, score double, points string"
@@ -126,22 +119,3 @@ def ocr_records_iter(media_ref, image):
         return
     for rec in ocr_image(img):
         yield media_ref, rec["transcription"], rec["score"], json.dumps(rec["points"])
-
-
-DET_POLYS_SCHEMA = (
-    "media_ref string, poly_idx int, points array<array<int>>, score double"
-)
-
-
-@row_stage(DET_POLYS_SCHEMA)
-def det_polys_iter(media_ref, image):
-    """(media_ref, image) -> one row per detected POLYGON (box_type='poly',
-    ``det_db_postprocess.py:103-107``): ragged ``array<array<int>>`` points
-    instead of the fixed 4-point quad — the output representation for
-    curved/irregular text regions."""
-    img = decode_gray(image)
-    if img is None:
-        return
-    polys, scores = detect_polys(img)
-    for i, (p, score) in enumerate(zip(polys, scores)):
-        yield media_ref, i, [[int(x), int(y)] for x, y in p], float(score)

@@ -5,21 +5,7 @@ from __future__ import annotations
 
 from ..config import row_stage
 from ..kernels.system import decode_gray
-from ..kernels.table import extract_table
-
-TABLE_CELLS_SCHEMA = "media_ref string, row int, col int, text string"
-
-
-@row_stage(TABLE_CELLS_SCHEMA)
-def table_cells_iter(media_ref, image):
-    """(media_ref, image) -> one row per table cell (row-major)."""
-    img = decode_gray(image)
-    if img is None:
-        return
-    for r, row_cells in enumerate(extract_table(img)["cells"]):
-        for c, text in enumerate(row_cells):
-            yield media_ref, r, c, text
-
+from ..kernels.table import extract_table_html
 
 TABLE_HTML_SCHEMA = "media_ref string, html string, n_cells int"
 
@@ -30,8 +16,6 @@ def table_html_iter(media_ref, image):
     TableMaster pred_html (kernels/table.extract_table_html —
     the predict_table_recognition.py output shape). Non-table or
     undecodable payloads are skipped, like the decode-skip node."""
-    from ..kernels.table import extract_table_html
-
     img = decode_gray(image)
     if img is None:
         return

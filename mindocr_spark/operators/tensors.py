@@ -1,15 +1,16 @@
-"""NN-input tensor preparation stages — the Spark rebuild of the reference's
+"""NN-input tensor preparation — the Spark rebuild of the reference's
 preprocess-transform chain as it appears in inference YAMLs
 (``RecResizeNormForInfer`` -> ``NormalizeImage`` -> ``ToCHWImage`` ->
 gear padding, ``general_transforms.py:89-160`` +
 ``gear_utils.py:10-70``).
 
-Rows carry an explicit float32 tensor (raw bytes) plus its ``dims``, so the
-stages compose by name exactly like the reference's YAML pipelines:
+Rows carry an explicit float32 tensor (raw bytes) plus its ``dims``. The
+reference's YAML chain
 
-    [{"name": "det_crops"}, {"name": "rec_resize_tensor"},
-     {"name": "normalize_image", "mean": 127.5, "std": 127.5},
-     {"name": "to_chw"}, {"name": "gear_pad", "gears": [64, 128, 256]}]
+    RecResizeNormForInfer -> NormalizeImage(mean=127.5, std=127.5)
+      -> ToCHWImage -> gear padding (64, 128, 256, 320)
+
+is one composition, :func:`rec_input_tensors`, over the det-crop stage.
 
 This is the training-data/export path (prepare batched NN inputs at 100 TB);
 the OCR scorers consume raw uint8 crops and are unaffected.
@@ -17,14 +18,22 @@ the OCR scorers consume raw uint8 crops and are unaffected.
 
 from __future__ import annotations
 
+from typing import TYPE_CHECKING
+
 import numpy as np
 
-from ..config import row_stage
+from ..config import REC_TARGET_HEIGHT, row_stage, spread
+from .media_path import DET_CROPS_SCHEMA, det_crops_iter
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 CROP_TENSOR_SCHEMA = (
     "media_ref string, box_idx int, tensor binary, dims array<int>"
 )
 GEAR_TENSOR_SCHEMA = CROP_TENSOR_SCHEMA + ", valid_w int, truncated boolean"
+# the padded widths of the (32, W) recognition tensors
+GEARS = (64, 128, 256, 320)
 
 
 @row_stage(CROP_TENSOR_SCHEMA)
@@ -42,11 +51,11 @@ def rec_resize_tensor_iter(media_ref, box_idx, crop, crop_h, crop_w):
 
 
 @row_stage(CROP_TENSOR_SCHEMA)
-def normalize_image_iter(media_ref, box_idx, tensor, dims, *, mean=127.5, std=127.5):
+def normalize_image_iter(media_ref, box_idx, tensor, dims):
     """NormalizeImage (``general_transforms.py:89-130``):
-    (x.astype(float32) - mean) / std, elementwise, dims unchanged."""
+    (x.astype(float32) - 127.5) / 127.5, elementwise, dims unchanged."""
     x = np.frombuffer(tensor, dtype=np.float32)
-    out = ((x - np.float32(mean)) / np.float32(std)).astype(np.float32)
+    out = ((x - np.float32(127.5)) / np.float32(127.5)).astype(np.float32)
     yield media_ref, box_idx, out.tobytes(), dims
 
 
@@ -67,12 +76,13 @@ def to_chw_iter(media_ref, box_idx, tensor, dims):
 
 
 @row_stage(GEAR_TENSOR_SCHEMA)
-def gear_pad_iter(media_ref, box_idx, tensor, dims, *, gears, height=32):
-    """Match each tensor's (h, w) to the nearest (height, gear) shape and
-    zero-pad up to it (``get_matched_gear_hw`` + ``padding_to_batch``
-    zero-fill). Emits ``valid_w`` so consumers can unpad; callers should
-    repartition on the resulting width (= dims[-1]) to co-locate same-gear
-    tensors for contiguous batch stacking.
+def gear_pad_iter(media_ref, box_idx, tensor, dims):
+    """Match each tensor's (h, w) to the nearest (32, gear) shape of
+    ``GEARS`` and zero-pad up to it (``get_matched_gear_hw`` +
+    ``padding_to_batch`` zero-fill). Emits ``valid_w`` so consumers can
+    unpad; :func:`rec_input_tensors` repartitions on the resulting width
+    (= dims[-1]) to co-locate same-gear tensors for contiguous batch
+    stacking.
 
     A tensor wider than the largest gear is cropped to it — the reference
     gear path never sees this case (inputs are resized into the gear
@@ -82,7 +92,7 @@ def gear_pad_iter(media_ref, box_idx, tensor, dims, *, gears, height=32):
     with its trailing glyphs cut off."""
     from ..functions.gear import get_matched_gear_hw, pad_to_gear
 
-    hw_list = [(int(height), int(g)) for g in sorted(gears)]
+    hw_list = [(REC_TARGET_HEIGHT, g) for g in GEARS]
     arr = np.frombuffer(tensor, dtype=np.float32).reshape([int(x) for x in dims])
     h, w = arr.shape[-2], arr.shape[-1]
     gear = get_matched_gear_hw((h, w), [g for g in hw_list if g[1] >= w] or [hw_list[-1]])
@@ -92,3 +102,17 @@ def gear_pad_iter(media_ref, box_idx, tensor, dims, *, gears, height=32):
         w = gear[1]
     out = pad_to_gear(arr, gear)
     yield media_ref, box_idx, out.tobytes(), list(out.shape), w, truncated
+
+
+def rec_input_tensors(media: DataFrame) -> DataFrame:
+    """(media_ref, image[, profile]) rows -> one gear-padded float32 CHW
+    tensor per det crop: det crops -> resize-norm -> normalize -> CHW ->
+    gear pad, spread on the padded width so same-gear tensors co-locate
+    for contiguous batch stacking."""
+    from pyspark.sql import functions as F
+
+    df = media.mapInPandas(det_crops_iter, DET_CROPS_SCHEMA)
+    for fn in (rec_resize_tensor_iter, normalize_image_iter, to_chw_iter):
+        df = df.mapInPandas(fn, CROP_TENSOR_SCHEMA)
+    df = df.mapInPandas(gear_pad_iter, GEAR_TENSOR_SCHEMA)
+    return spread(df, F.element_at("dims", -1))

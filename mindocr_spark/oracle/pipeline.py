@@ -21,7 +21,7 @@ from ..kernels.system import media_payload_text
 
 
 def extract_documents_oracle(
-    spans_df: pd.DataFrame, media_df: pd.DataFrame, use_cls: bool = True
+    spans_df: pd.DataFrame, media_df: pd.DataFrame
 ) -> pd.DataFrame:
     """spans_df: (doc_id, spans list[dict]); media_df: (media_ref, image).
 
@@ -46,7 +46,7 @@ def extract_documents_oracle(
                 media_ref = None
             else:
                 payload, prof = media_lookup.get(span["media_ref"], (None, None))
-                text = media_payload_text(payload, use_cls=use_cls, profile=prof)
+                text = media_payload_text(payload, profile=prof)
                 media_ref = span["media_ref"]
             out_spans.append(
                 {

@@ -214,21 +214,11 @@ def _exploded_spans(spans: DataFrame) -> DataFrame:
     )
 
 
-def _media_side(media: DataFrame) -> DataFrame:
-    """The media columns the OCR stages consume. ``profile`` is per-item
-    pipeline metadata (attn/poly routing); absent on older corpora."""
-    cols = ["media_ref", "image"]
-    if "profile" in media.columns:
-        cols.append("profile")
-        return media.select(*cols)
-    return media.select(*cols).withColumn(
-        "profile", F.lit(None).cast("string")
-    )
-
-
 def _ocr_input(media_spans: DataFrame, media: DataFrame) -> DataFrame:
-    """One ``(media_ref, image, profile)`` row per distinct non-null ref the
-    spans reference. The refs are spread (``config.spread``) by
+    """One ``(media_ref, image[, profile])`` row per distinct non-null ref
+    the spans reference. ``profile`` (per-item attn/poly routing) comes
+    along when the media table has it; the OCR row functions read a missing
+    one as None. The refs are spread (``config.spread``) by
     ``media_ref`` before the distinct, so the distinct adds no exchange and
     AQE cannot coalesce the OCR stage onto one core; only the narrow keys
     move and the payloads attach in place (guide §2.3/§8). LEFT join: only
@@ -239,7 +229,8 @@ def _ocr_input(media_spans: DataFrame, media: DataFrame) -> DataFrame:
         media_spans.select("media_ref").where(F.col("media_ref").isNotNull()),
         "media_ref",
     ).distinct()
-    return refs.join(_media_side(media), "media_ref", "left")
+    cols = ["media_ref", "image"] + (["profile"] if "profile" in media.columns else [])
+    return refs.join(media.select(*cols), "media_ref", "left")
 
 
 def _media_texts_exploded(payloads: DataFrame) -> DataFrame:

@@ -40,8 +40,7 @@ def test_degenerate_quad_crops_empty_and_reads_no_text(case):
     crop = crop_box(img, quad)
     assert crop.shape == (0, 0) and crop.dtype == np.uint8
     for head in REC_HEADS:
-        for use_cls in (True, False):
-            assert classify_and_recognize(crop, use_cls, head) == ("", 0.0)
+        assert classify_and_recognize(crop, head) == ("", 0.0)
 
 
 def _line_page() -> bytes:

@@ -95,59 +95,3 @@ def test_border_map_value_formula():
     # pixel (40, 24.2) is ~4.2 inside the left edge x=20 -> use x=24
     want = 0.3 + 0.4 * (1 - 4.0 / 8.4)
     assert abs(tm[40, 24] - want) < 0.02
-
-
-def test_det_labels_spark_stage(spark):
-    """The registry stage: label maps for a batch of pages, deterministic
-    checksums, explicit pre-UDF repartition (the CPU-stage contract)."""
-    import json
-
-    import pandas as pd
-
-    from mindocr_spark.registry import build_pipeline
-
-    def quad(x0, y0, side):
-        return [
-            [x0, y0], [x0 + side, y0],
-            [x0 + side, y0 + side], [x0, y0 + side],
-        ]
-
-    rows = [
-        {
-            "media_ref": "a",
-            "width": 100,
-            "height": 100,
-            "polys_json": json.dumps([quad(20, 20, 40), quad(70, 10, 5)]),
-            "ignore_json": json.dumps([False, False]),
-        },
-        {
-            "media_ref": "b",
-            "width": 60,
-            "height": 60,
-            "polys_json": json.dumps([quad(10, 10, 30)]),
-            "ignore_json": json.dumps([True]),
-        },
-    ]
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    pipe = build_pipeline([{"name": "det_labels"}])
-    got = {r["media_ref"]: r.asDict() for r in pipe(df).collect()}
-    # doc a: the 5px quad is below min_text_size -> ignored + masked
-    assert got["a"]["n_polys"] == 2 and got["a"]["n_ignored"] == 1
-    assert got["a"]["masked_pixels"] > 0
-    # kernel equivalence: the stage's checksums match a local run
-    import zlib
-
-    import numpy as np
-
-    from mindocr_spark.kernels.det_label import border_map, shrink_binary_map
-
-    polys = [np.array(quad(20, 20, 40), float), np.array(quad(70, 10, 5), float)]
-    gt, mask, tags = shrink_binary_map((100, 100), polys, [False, False])
-    tm, tmask = border_map((100, 100), polys, list(tags))
-    assert got["a"]["gt_pixels"] == int(gt.sum())
-    assert got["a"]["gt_hash"] == zlib.crc32(gt.tobytes())
-    assert got["a"]["thresh_hash"] == zlib.crc32(
-        np.round(tm, 5).astype(np.float32).tobytes()
-    )
-    # doc b: pre-ignored poly generates nothing
-    assert got["b"]["gt_pixels"] == 0 and got["b"]["n_ignored"] == 1

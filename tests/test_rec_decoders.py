@@ -138,15 +138,14 @@ def test_end_to_end_all_heads_agree_on_clean_crop():
     assert got["master"][1] > 0.5 and got["sar"][1] > 0.5
 
 
-@pytest.mark.parametrize("use_cls", [True, False])
 @pytest.mark.parametrize("decoder", ["ctc", "attn", "master", "sar"])
-def test_blank_crop_decodes_empty_with_zero_conf(decoder, use_cls):
+def test_blank_crop_decodes_empty_with_zero_conf(decoder):
     """A crop with no ink decodes to ('', 0.0) under every head; the batch
     master_decode's NaN for a stop at step 0 stays its own."""
     from mindocr_spark.kernels.system import classify_and_recognize
 
     blank = np.full((32, 64), 255, np.uint8)
-    assert classify_and_recognize(blank, use_cls=use_cls, decoder=decoder) == ("", 0.0)
+    assert classify_and_recognize(blank, decoder=decoder) == ("", 0.0)
 
 
 def test_framing_contracts():

@@ -1,5 +1,5 @@
 """Ruled-table extraction: grid detect -> line-erased OCR -> cell matching
-== rendered ground truth, single-process and as a Spark stage."""
+== rendered ground truth, single-process and through the extraction."""
 
 import pandas as pd
 import pytest
@@ -50,27 +50,6 @@ def test_detect_grid_positions():
     h_lines, v_lines = detect_grid(page)
     assert h_lines == [0, 64]
     assert v_lines == [0, 224, 448]
-
-
-def test_table_cells_spark_stage(spark):
-    from mindocr_spark.operators.table_path import (
-        TABLE_CELLS_SCHEMA,
-        table_cells_iter,
-    )
-
-    rows = []
-    for i, cells in enumerate(TABLES):
-        page, _ = render_table(cells)
-        rows.append({"media_ref": f"t{i}", "image": encode_png(page)})
-    df = spark.createDataFrame(pd.DataFrame(rows))
-    out = df.mapInPandas(table_cells_iter, TABLE_CELLS_SCHEMA).collect()
-    got = {}
-    for r in out:
-        got.setdefault(r["media_ref"], {})[(r["row"], r["col"])] = r["text"]
-    for i, cells in enumerate(TABLES):
-        for r, row_cells in enumerate(cells):
-            for c, text in enumerate(row_cells):
-                assert got[f"t{i}"][(r, c)] == text
 
 
 def test_table_media_through_extraction_pipeline(spark):

@@ -1,13 +1,23 @@
 """NN-input tensor stages: NormalizeImage / ToCHWImage / gear padding
-(general_transforms.py:89-160, gear_utils.py:10-70) as registry stages."""
+(general_transforms.py:89-160, gear_utils.py:10-70) and their one
+composition, ``operators.tensors.rec_input_tensors``."""
 
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from mindocr_spark.functions.gear import get_matched_gear_hw, pad_to_gear
-from mindocr_spark.registry import build_pipeline
+from mindocr_spark.operators.media_path import DET_CROPS_SCHEMA, det_crops_iter
+from mindocr_spark.operators.tensors import (
+    CROP_TENSOR_SCHEMA,
+    GEAR_TENSOR_SCHEMA,
+    GEARS,
+    gear_pad_iter,
+    rec_input_tensors,
+    rec_resize_tensor_iter,
+)
 
 
 def test_get_matched_gear_hw_reference_semantics():
@@ -31,21 +41,13 @@ def test_pad_to_gear_zero_fill_and_guard():
         pad_to_gear(t, (32, 40))
 
 
-def _crops_df(spark, media_pdf, n=3):
-    import pandas as pd
-
+def _media_df(spark, media_pdf, n=3):
     sub = media_pdf[~media_pdf["media_ref"].str.startswith("pdf_")].head(n)
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         pd.DataFrame(
-            {
-                "doc_id": [f"d{i}" for i in range(len(sub))],
-                "offset": list(range(len(sub))),
-                "media_ref": sub["media_ref"].tolist(),
-                "image": sub["image"].tolist(),
-            }
+            {"media_ref": sub["media_ref"].tolist(), "image": sub["image"].tolist()}
         )
     )
-    return build_pipeline([{"name": "det_crops"}])(df)
 
 
 def test_tensor_pipeline_exact_values(spark, small_corpus):
@@ -54,29 +56,21 @@ def test_tensor_pipeline_exact_values(spark, small_corpus):
     from mindocr_spark.kernels.rec import rec_resize_norm
 
     _, _, media_pdf = small_corpus
-    crops = _crops_df(spark, media_pdf)
+    media = _media_df(spark, media_pdf)
     raw = {
         (r["media_ref"], r["box_idx"]): np.frombuffer(
             r["crop"], dtype=np.uint8
         ).reshape(r["crop_h"], r["crop_w"])
-        for r in crops.collect()
+        for r in media.mapInPandas(det_crops_iter, DET_CROPS_SCHEMA).collect()
         if r["box_idx"] >= 0
     }
     assert raw
-    pipe = build_pipeline(
-        [
-            {"name": "rec_resize_tensor"},
-            {"name": "normalize_image", "mean": 127.5, "std": 127.5},
-            {"name": "to_chw"},
-            {"name": "gear_pad", "gears": [64, 128, 256, 320]},
-        ]
-    )
-    rows = pipe(crops).collect()
+    rows = rec_input_tensors(media).collect()
     assert len(rows) == len(raw)
     for r in rows:
         t = np.frombuffer(r["tensor"], dtype=np.float32).reshape(r["dims"])
         assert t.ndim == 3 and t.shape[0] == 1 and t.shape[1] == 32
-        assert t.shape[2] in (64, 128, 256, 320)
+        assert t.shape[2] in GEARS
         expect = (
             rec_resize_norm(raw[(r["media_ref"], r["box_idx"])]).astype(np.float32)
             - np.float32(127.5)
@@ -91,30 +85,33 @@ def test_gear_pad_flags_truncation(spark, small_corpus):
     """A tensor wider than every gear is cropped to the max gear — that is
     data loss (the reference resizes into the gear envelope upstream and
     never crops), so the row must carry truncated=true; in-envelope rows
-    carry truncated=false (r2 ADVICE item)."""
+    carry truncated=false."""
     _, _, media_pdf = small_corpus
-    crops = _crops_df(spark, media_pdf)
-    ok = build_pipeline(
-        [{"name": "rec_resize_tensor"}, {"name": "gear_pad", "gears": [64, 128, 256, 320]}]
-    )(crops).collect()
+    ok = (
+        _media_df(spark, media_pdf)
+        .mapInPandas(det_crops_iter, DET_CROPS_SCHEMA)
+        .mapInPandas(rec_resize_tensor_iter, CROP_TENSOR_SCHEMA)
+        .mapInPandas(gear_pad_iter, GEAR_TENSOR_SCHEMA)
+        .collect()
+    )
     assert ok and all(r["truncated"] is False for r in ok)
     assert all(r["valid_w"] <= r["dims"][-1] for r in ok)
-    # gears too narrow for any real crop: every row must be flagged
-    tight = build_pipeline(
-        [{"name": "rec_resize_tensor"}, {"name": "gear_pad", "gears": [8]}]
-    )(crops).collect()
-    assert tight and all(r["truncated"] is True for r in tight)
-    assert all(r["dims"][-1] == 8 and r["valid_w"] == 8 for r in tight)
+    # wider than the widest gear: cropped to it and flagged
+    wide = np.arange(32 * (GEARS[-1] + 80), dtype=np.float32).reshape(32, -1)
+    rows = pd.DataFrame(
+        {"media_ref": ["w"], "box_idx": [0], "tensor": [wide.tobytes()],
+         "dims": [list(wide.shape)]}
+    )
+    (out,) = list(gear_pad_iter(iter([rows])))
+    assert out.drop(columns="tensor").values.tolist() == [
+        ["w", 0, [32, GEARS[-1]], GEARS[-1], True]
+    ]
+    assert out["tensor"][0] == wide[:, : GEARS[-1]].tobytes()
 
 
 def test_gear_pad_repartitions_by_width(spark, small_corpus):
     _, _, media_pdf = small_corpus
-    crops = _crops_df(spark, media_pdf)
-    pipe = build_pipeline(
-        [{"name": "rec_resize_tensor"}, {"name": "gear_pad", "gears": [64, 256]}]
-    )
-    out = pipe(crops)
+    out = rec_input_tensors(_media_df(spark, media_pdf))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "element_at(dims" in plan  # the co-location repartition key
-    widths = {r["dims"][-1] for r in out.collect()}
-    assert widths <= {64, 256}
+    assert {r["dims"][-1] for r in out.collect()} <= set(GEARS)

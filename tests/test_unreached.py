@@ -65,3 +65,38 @@ def test_scan_reports_test_only_code_and_follows_fstrings(tmp_path):
     )
     assert unreached == ["engine.only_tested"]
     assert stale == ["engine.gone", "engine.run"]
+
+
+def test_module_assignments_count_only_when_named(tmp_path):
+    """A module-level constant or table is a definition, not a root: an
+    unused one is reported, and a def named only inside a table is reached
+    only while the table is."""
+    _write(tmp_path, "mindocr_spark/__init__.py", '__version__ = "0"\n')
+    _write(
+        tmp_path,
+        "mindocr_spark/engine.py",
+        "UNUSED = 1\n"
+        "LIMIT = 2\n"
+        "\n\n"
+        "def _double(x):\n"
+        "    return 2 * x\n"
+        "\n\n"
+        'TABLE = {"double": _double}\n'
+        "\n\n"
+        "def run(x):\n"
+        "    return min(x, LIMIT)\n",
+    )
+    _write(tmp_path, "jobs/job.py", "from mindocr_spark.engine import run\n\nrun(1)\n")
+    unreached, stale = report(str(tmp_path), allowed={})
+    assert unreached == ["engine.TABLE", "engine.UNUSED", "engine._double"]
+    assert stale == []
+
+    _write(
+        tmp_path,
+        "jobs/job.py",
+        "from mindocr_spark.engine import TABLE, run\n\n"
+        'run(TABLE["double"](1))\n',
+    )
+    unreached, stale = report(str(tmp_path), allowed={})
+    assert unreached == ["engine.UNUSED"]
+    assert stale == []

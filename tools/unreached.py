@@ -4,10 +4,12 @@ Usage: python tools/unreached.py [root]
 
 ``root`` is the repository checkout to scan (default: the current
 directory). The nodes are the top-level ``def``/``class`` statements of
-``mindocr_spark/``. The roots are every file under ``jobs/`` and
-``perfbench/`` (not ``perfbench/tests``), ``__spark_entry__.py``,
-``bench.py`` and ``bench_extra.py``, plus each engine module's top-level
-statements other than its imports and its docstring.
+``mindocr_spark/`` and the names its top-level assignments bind, so a
+module-level constant or table counts only when something reached names
+it. The roots are every file under ``jobs/`` and ``perfbench/`` (not
+``perfbench/tests``), ``__spark_entry__.py``, ``bench.py`` and
+``bench_extra.py``, plus each engine module's other top-level statements
+(not its imports).
 
 A definition reaches every definition whose name appears in its body as an
 identifier token. A string literal counts only when it is a whole (dotted)
@@ -43,8 +45,8 @@ _IDENT = re.compile(r"[A-Za-z_]\w*(?:\.[A-Za-z_]\w*)*")
 # Unreached on purpose, each with what keeps it. Reference components with
 # no production path name their COVERAGE.md row ("library: no production
 # path" there); test oracles name the test they check the engine against;
-# the rest name the tool or fixture that needs them. What an entry uses is
-# kept with it.
+# constants only tests read name those tests; the rest name the tool or
+# fixture that needs them. What an entry uses is kept with it.
 ALLOWED: dict[str, str] = {
     # reference components
     "sources.images.predict_image_dir": "COVERAGE §2.1 get_image_paths",
@@ -61,6 +63,11 @@ ALLOWED: dict[str, str] = {
     "kernels.layout_post.letterbox": "COVERAGE §2.2 layout letterbox",
     "kernels.det.validate_polygons_train": "COVERAGE §2.2 ValidatePolygons",
     "kernels.system.layout_region_text": "COVERAGE §2.3 layout-region rec route",
+    "kernels.det_label.shrink_binary_map": "COVERAGE §2.2 ShrinkBinaryMap / BorderMap",
+    "kernels.det_label.border_map": "COVERAGE §2.2 ShrinkBinaryMap / BorderMap",
+    "kernels.det_label_alt.east_score_geo": "COVERAGE §2.2 EASTProcessTrain labels",
+    "kernels.det_label_alt.pse_gt_decode": "COVERAGE §2.2 PSEGtDecode labels",
+    "functions.imaging.img_rotate": "COVERAGE §2.7 img_rotate",
     "metrics.cls_metric": "COVERAGE §2.4 cls_metric",
     "functions.chardict.load_char_dict": "COVERAGE §2.4 char-dict loading",
     "functions.chardict.valid_rec_label": "COVERAGE §2.4 CTC-aware label filters",
@@ -85,6 +92,11 @@ ALLOWED: dict[str, str] = {
     "functions.kie.ser_segment_vote": "tests/test_kie.py",
     "functions.kie.show_label": "tests/test_kie.py",
     "functions.kie.seqeval_prf": "tests/test_kie.py",
+    # constants only tests read, each naming the test
+    "config.NUM_CLASSES": "tests/test_functions.py, tests/test_properties.py",
+    "functions.attn.ATTN_NUM_CLASSES": "tests/test_round2_kernels.py",
+    "functions.rec_decoders.MASTER_STOP_IDX": "tests/test_rec_decoders.py",
+    "operators.dedup.NGRAM_JACCARD_SQL": "tests/test_dedup_banded.py",
     # tools and fixtures
     "functions.imaging.box_filter": "tools/kernel_parity.py (PSE inputs)",
     "data.gen_corpus.write_corpus_parquet": "writes what jobs/extract_job.py reads",
@@ -122,6 +134,19 @@ def _string_names(text: str) -> list[str]:
     ]
 
 
+def _bound_names(stmt: ast.stmt) -> list[str]:
+    """The names a top-level assignment binds: plain and tuple targets, not
+    subscript or attribute stores, nor dunders (``__version__``), which
+    Python and packaging tools read."""
+    targets = stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target]
+    return [
+        node.id
+        for t in targets
+        for node in (t.elts if isinstance(t, (ast.Tuple, ast.List)) else [t])
+        if isinstance(node, ast.Name) and not node.id.startswith("__")
+    ]
+
+
 def _tokens(src: str):
     """Yield ``(line, name)`` for every identifier the source uses in code."""
     for tok in tokenize.generate_tokens(io.StringIO(src).readline):
@@ -145,25 +170,31 @@ def scan(root: str) -> tuple[dict[str, set[str]], dict[str, list[str]], set[str]
             src = f.read()
         tree = ast.parse(src)
         module = path[len(ENGINE) + 1 : -3].replace(os.sep, ".")
-        owner: dict[int, str | None] = {}
+        # line -> the definitions it belongs to; [] for a root statement,
+        # None for an import
+        owner: dict[int, list[str] | None] = {}
         for stmt in tree.body:
-            first, qual = stmt.lineno, ""
-            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
-                qual = None
-            elif isinstance(
-                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
-            ):
+            first, names = stmt.lineno, []
+            if isinstance(stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
                 first = min([stmt.lineno] + [d.lineno for d in stmt.decorator_list])
-                qual = f"{module}.{stmt.name}"
-                uses[qual] = set()
-                by_name.setdefault(stmt.name, []).append(qual)
+                names = [stmt.name]
+            elif isinstance(stmt, (ast.Assign, ast.AnnAssign)):
+                names = _bound_names(stmt)
+            quals = [f"{module}.{name}" for name in names]
+            for name, qual in zip(names, quals):
+                if qual not in uses:
+                    uses[qual] = set()
+                    by_name.setdefault(name, []).append(qual)
+            if isinstance(stmt, (ast.Import, ast.ImportFrom)):
+                quals = None
             for line in range(first, stmt.end_lineno + 1):
-                owner[line] = qual
+                owner[line] = quals
         for line, name in _tokens(src):
-            qual = owner.get(line)
-            if qual:
-                uses[qual].add(name)
-            elif qual == "":
+            quals = owner.get(line)
+            if quals:
+                for qual in quals:
+                    uses[qual].add(name)
+            elif quals == []:
                 root_names.add(name)
 
     for rel in ROOT_FILES + ROOT_DIRS:
