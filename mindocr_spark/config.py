@@ -104,26 +104,22 @@ def row_stage(schema: str):
     Arrow batches, ``df.mapInPandas(fn, schema)``. This is the one batch
     loop of every per-row Python stage.
 
-    The row function's positional parameters name its input columns; one
-    with a default is optional, and a batch without that column reads the
-    default (older corpora lack ``profile``). A missing required column
-    raises ``KeyError`` on the first batch; other input columns are
-    ignored. Keyword-only parameters are stage settings, bound with
-    ``partial`` on the batch function. The row
-    function yields zero or more output tuples per row, in ``schema``
+    The row function's parameters name its input columns; one with a
+    default is optional, and a batch without that column reads the default
+    (older corpora lack ``profile``). A missing required column raises
+    ``KeyError`` on the first batch; other input columns are ignored. The
+    row function yields zero or more output tuples per row, in ``schema``
     order; each batch yields one frame, zero-row included. The batch
     function keeps the row function's name, so plan nodes read it."""
     columns = _schema_columns(schema)
 
     def decorate(row_fn):
         inputs = [
-            (p.name, p.default)
-            for p in inspect.signature(row_fn).parameters.values()
-            if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
+            (p.name, p.default) for p in inspect.signature(row_fn).parameters.values()
         ]
 
         @wraps(row_fn)
-        def batches_fn(batches, **settings):
+        def batches_fn(batches):
             import pandas as pd
 
             for pdf in batches:
@@ -136,7 +132,7 @@ def row_stage(schema: str):
                     else:
                         raise KeyError(f"{row_fn.__name__}: no input column {name!r}")
                 yield pd.DataFrame(
-                    [out for row in zip(*cols) for out in row_fn(*row, **settings)],
+                    [out for row in zip(*cols) for out in row_fn(*row)],
                     columns=columns,
                 )
 

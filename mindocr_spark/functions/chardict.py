@@ -36,14 +36,10 @@ def ctc_effective_len(text: str) -> int:
     return len(text) + extra
 
 
-def valid_rec_label(
-    text: str, max_text_len: int, charset: str | list[str] | None = None
-) -> bool:
+def valid_rec_label(text: str, max_text_len: int) -> bool:
     """Keep-predicate for recognition labels: non-empty after filtering to
     the dictionary, and CTC-effective length within the budget."""
-    chars = set(charset if charset is not None else CHARSET)
-    filtered = "".join(c for c in text if c in chars)
-    if not filtered:
+    if not any(c in CHARSET for c in text):
         return False
     return ctc_effective_len(text) <= max_text_len
 
@@ -55,50 +51,38 @@ def valid_rec_label(
 MAX_TEXT_LEN = 23  # the reference's RecCTCLabelEncode default
 
 
-def str2idx(
-    text: str,
-    max_text_len: int = MAX_TEXT_LEN,
-    lower: bool = False,
-    charset: str | list[str] | None = None,
-) -> list[int] | None:
-    """``rec_transforms.str2idx`` (:420-453): None when empty or longer
-    than the budget; out-of-dictionary characters are SKIPPED (no
-    unknown substitution by default); None again when nothing valid
-    remains."""
-    if len(text) == 0 or len(text) > max_text_len:
+def str2idx(text: str) -> list[int] | None:
+    """``rec_transforms.str2idx`` (:420-453) with the reference defaults
+    (``max_text_len`` 23, ``lower=False``, the default dictionary): None
+    when empty or longer than ``MAX_TEXT_LEN``; out-of-dictionary
+    characters are SKIPPED (no unknown substitution); None again when
+    nothing valid remains."""
+    if len(text) == 0 or len(text) > MAX_TEXT_LEN:
         return None
-    if lower:
-        text = text.lower()
-    chars = list(charset) if charset is not None else list(CHARSET)
-    lut = {c: i for i, c in enumerate(chars)}
-    idx = [lut[c] for c in text if c in lut]
+    idx = [CHARSET.index(c) for c in text if c in CHARSET]
     return idx or None
 
 
-def ctc_label_encode(
-    label: str, max_text_len: int = MAX_TEXT_LEN
-) -> tuple[int, list[int]]:
+def ctc_label_encode(label: str) -> tuple[int, list[int]]:
     """``RecCTCLabelEncode.__call__`` (:112-135): (length, text_seq) with
-    the sequence blank-padded to ``max_text_len``; invalid labels encode
+    the sequence blank-padded to ``MAX_TEXT_LEN``; invalid labels encode
     as length 0 / all-blank."""
-    idx = str2idx(label, max_text_len) or []
-    return len(idx), idx + [BLANK_IDX] * (max_text_len - len(idx))
+    idx = str2idx(label) or []
+    return len(idx), idx + [BLANK_IDX] * (MAX_TEXT_LEN - len(idx))
 
 
-def attn_label_encode(
-    label: str, max_text_len: int = MAX_TEXT_LEN
-) -> tuple[int, list[int]]:
+def attn_label_encode(label: str) -> tuple[int, list[int]]:
     """``RecAttnLabelEncode.__call__`` (:304-318): character ids offset by
     the [<GO>, <STOP>] prefix of the attn vocabulary, framed as
     ``[GO] + ids + [STOP] + [GO]-padding`` (sequence length
-    ``max_text_len + 2``)."""
-    idx = str2idx(label, max_text_len) or []
+    ``MAX_TEXT_LEN + 2``)."""
+    idx = str2idx(label) or []
     off = REC_VOCABS["attn"].index(CHARSET[0])
     ids = [i + off for i in idx]
     seq = (
         [ATTN_GO_IDX]
         + ids
         + [ATTN_STOP_IDX]
-        + [ATTN_GO_IDX] * (max_text_len - len(ids))
+        + [ATTN_GO_IDX] * (MAX_TEXT_LEN - len(ids))
     )
     return len(ids), seq

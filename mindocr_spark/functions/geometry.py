@@ -362,18 +362,17 @@ def _dp_open(points: np.ndarray, eps: float) -> list[int]:
     return sorted(set(keep))
 
 
-def approx_poly_dp(points: np.ndarray, epsilon: float, closed: bool = True) -> np.ndarray:
-    """Ramer-Douglas-Peucker polygon simplification
+def approx_poly_dp(points: np.ndarray, epsilon: float) -> np.ndarray:
+    """Ramer-Douglas-Peucker simplification of a closed contour
     (``cv2.approxPolyDP`` analogue for the det ``box_type='poly'`` path,
-    ``det_db_postprocess.py:105``). For a closed contour the chain is split
-    at its two mutually-farthest anchor points (deterministic: the first of
-    each tied pair), each half simplified, halves rejoined."""
+    ``det_db_postprocess.py:105``): the chain is split at its two
+    mutually-farthest anchor points (deterministic: the first of each tied
+    pair), each half simplified as an open chain (:func:`_dp_open`), halves
+    rejoined."""
     p = np.asarray(points, dtype=np.float64)
     n = len(p)
     if n <= 2:
         return p.copy()
-    if not closed:
-        return p[_dp_open(p, epsilon)]
     # anchor 1: farthest from point 0; anchor 2: farthest from anchor 1
     d0 = np.linalg.norm(p - p[0], axis=1)
     a1 = int(np.argmax(d0))

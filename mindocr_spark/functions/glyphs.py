@@ -60,6 +60,9 @@ _FONT: dict[str, list[str]] = {
 GLYPH_H = 7
 GLYPH_W = 5
 ADVANCE = GLYPH_W + 1  # 1 blank column between glyphs
+GLYPH_SCALE = 4  # rendered pixels per font cell
+# render_table's ruled grid: cell size and rule width, in pixels
+TABLE_CELL_W, TABLE_CELL_H, TABLE_LINE_PX = 224, 64, 2
 
 
 def glyph_bitmap(ch: str) -> np.ndarray:
@@ -101,12 +104,14 @@ def mixed_height(word: str) -> bool:
     return len(kinds) == 2
 
 
-def render_word(word: str, scale: int = 4) -> np.ndarray:
+def render_word(word: str) -> np.ndarray:
     """Render a charset-only word as a grayscale image (white bg, black ink).
 
-    Returns uint8 (7*scale, (len*6-1)*scale): each glyph cell is 5*scale wide
-    with a 1*scale gap; no outer margin (the page renderer adds margins).
+    Returns uint8 (7*s, (len*6-1)*s) for s = ``GLYPH_SCALE``: each glyph
+    cell is 5*s wide with a 1*s gap; no outer margin (the page renderer
+    adds margins).
     """
+    scale = GLYPH_SCALE
     if not word:
         return np.full((GLYPH_H * scale, GLYPH_W * scale), 255, dtype=np.uint8)
     w_cells = len(word) * ADVANCE - 1
@@ -121,7 +126,6 @@ def render_page(
     words_and_origins: list[tuple[str, int, int]],
     height: int,
     width: int,
-    scale: int = 4,
     rotate180: bool = False,
 ) -> tuple[np.ndarray, list[dict]]:
     """Render words at (y, x) origins on a white page; return (image, gt).
@@ -135,7 +139,7 @@ def render_page(
     page = np.full((height, width), 255, dtype=np.uint8)
     gt: list[dict] = []
     for word, y, x in words_and_origins:
-        img = render_word(word, scale)
+        img = render_word(word)
         h, w = img.shape
         if y + h > height or x + w > width:
             raise ValueError(f"word {word!r} at ({y},{x}) overflows {height}x{width}")
@@ -153,14 +157,9 @@ def render_page(
     return page, gt
 
 
-def render_table(
-    cell_words: list[list[str]],
-    cell_w: int = 224,
-    cell_h: int = 64,
-    scale: int = 4,
-    line_px: int = 2,
-) -> tuple[np.ndarray, list[list[str]]]:
-    """Render a ruled table: grid lines + one word per cell (or '').
+def render_table(cell_words: list[list[str]]) -> tuple[np.ndarray, list[list[str]]]:
+    """Render a ruled table: grid lines ``TABLE_LINE_PX`` wide around
+    ``TABLE_CELL_W`` x ``TABLE_CELL_H`` cells, one word per cell (or '').
 
     Returns (gray image with dims padded to multiples of 32, the cell-word
     matrix as ground truth). Cell geometry respects the detection
@@ -168,6 +167,7 @@ def render_table(
     """
     n_rows = len(cell_words)
     n_cols = len(cell_words[0])
+    cell_w, cell_h, line_px = TABLE_CELL_W, TABLE_CELL_H, TABLE_LINE_PX
     height0 = n_rows * cell_h + line_px
     width0 = n_cols * cell_w + line_px
     height = ((height0 + 31) // 32) * 32
@@ -184,7 +184,7 @@ def render_table(
             word = cell_words[r][c]
             if not word:
                 continue
-            img = render_word(word, scale)
+            img = render_word(word)
             gh, gw = img.shape
             y = r * cell_h + (cell_h - gh) // 2
             x = c * cell_w + 16

@@ -16,25 +16,22 @@ semantics, confidence formula — and those are carried here exactly:
   per-step probabilities before the stop, ``[0]`` when no stop.
 - ``sar_decode`` — ``SARLabelDecode`` (:494-547): vocabulary
   ``chars + [<UKN>, <BOS/EOS>, <PAD>]`` with start == end index, skip
-  ``<PAD>``, break at ``<BOS/EOS>`` (at position 0 it is skipped instead
-  when no probabilities are given), optional ``rm_symbol`` lowercase +
-  strip-non-alnum cleanup.
+  ``<PAD>``, break at ``<BOS/EOS>``; rm_symbol off, the reference
+  default.
 - ``abinet_decode`` — ``ABINetLabelDecode``
   (``rec_abinet_postprocess.py:15-55``) over ``CharsetMapper``
   (``models/utils/abinet_layers.py:97-128``): charset
   ``'░abcdefghijklmnopqrstuvwxyz1234567890'`` with the null char at
   index 0, softmax -> per-step argmax -> text cut at the first null,
-  length = min(len(text)+1, max_length).
+  length = min(len(text)+1, ABINET_MAX_LENGTH).
 - ``visionlan_decode`` — ``VisionLANPostProcess`` (:399-491): blank at
   index 0, per-sample length = first step whose argmax is blank (+1),
-  else max_text_length; softmax over the kept steps; chars for idx > 0
+  else VISIONLAN_MAX_TEXT_LENGTH; softmax over the kept steps; chars for idx > 0
   (blank contributes ''); confidence = exp(sum(log p) / (n + 1e-6)) —
   the reference's length-normalized geometric mean.
 """
 
 from __future__ import annotations
-
-import re
 
 import numpy as np
 
@@ -55,7 +52,7 @@ def master_charset(use_unknown_char: bool = False) -> list[str]:
 
 def master_decode(
     char_indices: np.ndarray,
-    probs: np.ndarray | None = None,
+    probs: np.ndarray,
     use_unknown_char: bool = False,
 ) -> tuple[list[str], list[float]]:
     """(B, T) indices -> (texts, confs), RecAttnLabelDecode.decode over
@@ -66,14 +63,8 @@ def master_decode(
     for b in range(len(char_indices)):
         toks = [chars[int(i)] for i in char_indices[b]]
         eos = toks.index("<STOP>") if "<STOP>" in toks else -1
-        if eos != -1:
-            texts.append("".join(toks[:eos]))
-        else:
-            texts.append("")
-        if probs is not None and eos != -1:
-            conf = probs[b][:eos]
-        else:
-            conf = [0]
+        texts.append("".join(toks[:eos]) if eos != -1 else "")
+        conf = probs[b][:eos] if eos != -1 else [0]
         confs.append(float(np.mean(conf)) if len(conf) else float("nan"))
     return texts, confs
 
@@ -84,17 +75,13 @@ SAR_UNKNOWN_IDX, SAR_END_IDX, SAR_PADDING_IDX = (
     REC_VOCABS["sar"].index(t) for t in ("<UKN>", "<BOS/EOS>", "<PAD>")
 )
 
-_RM_SYMBOL_RE = re.compile("[^A-Z^a-z^0-9^一-龥]")
-
 
 def sar_decode(
-    char_indices: np.ndarray,
-    probs: np.ndarray | None = None,
-    rm_symbol: bool = False,
+    char_indices: np.ndarray, probs: np.ndarray
 ) -> tuple[list[str], list[float]]:
     """(B, T) indices -> (texts, confs), SARLabelDecode.decode semantics:
-    skip padding, break at <BOS/EOS> (skipped at idx 0 when probs is
-    None), conf = mean of kept-step probabilities."""
+    skip padding, break at <BOS/EOS>, conf = mean of kept-step
+    probabilities."""
     chars = REC_VOCABS["sar"]
     texts: list[str] = []
     confs: list[float] = []
@@ -106,15 +93,10 @@ def sar_decode(
             if ci == SAR_PADDING_IDX:
                 continue
             if ci == SAR_END_IDX:
-                if probs is None and idx == 0:
-                    continue
                 break
             kept.append(chars[ci])
-            conf.append(float(probs[b][idx]) if probs is not None else 1.0)
-        text = "".join(kept)
-        if rm_symbol:
-            text = _RM_SYMBOL_RE.sub("", text.lower())
-        texts.append(text)
+            conf.append(float(probs[b][idx]))
+        texts.append("".join(kept))
         confs.append(float(np.mean(conf)) if conf else float("nan"))
     return texts, confs
 
@@ -126,13 +108,11 @@ ABINET_NULL_CHAR = "░"
 ABINET_MAX_LENGTH = 26
 
 
-def abinet_decode(
-    logits: np.ndarray, max_length: int = ABINET_MAX_LENGTH
-) -> dict:
+def abinet_decode(logits: np.ndarray) -> dict:
     """(B, T, 37) raw logits -> {"texts", "scores", "lengths"}:
     softmax, argmax per step via CharsetMapper, text cut at the first
     null char and trimmed; scores = per-step max probabilities; length =
-    min(len(text) + 1, max_length) (one for the end token)."""
+    min(len(text) + 1, ABINET_MAX_LENGTH) (one for the end token)."""
     logits = np.asarray(logits, dtype=np.float64)
     e = np.exp(logits - logits.max(axis=2, keepdims=True))
     soft = e / e.sum(axis=2, keepdims=True)
@@ -145,26 +125,27 @@ def abinet_decode(
         text = raw.split(ABINET_NULL_CHAR)[0]
         texts.append(text.replace(ABINET_NULL_CHAR, ""))
         scores.append(o.max(axis=1))
-        lengths.append(min(len(text) + 1, max_length))
+        lengths.append(min(len(text) + 1, ABINET_MAX_LENGTH))
     return {"texts": texts, "scores": scores, "lengths": lengths}
 
 
 # --- VisionLAN --------------------------------------------------------------
 
 
-def visionlan_decode(
-    text_pre: np.ndarray, max_text_length: int = 25
-) -> dict:
+VISIONLAN_MAX_TEXT_LENGTH = 25  # VisionLANPostProcess max_text_length
+
+
+def visionlan_decode(text_pre: np.ndarray) -> dict:
     """(B, T, C) PRE-softmax step scores with the blank at index 0
     (blank_at_last=False) -> {"texts", "confs", "raw_chars"}.
 
     Per sample: prediction length = 1 + the first step whose top-1 class
-    is blank (max_text_length when blank never wins); softmax over the
+    is blank (``VISIONLAN_MAX_TEXT_LENGTH`` when blank never wins); softmax over the
     kept steps; characters for indices in [1, num_chars], blank -> '';
     confidence = exp(sum(log p_top1) / (n + 1e-6))."""
     text_pre = np.asarray(text_pre, dtype=np.float64)
     b = text_pre.shape[0]
-    nsteps = max_text_length
+    nsteps = VISIONLAN_MAX_TEXT_LENGTH
     texts: list[str] = []
     confs: list[float] = []
     raw_chars: list[list[str]] = []

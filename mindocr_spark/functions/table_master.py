@@ -32,6 +32,8 @@ import re
 
 import numpy as np
 
+from .geometry import convex_hull, poly_area_perimeter
+
 # mindocr/utils/dict/table_master_structure_dict.txt, verbatim order
 STRUCTURE_DICT = [
     "<thead>", "<tr>", "<td></td>", "</tr>", "</thead>",
@@ -53,17 +55,16 @@ PAD_STR = "<PAD>"
 TD_TOKENS = ["<td>", "<td", "<td></td>"]
 
 
-def build_vocab(merge_no_span_structure: bool = True) -> list[str]:
+def build_vocab() -> list[str]:
     """Token list with specials, exactly TableMasterLabelDecode.__init__
-    (table_postprocess.py:289-305): merge_no_span_structure appends
-    '<td></td>' if absent and removes '<td>' if present, then
-    [<UKN>, <SOS>, <EOS>, <PAD>] are appended."""
+    (table_postprocess.py:289-305) with merge_no_span_structure=True, the
+    reference default: append '<td></td>' if absent and remove '<td>' if
+    present, then append [<UKN>, <SOS>, <EOS>, <PAD>]."""
     chars = list(STRUCTURE_DICT)
-    if merge_no_span_structure:
-        if "<td></td>" not in chars:
-            chars.append("<td></td>")
-        if "<td>" in chars:
-            chars.remove("<td>")
+    if "<td></td>" not in chars:
+        chars.append("<td></td>")
+    if "<td>" in chars:
+        chars.remove("<td>")
     return chars + [UNKNOWN_STR, BEG_STR, END_STR, PAD_STR]
 
 
@@ -77,17 +78,14 @@ IGNORED_IDS = [
 ]
 
 
-def bbox_decode(
-    bbox: np.ndarray, shape: np.ndarray, box_shape: str = "ori"
-) -> np.ndarray:
+def bbox_decode(bbox: np.ndarray, shape: np.ndarray) -> np.ndarray:
     """Normalized xywh -> image-space xyxy, exactly
-    TableMasterLabelDecode._bbox_decode (table_postprocess.py:414-432):
-    scale by (pad_)w/h, divide the resize ratios, then xyxy via FLOOR
-    division of w/h by 2 (the reference's ``w // 2``)."""
+    TableMasterLabelDecode._bbox_decode (table_postprocess.py:414-432)
+    with box_shape='ori', the reference default: scale by the image w/h,
+    divide the resize ratios, then xyxy via FLOOR division of w/h by 2
+    (the reference's ``w // 2``)."""
     bbox = np.asarray(bbox, dtype=np.float64).copy()
-    h, w, ratio_h, ratio_w, pad_h, pad_w = [float(v) for v in shape]
-    if box_shape == "pad":
-        h, w = pad_h, pad_w
+    h, w, ratio_h, ratio_w = [float(v) for v in shape[:4]]
     bbox[0::2] *= w
     bbox[1::2] *= h
     bbox[0::2] /= ratio_w
@@ -103,7 +101,6 @@ def decode_structure(
     bbox_preds: np.ndarray | None = None,
     shape: np.ndarray | None = None,
     scores: np.ndarray | None = None,
-    box_shape: str = "ori",
 ) -> tuple[list[str], np.ndarray, float]:
     """One sequence of vocab ids -> (structure tokens, td bboxes xyxy,
     mean token score) — TableMasterLabelDecode.decode
@@ -121,7 +118,7 @@ def decode_structure(
             continue
         text = VOCAB[tid]
         if text in TD_TOKENS and bbox_preds is not None and shape is not None:
-            boxes.append(bbox_decode(bbox_preds[idx], shape, box_shape))
+            boxes.append(bbox_decode(bbox_preds[idx], shape))
         tokens.append(text)
         kept_scores.append(
             float(scores[idx]) if scores is not None else 1.0
@@ -142,37 +139,11 @@ def _xyxy2xywh(b: np.ndarray) -> np.ndarray:
     return out
 
 
-def _convex_hull_area(pts: np.ndarray) -> float:
-    """Area of the convex hull of a point set (monotone chain + shoelace;
-    the reference uses shapely MultiPoint(...).convex_hull.area)."""
-    pts = np.unique(pts.reshape(-1, 2), axis=0)
-    if len(pts) < 3:
-        return 0.0
-    pts = pts[np.lexsort((pts[:, 1], pts[:, 0]))]
-
-    def half(points):
-        out: list[np.ndarray] = []
-        for p in points:
-            while (
-                len(out) >= 2
-                and np.cross(out[-1] - out[-2], p - out[-2]) <= 0
-            ):
-                out.pop()
-            out.append(p)
-        return out[:-1]
-
-    hull = half(list(pts)) + half(list(pts[::-1]))
-    if len(hull) < 3:
-        return 0.0
-    h = np.array(hull)
-    x, y = h[:, 0], h[:, 1]
-    return float(abs(np.dot(x, np.roll(y, -1)) - np.dot(y, np.roll(x, -1))) / 2)
-
-
 def _cal_iou(a: np.ndarray, b: np.ndarray) -> float:
     """matcher.py:86-97 — NOTE the reference divides the rect
     intersection by the CONVEX-HULL area of both boxes' corners (not the
-    union area); reproduced exactly."""
+    union area; the reference's shapely MultiPoint(...).convex_hull.area);
+    reproduced exactly."""
     ix0, iy0 = max(a[0], b[0]), max(a[1], b[1])
     ix1, iy1 = min(a[2], b[2]), min(a[3], b[3])
     if ix1 <= ix0 or iy1 <= iy0:
@@ -184,7 +155,7 @@ def _cal_iou(a: np.ndarray, b: np.ndarray) -> float:
             [b[0], b[1]], [b[2], b[1]], [b[2], b[3]], [b[0], b[3]],
         ]
     )
-    hull = _convex_hull_area(corners)
+    hull = poly_area_perimeter(convex_hull(corners))[0]
     return inter / hull if hull > 0 else 0.0
 
 
@@ -236,17 +207,19 @@ def match_table_boxes(
     return match_list
 
 
-def sort_unmatched_rows(
-    text_xywh: np.ndarray, indexes: list[int], y_threshold: float = 3.0
-) -> list[list[int]]:
+ROW_Y_THRESHOLD = 3.0  # the reference's default row threshold (matcher.py:144), px
+
+
+def sort_unmatched_rows(text_xywh: np.ndarray, indexes: list[int]) -> list[list[int]]:
     """Group unmatched text boxes into visual rows (matcher.py:144-190):
     a box joins the first group whose FIRST member's center-y is within
-    the threshold; rows sort by first-member y, boxes within a row by x."""
+    ``ROW_Y_THRESHOLD``; rows sort by first-member y, boxes within a row
+    by x."""
     groups: list[list[int]] = []
     bgroups: list[list[np.ndarray]] = []
     for idx, bb in zip(indexes, text_xywh):
         for g, bg in zip(groups, bgroups):
-            if abs(bb[1] - bg[0][1]) < y_threshold:
+            if abs(bb[1] - bg[0][1]) < ROW_Y_THRESHOLD:
                 g.append(idx)
                 bg.append(bb)
                 break
@@ -322,16 +295,16 @@ def deal_eb_token(token: str) -> str:
     return token
 
 
-def _join_cell_texts(text_list: list[str], break_token: str = " ") -> str:
-    """get_match_text_dict + reduce_repeat_bb (matcher.py:288-305): if
-    EVERY fragment is individually bolded, merge into one <b> span before
-    joining."""
+def _join_cell_texts(text_list: list[str]) -> str:
+    """get_match_text_dict + reduce_repeat_bb (matcher.py:288-305) with the
+    reference's break_token ' ': if EVERY fragment is individually bolded,
+    merge into one <b> span before joining."""
     if text_list and all(
         t.startswith("<b>") and t.endswith("</b>") for t in text_list
     ):
-        inner = break_token.join(t[3:-4] for t in text_list)
+        inner = " ".join(t[3:-4] for t in text_list)
         return f"<b>{inner}</b>"
-    return break_token.join(text_list)
+    return " ".join(text_list)
 
 
 def insert_text_to_token(
@@ -457,24 +430,11 @@ def table_master_html(
     return "<html><body><table>" + html + "</table></body></html>"
 
 
-def grid_structure_tokens(n_rows: int, n_cols: int, header_rows: int = 1
-                          ) -> list[str]:
+def grid_structure_tokens(n_rows: int, n_cols: int) -> list[str]:
     """Deterministic structure-token sequence for an n_rows x n_cols
-    ruled grid — the bridge from kernels/table.py's grid detection to the
-    TableMaster vocabulary (every emitted token is in VOCAB)."""
-    toks: list[str] = []
-    header_rows = min(header_rows, n_rows)
-    if header_rows > 0:
-        toks.append("<thead>")
-        for _ in range(header_rows):
-            toks.append("<tr>")
-            toks.extend(["<td></td>"] * n_cols)
-            toks.append("</tr>")
-        toks.append("</thead>")
-    toks.append("<tbody>")
-    for _ in range(n_rows - header_rows):
-        toks.append("<tr>")
-        toks.extend(["<td></td>"] * n_cols)
-        toks.append("</tr>")
-    toks.append("</tbody>")
-    return toks
+    ruled grid, its first row the <thead> — the bridge from
+    kernels/table.py's grid detection to the TableMaster vocabulary
+    (every emitted token is in VOCAB)."""
+    row = ["<tr>"] + ["<td></td>"] * n_cols + ["</tr>"]
+    head = ["<thead>", *row, "</thead>"] if n_rows > 0 else []
+    return head + ["<tbody>"] + row * (n_rows - 1) + ["</tbody>"]

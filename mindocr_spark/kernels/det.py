@@ -325,21 +325,16 @@ def validate_polygons_train(
     texts: list[str],
     ignore_tags: list[bool],
     hw: tuple[int, int],
-    min_area: float = 1.0,
-    clip_to_visible_area: bool = False,
-    min_vertices: int = 4,
 ) -> tuple[list[np.ndarray], list[str], np.ndarray]:
     """The TRAIN-side ValidatePolygons transform as a standalone kernel
-    (``mindocr/data/transforms/det_transforms.py:668-712``), kept apart
-    from the inference-side :func:`validate_det_res`:
+    (``mindocr/data/transforms/det_transforms.py:668-712``) with its
+    defaults (min_area=1.0, clip_to_visible_area=False), kept apart from
+    the inference-side :func:`validate_det_res`:
 
     1. drop polygons fully outside the [0,w]x[0,h] image;
-    2. mark ignored any polygon whose clipped area < ``min_area`` (a
-       boundary-touching polygon intersects with area 0 and is kept
-       ignored, like shapely's box-intersects semantics);
-    3. with ``clip_to_visible_area``, replace coordinates by the clipped
-       vertex chain (vertex count may change) and mark ignored when fewer
-       than ``min_vertices`` remain.
+    2. mark ignored any polygon whose clipped area < 1 (a boundary-touching
+       polygon intersects with area 0 and is kept ignored, like shapely's
+       box-intersects semantics); coordinates stay unclipped.
 
     The reference clips with shapely; here the same convex-border clip is
     Sutherland–Hodgman (``functions/geometry.clip_poly_to_rect``) —
@@ -357,15 +352,7 @@ def validate_polygons_train(
         area = (
             poly_area_perimeter(clipped)[0] if len(clipped) >= 3 else 0.0
         )
-        ignore = bool(ignore)
-        if area < min_area:
-            ignore = True
-        out_poly = np.asarray(np_poly, dtype=np.float64)
-        if clip_to_visible_area:
-            out_poly = clipped
-            if len(out_poly) < min_vertices:
-                ignore = True
-        new_polys.append(out_poly)
+        new_polys.append(np.asarray(np_poly, dtype=np.float64))
         new_texts.append(text)
-        new_tags.append(ignore)
+        new_tags.append(bool(ignore) or area < 1.0)
     return new_polys, new_texts, np.array(new_tags, dtype=bool)

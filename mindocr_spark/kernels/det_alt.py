@@ -32,18 +32,13 @@ EAST_NMS_THRESH = 0.2
 EAST_SCALE = 4
 
 
-def pse_postprocess(
-    pred: np.ndarray,
-    binary_thresh: float = PSE_BINARY_THRESH,
-    box_thresh: float = PSE_BOX_THRESH,
-    min_area: int = PSE_MIN_AREA,
-) -> tuple[list[np.ndarray], list[float]]:
+def pse_postprocess(pred: np.ndarray) -> tuple[list[np.ndarray], list[float]]:
     """pred: (C, H, W) float logits, channel 0 = text, 1..C-1 = shrinking
     kernels. Returns (quads, scores)."""
     score = 1.0 / (1.0 + np.exp(-pred[0]))
-    kernels = (pred > binary_thresh).astype(np.uint8)
+    kernels = (pred > PSE_BINARY_THRESH).astype(np.uint8)
     kernels = (kernels * kernels[:1]).astype(np.uint8)  # mask by text channel
-    label = pse_expand(kernels, min_area)
+    label = pse_expand(kernels, PSE_MIN_AREA)
     # the stable sort lists each label's pixels in raster order, as
     # np.nonzero(label == idx) does, so every score mean sums in that order
     flat = label.ravel()
@@ -52,11 +47,11 @@ def pse_postprocess(
     polys: list[np.ndarray] = []
     scores: list[float] = []
     for idx in range(1, len(ends)):
-        if ends[idx] - ends[idx - 1] < min_area:
+        if ends[idx] - ends[idx - 1] < PSE_MIN_AREA:
             continue
         ys, xs = np.divmod(order[ends[idx - 1]:ends[idx]], label.shape[1])
         s = float(score[ys, xs].mean())
-        if s < box_thresh:
+        if s < PSE_BOX_THRESH:
             continue
         pts = np.stack([xs, ys], axis=1).astype(np.float64)
         rect, _, _ = min_area_rect(pts)
@@ -72,20 +67,17 @@ def _rotate_mat(theta: float) -> np.ndarray:
 
 
 def east_postprocess(
-    score: np.ndarray,
-    geo: np.ndarray,
-    score_thresh: float = EAST_SCORE_THRESH,
-    nms_thresh: float = EAST_NMS_THRESH,
-    scale: int = EAST_SCALE,
+    score: np.ndarray, geo: np.ndarray
 ) -> tuple[list[np.ndarray], list[float]]:
     """score: (H, W) in [0,1]; geo: (5, H, W) = distances to
     top/bottom/left/right edges + rotation angle, in image pixels.
     Returns (quads, merged scores) after locality-aware NMS."""
-    ys, xs = np.nonzero(score > score_thresh)
+    ys, xs = np.nonzero(score > EAST_SCORE_THRESH)
     if len(ys) == 0:
         return [], []
     order = np.argsort(ys, kind="stable")
     ys, xs = ys[order], xs[order]
+    scale = EAST_SCALE
     h_img = score.shape[0] * scale
     w_img = score.shape[1] * scale
     boxes9 = []
@@ -116,6 +108,6 @@ def east_postprocess(
         boxes9.append(np.concatenate([res.reshape(8), [float(score[y, x])]]))
     if not boxes9:
         return [], []
-    kept = locality_aware_nms(np.array(boxes9), nms_thresh)
+    kept = locality_aware_nms(np.array(boxes9), EAST_NMS_THRESH)
     polys = [k[:8].reshape(4, 2) for k in kept]
     return polys, [float(k[8]) for k in kept]

@@ -36,6 +36,11 @@ import numpy as np
 
 from ..functions.geometry import offset_convex_poly, poly_area_perimeter
 
+# ShrinkBinaryMap / BorderMap defaults (det_transforms.py:230-372)
+MIN_TEXT_SIZE = 8
+SHRINK_RATIO = 0.4
+THRESH_MIN, THRESH_MAX = 0.3, 0.7
+
 
 def fill_poly(canvas: np.ndarray, poly: np.ndarray, value: float) -> None:
     """Even-odd rasterization of a simple polygon into ``canvas`` (H, W),
@@ -78,8 +83,6 @@ def shrink_binary_map(
     shape_hw: tuple[int, int],
     polys: list[np.ndarray],
     ignore_tags: list[bool],
-    min_text_size: int = 8,
-    shrink_ratio: float = 0.4,
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Returns (binary_map (1,H,W) float32, mask (H,W) float32, updated
     ignore_tags) — ShrinkBinaryMap semantics exactly: gt starts 0, mask
@@ -89,12 +92,12 @@ def shrink_binary_map(
     h, w = shape_hw
     gt = np.zeros((h, w), dtype=np.float32)
     mask = np.ones((h, w), dtype=np.float32)
-    dist_coef = 1 - shrink_ratio**2
+    dist_coef = 1 - SHRINK_RATIO**2
     tags = np.array(ignore_tags, dtype=bool).copy()
     for i, poly in enumerate(polys):
         p = np.asarray(poly, dtype=np.float64)
         min_side = float(min(p.max(axis=0) - p.min(axis=0)))
-        if tags[i] or min_side < min_text_size:
+        if tags[i] or min_side < MIN_TEXT_SIZE:
             fill_poly(mask, p, 0.0)
             tags[i] = True
             continue
@@ -137,19 +140,16 @@ def border_map(
     shape_hw: tuple[int, int],
     polys: list[np.ndarray],
     ignore_tags: list[bool],
-    shrink_ratio: float = 0.4,
-    thresh_min: float = 0.3,
-    thresh_max: float = 0.7,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Returns (thresh_map, thresh_mask), both (H, W) float32 — BorderMap
     slow-path semantics: per non-ignored polygon, pad outward by
     ``(1-r^2)*area/perimeter``, mask the pad, draw the inverse clipped
     min-over-edges distance field (fmax-merged across polygons), then
-    normalize the map to [thresh_min, thresh_max]."""
+    normalize the map to [THRESH_MIN, THRESH_MAX]."""
     h, w = shape_hw
     border = np.zeros((h, w), dtype=np.float32)
     mask = np.zeros((h, w), dtype=np.float32)
-    dist_coef = 1 - shrink_ratio**2
+    dist_coef = 1 - SHRINK_RATIO**2
     for poly, ignore in zip(polys, ignore_tags):
         if ignore:
             continue
@@ -192,4 +192,4 @@ def border_map(
             ],
             border[lo[1] : hi[1] + 1, lo[0] : hi[0] + 1],
         )
-    return border * (thresh_max - thresh_min) + thresh_min, mask
+    return border * (THRESH_MAX - THRESH_MIN) + THRESH_MIN, mask

@@ -48,6 +48,7 @@ from ..functions.geometry import offset_convex_poly, poly_area_perimeter
 from .det_label import fill_poly
 
 EAST_SHRINK_COEF = 0.3
+EAST_LENGTH = 512  # EASTProcessTrain's square crop side
 EAST_SCALE = 0.25
 
 PSE_KERNEL_NUM = 7
@@ -63,9 +64,10 @@ def _dist(x1: float, y1: float, x2: float, y2: float) -> float:
     return math.sqrt((x1 - x2) ** 2 + (y1 - y2) ** 2)
 
 
-def east_shrink_poly(vertices: np.ndarray, coef: float = EAST_SHRINK_COEF) -> np.ndarray:
+def east_shrink_poly(vertices: np.ndarray) -> np.ndarray:
     """``_shrink_poly`` (det_east_transforms.py:75-104): per-vertex
-    shrink reach r_i = min adjacent edge length; the longer edge pair
+    shrink reach r_i = min adjacent edge length, moved by
+    ``EAST_SHRINK_COEF`` of it; the longer edge pair
     (offset rule, line 92-97) is moved first; edges of length <= 1 do
     not move (line 66)."""
     v = np.asarray(vertices, dtype=np.float64).reshape(-1).copy()
@@ -89,10 +91,10 @@ def east_shrink_poly(vertices: np.ndarray, coef: float = EAST_SHRINK_COEF) -> np
         lx, ly = v[xa] - v[xb], v[ya] - v[yb]
         length = _dist(v[xa], v[ya], v[xb], v[yb])
         if length > 1:
-            ratio = (r[i1] * coef) / length
+            ratio = (r[i1] * EAST_SHRINK_COEF) / length
             v[xa] += ratio * (-lx)
             v[ya] += ratio * (-ly)
-            ratio = (r[i2] * coef) / length
+            ratio = (r[i2] * EAST_SHRINK_COEF) / length
             v[xb] += ratio * lx
             v[yb] += ratio * ly
 
@@ -103,12 +105,10 @@ def east_shrink_poly(vertices: np.ndarray, coef: float = EAST_SHRINK_COEF) -> np
     return v
 
 
-def _rotate_vertices(
-    vertices: np.ndarray, theta: float, anchor: np.ndarray | None = None
-) -> np.ndarray:
+def _rotate_vertices(vertices: np.ndarray, theta: float) -> np.ndarray:
+    """Rotate the quad by ``theta`` about its first vertex."""
     v = np.asarray(vertices, dtype=np.float64).reshape((4, 2)).T
-    if anchor is None:
-        anchor = v[:, :1]
+    anchor = v[:, :1]
     m = np.array(
         [[math.cos(theta), -math.sin(theta)], [math.sin(theta), math.cos(theta)]]
     )
@@ -161,16 +161,14 @@ def _rotate_all_pixels(
 
 
 def east_score_geo(
-    vertices: np.ndarray,
-    labels: np.ndarray,
-    length: int = 512,
-    scale: float = EAST_SCALE,
+    vertices: np.ndarray, labels: np.ndarray
 ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """``_get_score_geo`` + the ``__call__`` tail
     (det_east_transforms.py:350-404, 25-30) over a square crop of side
-    ``length``: returns (score_map (1, L*s, L*s), geo_map (5, ., .),
-    training_mask (1, ., .)) float32, CHW, with the empty-score
-    score[0, 0, 0] = 1 quirk applied."""
+    L = ``EAST_LENGTH`` at s = ``EAST_SCALE``: returns (score_map
+    (1, L*s, L*s), geo_map (5, ., .), training_mask (1, ., .)) float32,
+    CHW, with the empty-score score[0, 0, 0] = 1 quirk applied."""
+    length, scale = EAST_LENGTH, EAST_SCALE
     side = int(length * scale)
     score = np.zeros((side, side, 1), np.float32)
     geo = np.zeros((side, side, 5), np.float32)
@@ -235,11 +233,9 @@ def _signed_area(p: np.ndarray) -> float:
     return 0.5 * s
 
 
-def pse_shrink_polys(
-    polys: list[np.ndarray], rate: float, max_shr: int = PSE_MAX_SHRINK
-) -> list[np.ndarray]:
+def pse_shrink_polys(polys: list[np.ndarray], rate: float) -> list[np.ndarray]:
     """``PSEGtDecode._shrink`` (det_transforms.py:577-614): offset =
-    min(int(area * (1 - rate^2) / (peri + 0.001) + 0.5), max_shr);
+    min(int(area * (1 - rate^2) / (peri + 0.001) + 0.5), PSE_MAX_SHRINK);
     vanished or <= 2-point results fall back to the original poly.
     pyclipper signals a vanished polygon with an empty result;
     :func:`offset_convex_poly` signals it by inverting the orientation
@@ -250,7 +246,7 @@ def pse_shrink_polys(
     for bbox in polys:
         p = np.asarray(bbox, dtype=np.float64)
         area, peri = poly_area_perimeter(p)
-        offset = min(int(area * (1 - rate) / (peri + 0.001) + 0.5), max_shr)
+        offset = min(int(area * (1 - rate) / (peri + 0.001) + 0.5), PSE_MAX_SHRINK)
         shrunk = offset_convex_poly(p, -float(offset))
         if (
             len(shrunk) <= 2
@@ -267,21 +263,19 @@ def pse_gt_decode(
     shape_hw: tuple[int, int],
     polys: list[np.ndarray],
     ignore_tags: list[bool],
-    kernel_num: int = PSE_KERNEL_NUM,
-    min_shrink_ratio: float = PSE_MIN_SHRINK_RATIO,
-    min_shortest_edge: int = PSE_MIN_SHORTEST_EDGE,
 ) -> dict:
     """``PSEGtDecode.__call__`` (det_transforms.py:616-668) minus the
     image resample (labels only — the polygon scale/raster-dims side of
     the min-shortest-edge rule is applied identically): returns
     ``{"gt_text", "gt_kernels", "mask", "shape_hw", "polys"}`` with
     gt_text binarized from the instance-indexed raster and kernel i
-    shrunk at ``rate = 1 - (1 - min_ratio)/(kernel_num - 1) * (i+1)``."""
+    shrunk at ``rate = 1 - (1 - min_ratio)/(kernel_num - 1) * (i+1)``, all
+    three settings the ``PSE_*`` constants."""
     h, w = shape_hw
     short = min(h, w)
     scaled = [np.asarray(p, dtype=np.float64) for p in polys]
-    if short < min_shortest_edge:
-        s = min_shortest_edge / short
+    if short < PSE_MIN_SHORTEST_EDGE:
+        s = PSE_MIN_SHORTEST_EDGE / short
         h, w = int(round(h * s)), int(round(w * s))
         scaled = [p * s for p in scaled]
 
@@ -294,8 +288,8 @@ def pse_gt_decode(
             fill_poly(mask, p, 0.0)
 
     kernels = []
-    for i in range(1, kernel_num):
-        rate = 1.0 - (1.0 - min_shrink_ratio) / (kernel_num - 1) * i
+    for i in range(1, PSE_KERNEL_NUM):
+        rate = 1.0 - (1.0 - PSE_MIN_SHRINK_RATIO) / (PSE_KERNEL_NUM - 1) * i
         k = np.zeros((h, w), dtype=np.float32)
         for sp in pse_shrink_polys([p.astype(np.float64) for p in int_polys], rate):
             fill_poly(k, np.round(sp), 1.0)

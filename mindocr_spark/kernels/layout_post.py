@@ -18,6 +18,8 @@ import numpy as np
 from ..functions.geometry import aabb_iou
 
 PUBLAYNET_CLASS_IDS = (2, 1, 5, 4, 3)
+YOLO_IOU_THRES = 0.65  # YOLOv8Postprocess's NMS IoU threshold
+LETTERBOX_GRAY = 114.0
 
 
 def xywh2xyxy(x: np.ndarray) -> np.ndarray:
@@ -73,12 +75,10 @@ def scale_coords(
 def yolo_layout_postprocess(
     pred: np.ndarray,
     ori_shape: tuple[int, int],
-    ratio: float = 1.0,
-    pad: tuple[float, float] = (0.0, 0.0),
     conf_thres: float = 0.001,
-    iou_thres: float = 0.65,
 ) -> list[dict]:
-    """pred: (N, 5+nc) rows [cx, cy, w, h, conf, cls...]. Returns records
+    """pred: (N, 5+nc) rows [cx, cy, w, h, conf, cls...] in source-image
+    pixels (no letterbox: ratio 1, pad 0). Returns records
     {"category_id", "bbox" [x,y,w,h], "score"} in score-descending order
     per class."""
     if pred.size == 0:
@@ -95,10 +95,10 @@ def yolo_layout_postprocess(
             continue
         boxes = boxes_xyxy_all[sel]
         scores = sc[sel]
-        kept = nms_boxes(boxes, scores, iou_thres)
+        kept = nms_boxes(boxes, scores, YOLO_IOU_THRES)
         if not kept:
             continue
-        native = scale_coords(boxes[kept], ori_shape, ratio, pad)
+        native = scale_coords(boxes[kept], ori_shape, 1.0, (0.0, 0.0))
         tl = native.copy()
         tl[:, 2] -= tl[:, 0]  # -> width
         tl[:, 3] -= tl[:, 1]  # -> height
@@ -118,13 +118,13 @@ def letterbox(
     image: np.ndarray,
     new_shape: int | tuple[int, int],
     scaleup: bool = False,
-    color: float = 114.0,
 ) -> tuple[np.ndarray, float, tuple[float, float]]:
     """Forward letterbox (``mindocr/data/layout_dataset.py:361-399``,
     yolo-family path): keep-ratio resize by r = min(new/old) (never upscaled
-    unless ``scaleup``), then pad both sides with gray 114 using the
-    reference's round(d -/+ 0.1) split. Returns (image, r, (dh, dw)) — the
-    exact inputs :func:`scale_coords` inverts."""
+    unless ``scaleup``), then pad both sides with gray 114
+    (``LETTERBOX_GRAY``) using the reference's round(d -/+ 0.1) split.
+    Returns (image, r, (dh, dw)) — the exact inputs :func:`scale_coords`
+    inverts."""
     from ..functions.imaging import add_padding, resize_bilinear
 
     h, w = image.shape[:2]
@@ -141,5 +141,5 @@ def letterbox(
         out = resize_bilinear(out, new_unpad[1], new_unpad[0])
     top, bottom = int(round(dh - 0.1)), int(round(dh + 0.1))
     left, right = int(round(dw - 0.1)), int(round(dw + 0.1))
-    out = add_padding(out, (top, bottom, left, right), color)
+    out = add_padding(out, (top, bottom, left, right), LETTERBOX_GRAY)
     return out.astype(np.float32), float(r), (dh, dw)

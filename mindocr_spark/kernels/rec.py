@@ -224,20 +224,16 @@ def recognize_analysis(
     return (text, conf) if text else ("", 0.0)
 
 
-def rec_resize_padded(
-    crop: np.ndarray, image_shape: tuple[int, int] = (32, 320), padding: bool = True
-) -> tuple[np.ndarray, float]:
+def rec_resize_padded(crop: np.ndarray) -> tuple[np.ndarray, float]:
     """``resize_norm_img`` (``rec_transforms.py:457-484``, the
-    RecResizeImg/SVTR fixed-shape variant): keep-ratio resize to target
-    height, right-pad with zeros to the FIXED width (vs
-    :func:`rec_resize_norm`'s variable width); ``padding=False`` stretches.
-    Returns (float32 (imgH, imgW), valid_ratio = resized_w / imgW)."""
+    RecResizeImg/SVTR fixed-shape variant, padding=True): keep-ratio resize
+    to height 32, right-pad with zeros to the FIXED width 320 (vs
+    :func:`rec_resize_norm`'s variable width). Returns (float32 (32, 320),
+    valid_ratio = resized_w / 320)."""
     import math
 
-    img_h, img_w = image_shape
+    img_h, img_w = REC_TARGET_HEIGHT, 320
     h, w = crop.shape[:2]
-    if not padding:
-        return resize_bilinear(crop, img_h, img_w), 1.0
     ratio = w / float(max(h, 1))
     resized_w = img_w if math.ceil(img_h * ratio) > img_w else int(math.ceil(img_h * ratio))
     resized = resize_bilinear(crop, img_h, max(resized_w, 1))

@@ -19,6 +19,8 @@ from .system import ocr_image
 
 _LINE_COVERAGE = 0.7  # a ruling line spans >=70% of the table extent
 _INK = 128
+_CELL_PAD = 2  # px kept clear inside a cell's ruling lines
+_ERASE_PX = 3  # px whited out on each side of a ruling line's center
 
 
 def detect_grid(img: np.ndarray) -> tuple[list[int], list[int]]:
@@ -41,10 +43,9 @@ def detect_grid(img: np.ndarray) -> tuple[list[int], list[int]]:
     return h_lines, centers(col_cov)
 
 
-def grid_cells(
-    h_lines: list[int], v_lines: list[int], pad: int = 2
-) -> list[list[int]]:
+def grid_cells(h_lines: list[int], v_lines: list[int]) -> list[list[int]]:
     """Line centers -> cell interior bboxes [x0, y0, x1, y1], row-major."""
+    pad = _CELL_PAD
     cells = []
     for yi in range(len(h_lines) - 1):
         for xi in range(len(v_lines) - 1):
@@ -59,15 +60,13 @@ def grid_cells(
     return cells
 
 
-def erase_lines(
-    img: np.ndarray, h_lines: list[int], v_lines: list[int], thickness: int = 3
-) -> np.ndarray:
+def erase_lines(img: np.ndarray, h_lines: list[int], v_lines: list[int]) -> np.ndarray:
     """White out ruling lines so word detection sees only cell contents."""
     out = img.copy()
     for y in h_lines:
-        out[max(y - thickness, 0) : y + thickness + 1, :] = 255
+        out[max(y - _ERASE_PX, 0) : y + _ERASE_PX + 1, :] = 255
     for x in v_lines:
-        out[:, max(x - thickness, 0) : x + thickness + 1] = 255
+        out[:, max(x - _ERASE_PX, 0) : x + _ERASE_PX + 1] = 255
     return out
 
 
@@ -106,7 +105,7 @@ def extract_table(img: np.ndarray) -> dict:
     }
 
 
-def extract_table_html(img: np.ndarray, header_rows: int = 1) -> str:
+def extract_table_html(img: np.ndarray) -> str:
     """Gray table image -> the reference's pred_html
     (``predict_table_recognition.py`` TableAnalyzer.__call__): structure
     tokens + cell bboxes from the deterministic grid "model", OCR text
@@ -126,5 +125,5 @@ def extract_table_html(img: np.ndarray, header_rows: int = 1) -> str:
     if grid is None:
         return ""
     n_rows, n_cols, cells, boxes, texts = grid
-    tokens = grid_structure_tokens(n_rows, n_cols, header_rows=header_rows)
+    tokens = grid_structure_tokens(n_rows, n_cols)
     return table_master_html(tokens, cells, boxes, texts)

@@ -146,25 +146,14 @@ def det_metric(df: DataFrame) -> DataFrame:
     )
 
 
-def rec_metric(
-    df: DataFrame,
-    pred_col: str = "pred",
-    gt_col: str = "gt",
-    ignore_space: bool = True,
-    lower: bool = True,
-    filter_ood: bool = True,
-) -> DataFrame:
-    """Returns one row (n, acc, norm_edit_distance); all-native Catalyst."""
-    pred = F.col(pred_col)
-    gt = F.col(gt_col)
-    if ignore_space:
-        pred = F.regexp_replace(pred, " ", "")
-        gt = F.regexp_replace(gt, " ", "")
-    if lower:
-        pred = F.lower(pred)
-        gt = F.lower(gt)
-    if filter_ood:  # reference filters the LABEL only (rec_metrics.py:122-124)
-        gt = F.regexp_replace(gt, f"[^{CHARSET}]", "")
+def rec_metric(df: DataFrame) -> DataFrame:
+    """df: (pred, gt) strings. Returns one row (n, acc,
+    norm_edit_distance); all-native Catalyst. The reference's defaults
+    (ignore_space, lower, filter_ood all on) are always applied."""
+    pred = F.lower(F.regexp_replace(F.col("pred"), " ", ""))
+    gt = F.lower(F.regexp_replace(F.col("gt"), " ", ""))
+    # reference filters the LABEL only (rec_metrics.py:122-124)
+    gt = F.regexp_replace(gt, f"[^{CHARSET}]", "")
     pairs = df.select(pred.alias("p"), gt.alias("g"))
     scored = pairs.select(
         F.when(F.col("p") == F.col("g"), 1).otherwise(0).alias("correct"),
@@ -183,23 +172,19 @@ def rec_metric(
     )
 
 
-def cls_metric(df: DataFrame, pred_col: str = "pred", gt_col: str = "gt") -> DataFrame:
-    """Angle-classification accuracy."""
+def cls_metric(df: DataFrame) -> DataFrame:
+    """df: (pred, gt) angle labels -> angle-classification accuracy."""
     return df.agg(
         F.count("*").alias("n"),
-        F.avg(
-            F.when(F.col(pred_col) == F.col(gt_col), 1).otherwise(0)
-        ).alias("acc"),
+        F.avg(F.when(F.col("pred") == F.col("gt"), 1).otherwise(0)).alias("acc"),
     )
 
 
-def e2e_match_image(
-    pred_items: list[dict], gt_items: list[dict], thresh: float = MIN_INTERSECT
-) -> tuple[int, int]:
+def e2e_match_image(pred_items: list[dict], gt_items: list[dict]) -> tuple[int, int]:
     """One image -> (correct, total) per the reference e2e eval
     (``deploy/eval_utils/eval_pipeline.py:33-73``): gt items with ``###``/``*``
     transcription are ignored; a pred counts once per gt whose
-    intersection/gt_area exceeds the threshold AND whose space-stripped
+    intersection/gt_area exceeds ``MIN_INTERSECT`` AND whose space-stripped
     lowercase text matches."""
     gts = [g for g in gt_items if g["transcription"] not in ("###", "*")]
     correct = 0
@@ -216,7 +201,7 @@ def e2e_match_image(
             if g_area <= 0:
                 continue
             inter = poly_intersection_area(g, p)
-            if inter / g_area > thresh and gt["transcription"]:
+            if inter / g_area > MIN_INTERSECT and gt["transcription"]:
                 if gt["transcription"].replace(" ", "").lower() == pred_text:
                     correct += 1
     return correct, len(gts)

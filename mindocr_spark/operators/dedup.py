@@ -206,14 +206,15 @@ _KM_M30 = (1 << 30) - 1
 _KM_M60 = (1 << 60) - 1
 
 
-def _km_expr(s: int, h1: str = "h1", h2: str = "h2") -> str:
-    """(h1 + s*h2) mod 2^60 without int64 overflow — identical text works
-    as a Spark SQL expression and a DuckDB expression."""
+def _km_expr(s: int) -> str:
+    """(h1 + s*h2) mod 2^60 over the columns h1, h2 without int64
+    overflow — identical text works as a Spark SQL expression and a DuckDB
+    expression."""
     if s == 0:
-        return h1
+        return "h1"
     return (
-        f"({h1} + {s} * ({h2} & {_KM_M30}) + "
-        f"((({s} * ({h2} >> 30)) & {_KM_M30}) << 30)) & {_KM_M60}"
+        f"(h1 + {s} * (h2 & {_KM_M30}) + "
+        f"((({s} * (h2 >> 30)) & {_KM_M30}) << 30)) & {_KM_M60}"
     )
 
 

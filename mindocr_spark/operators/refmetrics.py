@@ -59,17 +59,17 @@ def _strip_wrappers(col):
     return out
 
 
-def structure_acc(pairs: DataFrame, pred_col: str = "pred_str",
-                  gt_col: str = "gt_str") -> DataFrame:
+def structure_acc(pairs: DataFrame) -> DataFrame:
     """TableStructureMetric core (table_metrics.py:13-49) over a DataFrame
-    of joined-token strings: exact-match accuracy, plus the
+    of joined-token strings ``pred_str``, ``gt_str``: exact-match accuracy,
+    plus the
     ``del_thead_tbody`` variant in the same row. Accuracy is integer
     basis points (the repo's engine-exact convention; the reference's
     ``correct/(all+eps)`` float is recovered as acc_bp/10000)."""
     scored = pairs.select(
-        F.when(F.col(pred_col) == F.col(gt_col), 1).otherwise(0).alias("ok"),
+        F.when(F.col("pred_str") == F.col("gt_str"), 1).otherwise(0).alias("ok"),
         F.when(
-            _strip_wrappers(F.col(pred_col)) == _strip_wrappers(F.col(gt_col)),
+            _strip_wrappers(F.col("pred_str")) == _strip_wrappers(F.col("gt_str")),
             1,
         ).otherwise(0).alias("ok_del"),
     )
@@ -189,11 +189,7 @@ FROM agg
 COCO_THRESHOLDS = list(range(50, 100, 5))
 
 
-def coco_map_bp(
-    gts: DataFrame,
-    preds: DataFrame,
-    thresholds: list[int] | None = None,
-) -> DataFrame:
+def coco_map_bp(gts: DataFrame, preds: DataFrame) -> DataFrame:
     """COCO-style bbox mAP (layout_metrics.py:7-30 / COCOeval 'bbox') as a
     grouped IoU join + per-class AP windows, integer basis points.
 
@@ -216,7 +212,6 @@ def coco_map_bp(
     thresholds) plus the overall row ``class_id = -1`` (the reference's
     ``stats[0]`` is overall ap_bp/10000).
     """
-    ts = thresholds or COCO_THRESHOLDS
     inter_w = F.least(F.col("p.x2"), F.col("g.x2")) - F.greatest(
         F.col("p.x1"), F.col("g.x1")
     )
@@ -248,7 +243,9 @@ def coco_map_bp(
             ).alias("uni"),
         )
     )
-    t_df = preds.sparkSession.createDataFrame([(t,) for t in ts], "t int")
+    t_df = preds.sparkSession.createDataFrame(
+        [(t,) for t in COCO_THRESHOLDS], "t int"
+    )
     # greedy match per threshold: among preds hitting (img, class, gt)
     # with IoU >= t/100, the best score wins the gt; everyone else is FP
     qual = matched.join(F.broadcast(t_df)).filter(
@@ -306,7 +303,7 @@ def coco_map_bp(
         ap.groupBy("class_id")
         .agg(
             F.max(F.when(F.col("t") == 50, F.col("ap_t_bp"))).alias("ap50_bp"),
-            F.expr(f"sum(ap_t_bp) div {len(ts)}").cast("long").alias("ap_bp"),
+            F.expr(f"sum(ap_t_bp) div {len(COCO_THRESHOLDS)}").cast("long").alias("ap_bp"),
         )
         .join(F.broadcast(n_gt), "class_id")
         .join(F.broadcast(n_pred), "class_id")

@@ -14,14 +14,13 @@ from pyspark.sql import functions as F
 from ..config import spread
 
 
-def read_image_dir(
-    spark: SparkSession, img_dir: str, pattern: str = "*.{png,jpg,jpeg}"
-) -> DataFrame:
-    """-> (media_ref string, image binary), media_ref = file path, ordered
-    like the reference's sorted glob."""
+def read_image_dir(spark: SparkSession, img_dir: str) -> DataFrame:
+    """-> (media_ref string, image binary) per png/jpg/jpeg file under
+    ``img_dir``, media_ref = file path, ordered like the reference's sorted
+    glob."""
     df = (
         spark.read.format("binaryFile")
-        .option("pathGlobFilter", pattern)
+        .option("pathGlobFilter", "*.{png,jpg,jpeg}")
         .option("recursiveFileLookup", "true")
         .load(img_dir)
     )

@@ -54,7 +54,7 @@ class TestGlyphs:
             assert glyph_bitmap(ch)[-1].any() or glyph_bitmap(ch)[-2].any()
 
     def test_render_word_shape(self):
-        img = render_word("ab", scale=4)
+        img = render_word("ab")
         assert img.shape == (28, 44)
         assert img.min() == 0 and img.max() == 255
 

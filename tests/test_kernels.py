@@ -132,8 +132,8 @@ class TestMerge:
 
 def test_validate_polygons_train_reference_semantics():
     """ValidatePolygons (det_transforms.py:668-712) as a standalone kernel:
-    outside-drop, min-area ignore (incl. the boundary-touch area-0 case),
-    and the clip_to_visible_area vertex rewrite + min-vertices ignore."""
+    outside-drop and min-area ignore (incl. the boundary-touch area-0
+    case)."""
     import numpy as np
 
     from mindocr_spark.kernels.det import validate_polygons_train
@@ -154,14 +154,6 @@ def test_validate_polygons_train_reference_semantics():
     # tiny: clipped area 0.25 < min_area=1 -> ignored; partial's visible
     # area is 20x30=600 -> kept
     assert list(ig) == [False, False, True]
-
-    # clip_to_visible_area rewrites coordinates to the visible region
-    ps2, ts2, ig2 = validate_polygons_train(
-        polys, texts, tags, hw, clip_to_visible_area=True
-    )
-    clipped = ps2[ts2.index("part")]
-    assert clipped[:, 0].max() <= 200 and clipped[:, 0].min() >= 180
-    assert len(clipped) >= 4 and not ig2[ts2.index("part")]
 
     # boundary-touching polygon: intersects with area 0 -> kept, ignored
     touch = np.array([[200, 10], [240, 10], [240, 40], [200, 40]], float)

@@ -289,13 +289,14 @@ def test_mat5_roundtrip_random(seed):
 def test_approx_poly_dp_output_subset_within_eps(seed):
     """DP simplification only keeps input vertices, always keeps >= 2, and
     every dropped point lies within eps of the simplified chain (checked on
-    an open chain where the DP guarantee is exact)."""
-    from mindocr_spark.functions.geometry import approx_poly_dp
+    an open chain, the half approx_poly_dp simplifies, where the DP
+    guarantee is exact)."""
+    from mindocr_spark.functions.geometry import _dp_open
 
     rng = np.random.RandomState(seed)
     pts = np.cumsum(rng.randn(rng.randint(5, 40), 2), axis=0)
     eps = float(rng.rand() * 2)
-    out = approx_poly_dp(pts, eps, closed=False)
+    out = pts[_dp_open(pts, eps)]
     in_set = {tuple(p) for p in pts.tolist()}
     assert all(tuple(p) in in_set for p in out.tolist())
     assert len(out) >= 2

@@ -56,17 +56,10 @@ def test_sar_decode_skip_pad_break_eos():
         np.array([[rd.SAR_END_IDX, _idx("a")]]), np.ones((1, 2))
     )
     assert texts2 == [""]
-    # ...but with probs=None it is SKIPPED at idx 0 (reference quirk)
-    texts3, _ = rd.sar_decode(np.array([[rd.SAR_END_IDX, _idx("a"), rd.SAR_END_IDX]]))
-    assert texts3 == ["a"]
-    # unknown token joins literally; rm_symbol strips it
+    # unknown token joins literally
     seq4 = [rd.SAR_UNKNOWN_IDX, _idx("a"), rd.SAR_END_IDX]
     texts4, _ = rd.sar_decode(np.array([seq4]), np.ones((1, 3)))
     assert texts4 == ["<UKN>a"]
-    texts5, _ = rd.sar_decode(
-        np.array([seq4]), np.ones((1, 3)), rm_symbol=True
-    )
-    assert texts5 == ["ukna"]
 
 
 def test_abinet_decode_null_cut_and_length():

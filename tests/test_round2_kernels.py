@@ -181,18 +181,15 @@ class TestResizeVariants:
         from mindocr_spark.kernels.rec import rec_resize_padded
 
         crop = np.full((16, 80), 200, dtype=np.uint8)  # ratio 5 -> w 160
-        out, vr = rec_resize_padded(crop, (32, 320))
+        out, vr = rec_resize_padded(crop)
         assert out.shape == (32, 320)
         assert vr == pytest.approx(160 / 320)
         assert out[:, :160].mean() == pytest.approx(200.0, abs=0.5)
         assert float(np.abs(out[:, 160:]).max()) == 0.0  # zero right-pad
         # wider than the gear width: capped, valid_ratio 1.0
         wide = np.full((16, 400), 50, dtype=np.uint8)
-        out2, vr2 = rec_resize_padded(wide, (32, 320))
+        out2, vr2 = rec_resize_padded(wide)
         assert out2.shape == (32, 320) and vr2 == 1.0
-        # stretch mode
-        out3, vr3 = rec_resize_padded(crop, (32, 320), padding=False)
-        assert out3.shape == (32, 320) and vr3 == 1.0
 
     def test_letterbox_roundtrip_with_scale_coords(self):
         from mindocr_spark.kernels.layout_post import letterbox, scale_coords

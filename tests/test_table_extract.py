@@ -46,7 +46,7 @@ def test_no_grid_returns_empty():
 
 
 def test_detect_grid_positions():
-    page, _ = render_table([["ab", "cd"]], cell_w=224, cell_h=64)
+    page, _ = render_table([["ab", "cd"]])
     h_lines, v_lines = detect_grid(page)
     assert h_lines == [0, 64]
     assert v_lines == [0, 224, 448]

@@ -27,7 +27,7 @@ def test_vocab_layout():
     orig = tm.STRUCTURE_DICT
     try:
         tm.STRUCTURE_DICT = chars
-        merged = tm.build_vocab(True)
+        merged = tm.build_vocab()
         assert "<td>" not in merged and "<td></td>" in merged
     finally:
         tm.STRUCTURE_DICT = orig
@@ -66,15 +66,12 @@ def test_decode_breaks_at_eos_only_past_position_zero():
     assert tokens == ["<tr>"]
 
 
-def test_bbox_decode_ratio_and_pad_shape():
+def test_bbox_decode_ratio():
     bbox = np.array([0.5, 0.5, 0.2, 0.1])
     shape = np.array([100.0, 200.0, 2.0, 4.0, 400.0, 800.0])
-    ori = tm.bbox_decode(bbox, shape, "ori")
+    ori = tm.bbox_decode(bbox, shape)
     # x=0.5*200/4=25, y=0.5*100/2=25, w=0.2*200/4=10, h=0.1*100/2=5
     np.testing.assert_allclose(ori, [25 - 5, 25 - 2, 25 + 5, 25 + 2])
-    pad = tm.bbox_decode(bbox, shape, "pad")
-    # pad dims: x=0.5*800/4=100, y=0.5*400/2=100, w=40, h=20
-    np.testing.assert_allclose(pad, [100 - 20, 100 - 10, 100 + 20, 100 + 10])
 
 
 def test_cal_iou_uses_convex_hull_union():
@@ -169,7 +166,7 @@ def test_join_cell_texts_bold_merge():
 
 def test_table_master_html_end_to_end():
     # 1x2 grid, both texts matched by center rule
-    tokens = tm.grid_structure_tokens(2, 2, header_rows=1)
+    tokens = tm.grid_structure_tokens(2, 2)
     masters = np.array([
         [0, 0, 10, 10], [10, 0, 20, 10],
         [0, 10, 10, 20], [10, 10, 20, 20],
@@ -228,7 +225,7 @@ def test_table_master_html_virtual_rows_for_unmatched():
 
 
 def test_grid_structure_tokens_all_in_vocab():
-    toks = tm.grid_structure_tokens(3, 4, header_rows=1)
+    toks = tm.grid_structure_tokens(3, 4)
     assert all(t in tm.TOKEN_TO_ID for t in toks)
     assert toks.count("<td></td>") == 12
     assert toks.count("<tr>") == 3

@@ -1,5 +1,5 @@
-"""Every engine definition has a production caller or an allow-list entry
-(tools/unreached.py). No Spark session."""
+"""Every engine definition has a production caller or an allow-list entry,
+and so does every option (tools/unreached.py). No Spark session."""
 
 from __future__ import annotations
 
@@ -12,8 +12,8 @@ from tools.unreached import report  # noqa: E402
 
 def test_repo_has_no_unreached_definitions():
     unreached, stale = report(".")
-    assert unreached == [], "engine definitions no production path reaches"
-    assert stale == [], "allow-list entries that name nothing unreached"
+    assert unreached == [], "engine definitions or options no production path reaches"
+    assert stale == [], "allow-list entries that name nothing unreached or unset"
 
 
 def _write(root, rel, src):
@@ -100,3 +100,54 @@ def test_module_assignments_count_only_when_named(tmp_path):
     unreached, stale = report(str(tmp_path), allowed={})
     assert unreached == ["engine.UNUSED"]
     assert stale == []
+
+
+def test_options_need_a_caller_that_sets_them(tmp_path):
+    """A parameter with a default counts as set only when a call passes it,
+    by keyword, by position or through ``partial``."""
+    _write(tmp_path, "mindocr_spark/__init__.py", "")
+    _write(
+        tmp_path,
+        "mindocr_spark/engine.py",
+        "def run(x, a=1, b=2, c=3):\n"
+        "    return x + a + b + c\n",
+    )
+    _write(
+        tmp_path,
+        "jobs/job.py",
+        "from functools import partial\n\n"
+        "from mindocr_spark.engine import run\n\n"
+        "run(1, a=5)\n"
+        "partial(run, b=4)(1)\n",
+    )
+    unreached, stale = report(str(tmp_path), allowed={})
+    assert unreached == ["engine.run(c)"]
+    assert stale == []
+
+    # an allowed option is not reported; an entry for an option a call
+    # sets, or for no option at all, is stale
+    unreached, stale = report(
+        str(tmp_path),
+        allowed={"engine.run(c)": "", "engine.run(a)": "", "engine.run(z)": ""},
+    )
+    assert unreached == []
+    assert stale == ["engine.run(a)", "engine.run(z)"]
+
+    # by position
+    _write(
+        tmp_path, "jobs/job.py", "from mindocr_spark.engine import run\n\nrun(1, 2, 3, 4)\n"
+    )
+    assert report(str(tmp_path), allowed={}) == ([], [])
+
+
+def test_same_name_definitions_resolve_to_their_module(tmp_path):
+    """A root's ``from module import name`` or ``module.name`` reaches that
+    module's definition only, not another of the same name."""
+    _write(tmp_path, "mindocr_spark/__init__.py", "")
+    _write(tmp_path, "mindocr_spark/a.py", "def f():\n    return 1\n")
+    _write(tmp_path, "mindocr_spark/b.py", "def f():\n    return 2\n")
+    _write(tmp_path, "jobs/job.py", "from mindocr_spark.a import f\n\nf()\n")
+    assert report(str(tmp_path), allowed={}) == (["b.f"], [])
+
+    _write(tmp_path, "jobs/job.py", "from mindocr_spark import b\n\nb.f()\n")
+    assert report(str(tmp_path), allowed={}) == (["a.f"], [])

@@ -22,11 +22,11 @@ of every decoded page; seeded masks, point sets, PSE maps and box sets.
 
 Outputs, per payload: ``media_payload_text`` under profiles
 None/attn/poly. Per decoded page: ``detect_quads`` in both modes,
-``extract_table``, ``detect_grid``, the ``det_score`` map of the resized
-page, ``db_postprocess`` polygons and scores of that map for both box
-types, and for every quad of the page's profile mode its ``crop_box``
-bytes, ``classify_and_recognize`` text and confidence under all four rec
-heads, and ``cls_probs_from_analyses`` of the crop's upright and flipped
+``extract_table``, ``extract_table_html``, ``detect_grid``, the
+``det_score`` map of the resized page, ``db_postprocess`` polygons and
+scores of that map for both box types, and for every quad of the page's
+profile mode its ``crop_box`` bytes, ``classify_and_recognize`` text and
+confidence under all four rec heads, and ``cls_probs_from_analyses`` of the crop's upright and flipped
 analyses. Per mask: ``label_runs`` (8-connected), ``_components4`` and
 ``_segment_glyphs``. Seeded: ``detect_grid`` and ``det_score`` of the
 masks as gray images, ``db_postprocess`` of smoothed random masks (both box
@@ -34,7 +34,8 @@ types), ``crop_box`` of random images and convex quads crossing their
 borders, ``min_area_rect`` (random
 integer and float sets, rotated rects, collinear points, duplicates and
 sets of at most 2 points), ``pse_expand`` / ``pse_postprocess``,
-``match_boxes_to_cells``, ``nms_boxes``, ``locality_aware_nms`` (on seeded
+``match_boxes_to_cells``, the table matcher's ``_cal_iou`` (integer and
+jittered float corners), ``nms_boxes``, ``locality_aware_nms`` (on seeded
 9-value boxes, plus the reference's LANMS JSON fixtures when
 ``--lanms-dir`` names them) and ``match_image_labels``. Only names both
 trees define are called.
@@ -210,6 +211,7 @@ def dump(inputs_path: str, lanms_dir: str | None, out_path: str) -> None:
     from mindocr_spark.functions.imaging import label_runs, rotate180
     from mindocr_spark.functions.nms import locality_aware_nms
     from mindocr_spark.functions.pse import _components4, pse_expand
+    from mindocr_spark.functions.table_master import _cal_iou
     from mindocr_spark.functions.table_match import match_boxes_to_cells
     from mindocr_spark.kernels.cls import cls_probs_from_analyses
     from mindocr_spark.kernels.det import db_postprocess, det_resize, det_score
@@ -224,7 +226,7 @@ def dump(inputs_path: str, lanms_dir: str | None, out_path: str) -> None:
         media_payload_text,
         profile_heads,
     )
-    from mindocr_spark.kernels.table import detect_grid, extract_table
+    from mindocr_spark.kernels.table import detect_grid, extract_table, extract_table_html
     from mindocr_spark.metrics import match_image_labels
 
     with open(inputs_path, "rb") as f:  # written by build_inputs
@@ -244,6 +246,7 @@ def dump(inputs_path: str, lanms_dir: str | None, out_path: str) -> None:
             out[f"detect_quads/{i}/{mode}"] = detect_quads(img, mode)
         out[f"detect_grid/{i}"] = detect_grid(img)
         out[f"extract_table/{i}"] = extract_table(img)
+        out[f"extract_table_html/{i}"] = extract_table_html(img)
         resized, shape_list = det_resize(img)
         prob = det_score(resized)
         out[f"det_score/{i}"] = prob
@@ -305,6 +308,9 @@ def dump(inputs_path: str, lanms_dir: str | None, out_path: str) -> None:
         gts = [_quad(rng) for _ in range(m)]
         ignore = [bool(v) for v in rng.rand(m) < 0.2]
         out[f"match_image_labels/{seed}"] = match_image_labels(preds, gts, ignore)
+        out[f"cal_iou/{seed}"] = [_cal_iou(t, c) for t in text for c in cells]
+        jittered = text + rng.rand(n, 4) * 3  # non-integer corners
+        out[f"cal_iou_float/{seed}"] = [_cal_iou(t, c) for t in jittered for c in cells]
 
     if lanms_dir:
         for fname in sorted(os.listdir(lanms_dir)):
@@ -356,8 +362,9 @@ def main() -> int:
     keys = sorted(set(this) | set(other))
     differ = [k for k in keys if this.get(k, "<missing>") != other.get(k, "<missing>")]
     by_kernel = Counter(k.split("/")[0] for k in keys)
+    differ_by_kernel = Counter(k.split("/")[0] for k in differ)
     for kernel, n in sorted(by_kernel.items()):
-        print(f"{kernel:28s} {n:6d} outputs")
+        print(f"{kernel:28s} {n:6d} outputs, {differ_by_kernel[kernel]:6d} differ")
     for k in differ[:20]:
         print("DIFFERS", k)
     print(f"TOTAL {len(keys)} outputs, {len(differ)} differ")
