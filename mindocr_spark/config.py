@@ -142,21 +142,23 @@ def row_stage(schema: str):
 
 
 def persist_intermediate(df):
-    """Storage policy for in-query intermediates reused on both sides of a
-    self-join (band/shingle tables): without persistence Catalyst recomputes
-    the expensive upstream aggregation once per side; with it the table is
-    built once.
+    """Storage policy for an in-query intermediate that several branches of
+    one plan read, where a cache pays for itself.
 
-    Explicit decision: MEMORY_AND_DISK — spill to local
-    disk rather than recompute, because every such intermediate here is the
-    OUTPUT of a shuffle-heavy aggregation (minhash over all shingles,
-    60-bit simhash votes) that costs far more to rebuild than to re-read,
-    and disk-backed blocks degrade gracefully when the table exceeds
-    executor memory. At 100 TB the same policy holds per partition (blocks
-    spill independently); if an intermediate exceeds total cluster disk,
-    the escalation is an explicit checkpoint to the job's scratch table,
-    not a bigger cache. A plan test asserts the InMemoryRelation is
-    actually present so the policy can't silently disappear
+    Most shared intermediates need none: where the shared subtree ends in a
+    shuffle, Spark's exchange reuse (``ReusedExchange``) already builds it
+    once per query, and a cache only adds the block writes and reads. What
+    exchange reuse cannot share is work ABOVE the last exchange, such as the
+    shingle explode + distinct that runs inside ``_shingles``' doc_id
+    partitioning. A site calls this only where a paired A/B
+    (``tools/persist_ab.py``, ``BENCH_persist_ab.json``) showed removing it
+    costs one of its operators CPU.
+
+    MEMORY_AND_DISK: spill to local disk rather than recompute, so blocks
+    degrade gracefully when the table exceeds executor memory; past total
+    cluster disk the escalation is an explicit checkpoint to the job's
+    scratch table, not a bigger cache. A plan test asserts the
+    InMemoryRelation is present at the sites that keep it
     (tests/test_plan_quality.py)."""
     from pyspark import StorageLevel
 

@@ -933,11 +933,9 @@ def ngram_jaccard_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     JACCARD_T_NUM / JACCARD_T_DEN."""
     docs = _docs(spark, sf_dir)
     cap = _shingle_cap(docs.count())
-    sh = persist_intermediate(_shingles(docs))  # feeds freq AND kept
+    sh = _shingles(docs)
     freq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    # persisted: sizes + both self-join sides consume kept, and without
-    # the cache each re-runs the freq groupBy shuffle
-    kept = persist_intermediate(sh.join(freq.filter(F.col("df") <= cap), "shingle"))
+    kept = sh.join(freq.filter(F.col("df") <= cap), "shingle")
     sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
     a = kept.select("doc_id", "shingle").alias("a")
     b = kept.select("doc_id", "shingle").alias("b")

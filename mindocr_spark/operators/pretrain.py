@@ -452,7 +452,6 @@ def semdedup_flags(emb: DataFrame) -> DataFrame:
     sup = emb.filter(F.col("vec_id") < n_super).select(
         F.col("vec_id").alias("sup_id"), F.col("embedding").alias("se")
     )
-    from ..config import persist_intermediate
 
     # (a) one-time coarse build: super-cell -> centroid table (k + s rows),
     # each centroid under its nearest super plus every super under itself
@@ -478,14 +477,9 @@ def semdedup_flags(emb: DataFrame) -> DataFrame:
         SEMDEDUP_PROBES,
     ).select("vec_id", "sup_id")
     # (c) nearest candidate centroid; a centroid reached twice (a probed
-    # super is also in its own super-cell) gives value-identical rows.
-    # Persisted: the assignment feeds both sides of the pair join and the
-    # final keep/drop projection — at scale this is the materialized
-    # cluster-assignment table of the SemDeDup recipe, not an optional
-    # cache (persist_intermediate = the repo's explicit MEMORY_AND_DISK
-    # policy, not a bare .persist()).
+    # super is also in its own super-cell) gives value-identical rows
     cand = probes.join(cells, "sup_id").join(emb, "vec_id")
-    assigned = persist_intermediate(
+    assigned = (
         nearest(cand, ["vec_id"], "cent_id", F.round(l2("embedding", "ce"), 4))
         .join(emb, "vec_id")
         .select("vec_id", "embedding", "norm", F.col("cent_id").alias("cell"))
@@ -615,25 +609,19 @@ def boilerplate_clean(d: DataFrame) -> DataFrame:
     ``(doc_id, n_lines, n_removed, cleaned_text)`` — the actual cleaned
     text, which jobs/corpus_prep_job.py carries forward into packing; the
     registered query fingerprints it with md5 instead of shipping it."""
-    from ..config import persist_intermediate
-
     d = spread(d, "doc_id")
     # tokenize ONCE into a projected column — referencing
     # split(text) inside the transform lambda made Catalyst re-split the
     # text for every line index, O(words x lines) string work per doc
-    # (the _shingles lesson, dedup.py) — and persist the line table: it
-    # feeds both the cross-doc frequency count and the join-back, which
-    # otherwise re-ran the explode.
-    lines = persist_intermediate(
-        d.select("doc_id", F.split("text", " ").alias("toks")).select(
-            "doc_id",
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, cast(ceil(size(toks) / {LINE_WORDS}.0) as int)), "
-                    f"i -> array_join(slice(toks, (i - 1) * {LINE_WORDS} + 1, {LINE_WORDS}), ' '))"
-                )
-            ).alias("idx", "line"),
-        )
+    # (the _shingles lesson, dedup.py)
+    lines = d.select("doc_id", F.split("text", " ").alias("toks")).select(
+        "doc_id",
+        F.posexplode(
+            F.expr(
+                f"transform(sequence(1, cast(ceil(size(toks) / {LINE_WORDS}.0) as int)), "
+                f"i -> array_join(slice(toks, (i - 1) * {LINE_WORDS} + 1, {LINE_WORDS}), ' '))"
+            )
+        ).alias("idx", "line"),
     )
     freq = lines.groupBy("line").agg(
         F.countDistinct("doc_id").alias("line_docs")

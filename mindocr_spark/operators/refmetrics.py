@@ -315,11 +315,6 @@ def coco_map_bp(gts: DataFrame, preds: DataFrame) -> DataFrame:
             "ap_bp",
         )
     )
-    # per-class table feeds both output branches (rows + overall agg):
-    # persist so the PR-curve windows run once, not twice
-    from ..config import persist_intermediate
-
-    percls = persist_intermediate(percls)
     overall = percls.agg(
         F.lit(-1).cast("long").alias("class_id"),
         F.sum("n_gt").cast("long").alias("n_gt"),

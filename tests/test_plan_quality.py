@@ -4,6 +4,8 @@ reads all columns for a 2-column projection is wrong at any sf)."""
 
 from __future__ import annotations
 
+import pytest
+
 SF = "/root/testdata/sf0.001"
 
 
@@ -50,21 +52,58 @@ def test_exact_dup_partial_aggregation(spark):
 
 
 def test_self_join_intermediates_are_persisted(spark):
-    """The band/shingle tables feed both sides of a self-join; the explicit
-    persist_intermediate policy (config.py) must actually appear in the
-    plan — if the persist is silently dropped, Catalyst rebuilds the
-    expensive upstream aggregation once per side."""
+    """The sites where a paired A/B showed the cache pays
+    (BENCH_persist_ab.json) must keep their persist_intermediate: without
+    it each join side rebuilds the shared table."""
     from mindocr_spark.operators.dedup import (
         minhash_lsh_pairs,
-        ngram_jaccard_filtered,
         simhash_near_dup_banded,
     )
 
-    for fn in (minhash_lsh_pairs, simhash_near_dup_banded, ngram_jaccard_filtered):
+    for fn in (minhash_lsh_pairs, simhash_near_dup_banded):
         df = fn(spark, SF)
         plan = _plan(df)
         assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan, fn.__name__
         spark.catalog.clearCache()
+
+
+def _uncached_operators():
+    """The operators whose persist sites a paired A/B removed: exchange
+    reuse builds their shared intermediates once."""
+    from mindocr_spark.operators.dedup import ngram_jaccard_filtered
+    from mindocr_spark.operators.pretrain import boilerplate_line_removal, semdedup
+    from mindocr_spark.operators.refmetrics import layout_map
+
+    return [ngram_jaccard_filtered, semdedup, layout_map, boilerplate_line_removal]
+
+
+@pytest.mark.parametrize("fn", _uncached_operators(), ids=lambda fn: fn.__name__)
+def test_shared_intermediates_use_exchange_reuse(spark, fn):
+    """After an action the final AQE plan reads the shared subtree through
+    a ReusedExchange and holds no cache: turning exchange reuse off would
+    rebuild it once per consumer."""
+    spark.catalog.clearCache()
+    df = fn(spark, SF)
+    df.collect()
+    plan = _plan(df)
+    assert "isFinalPlan=true" in plan
+    assert "ReusedExchange" in plan, plan[:3000]
+    assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+
+
+def test_uncached_operators_leave_no_cache(spark):
+    """Operators that cache nothing leave nothing behind: run them all in
+    one session with no clearCache between them, and afterwards the cache
+    manager is empty and the SparkContext holds no persisted RDD it did
+    not hold before (earlier tests' DataFrame caches are cleared first;
+    their localCheckpoint RDDs cannot be, so they are what "before" holds)."""
+    spark.catalog.clearCache()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    for fn in _uncached_operators():
+        fn(spark, SF).write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert set(jsc.getPersistentRDDs().keySet()) == before
 
 
 def test_extract_has_no_cartesian_and_bounded_shuffles(spark, small_corpus):

@@ -251,15 +251,18 @@ def test_pretrain_plans_no_cartesian(spark, fn):
 
 def test_semdedup_plan_shape(spark):
     # the only broadcast NL joins are against the ~sqrt(k)-row SUPER
-    # table (never the full centroid table); the assignment is persisted
-    # and reused by its three consumers, the cell-candidate and
-    # within-cell joins are shuffle equi-joins, and no cartesian product
-    # exists (the BNLJ text recurring under each InMemoryTableScan is
-    # the printed cached subtree, not re-execution)
-    plan = P.semdedup(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    # table (never the full centroid table); the cell-candidate and
+    # within-cell joins are shuffle equi-joins, no cartesian product
+    # exists, and after an action the final AQE plan shares exchanges
+    # through a ReusedExchange (the assignment is not cached)
+    df = P.semdedup(spark, SF)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
-    assert plan.count("InMemoryTableScan") >= 2
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+    df.collect()
+    final = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in final
+    assert "ReusedExchange" in final
 
 
 def test_semdedup_assignment_candidate_volume(spark):

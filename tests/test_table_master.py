@@ -22,7 +22,6 @@ def test_vocab_layout():
     assert "<td></td>" in tm.VOCAB and "<td" in tm.VOCAB
     assert "<td>" not in tm.VOCAB  # never in the TableMaster dict
     # merge_no_span semantics visible when '<td>' IS present
-    v = tm.build_vocab.__wrapped__ if hasattr(tm.build_vocab, "__wrapped__") else None
     chars = ["<td>", "<tr>"]
     orig = tm.STRUCTURE_DICT
     try:

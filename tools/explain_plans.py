@@ -88,8 +88,9 @@ rows — the 8 IVF centroids, the 128-row PQ codebook, semdedup's
 operators — never corpus x corpus. pq_adc_topk and ivf_pq_topk add the
 broadcast (query, s, code) LUT equi-join and a map-side-combinable
 integer sum; ivf_pq_topk's candidates come from a broadcast cell
-equi-join. semdedup persists the assignment (InMemoryTableScan x3) and
-pairs via a SortMergeJoin on cell.
+equi-join. semdedup's three consumers of the assignment share one
+build through exchange reuse (ReusedExchange in the final AQE plan), and
+it pairs via a SortMergeJoin on cell.
 ser_seqeval_metric is one side-exploded window chain + one conditional
 aggregate (was four window chains across three aggregate branches);
 decontamination_flags is one left-probe of the broadcast eval set + one
